@@ -1,6 +1,6 @@
 package graft
 
-import graft.engine.Pipeline
+import graft.engine.{GraftSession, Pipeline}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -33,13 +33,11 @@ object CurateMain {
     val buckets = opts.getOrElse("buckets", "32").toInt
     val salt = opts.getOrElse("salt", "0").toInt
 
-    val spark = SparkSession.builder()
+    val spark = GraftSession.tune(SparkSession.builder())
       .appName("graft-curate")
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .config("spark.sql.session.timeZone", "UTC")
-      // engine-wide tuning (JIT-safe codegen cap) — see graft.engine.GraftSession
-      .config("spark.sql.codegen.hugeMethodLimit", graft.engine.GraftSession.hugeMethodLimit)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -35,13 +35,11 @@ object Main {
     val replicate = opts.getOrElse("replicate", "1").toInt
     val snapshotId = opts.getOrElse("snapshot", s"snap-${new java.io.File(sfDir).getName}-x$replicate")
 
-    val spark = SparkSession.builder()
+    val spark = GraftSession.tune(SparkSession.builder())
       .appName("graft-validation")
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .config("spark.sql.session.timeZone", "UTC")
-      // engine-wide tuning (JIT-safe codegen cap) — see graft.engine.GraftSession
-      .config("spark.sql.codegen.hugeMethodLimit", graft.engine.GraftSession.hugeMethodLimit)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -585,8 +585,9 @@ object SparkEntry {
     // a mutated twin — is exactly the heavy-cross-doc-reuse shape where
     // the model says cap ≈ 64·minShared = 512, not the 10k prose default
     // (a fingerprint shared by >512 docs is boilerplate evidence, not a
-    // pair signal; DedupBench already runs winnow at this cap). The oracle
-    // mirrors the cap, so correctness is gated on the capped semantics.
+    // pair signal; BASELINE.md's round-4 text-dedup table runs winnow at
+    // this cap). The oracle mirrors the cap, so correctness is gated on the
+    // capped semantics.
     "q_winnow_pairs" -> ((s, dir) =>
       Dedup.winnowPairs(
         TextOps.withMutatedTwins(

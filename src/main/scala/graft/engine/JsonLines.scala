@@ -1,8 +1,6 @@
 package graft.engine
 
-import graft.json.{Json, JVal}
 import graft.schema.SchemaDoc
-import graft.validate.{Options, Validator}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -38,17 +36,8 @@ object JsonLines {
     lines.mapPartitions { iter =>
       val compiled = bc.value
       iter.map { case (num, line) =>
-        val parsed: Either[String, JVal] =
-          try Right(Json.parse(line))
-          catch { case e: Exception => Left(String.valueOf(e.getMessage).take(120)) }
-        parsed match {
-          case Left(msg) =>
-            Row(num, false, Vector(Row("", "parse", s"Malformed JSON: $msg")))
-          case Right(inst) =>
-            val res = Validator.validate(compiled, inst, Options())
-            Row(num, res.valid,
-              RowValidator.leafErrors(res.errors).map(v => Row(v.path, v.keyword, v.message)))
-        }
+        val (valid, errRows) = RowValidator.verdictOfLine(compiled, line)(Row(_, _, _))
+        Row(num, valid, errRows)
       }
     }(enc)
   }

@@ -352,7 +352,8 @@ object Pipeline {
     // evaluated once: the naive formulation (each rule re-deriving
     // split/lower/length from text) leans on codegen subexpression
     // elimination, which measurably gives up on this combined projection
-    // over typed-projection input — 10× wall-clock (see QualityProbe).
+    // over typed-projection input — 10× wall-clock (BASELINE.md round 4,
+    // shared-subexpression fusion).
     // Multiply-referenced non-cheap aliases also stop CollapseProject from
     // re-inlining them.
     // re-assert non-nullability after the typed stage: the tuple encoder
@@ -604,8 +605,8 @@ object Pipeline {
     // MATERIALIZE the full verdict frame ONCE (tracked MEMORY_AND_DISK —
     // the sandbox stand-in for writing the quality snapshot table): the
     // ~200-node rule pass is the chain's dominant cost (34 s of a 67 s
-    // composed run at 5M docs, CurateBench), and it feeds BOTH the quality
-    // audit artifact and the kept corpus, so without this barrier a
+    // composed run at 5M docs, BASELINE.md round 5), and it feeds BOTH the
+    // quality audit artifact and the kept corpus, so without this barrier a
     // multi-artifact consumer (CurateMain) executes it twice — and its
     // expression tree re-fuses into every downstream stage's whole-stage-
     // codegen class (filter, join, split, packing variants), generating

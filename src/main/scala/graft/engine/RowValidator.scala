@@ -4,8 +4,7 @@ import graft.json._
 import graft.schema.SchemaDoc
 import graft.validate.{Validator, Options, Violation}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.types._
 
 /** Fallback bulk path: the row-level validator core applied per row with the
@@ -68,27 +67,62 @@ object RowValidator {
       spark.sparkContext.broadcast(SchemaDoc.schema(schemaJson))
     val schema = df.schema
     val payloadIdx = payloadCols.map(_.map(schema.fieldIndex).toArray)
-    val outSchema = schema
+    withRowVerdicts(df, bcSchema) { (compiled, row) =>
+      val inst = payloadIdx match {
+        case None => toJVal(row, schema)
+        case Some(idxs) =>
+          // same columnar mapping as toJVal on a Row: null field = absent
+          JObj(idxs.toVector.collect {
+            case i if !row.isNullAt(i) =>
+              schema.fields(i).name -> toJVal(row.get(i), schema.fields(i).dataType)
+          })
+      }
+      (compiled, inst)
+    }
+  }
+
+  /** `df` columns + `valid` + `errors`: each row is validated by the row
+    * core against the (schema, instance) pair `instance` builds from the
+    * broadcast value and the row, on the executor. */
+  private[engine] def withRowVerdicts[B](df: DataFrame, bc: Broadcast[B])(
+      instance: (B, Row) => (SchemaDoc, JVal)): DataFrame = {
+    val outSchema = df.schema
       .add(StructField("valid", BooleanType, nullable = false))
       .add(StructField("errors", ColumnCompiler.errorType, nullable = false))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
     df.mapPartitions { rows =>
-      val compiled = bcSchema.value
+      val shipped = bc.value
       rows.map { row =>
-        val inst = payloadIdx match {
-          case None => toJVal(row, schema)
-          case Some(idxs) =>
-            // same columnar mapping as toJVal on a Row: null field = absent
-            JObj(idxs.toVector.collect {
-              case i if !row.isNullAt(i) =>
-                schema.fields(i).name -> toJVal(row.get(i), schema.fields(i).dataType)
-            })
-        }
-        val res = Validator.validate(compiled, inst, Options())
-        val errRows = leafErrors(res.errors).map(v => Row(v.path, v.keyword, v.message))
-        Row.fromSeq(row.toSeq :+ res.valid :+ errRows)
+        val (schema, inst) = instance(shipped, row)
+        val (valid, errRows) = verdict(schema, inst)(Row(_, _, _))
+        Row.fromSeq(row.toSeq :+ valid :+ errRows)
       }
-    }(enc)
+    }(Encoders.row(outSchema))
+  }
+
+  /** The row core's verdict on one instance: `valid` plus one
+    * `mk(path, keyword, message)` per [[leafErrors]] violation. Every
+    * row-core entry point (validateRows, the schema registry's row-core
+    * dispatch, JSONL sources, SQL `graft_validate`) goes through here, so
+    * all of them emit the same violation rows. */
+  private def verdict[R](schema: SchemaDoc, inst: JVal)(
+      mk: (String, String, String) => R): (Boolean, Vector[R]) = {
+    val res = Validator.validate(schema, inst, Options())
+    (res.valid, leafErrors(res.errors).map(v => mk(v.path, v.keyword, v.message)))
+  }
+
+  /** [[verdict]] on one raw JSON line. A malformed line is a single
+    * `("", "parse", "Malformed JSON: …")` violation, not an exception — at
+    * 10^12 lines some WILL be malformed, and one bad line must not kill
+    * the job. */
+  private[engine] def verdictOfLine[R](schema: SchemaDoc, line: String)(
+      mk: (String, String, String) => R): (Boolean, Vector[R]) = {
+    val parsed: Either[String, JVal] =
+      try Right(Json.parse(line))
+      catch { case e: Exception => Left(String.valueOf(e.getMessage).take(120)) }
+    parsed match {
+      case Left(msg) => (false, Vector(mk("", "parse", s"Malformed JSON: $msg")))
+      case Right(inst) => verdict(schema, inst)(mk)
+    }
   }
 
   /** The engine's exploded violation rows are the flattened leaves: drop

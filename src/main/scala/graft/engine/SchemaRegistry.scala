@@ -1,7 +1,6 @@
 package graft.engine
 
 import graft.schema.SchemaDoc
-import graft.validate.{Options, Validator}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -93,23 +92,11 @@ object SchemaRegistry {
     val schema = df.schema
     val schemaIdx = schema.fieldIndex(schemaCol)
     val payloadIdx = schema.fields.zipWithIndex
-      .filter { case (f, _) => f.name != schemaCol }.map(_._2)
+      .filter { case (f, _) => f.name != schemaCol }.map(_._2).toIndexedSeq
     val payloadSchema = StructType(payloadIdx.map(schema.fields(_)))
-    val outSchema = schema
-      .add(StructField("valid", BooleanType, nullable = false))
-      .add(StructField("errors", ColumnCompiler.errorType, nullable = false))
-    val enc = org.apache.spark.sql.Encoders.row(outSchema)
-    df.mapPartitions { rows =>
-      val reg = bc.value
-      rows.map { row =>
-        val doc = reg(row.getString(schemaIdx))
-        val inst = RowValidator.toJVal(
-          Row.fromSeq(payloadIdx.toIndexedSeq.map(row.get)), payloadSchema)
-        val res = Validator.validate(doc, inst, Options())
-        val errRows = RowValidator.leafErrors(res.errors)
-          .map(v => Row(v.path, v.keyword, v.message))
-        Row.fromSeq(row.toSeq :+ res.valid :+ errRows)
-      }
-    }(enc)
+    RowValidator.withRowVerdicts(df, bc) { (reg, row) =>
+      (reg(row.getString(schemaIdx)),
+        RowValidator.toJVal(Row.fromSeq(payloadIdx.map(row.get)), payloadSchema))
+    }
   }
 }

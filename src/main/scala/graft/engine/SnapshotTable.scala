@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.IntegerType
 import java.nio.file.{Files, Paths, StandardOpenOption}
@@ -130,21 +130,25 @@ object CheckpointedValidation {
       val verdicts = ValidationJob.withVerdicts(spark, docs, schemaJson)
       val out = s"$outDir/bucket=$b"
       // lineage metrics ride the write job via the Observation API — one
-      // scan per bucket instead of write-then-aggregate reading twice
+      // scan per bucket instead of write-then-aggregate reading twice. A sum
+      // over an empty bucket is NULL, so each is coalesced to 0 here; any
+      // other missing or non-long metric is a bug and fails the run.
       val obs = org.apache.spark.sql.Observation(s"graft_bucket_$b")
+      def total(c: Column) = coalesce(sum(c), lit(0L))
       verdicts.drop("bucket")
         .repartition(filesPerBucket, pmod(hash(col("doc_num")), lit(filesPerBucket)))
         .sortWithinPartitions("doc_num") // deterministic file content
         .observe(obs,
           count(lit(1)).as("rows"),
-          sum(when(col("valid"), 1L).otherwise(0L)).as("pass"),
-          sum(when(col("valid"), 0L).otherwise(1L)).as("fail"),
-          sum(size(col("errors")).cast("long")).as("violations"))
+          total(when(col("valid"), 1L).otherwise(0L)).as("pass"),
+          total(when(col("valid"), 0L).otherwise(1L)).as("fail"),
+          total(size(col("errors")).cast("long")).as("violations"))
         .write.mode(SaveMode.Overwrite).parquet(out)
       val m = obs.get
       def l(k: String): Long = m.get(k) match {
         case Some(x: Long) => x
-        case _ => 0L
+        case other => throw new IllegalStateException(
+          s"bucket $b lineage metric '$k' is $other, expected a long")
       }
       checkpoint.record(checkpoint.BucketLineage(
         b, snap.snapshotId, l("rows"), l("pass"), l("fail"), l("violations"), out))

@@ -27,12 +27,8 @@ object ValidationJob {
     * rows pay one boolean column read instead of an interpreted tree walk.
     * The boolean plan ≡ (errors is empty) invariant is fuzz-checked
     * (RandomDocsSpec/RandomSchemaSpec differentials). */
-  def withVerdicts(spark: SparkSession, docs: DataFrame, schemaJson: String): DataFrame = {
-    val doc = SchemaDoc.schema(schemaJson)
-    val payloadFields = docs.schema.fields.filter(f => f.name == "doc_id" || f.name == "spans")
-    val payloadType = StructType(payloadFields)
-    val payload = struct(payloadFields.map(f => col(f.name)).toSeq: _*)
-    try {
+  def withVerdicts(spark: SparkSession, docs: DataFrame, schemaJson: String): DataFrame =
+    compiledOrRowCore(spark, docs, schemaJson, keepErrors = true) { (doc, payload, payloadType) =>
       val boolPlan = ColumnCompiler.valid(doc, payload, payloadType)
       val errs = ColumnCompiler.errors(doc, payload, payloadType)
       val passthrough = docs.columns.filterNot(c => c == "errors" || c == "valid")
@@ -43,28 +39,35 @@ object ValidationJob {
         .withColumn("errors",
           when(col("valid"), array().cast(ColumnCompiler.errorType)).otherwise(errs))
         .select((passthrough.map(col).toSeq :+ col("valid") :+ col("errors")): _*)
-    } catch {
-      case _: ColumnCompiler.Unsupported =>
-        // validate the same payload fields the Column path would — NOT the
-        // whole row — so the two paths agree on object-shape keywords
-        RowValidator.validateRows(spark, docs, schemaJson,
-          Some(payloadFields.map(_.name).toSeq))
     }
-  }
 
   /** Verdict-only fast mode: adds just `valid` via the allocation-free
     * boolean plan (no error construction at all). For monitoring-style runs
     * that only need pass/fail rates this is ~2.4× the full path (9.0M vs
     * 3.7M docs/sec at local[32] on the 10M-doc bench table). */
-  def withVerdictsOnly(spark: SparkSession, docs: DataFrame, schemaJson: String): DataFrame = {
+  def withVerdictsOnly(spark: SparkSession, docs: DataFrame, schemaJson: String): DataFrame =
+    compiledOrRowCore(spark, docs, schemaJson, keepErrors = false) { (doc, payload, payloadType) =>
+      docs.withColumn("valid", ColumnCompiler.valid(doc, payload, payloadType))
+    }
+
+  /** Runs `columnar` on the compiled schema and the (doc_id, spans) payload.
+    * A schema the Column compiler cannot express falls back to the row core
+    * over the same payload fields — NOT the whole row — so the two paths
+    * agree on object-shape keywords; `keepErrors = false` drops its
+    * `errors` column. */
+  private def compiledOrRowCore(
+      spark: SparkSession, docs: DataFrame, schemaJson: String, keepErrors: Boolean)(
+      columnar: (SchemaDoc, Column, StructType) => DataFrame): DataFrame = {
     val doc = SchemaDoc.schema(schemaJson)
     val payloadFields = docs.schema.fields.filter(f => f.name == "doc_id" || f.name == "spans")
+    val payloadType = StructType(payloadFields)
     val payload = struct(payloadFields.map(f => col(f.name)).toSeq: _*)
-    try docs.withColumn("valid", ColumnCompiler.valid(doc, payload, StructType(payloadFields)))
+    try columnar(doc, payload, payloadType)
     catch {
       case _: ColumnCompiler.Unsupported =>
-        RowValidator.validateRows(spark, docs, schemaJson,
-          Some(payloadFields.map(_.name).toSeq)).drop("errors")
+        val rows = RowValidator.validateRows(spark, docs, schemaJson,
+          Some(payloadFields.map(_.name).toSeq))
+        if (keepErrors) rows else rows.drop("errors")
     }
   }
 

@@ -3,9 +3,7 @@ package graft.engine.expressions
 import java.util.concurrent.ConcurrentHashMap
 
 import graft.engine.RowValidator
-import graft.json.{JVal, Json}
 import graft.schema.SchemaDoc
-import graft.validate.{Options, Validator}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -43,26 +41,12 @@ object ValidateJsonBridge {
     * whole job for one bad row. A malformed SCHEMA does throw: that is a
     * caller bug, identical for every row. */
   def validate(instance: UTF8String, schemaJson: UTF8String): InternalRow = {
-    val schema = compiled(schemaJson.toString)
-    val parsed: Either[String, JVal] =
-      try Right(Json.parse(instance.toString))
-      catch { case e: Exception => Left(String.valueOf(e.getMessage).take(120)) }
-    parsed match {
-      case Left(msg) =>
-        row(valid = false, Vector(("", "parse", s"Malformed JSON: $msg")))
-      case Right(inst) =>
-        val res = Validator.validate(schema, inst, Options())
-        row(res.valid,
-          RowValidator.leafErrors(res.errors).map(v => (v.path, v.keyword, v.message)))
-    }
-  }
-
-  private def row(valid: Boolean, viols: Vector[(String, String, String)]): InternalRow = {
-    val arr = new GenericArrayData(viols.map { case (p, k, m) =>
+    val (valid, viols) = RowValidator.verdictOfLine(
+      compiled(schemaJson.toString), instance.toString) { (p, k, m) =>
       new GenericInternalRow(Array[Any](
         UTF8String.fromString(p), UTF8String.fromString(k), UTF8String.fromString(m)))
-    }.toArray[Any])
-    new GenericInternalRow(Array[Any](valid, arr))
+    }
+    new GenericInternalRow(Array[Any](valid, new GenericArrayData(viols.toArray[Any])))
   }
 }
 

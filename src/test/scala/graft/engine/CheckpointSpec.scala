@@ -80,4 +80,26 @@ class CheckpointSpec extends AnyFunSuite {
     assert(sumField("pass_count") === totPass)
     assert(sumField("fail_count") === totRows - totPass)
   }
+
+  test("a bucket with no docs records 0/0/0/0 lineage and the run completes") {
+    // 4 buckets over 2 docs: hash-mod leaves at least 2 buckets empty,
+    // where the observed sums are NULL and must come back as 0
+    val docs = DocTable.docs(spark, sfDir).orderBy("doc_num").limit(2)
+    val root = tmp("graft-snap-empty")
+    val snap = ParquetSnapshotTable.materialize(docs, root, "s3", "doc_id", 4)
+    val cpDir = tmp("graft-cp-empty")
+    val processed = CheckpointedValidation.run(
+      spark, snap, DocTable.docSchemaJson, tmp("graft-out-empty"), new CheckpointManager(cpDir))
+    assert(processed === (0 until 4))
+    val lineage = Files.readAllLines(java.nio.file.Paths.get(cpDir, "lineage.jsonl"))
+      .toArray.map(_.toString)
+    assert(lineage.length === 4)
+    def field(l: String, k: String): Long =
+      s""""$k": (\\d+)""".r.findFirstMatchIn(l).get.group(1).toLong
+    val metrics = Seq("rows", "pass_count", "fail_count", "violations")
+    val empty = lineage.filter(field(_, "rows") == 0L)
+    assert(empty.nonEmpty)
+    empty.foreach(l => assert(metrics.map(field(l, _)) === Seq(0L, 0L, 0L, 0L), l))
+    assert(lineage.map(field(_, "rows")).sum === 2L)
+  }
 }

@@ -40,6 +40,22 @@ class JsonLinesSpec extends AnyFunSuite {
     }
   }
 
+  test("a malformed line gives the same parse row via JSONL and SQL graft_validate") {
+    graft.engine.expressions.GraftExtensions.register(spark)
+    val line = """{"doc_id": "doc-1", "spans": [tru"""
+    val viaJsonl = JsonLines.validateStrings(spark, Seq((0L, line)).toDS(), schemaJson)
+      .select(col("valid"), col("errors")).collect()(0)
+    val viaSql = Seq((line, schemaJson)).toDF("line", "schema")
+      .selectExpr("graft_validate(line, schema) AS v").select("v.valid", "v.violations")
+      .collect()(0)
+    def rows(r: org.apache.spark.sql.Row) =
+      r.getSeq[org.apache.spark.sql.Row](1).map(v => (v.getString(0), v.getString(1), v.getString(2)))
+    assert(!viaJsonl.getBoolean(0) && !viaSql.getBoolean(0))
+    assert(rows(viaJsonl).size === 1 && rows(viaJsonl).head._2 === "parse")
+    assert(rows(viaJsonl).head._3.startsWith("Malformed JSON: "))
+    assert(rows(viaSql) === rows(viaJsonl))
+  }
+
   test("dynamic schemas unsupported by the column path work on the JSONL path") {
     // recursive meta-schema $ref: column compiler can't express it
     val lines = Seq(

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * test JVM). */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = GraftSession.tune(SparkSession.builder())
       .master("local[4]")
       .appName("graft-tests")
       .config("spark.sql.shuffle.partitions", 4)
@@ -20,8 +20,6 @@ object SparkTestSession {
       // "location already exists"
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-test-warehouse").toString)
-      // engine-wide tuning (JIT-safe codegen cap) — see graft.engine.GraftSession
-      .config("spark.sql.codegen.hugeMethodLimit", graft.engine.GraftSession.hugeMethodLimit)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
