@@ -9,6 +9,12 @@ import org.apache.spark.sql.types._
 /** Compiles a draft-7 schema into Catalyst `Column` expressions over a
   * statically-typed Dataset — the engine's bulk validation path.
   *
+  * Each keyword is compiled once, into a small plan tree ([[Plan]]), and
+  * the tree is lowered twice: to the allocation-free boolean verdict
+  * ([[valid]]) and to the violation array ([[errors]]). So valid ⟺ no
+  * violations holds by construction, like the reference's `:valid?` (no
+  * errors, `validate.cljc:99-116`).
+  *
   * Output of [[errors]] is `array<struct<path,keyword,message>>` holding the
   * *leaf* violations (the reference nests causes under applicator errors,
   * `validate.cljc:824-832`; the engine's exploded violation rows are the
@@ -24,9 +30,9 @@ import org.apache.spark.sql.types._
   * and `properties` subschemas are gated on non-null.
   *
   * Schemas using keywords that cannot be expressed as a finite Column tree
-  * (dynamic objects, recursive $ref, content decoding, patternProperties …)
-  * throw [[ColumnCompiler.Unsupported]]; callers fall back to the row-level
-  * core via [[RowValidatorFallback]].
+  * (recursive or external $ref, Spark types with no JSON mapping, malformed
+  * keyword values …) throw [[ColumnCompiler.Unsupported]]; callers fall back
+  * to the row-level core ([[ValidationJob]]'s row-core fallback).
   */
 object ColumnCompiler {
 
@@ -39,22 +45,6 @@ object ColumnCompiler {
     StructField("keyword", StringType, nullable = false),
     StructField("message", StringType, nullable = false))), containsNull = false)
 
-  private def noErrors: Column = array().cast(errorType)
-
-  private def errRow(path: Column, kw: String, msg: String): Column =
-    array(struct(
-      path.as("path"), lit(kw).as("keyword"), lit(msg).as("message"))).cast(errorType)
-
-  private def whenOr(cond: Column, ifTrue: Column, ifFalse: Column): Column =
-    when(coalesce(cond, lit(false)), ifTrue).otherwise(ifFalse)
-
-  /** error rows iff `cond` is false/null */
-  private def check(cond: Column, path: Column, kw: String, msg: String): Column =
-    whenOr(cond, noErrors, errRow(path, kw, msg))
-
-  private def concatErrs(parts: Seq[Column]): Column =
-    if (parts.isEmpty) noErrors else parts.reduce(concat(_, _))
-
   /** Compile `schema` (a compiled [[SchemaDoc]]) to an error-array Column
     * over input column `col` of Spark type `dt`.
     *
@@ -64,14 +54,70 @@ object ColumnCompiler {
     * costs comparisons only — no array/struct/string allocation — which is
     * what lets the narrow validation stage scale with cores at 10^12 rows.
     */
-  def errors(doc: SchemaDoc, col: Column, dt: DataType): Column =
-    when(valid(doc, col, dt), noErrors)
-      .otherwise(compile(doc.root, col, dt, lit(""), doc, Set.empty))
+  def errors(doc: SchemaDoc, col: Column, dt: DataType): Column = {
+    val p = plan(doc, col, dt)
+    when(validOf(p), noErrors).otherwise(errorsOf(p))
+  }
 
-  /** Allocation-free boolean validity plan (must stay consistent with
-    * [[errors]]-emptiness; EngineSpec asserts the two paths agree row-wise). */
+  /** Allocation-free boolean validity plan: the same plan tree as
+    * [[errors]], lowered to one boolean. */
   def valid(doc: SchemaDoc, col: Column, dt: DataType): Column =
-    compileValid(doc.root, col, dt, doc, Set.empty)
+    validOf(plan(doc, col, dt))
+
+  /** The violation array without [[errors]]' `when(valid, [])`
+    * short-circuit, for callers that hold the verdict already. */
+  private[engine] def ungatedErrors(doc: SchemaDoc, col: Column, dt: DataType): Column =
+    errorsOf(plan(doc, col, dt))
+
+  private def plan(doc: SchemaDoc, col: Column, dt: DataType): Plan =
+    compile(doc.root, col, dt, lit(""), doc, Set.empty)
+
+  // --- the plan tree and its two lowerings ----------------------------------
+
+  private sealed trait Plan
+  /** A leaf: one violation at `path` unless `ok` holds (null fails). */
+  private final case class Check(ok: Column, path: Column, keyword: String, message: String)
+    extends Plan
+  private final case class All(parts: Seq[Plan]) extends Plan
+  /** `inner` applies unless `absent` holds (null = absent gating). */
+  private final case class Gate(absent: Column, inner: Plan) extends Plan
+  /** `body(element, index)` holds for every element of `arr`; `fast` is an
+    * optional boolean-only form of the whole node. */
+  private final case class Each(arr: Column, body: (Column, Column) => Plan,
+      fast: Option[Column] = None) extends Plan
+  /** if/then/else: `whenTrue` applies when `test` holds, else `whenFalse`. */
+  private final case class Cond(test: Column, whenTrue: Plan, whenFalse: Plan) extends Plan
+
+  private val pass: Plan = All(Nil)
+
+  private def ok(cond: Column): Column = coalesce(cond, lit(false))
+
+  private def validOf(p: Plan): Column = p match {
+    case Check(c, _, _, _) => ok(c)
+    case All(parts)        => parts.map(validOf).reduceOption(_ && _).getOrElse(lit(true))
+    case Gate(absent, in)  => ok(absent || validOf(in))
+    // without `fast` the index feeds only violation paths, which this
+    // lowering drops (tuple `items`, which branch on it, bring `fast`)
+    case Each(arr, body, fast) => fast.getOrElse(forall(arr, x => validOf(body(x, lit(null)))))
+    case Cond(test, t, f)  => ok(when(test, validOf(t)).otherwise(validOf(f)))
+  }
+
+  private def noErrors: Column = array().cast(errorType)
+
+  private def whenOr(cond: Column, ifTrue: Column, ifFalse: Column): Column =
+    when(coalesce(cond, lit(false)), ifTrue).otherwise(ifFalse)
+
+  private def errorsOf(p: Plan): Column = p match {
+    case Check(c, path, kw, msg) =>
+      whenOr(c, noErrors, array(struct(
+        path.as("path"), lit(kw).as("keyword"), lit(msg).as("message"))).cast(errorType))
+    case All(parts) =>
+      if (parts.isEmpty) noErrors else parts.map(errorsOf).reduce(concat(_, _))
+    case Gate(absent, in) => whenOr(absent, noErrors, errorsOf(in))
+    case Each(arr, body, _) =>
+      flatten(transform(arr, (x, i) => errorsOf(body(x, i)))).cast(errorType)
+    case Cond(test, t, f) => whenOr(test, errorsOf(t), errorsOf(f))
+  }
 
   // ---------------------------------------------------------------------------
 
@@ -85,6 +131,35 @@ object ColumnCompiler {
     case NullType                                        => "null"
     case other => throw Unsupported(s"no JSON mapping for Spark type $other")
   }
+
+  /** The JSON types a `type` keyword value allows. */
+  private def typeList(v: JVal): Seq[String] = v match {
+    case JStr(t) => Seq(t)
+    case JArr(ts) if ts.forall(_.isInstanceOf[JStr]) => ts.collect { case JStr(t) => t }
+    case _ => throw Unsupported("malformed type")
+  }
+
+  /** Whether a non-null value of JSON type `t` passes `type: allowed`. */
+  private def typeAdmits(allowed: Seq[String], t: String): Boolean =
+    allowed.contains(t) || (t == "integer" && allowed.contains("number"))
+
+  private def strings(kw: String, v: JVal): Vector[String] = v match {
+    case JArr(xs) if xs.forall(_.isInstanceOf[JStr]) => xs.collect { case JStr(x) => x }
+    case _ => throw Unsupported(s"malformed $kw")
+  }
+
+  private def count(kw: String, v: JVal): Int = v match {
+    case JNum(n) if n.isWhole && n >= 0 && n.isValidInt => n.toInt
+    case _ => throw Unsupported(s"malformed $kw")
+  }
+
+  /** Decided on the driver by the row core: a keyword whose operands are
+    * all static (struct field names, default values) needs no Column. */
+  private def rowCoreValid(schema: JVal, instance: JVal): Boolean =
+    graft.validate.Validator.validate(SchemaDoc.compile(schema), instance).valid
+
+  private def matches(pattern: String, s: String): Boolean =
+    java.util.regex.Pattern.compile(pattern).matcher(s).find()
 
   /** multipleOf with the reference's exact-decimal semantics: floating
     * columns go through the native [[graft.engine.expressions.ExactMultipleOf]]
@@ -120,9 +195,9 @@ object ColumnCompiler {
 
   private def compile(
       schema: JVal, col: Column, dt: DataType, path: Column,
-      doc: SchemaDoc, refsSeen: Set[String]): Column = schema match {
-    case JBool(true) | JNull => noErrors
-    case JBool(false)        => errRow(path, "false", "Schema is false")
+      doc: SchemaDoc, seen: Set[String]): Plan = schema match {
+    case JBool(true) | JNull => pass
+    case JBool(false)        => Check(lit(false), path, "false", "Schema is false")
     case o: JObj if o.has("$ref") =>
       // Static $ref inlining at compile time (driver side). The broadcast
       // registry exists for the row-level fallback; here the plan itself is
@@ -131,12 +206,11 @@ object ColumnCompiler {
         case Some(JStr(s)) => s
         case _             => throw Unsupported("non-string $ref")
       }
-      val key = refStr
-      if (refsSeen.contains(key))
+      if (seen.contains(refStr))
         throw Unsupported(s"recursive $$ref $refStr cannot compile to a finite Column tree")
-      val target = resolveStatic(o, doc)
-      compile(target, col, dt, path, doc, refsSeen + key)
-    case o: JObj => compileObj(o, col, dt, path, doc, refsSeen)
+      compile(resolveStatic(o, doc), col, dt, path, doc, seen + refStr)
+    case o: JObj =>
+      All(o.fields.map { case (kw, v) => keyword(kw, v, o, col, dt, path, doc, seen) })
     case other => throw Unsupported(s"invalid schema of type ${other.typeName}")
   }
 
@@ -173,793 +247,298 @@ object ColumnCompiler {
     case o: JObj if o.has("$ref") => false
     case o: JObj =>
       o.fields.forall { case (kw, v) =>
-        kw match {
-          case k if inertKeywords.contains(k) => true
-          case "type" =>
-            val allowed = v match {
-              case JStr(t)     => Seq(t)
-              case JArr(items) => items.collect { case JStr(x) => x }
-              case _           => Seq.empty
-            }
-            try {
-              val t = jsonTypeOf(dt)
-              allowed.contains(t) || (t == "integer" && allowed.contains("number"))
-            } catch { case _: Unsupported => false }
-          case _ => false
-        }
+        inertKeywords.contains(kw) || (kw == "type" &&
+          (try typeAdmits(typeList(v), jsonTypeOf(dt)) catch { case _: Unsupported => false }))
       }
     case _ => false
   }
 
-  private def compileObj(
-      schema: JObj, col: Column, dt: DataType, path: Column,
-      doc: SchemaDoc, seen: Set[String]): Column = {
+  /** The plan of one keyword of `schema`, applied to `col`. Keywords that
+    * do not apply to the column's JSON type, and unknown keywords (like the
+    * reference, `validate.cljc:118-124`), pass. */
+  private def keyword(
+      kw: String, v: JVal, schema: JObj, col: Column, dt: DataType, path: Column,
+      doc: SchemaDoc, seen: Set[String]): Plan = {
 
-    def sub(s: JVal, c: Column, d: DataType, p: Column): Column =
-      compile(s, c, d, p, doc, seen)
-
-    val jsonType = jsonTypeOf(dt)
-
-    val parts = schema.fields.map { case (kw, v) =>
-      kw match {
-        case k if inertKeywords.contains(k) => noErrors
-
-        case "type" =>
-          val allowed: Seq[String] = v match {
-            case JStr(t)     => Seq(t)
-            case JArr(items) => items.collect { case JStr(s) => s }
-            case _           => Seq.empty
-          }
-          val nullOk = allowed.contains("null")
-          val nonNullOk: Column = jsonType match {
-            case t if allowed.contains(t) => lit(true)
-            case "integer" if allowed.contains("number") => lit(true)
-            case "number" if allowed.contains("integer") =>
-              (col.cast(DoubleType) % 1.0) === 0.0 // whole-valued check without ANSI long-overflow
-            case _ => lit(false)
-          }
-          check(
-            when(col.isNull, lit(nullOk)).otherwise(nonNullOk),
-            path, "type", s"Instance is not of type ${allowed.mkString(" or ")}")
-
-        case "enum" =>
-          val items = v match { case JArr(i) => i; case _ => Vector.empty }
-          val nullOk = items.contains(JNull)
-          val scalars = items.filter(x => x != JNull)
-          // Type-incompatible entries are statically false (the row core just
-          // reports no match) — comparing e.g. a numeric literal against a
-          // string column would raise an ANSI cast error at runtime.
-          val simpleCond =
-            when(col.isNull, lit(nullOk))
-              .otherwise(scalars.map(s =>
-                  if (literalComparable(s, jsonType)) col === literal(s) else lit(false))
-                .reduceOption(_ || _).getOrElse(lit(false)))
-          check(simpleCond, path, "enum", "Value must be in enum")
-
-        case "const" =>
-          val cond = v match {
-            case JNull => col.isNull
-            case s if !literalComparable(s, jsonType) => lit(false) // see enum
-            case s => col === literal(s)
-          }
-          check(cond, path, "const", "Value must be equal to const")
-
-        case "multipleOf" =>
-          val m = v match { case n: JNum => n; case _ => throw Unsupported("bad multipleOf") }
-          // Exact-decimal remainder like the reference's BigDecimal path;
-          // decimal(38,12) covers the engine's numeric columns.
-          if (jsonType == "number" || jsonType == "integer")
-            check(col.isNull || multipleOfCond(col, dt, m), path,
-              "multipleOf", "Failed multipleOf check")
-          else noErrors
-
-        case "maximum" | "minimum" | "exclusiveMaximum" | "exclusiveMinimum" =>
-          if (jsonType != "number" && jsonType != "integer") noErrors
-          else {
-            val bound = literal(v)
-            val cond = kw match {
-              case "maximum"          => col <= bound
-              case "minimum"          => col >= bound
-              case "exclusiveMaximum" => col < bound
-              case "exclusiveMinimum" => col > bound
-            }
-            check(col.isNull || cond, path, kw, s"Failed $kw check")
-          }
-
-        case "maxLength" | "minLength" =>
-          if (jsonType != "string") noErrors
-          else {
-            val n = v match { case x: JNum => x.v.toInt; case _ => throw Unsupported("bad length bound") }
-            // Spark `length` on strings counts characters (code points for
-            // UTF8String), matching the reference's codePointCount.
-            val cond = if (kw == "maxLength") length(col) <= n else length(col) >= n
-            check(col.isNull || cond, path, kw,
-              if (kw == "maxLength") "String is too long" else "String is too short")
-          }
-
-        case "pattern" =>
-          if (jsonType != "string") noErrors
-          else {
-            val p = v match { case JStr(s) => s; case _ => throw Unsupported("bad pattern") }
-            // RLIKE = Java-regex find(), same unanchored semantics as the
-            // reference's re-seq (validate.cljc:280-283).
-            check(col.isNull || col.rlike(p), path, "pattern",
-              s"String does not match pattern $p")
-          }
-
-        case "format" =>
-          if (jsonType != "string") noErrors
-          else {
-            val fmt = v match { case JStr(s) => s; case _ => "" }
-            check(col.isNull || FormatColumns.condition(fmt, col), path,
-              "format", s"Doesn't match $fmt format")
-          }
-
-        case "items" =>
-          dt match {
-            case ArrayType(elem, _) =>
-              v match {
-                case sub0: JObj =>
-                  val childErrs = transform(col, (x, i) =>
-                    sub(sub0, x, elem, concat(path, lit("/"), i.cast(StringType))))
-                  whenOr(col.isNotNull, flatten(childErrs).cast(errorType), noErrors)
-                case JBool(b) =>
-                  if (b) noErrors
-                  else check(col.isNull || size(col) === 0, path, "items",
-                    "Items must be empty to satisfy a false schema")
-                case JArr(tuple) =>
-                  val pad = schema.get("additionalItems").getOrElse(JNull)
-                  val childErrs = transform(col, (x, i) => {
-                    val branches = tuple.zipWithIndex.map { case (ts, ti) =>
-                      (i === ti, sub(ts, x, elem, concat(path, lit("/"), i.cast(StringType))))
-                    }
-                    val padded = sub(pad, x, elem, concat(path, lit("/"), i.cast(StringType)))
-                    branches.foldRight(padded) { case ((c, e), acc) => when(c, e).otherwise(acc) }
-                  })
-                  whenOr(col.isNotNull, flatten(childErrs).cast(errorType), noErrors)
-                case _ => noErrors
-              }
-            case _ => noErrors // items ignores non-arrays
-          }
-
-        case "maxItems" | "minItems" =>
-          dt match {
-            case _: ArrayType =>
-              val n = v match { case x: JNum => x.v.toInt; case _ => throw Unsupported("bad items bound") }
-              val cond = if (kw == "maxItems") size(col) <= n else size(col) >= n
-              check(col.isNull || cond, path, kw,
-                if (kw == "maxItems") "maxItems exceeded" else "minItems not reached")
-            case _ => noErrors
-          }
-
-        case "uniqueItems" =>
-          (dt, v) match {
-            case (_: ArrayType, JBool(true)) =>
-              check(col.isNull || size(array_distinct(col)) === size(col),
-                path, "uniqueItems", "Instance elements are not all unique")
-            case _ => noErrors
-          }
-
-        case "contains" =>
-          dt match {
-            case ArrayType(elem, _) =>
-              val any = exists(col, x => size(sub(v, x, elem, lit(""))) === 0)
-              check(col.isNull || any, path, "contains",
-                "Instance is not valid against schema")
-            case _ => noErrors
-          }
-
-        case "required" =>
-          dt match {
-            case st: StructType =>
-              val reqs = v match { case JArr(r) => r.collect { case JStr(s) => s }; case _ => Vector.empty }
-              val props = schema.get("properties") match {
-                case Some(p: JObj) => p; case _ => JObj.empty
-              }
-              val perKey = reqs.map { k =>
-                // Required-recovery semantics (validate.cljc:353-389): a
-                // missing key whose subschema has a *valid* default is not a
-                // violation. Valid-default check runs at compile time via the
-                // row-level core.
-                val recoverable = props.get(k).exists {
-                  case prop: JObj => prop.get("default").exists { d =>
-                    graft.validate.Validator.validate(SchemaDoc.compile(prop), d).valid
-                  }
-                  case _ => false
-                }
-                if (recoverable) noErrors
-                else if (!st.fieldNames.contains(k))
-                  errRow(concat(path, lit(s"/$k")), "required", "Required property not in object")
-                else check(col.isNull || col.getField(k).isNotNull,
-                  concat(path, lit(s"/$k")), "required", "Required property not in object")
-              }
-              whenOr(col.isNotNull, concatErrs(perKey), noErrors)
-            case MapType(StringType, _, _) =>
-              val reqs = v match { case JArr(r) => r.collect { case JStr(s) => s }; case _ => Vector.empty }
-              val perKey = reqs.map { k =>
-                check(col.isNull || try_element_at(col, lit(k)).isNotNull,
-                  concat(path, lit(s"/$k")), "required", "Required property not in object")
-              }
-              whenOr(col.isNotNull, concatErrs(perKey), noErrors)
-            case _ => noErrors
-          }
-
-        case "properties" =>
-          (dt, v) match {
-            case (st: StructType, props: JObj) =>
-              val perField = props.fields.flatMap { case (k, subSchema) =>
-                st.fields.find(_.name == k).collect {
-                  // statically-true children never enter the plan, so the
-                  // scan can prune their columns
-                  case f if !gatedStaticTrue(subSchema, f.dataType) =>
-                    val child = col.getField(k)
-                    // gated on presence (null = absent under the columnar mapping)
-                    whenOr(child.isNotNull,
-                      sub(subSchema, child, f.dataType, concat(path, lit(s"/$k"))),
-                      noErrors)
-                }
-              }
-              whenOr(col.isNotNull, concatErrs(perField), noErrors)
-            case (MapType(StringType, vt, _), props: JObj) =>
-              val perKey = props.fields.map { case (k, subSchema) =>
-                val child = try_element_at(col, lit(k))
-                whenOr(child.isNotNull,
-                  sub(subSchema, child, vt, concat(path, lit(s"/$k"))),
-                  noErrors)
-              }
-              whenOr(col.isNotNull, concatErrs(perKey), noErrors)
-            case _ => noErrors
-          }
-
-        case "additionalProperties" =>
-          dt match {
-            case st: StructType =>
-              // A struct's fields are a closed set: additional properties
-              // cannot exist. additionalProperties: false is statically
-              // satisfied for fields named in `properties`; fields NOT named
-              // there are violations when present (non-null).
-              val named = schema.get("properties") match {
-                case Some(p: JObj) => p.map.keySet; case _ => Set.empty[String]
-              }
-              v match {
-                case JBool(false) =>
-                  val extra = st.fieldNames.filterNot(named.contains).toSeq
-                  val perField = extra.map { k =>
-                    check(col.isNull || col.getField(k).isNull,
-                      concat(path, lit(s"/$k")), "additionalProperties",
-                      "An additional property failed the schema check")
-                  }
-                  whenOr(col.isNotNull, concatErrs(perField), noErrors)
-                case subSchema =>
-                  val extra = st.fields.filterNot(f => named.contains(f.name)).toSeq
-                  val perField = extra.map { f =>
-                    val child = col.getField(f.name)
-                    whenOr(child.isNotNull,
-                      sub(subSchema, child, f.dataType, concat(path, lit(s"/${f.name}"))),
-                      noErrors)
-                  }
-                  whenOr(col.isNotNull, concatErrs(perField), noErrors)
-              }
-            case MapType(StringType, vt, _) =>
-              // entries whose key is neither in `properties` nor matched by
-              // any `patternProperties` regex must satisfy the subschema
-              val named = schema.get("properties") match {
-                case Some(p: JObj) => p.keys; case _ => Vector.empty[String]
-              }
-              val pats = schema.get("patternProperties") match {
-                case Some(p: JObj) => p.keys; case _ => Vector.empty[String]
-              }
-              def isAdditional(k: Column): Column = {
-                val namedHit = if (named.isEmpty) lit(false)
-                  else named.map(n => k === lit(n)).reduce(_ || _)
-                val patHit = if (pats.isEmpty) lit(false)
-                  else pats.map(p => k.rlike(p)).reduce(_ || _)
-                !namedHit && !patHit
-              }
-              val entryErrs = transform(map_entries(col), e => {
-                val k = e.getField("key"); val value = e.getField("value")
-                whenOr(isAdditional(k) && value.isNotNull,
-                  sub(v, value, vt, concat(path, lit("/"), k)),
-                  noErrors)
-              })
-              whenOr(col.isNotNull, flatten(entryErrs).cast(errorType), noErrors)
-            case _ => noErrors
-          }
-
-        case "dependencies" =>
-          (dt, v) match {
-            case (st: StructType, deps: JObj) =>
-              val perDep = deps.fields.map { case (k, dv) =>
-                if (!st.fieldNames.contains(k)) noErrors
-                else {
-                  val present = col.getField(k).isNotNull
-                  val depErrs = dv match {
-                    case JArr(names) =>
-                      val missing = names.collect { case JStr(n) => n }.map { n =>
-                        if (!st.fieldNames.contains(n))
-                          errRow(concat(path, lit(s"/$n")), "dependencies", "Not every dependency in instance")
-                        else check(col.getField(n).isNotNull,
-                          concat(path, lit(s"/$n")), "dependencies", "Not every dependency in instance")
-                      }
-                      concatErrs(missing)
-                    case s => sub(s, col, dt, path)
-                  }
-                  whenOr(present, depErrs, noErrors)
-                }
-              }
-              whenOr(col.isNotNull, concatErrs(perDep), noErrors)
-            case _ => noErrors
-          }
-
-        case "propertyNames" =>
-          dt match {
-            case st: StructType =>
-              // Static field names: evaluate each name against the subschema
-              // at compile time with the row-level core.
-              val bad = st.fieldNames.filterNot { name =>
-                graft.validate.Validator.validate(SchemaDoc.compile(v), JStr(name)).valid
-              }.toSeq
-              val perField = bad.map { k =>
-                check(col.isNull || col.getField(k).isNull,
-                  concat(path, lit(s"/$k")), "propertyNames", "propertyNames")
-              }
-              whenOr(col.isNotNull, concatErrs(perField), noErrors)
-            case MapType(StringType, _, _) =>
-              val keyErrs = transform(map_keys(col), k =>
-                whenOr(size(sub(v, k, StringType, lit(""))) === 0,
-                  noErrors,
-                  errRow(concat(path, lit("/"), k), "propertyNames", "propertyNames")))
-              whenOr(col.isNotNull, flatten(keyErrs).cast(errorType), noErrors)
-            case _ => noErrors
-          }
-
-        case "maxProperties" | "minProperties" =>
-          dt match {
-            case st: StructType =>
-              val n = v match { case x: JNum => x.v.toInt; case _ => throw Unsupported("bad bound") }
-              val cnt = st.fieldNames.map(k =>
-                when(col.getField(k).isNotNull, 1).otherwise(0)).reduce(_ + _)
-              val cond = if (kw == "maxProperties") cnt <= n else cnt >= n
-              check(col.isNull || cond, path, kw,
-                if (kw == "maxProperties") "Max properties exceeded" else "Min properties not reached")
-            case MapType(StringType, _, _) =>
-              val n = v match { case x: JNum => x.v.toInt; case _ => throw Unsupported("bad bound") }
-              val cnt = size(map_keys(col))
-              val cond = if (kw == "maxProperties") cnt <= n else cnt >= n
-              check(col.isNull || cond, path, kw,
-                if (kw == "maxProperties") "Max properties exceeded" else "Min properties not reached")
-            case _ => noErrors
-          }
-
-        case "allOf" =>
-          v match {
-            case JArr(subs) => concatErrs(subs.map(s => sub(s, col, dt, path)))
-            case _          => noErrors
-          }
-
-        case "anyOf" =>
-          v match {
-            case JArr(subs) =>
-              val errsEach = subs.map(s => sub(s, col, dt, path))
-              val anyValid = errsEach.map(e => size(e) === 0).reduce(_ || _)
-              whenOr(anyValid, noErrors,
-                errRow(path, "anyOf", "No schema validates for anyOf validation"))
-            case _ => noErrors
-          }
-
-        case "oneOf" =>
-          v match {
-            case JArr(subs) =>
-              val validCount = subs.map(s =>
-                when(size(sub(s, col, dt, path)) === 0, 1).otherwise(0)).reduce(_ + _)
-              whenOr(validCount === 1, noErrors,
-                errRow(path, "oneOf", "oneOf validation failed"))
-            case _ => noErrors
-          }
-
-        case "not" =>
-          whenOr(size(sub(v, col, dt, path)) === 0,
-            errRow(path, "not", "Schema should not be valid"), noErrors)
-
-        case "if" =>
-          val ifValid = size(sub(v, col, dt, path)) === 0
-          val thenErrs = schema.get("then").map(s => sub(s, col, dt, path)).getOrElse(noErrors)
-          val elseErrs = schema.get("else").map(s => sub(s, col, dt, path)).getOrElse(noErrors)
-          whenOr(ifValid, thenErrs, elseErrs)
-
-        case "patternProperties" =>
-          dt match {
-            case st: StructType =>
-              (v match { case p: JObj => Some(p); case _ => None }).map { pats =>
-                // Static field names: pattern matching happens at compile time.
-                val perField = st.fields.toSeq.flatMap { f =>
-                  pats.fields.filter { case (p, _) =>
-                    java.util.regex.Pattern.compile(p).matcher(f.name).find()
-                  }.map { case (_, subSchema) =>
-                    val child = col.getField(f.name)
-                    whenOr(child.isNotNull,
-                      sub(subSchema, child, f.dataType, concat(path, lit(s"/${f.name}"))),
-                      noErrors)
-                  }
-                }
-                whenOr(col.isNotNull, concatErrs(perField), noErrors)
-              }.getOrElse(noErrors)
-            case MapType(StringType, vt, _) =>
-              (v match { case p: JObj => Some(p); case _ => None }).map { pats =>
-                val entryErrs = transform(map_entries(col), e => {
-                  val k = e.getField("key"); val value = e.getField("value")
-                  val perPattern = pats.fields.map { case (p, subSchema) =>
-                    whenOr(k.rlike(p) && value.isNotNull,
-                      sub(subSchema, value, vt, concat(path, lit("/"), k)),
-                      noErrors)
-                  }
-                  concatErrs(perPattern)
-                })
-                whenOr(col.isNotNull, flatten(entryErrs).cast(errorType), noErrors)
-              }.getOrElse(noErrors)
-            case _ => noErrors
-          }
-
-        case other =>
-          // Unknown keywords are ignored, like the reference (validate.cljc:118-124).
-          noErrors
-      }
+    def sub(s: JVal, c: Column, d: DataType, p: Column): Plan = compile(s, c, d, p, doc, seen)
+    def subValid(s: JVal, c: Column, d: DataType): Column = validOf(sub(s, c, d, path))
+    def at(k: String): Column = concat(path, lit(s"/$k"))
+    def atKey(k: Column): Column = concat(path, lit("/"), k)
+    def bad: Nothing = throw Unsupported(s"malformed $kw")
+    def subschemas: Vector[JVal] = v match {
+      case JArr(xs) if xs.nonEmpty => xs
+      case _ => bad
     }
-    concatErrs(parts)
-  }
+    def objectValue: JObj = v match { case o: JObj => o; case _ => bad }
+    def keysOf(k: String): Vector[String] = schema.get(k) match {
+      case Some(o: JObj) => o.keys; case _ => Vector.empty
+    }
 
-  // --- allocation-free boolean plan (mirror of `compile`) -------------------
-
-  private def ok(cond: Column): Column = coalesce(cond, lit(false))
-
-  private def compileValid(
-      schema: JVal, col: Column, dt: DataType,
-      doc: SchemaDoc, seen: Set[String]): Column = schema match {
-    case JBool(true) | JNull => lit(true)
-    case JBool(false)        => lit(false)
-    case o: JObj if o.has("$ref") =>
-      val refStr = o.get("$ref") match {
-        case Some(JStr(s)) => s
-        case _             => throw Unsupported("non-string $ref")
-      }
-      if (seen.contains(refStr))
-        throw Unsupported(s"recursive $$ref $refStr cannot compile to a finite Column tree")
-      compileValid(resolveStatic(o, doc), col, dt, doc, seen + refStr)
-    case o: JObj =>
-      val parts = o.fields.map { case (kw, v) => keywordValid(kw, v, o, col, dt, doc, seen) }
-      parts.reduceOption(_ && _).getOrElse(lit(true))
-    case _ => lit(false)
-  }
-
-  private def keywordValid(
-      kw: String, v: JVal, schema: JObj, col: Column, dt: DataType,
-      doc: SchemaDoc, seen: Set[String]): Column = {
-
-    def sub(s: JVal, c: Column, d: DataType): Column = compileValid(s, c, d, doc, seen)
     val jsonType = jsonTypeOf(dt)
+    val numeric = jsonType == "number" || jsonType == "integer"
+    def onlyIf(applies: Boolean)(p: => Plan): Plan = if (applies) p else pass
+    def bounded(holds: Column => Column): Plan = {
+      val bound = v match { case n: JNum => literal(n); case _ => bad }
+      onlyIf(numeric)(Check(col.isNull || holds(bound), path, kw, s"Failed $kw check"))
+    }
+
+    // object keywords: applied to non-null struct / string-keyed map values
+    val isObject = dt match {
+      case _: StructType | MapType(StringType, _, _) => true
+      case _ => false
+    }
+    def onObject(p: => Plan): Plan = if (isObject) Gate(col.isNull, p) else pass
+    // property `k` of the object and its type; None when a struct lacks it
+    def member(k: String): Option[(Column, DataType)] = dt match {
+      case st: StructType => st.fields.find(_.name == k).map(f => (col.getField(k), f.dataType))
+      case MapType(StringType, vt, _) => Some((try_element_at(col, lit(k)), vt))
+      case _ => None
+    }
+    // per-entry plans over a map's (key, value) entries
+    def eachEntry(body: (Column, Column) => Plan): Plan = Gate(col.isNull,
+      Each(map_entries(col), (e, _) => body(e.getField("key"), e.getField("value"))))
 
     kw match {
-      case k if inertKeywords.contains(k) => lit(true)
-
       case "type" =>
-        val allowed: Seq[String] = v match {
-          case JStr(t)     => Seq(t)
-          case JArr(items) => items.collect { case JStr(s) => s }
-          case _           => return lit(true)
-        }
-        val nullOk = allowed.contains("null")
+        val allowed = typeList(v)
         val nonNullOk: Column = jsonType match {
-          case t if allowed.contains(t) => lit(true)
-          case "integer" if allowed.contains("number") => lit(true)
+          case t if typeAdmits(allowed, t) => lit(true)
           case "number" if allowed.contains("integer") =>
             (col.cast(DoubleType) % 1.0) === 0.0 // whole-valued check without ANSI long-overflow
           case _ => lit(false)
         }
-        ok(when(col.isNull, lit(nullOk)).otherwise(nonNullOk))
+        Check(when(col.isNull, lit(allowed.contains("null"))).otherwise(nonNullOk),
+          path, "type", s"Instance is not of type ${allowed.mkString(" or ")}")
 
       case "enum" =>
-        val items = v match { case JArr(i) => i; case _ => return lit(true) }
-        val nullOk = items.contains(JNull)
-        val scalars = items.filter(_ != JNull)
-        // type-incompatible entries: statically false, see the error plan
-        ok(when(col.isNull, lit(nullOk))
-          .otherwise(scalars.map(s =>
+        val values = v match { case JArr(xs) => xs; case _ => bad }
+        // Type-incompatible entries are statically false (the row core just
+        // reports no match) — comparing e.g. a numeric literal against a
+        // string column would raise an ANSI cast error at runtime.
+        val cond = when(col.isNull, lit(values.contains(JNull)))
+          .otherwise(values.filter(_ != JNull).map(s =>
               if (literalComparable(s, jsonType)) col === literal(s) else lit(false))
-            .reduceOption(_ || _).getOrElse(lit(false))))
+            .reduceOption(_ || _).getOrElse(lit(false)))
+        Check(cond, path, "enum", "Value must be in enum")
 
       case "const" =>
-        ok(v match {
+        val cond = v match {
           case JNull => col.isNull
-          case s if !literalComparable(s, jsonType) => lit(false)
+          case s if !literalComparable(s, jsonType) => lit(false) // see enum
           case s => col === literal(s)
-        })
+        }
+        Check(cond, path, "const", "Value must be equal to const")
 
       case "multipleOf" =>
-        if (jsonType != "number" && jsonType != "integer") lit(true)
-        else {
-          val m = v match { case n: JNum => n; case _ => return lit(true) }
-          ok(col.isNull || multipleOfCond(col, dt, m))
-        }
+        // Exact-decimal remainder like the reference's BigDecimal path;
+        // decimal(38,12) covers the engine's numeric columns.
+        val m = v match { case n: JNum if n.v > 0 => n; case _ => bad }
+        onlyIf(numeric)(Check(col.isNull || multipleOfCond(col, dt, m), path,
+          "multipleOf", "Failed multipleOf check"))
 
-      case "maximum" | "minimum" | "exclusiveMaximum" | "exclusiveMinimum" =>
-        if (jsonType != "number" && jsonType != "integer") lit(true)
-        else {
-          val bound = literal(v)
-          val cond = kw match {
-            case "maximum"          => col <= bound
-            case "minimum"          => col >= bound
-            case "exclusiveMaximum" => col < bound
-            case "exclusiveMinimum" => col > bound
-          }
-          ok(col.isNull || cond)
-        }
+      case "maximum"          => bounded(col <= _)
+      case "minimum"          => bounded(col >= _)
+      case "exclusiveMaximum" => bounded(col < _)
+      case "exclusiveMinimum" => bounded(col > _)
 
       case "maxLength" | "minLength" =>
-        if (jsonType != "string") lit(true)
-        else {
-          val n = v match { case x: JNum => x.v.toInt; case _ => return lit(true) }
-          ok(col.isNull ||
-            (if (kw == "maxLength") length(col) <= n else length(col) >= n))
-        }
+        // Spark `length` on strings counts characters (code points for
+        // UTF8String), matching the reference's codePointCount.
+        val n = count(kw, v)
+        onlyIf(jsonType == "string")(
+          if (kw == "maxLength") Check(col.isNull || length(col) <= n, path, kw, "String is too long")
+          else Check(col.isNull || length(col) >= n, path, kw, "String is too short"))
 
       case "pattern" =>
-        if (jsonType != "string") lit(true)
-        else v match {
-          case JStr(p) => ok(col.isNull || col.rlike(p))
-          case _       => lit(true)
-        }
+        // RLIKE = Java-regex find(), same unanchored semantics as the
+        // reference's re-seq (validate.cljc:280-283).
+        val p = v match { case JStr(s) => s; case _ => bad }
+        onlyIf(jsonType == "string")(Check(col.isNull || col.rlike(p), path, "pattern",
+          s"String does not match pattern $p"))
 
       case "format" =>
-        if (jsonType != "string") lit(true)
-        else {
-          val fmt = v match { case JStr(s) => s; case _ => "" }
-          ok(col.isNull || FormatColumns.condition(fmt, col))
-        }
+        val fmt = v match { case JStr(s) => s; case _ => bad }
+        onlyIf(jsonType == "string")(Check(col.isNull || FormatColumns.condition(fmt, col),
+          path, "format", s"Doesn't match $fmt format"))
 
       case "items" =>
-        dt match {
-          case ArrayType(elem, containsNull) =>
-            v match {
-              case sub0: JObj =>
-                // Vectorized fast path: when every element-schema keyword
-                // reduces to field-array operations (array_except / array_min
-                // / array_max over extracted field columns), skip the
-                // interpreted per-element lambda entirely. Higher-order
-                // functions are CodegenFallback in Spark — on a billion-row
-                // scan their per-element boxing dominates; the extracted-
-                // array form stays inside whole-stage codegen.
-                vectorItemsValid(sub0, col, elem, containsNull) match {
-                  case Some(cond) => ok(col.isNull || cond)
-                  case None => ok(col.isNull || forall(col, x => sub(sub0, x, elem)))
-                }
-              case JBool(b) =>
-                if (b) lit(true) else ok(col.isNull || size(col) === 0)
-              case JArr(tuple) =>
-                val pad = schema.get("additionalItems").getOrElse(JNull)
-                val perElem = transform(col, (x, i) => {
-                  val branches = tuple.zipWithIndex.map { case (ts, ti) =>
-                    (i === ti, sub(ts, x, elem))
-                  }
-                  branches.foldRight(sub(pad, x, elem)) {
-                    case ((c, e), acc) => when(c, e).otherwise(acc)
-                  }
-                })
-                ok(col.isNull || forall(perElem, b => b))
-              case _ => lit(true)
-            }
-          case _ => lit(true)
+        def atIndex(i: Column) = concat(path, lit("/"), i.cast(StringType))
+        (v, dt) match {
+          case (s: JObj, ArrayType(elem, containsNull)) =>
+            // Vectorized fast path: when every element-schema keyword
+            // reduces to field-array operations (array_except / array_min
+            // / array_max over extracted field columns), skip the
+            // interpreted per-element lambda entirely. Higher-order
+            // functions are CodegenFallback in Spark — on a billion-row
+            // scan their per-element boxing dominates; the extracted-
+            // array form stays inside whole-stage codegen.
+            Gate(col.isNull, Each(col, (x, i) => sub(s, x, elem, atIndex(i)),
+              vectorItemsValid(s, col, elem, containsNull)))
+          case (JBool(b), _: ArrayType) =>
+            onlyIf(!b)(Check(col.isNull || size(col) === 0, path, "items",
+              "Items must be empty to satisfy a false schema"))
+          case (JArr(tuple), ArrayType(elem, _)) =>
+            val pad = schema.get("additionalItems").getOrElse(JBool(true))
+            val body = (x: Column, i: Column) =>
+              tuple.zipWithIndex.foldRight(sub(pad, x, elem, atIndex(i))) {
+                case ((s, ti), rest) => Cond(i === ti, sub(s, x, elem, atIndex(i)), rest)
+              }
+            // positional branches need the index, which `forall` lacks
+            Gate(col.isNull, Each(col, body,
+              Some(forall(transform(col, (x, i) => validOf(body(x, i))), b => b))))
+          case (_: JObj | _: JBool | _: JArr, _) => pass // items ignores non-arrays
+          case _ => bad
         }
-
-      case "additionalItems" => lit(true)
 
       case "maxItems" | "minItems" =>
-        dt match {
-          case _: ArrayType =>
-            val n = v match { case x: JNum => x.v.toInt; case _ => return lit(true) }
-            ok(col.isNull || (if (kw == "maxItems") size(col) <= n else size(col) >= n))
-          case _ => lit(true)
-        }
+        val n = count(kw, v)
+        onlyIf(jsonType == "array")(
+          if (kw == "maxItems") Check(col.isNull || size(col) <= n, path, kw, "maxItems exceeded")
+          else Check(col.isNull || size(col) >= n, path, kw, "minItems not reached"))
 
       case "uniqueItems" =>
-        (dt, v) match {
-          case (_: ArrayType, JBool(true)) =>
-            ok(col.isNull || size(array_distinct(col)) === size(col))
-          case _ => lit(true)
-        }
+        val unique = v match { case JBool(b) => b; case _ => bad }
+        onlyIf(unique && jsonType == "array")(Check(
+          col.isNull || size(array_distinct(col)) === size(col),
+          path, "uniqueItems", "Instance elements are not all unique"))
 
       case "contains" =>
         dt match {
           case ArrayType(elem, _) =>
-            ok(col.isNull || exists(col, x => sub(v, x, elem)))
-          case _ => lit(true)
+            Check(col.isNull || exists(col, x => subValid(v, x, elem)), path, "contains",
+              "Instance is not valid against schema")
+          case _ => pass
         }
 
       case "required" =>
-        dt match {
-          case st: StructType =>
-            val reqs = v match { case JArr(r) => r.collect { case JStr(s) => s }; case _ => Vector.empty }
-            val props = schema.get("properties") match {
-              case Some(p: JObj) => p; case _ => JObj.empty
+        val names = strings(kw, v)
+        onObject(All(names.map { k =>
+          // Required-recovery semantics (validate.cljc:353-389): a missing
+          // key whose subschema has a *valid* default is not a violation.
+          val recoverable = schema.get("properties").collect { case p: JObj => p.get(k) }.flatten
+            .exists {
+              case prop: JObj => prop.get("default").exists(rowCoreValid(prop, _))
+              case _ => false
             }
-            val perKey = reqs.map { k =>
-              val recoverable = props.get(k).exists {
-                case prop: JObj => prop.get("default").exists { d =>
-                  graft.validate.Validator.validate(SchemaDoc.compile(prop), d).valid
-                }
-                case _ => false
-              }
-              if (recoverable) lit(true)
-              else if (!st.fieldNames.contains(k)) lit(false)
-              else ok(col.isNull || col.getField(k).isNotNull)
-            }
-            ok(col.isNull || perKey.reduceOption(_ && _).getOrElse(lit(true)))
-          case MapType(StringType, _, _) =>
-            val reqs = v match { case JArr(r) => r.collect { case JStr(s) => s }; case _ => Vector.empty }
-            val perKey = reqs.map(k => ok(col.isNull || try_element_at(col, lit(k)).isNotNull))
-            ok(col.isNull || perKey.reduceOption(_ && _).getOrElse(lit(true)))
-          case _ => lit(true)
-        }
+          val present = member(k).map { case (c, _) => col.isNull || c.isNotNull }
+          if (recoverable) pass
+          else Check(present.getOrElse(lit(false)), at(k), "required", "Required property not in object")
+        }))
 
       case "properties" =>
-        (dt, v) match {
-          case (st: StructType, props: JObj) =>
-            val perField = props.fields.flatMap { case (k, subSchema) =>
-              st.fields.find(_.name == k).collect {
-                case f if !gatedStaticTrue(subSchema, f.dataType) =>
-                  val child = col.getField(k)
-                  ok(child.isNull || sub(subSchema, child, f.dataType))
+        val props = objectValue
+        onObject(All(props.fields.flatMap { case (k, s) =>
+          member(k).collect {
+            // statically-true children never enter the plan, so the scan
+            // can prune their columns
+            case (c, t) if !gatedStaticTrue(s, t) => Gate(c.isNull, sub(s, c, t, at(k)))
+          }
+        }))
+
+      case "patternProperties" =>
+        val pats = objectValue
+        dt match {
+          case st: StructType =>
+            // Static field names: pattern matching happens at compile time.
+            Gate(col.isNull, All(st.fields.toSeq.flatMap { f =>
+              val c = col.getField(f.name)
+              pats.fields.collect { case (p, s) if matches(p, f.name) =>
+                Gate(c.isNull, sub(s, c, f.dataType, at(f.name)))
               }
-            }
-            ok(col.isNull || perField.reduceOption(_ && _).getOrElse(lit(true)))
-          case (MapType(StringType, vt, _), props: JObj) =>
-            val perKey = props.fields.map { case (k, subSchema) =>
-              val child = try_element_at(col, lit(k))
-              ok(child.isNull || sub(subSchema, child, vt))
-            }
-            ok(col.isNull || perKey.reduceOption(_ && _).getOrElse(lit(true)))
-          case _ => lit(true)
+            }))
+          case MapType(StringType, vt, _) =>
+            eachEntry((k, value) => All(pats.fields.map { case (p, s) =>
+              Gate(!k.rlike(p) || value.isNull, sub(s, value, vt, atKey(k)))
+            }))
+          case _ => pass
         }
 
       case "additionalProperties" =>
+        // properties neither named in `properties` nor matched by a
+        // `patternProperties` regex must satisfy the subschema
+        val named = keysOf("properties").toSet
+        val pats = keysOf("patternProperties")
         dt match {
           case st: StructType =>
-            val named = schema.get("properties") match {
-              case Some(p: JObj) => p.map.keySet; case _ => Set.empty[String]
-            }
-            val extras = st.fields.filterNot(f => named.contains(f.name)).toSeq
-            val perField = v match {
-              case JBool(false) =>
-                extras.map(f => ok(col.isNull || col.getField(f.name).isNull))
-              case subSchema =>
-                extras.map { f =>
-                  val child = col.getField(f.name)
-                  ok(child.isNull || sub(subSchema, child, f.dataType))
-                }
-            }
-            ok(col.isNull || perField.reduceOption(_ && _).getOrElse(lit(true)))
+            // A struct's fields are a closed set, so the additional ones
+            // are known at compile time; with `false` they must be absent.
+            val extra = st.fields.toSeq.filterNot(f =>
+              named.contains(f.name) || pats.exists(matches(_, f.name)))
+            Gate(col.isNull, All(extra.map { f =>
+              val c = col.getField(f.name)
+              v match {
+                case JBool(false) => Check(col.isNull || c.isNull, at(f.name),
+                  "additionalProperties", "An additional property failed the schema check")
+                case s => Gate(c.isNull, sub(s, c, f.dataType, at(f.name)))
+              }
+            }))
           case MapType(StringType, vt, _) =>
-            val named = schema.get("properties") match {
-              case Some(p: JObj) => p.keys; case _ => Vector.empty[String]
+            eachEntry { (k, value) =>
+              val hits = named.toSeq.map(n => k === lit(n)) ++ pats.map(p => k.rlike(p))
+              Gate(hits.foldLeft(value.isNull)(_ || _), sub(v, value, vt, atKey(k)))
             }
-            val pats = schema.get("patternProperties") match {
-              case Some(p: JObj) => p.keys; case _ => Vector.empty[String]
-            }
-            val allOk = forall(map_entries(col), e => {
-              val k = e.getField("key"); val value = e.getField("value")
-              val namedHit = if (named.isEmpty) lit(false)
-                else named.map(n => k === lit(n)).reduce(_ || _)
-              val patHit = if (pats.isEmpty) lit(false)
-                else pats.map(p => k.rlike(p)).reduce(_ || _)
-              namedHit || patHit || value.isNull || ok(sub(v, value, vt))
-            })
-            ok(col.isNull || allOk)
-          case _ => lit(true)
+          case _ => pass
         }
 
       case "dependencies" =>
-        (dt, v) match {
-          case (st: StructType, deps: JObj) =>
-            val perDep = deps.fields.map { case (k, dv) =>
-              if (!st.fieldNames.contains(k)) lit(true)
-              else {
-                val present = col.getField(k).isNotNull
-                val depOk = dv match {
-                  case JArr(names) =>
-                    names.collect { case JStr(n) => n }.map { n =>
-                      if (!st.fieldNames.contains(n)) lit(false)
-                      else ok(col.getField(n).isNotNull)
-                    }.reduceOption(_ && _).getOrElse(lit(true))
-                  case s => sub(s, col, dt)
-                }
-                ok(!present || depOk)
-              }
-            }
-            ok(col.isNull || perDep.reduceOption(_ && _).getOrElse(lit(true)))
-          case _ => lit(true)
-        }
+        val deps = objectValue
+        onObject(All(deps.fields.map { case (k, dv) =>
+          member(k) match {
+            case None => pass
+            case Some((c, _)) => Gate(c.isNull, dv match {
+              case JArr(_) => All(strings(kw, dv).map { n =>
+                Check(member(n).map(_._1.isNotNull).getOrElse(lit(false)), at(n),
+                  "dependencies", "Not every dependency in instance")
+              })
+              case s => sub(s, col, dt, path)
+            })
+          }
+        }))
 
       case "propertyNames" =>
         dt match {
           case st: StructType =>
-            val bad = st.fieldNames.filterNot { name =>
-              graft.validate.Validator.validate(SchemaDoc.compile(v), JStr(name)).valid
-            }.toSeq
-            val perField = bad.map(k => ok(col.isNull || col.getField(k).isNull))
-            ok(col.isNull || perField.reduceOption(_ && _).getOrElse(lit(true)))
+            // Static field names: a bad name is a violation when present.
+            val badNames = st.fieldNames.toSeq.filterNot(name => rowCoreValid(v, JStr(name)))
+            Gate(col.isNull, All(badNames.map(k =>
+              Check(col.isNull || col.getField(k).isNull, at(k), "propertyNames", "propertyNames"))))
           case MapType(StringType, _, _) =>
-            ok(col.isNull || forall(map_keys(col), k => ok(sub(v, k, StringType))))
-          case _ => lit(true)
+            Gate(col.isNull, Each(map_keys(col), (k, _) =>
+              Check(subValid(v, k, StringType), atKey(k), "propertyNames", "propertyNames")))
+          case _ => pass
         }
 
       case "maxProperties" | "minProperties" =>
-        dt match {
-          case st: StructType =>
-            val n = v match { case x: JNum => x.v.toInt; case _ => return lit(true) }
-            val cnt = st.fieldNames.map(k =>
-              when(col.getField(k).isNotNull, 1).otherwise(0)).reduce(_ + _)
-            ok(col.isNull || (if (kw == "maxProperties") cnt <= n else cnt >= n))
-          case MapType(StringType, _, _) =>
-            val n = v match { case x: JNum => x.v.toInt; case _ => return lit(true) }
-            val cnt = size(map_keys(col))
-            ok(col.isNull || (if (kw == "maxProperties") cnt <= n else cnt >= n))
-          case _ => lit(true)
+        val n = count(kw, v)
+        val propertyCount: Option[Column] = dt match {
+          case st: StructType => Some(st.fieldNames.toSeq.map(k =>
+            when(col.getField(k).isNotNull, 1).otherwise(0)).reduceOption(_ + _).getOrElse(lit(0)))
+          case MapType(StringType, _, _) => Some(size(map_keys(col)))
+          case _ => None
+        }
+        propertyCount.fold(pass) { cnt =>
+          if (kw == "maxProperties") Check(col.isNull || cnt <= n, path, kw, "Max properties exceeded")
+          else Check(col.isNull || cnt >= n, path, kw, "Min properties not reached")
         }
 
-      case "allOf" =>
-        v match {
-          case JArr(subs) => subs.map(s => sub(s, col, dt)).reduceOption(_ && _).getOrElse(lit(true))
-          case _          => lit(true)
-        }
+      // Applicators test their subschemas with the boolean lowering.
+      case "allOf" => All(subschemas.map(sub(_, col, dt, path)))
 
       case "anyOf" =>
-        v match {
-          case JArr(subs) => ok(subs.map(s => sub(s, col, dt)).reduceOption(_ || _).getOrElse(lit(false)))
-          case _          => lit(true)
-        }
+        Check(subschemas.map(subValid(_, col, dt)).reduce(_ || _),
+          path, "anyOf", "No schema validates for anyOf validation")
 
       case "oneOf" =>
-        v match {
-          case JArr(subs) =>
-            val cnt = subs.map(s => when(sub(s, col, dt), 1).otherwise(0)).reduce(_ + _)
-            ok(cnt === 1)
-          case _ => lit(true)
-        }
+        val validCount = subschemas.map(s => when(subValid(s, col, dt), 1).otherwise(0)).reduce(_ + _)
+        Check(validCount === 1, path, "oneOf", "oneOf validation failed")
 
-      case "not" => ok(!ok(sub(v, col, dt)))
+      case "not" => Check(!ok(subValid(v, col, dt)), path, "not", "Schema should not be valid")
 
       case "if" =>
-        val thenOk = schema.get("then").map(s => sub(s, col, dt)).getOrElse(lit(true))
-        val elseOk = schema.get("else").map(s => sub(s, col, dt)).getOrElse(lit(true))
-        ok(when(ok(sub(v, col, dt)), thenOk).otherwise(elseOk))
+        def branch(k: String) = schema.get(k).map(sub(_, col, dt, path)).getOrElse(pass)
+        Cond(ok(subValid(v, col, dt)), branch("then"), branch("else"))
 
-      case "patternProperties" =>
-        dt match {
-          case st: StructType =>
-            (v match { case p: JObj => Some(p); case _ => None }).map { pats =>
-              val perField = st.fields.toSeq.flatMap { f =>
-                pats.fields.filter { case (p, _) =>
-                  java.util.regex.Pattern.compile(p).matcher(f.name).find()
-                }.map { case (_, subSchema) =>
-                  val child = col.getField(f.name)
-                  ok(child.isNull || sub(subSchema, child, f.dataType))
-                }
-              }
-              ok(col.isNull || perField.reduceOption(_ && _).getOrElse(lit(true)))
-            }.getOrElse(lit(true))
-          case MapType(StringType, vt, _) =>
-            (v match { case p: JObj => Some(p); case _ => None }).map { pats =>
-              val allOk = forall(map_entries(col), e => {
-                val k = e.getField("key"); val value = e.getField("value")
-                pats.fields.map { case (p, subSchema) =>
-                  !k.rlike(p) || value.isNull || ok(sub(subSchema, value, vt))
-                }.reduceOption(_ && _).getOrElse(lit(true))
-              })
-              ok(col.isNull || allOk)
-            }.getOrElse(lit(true))
-          case _ => lit(true)
-        }
-
-      case _ => lit(true)
+      case _ => pass // inert and unknown keywords
     }
   }
 
@@ -973,13 +552,6 @@ object ColumnCompiler {
     val elem = elemDt match {
       case st: StructType if !containsNull => st
       case _ => return None
-    }
-
-    def typeCompatible(allowed: Seq[String], ft: DataType, nullable: Boolean): Boolean = {
-      // inside `properties` the child check is gated on non-null, so a
-      // nullable field only needs compatibility for its non-null values
-      val t = try jsonTypeOf(ft) catch { case _: Unsupported => return false }
-      allowed.contains(t) || (t == "integer" && allowed.contains("number"))
     }
 
     // per-field subschema → Some(conds) if fully vectorizable
@@ -1007,12 +579,9 @@ object ColumnCompiler {
           val parts = o.fields.map {
             case (k, _) if inertKeywords.contains(k) => Some(Nil)
             case ("type", tv) =>
-              val allowed = tv match {
-                case JStr(t)     => Seq(t)
-                case JArr(items) => items.collect { case JStr(s) => s }
-                case _           => return None
-              }
-              if (typeCompatible(allowed, ft, nullable)) Some(Nil) else None
+              // inside `properties` the child check is gated on non-null, so a
+              // nullable field only needs compatibility for its non-null values
+              if (ftJson.exists(typeAdmits(typeList(tv), _))) Some(Nil) else None
             case ("enum", JArr(items)) => allowedValuesCond(items)
             case ("const", c) => allowedValuesCond(Vector(c))
             case ("minimum", b: JNum) if numericType(ft) =>
@@ -1047,13 +616,8 @@ object ColumnCompiler {
         val parts = o.fields.map {
           case (k, _) if inertKeywords.contains(k) && k != "then" && k != "else" => Some(Nil)
           case ("type", tv) =>
-            val allowed = tv match {
-              case JStr(t)     => Seq(t)
-              case JArr(items) => items.collect { case JStr(s) => s }
-              case _           => return None
-            }
             // non-null struct elements are always objects
-            if (allowed.contains("object")) Some(Nil) else None
+            if (typeList(tv).contains("object")) Some(Nil) else None
           case ("required", JArr(reqs)) =>
             // non-nullable field: statically present. Nullable field:
             // null-presence detected with codegen'd array_intersect against

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import graft.engine.{ColumnCompiler, DocTable}
-import graft.schema.SchemaDoc
+import graft.engine.{DocTable, ValidationJob}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -34,16 +33,12 @@ object StreamingChecks {
         col("n"), col("min_value"), col("max_value"),
         col("avg_value"), col("approx_distinct"))
 
-  /** Streaming validation: the same driver-compiled Catalyst error plan as
-    * the batch path, applied to a stream of interleaved docs. */
-  def validatedStream(stream: DataFrame, schemaJson: String = DocTable.docSchemaJson): DataFrame = {
-    val doc = SchemaDoc.schema(schemaJson)
-    val payloadFields = stream.schema.fields.filter(f => f.name == "doc_id" || f.name == "spans")
-    val payload = struct(payloadFields.map(f => col(f.name)).toSeq: _*)
-    stream
-      .withColumn("errors", ColumnCompiler.errors(doc, payload, StructType(payloadFields)))
-      .withColumn("valid", size(col("errors")) === 0)
-  }
+  /** Streaming validation: the batch [[ValidationJob.withVerdicts]] applied
+    * to a stream of interleaved docs — the same driver-compiled Catalyst
+    * plan, and the same row-core fallback for a schema the compiler cannot
+    * express. Adds `valid` + `errors`. */
+  def validatedStream(stream: DataFrame, schemaJson: String = DocTable.docSchemaJson): DataFrame =
+    ValidationJob.withVerdicts(stream.sparkSession, stream, schemaJson)
 
   /** Per-window histogram bins over a value stream — the streaming substrate
     * for drift monitoring. One watermarked stateful aggregation; emit in

@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Dynamic JSON objects as MapType columns: the column compiler's
   * map-specific plans (required / properties / patternProperties /
-  * additionalProperties / propertyNames / min-maxProperties) must agree with
-  * the row-level core on every row. */
+  * additionalProperties / propertyNames / min-maxProperties / dependencies)
+  * must agree with the row-level core on every row. */
 class MapTypeSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -26,7 +26,8 @@ class MapTypeSpec extends AnyFunSuite {
       |      "properties": {"name": {"type": "string", "minLength": 2}},
       |      "patternProperties": {"^num_": {"pattern": "^[0-9]+$"}},
       |      "additionalProperties": {"maxLength": 5},
-      |      "propertyNames": {"pattern": "^[a-z_]+$"}
+      |      "propertyNames": {"pattern": "^[a-z_]+$"},
+      |      "dependencies": {"tag": ["num_b"]}
       |    }
       |  }
       |}""".stripMargin
@@ -47,7 +48,8 @@ class MapTypeSpec extends AnyFunSuite {
     Row(6L, m()),                                              // minProperties fail + required
     Row(7L, m("name" -> "bob", "a" -> "1", "b" -> "2", "c" -> "3", "d" -> "4")), // maxProperties
     Row(8L, null),                                             // required props missing
-    Row(9L, m("name" -> "ok", "num_b" -> "42", "tag" -> "tiny")) // valid
+    Row(9L, m("name" -> "ok", "num_b" -> "42", "tag" -> "tiny")), // valid
+    Row(10L, m("name" -> "ok", "tag" -> "tiny"))                 // dependencies fail
   )
 
   test("map-typed dynamic objects: column plan agrees with row core on all cases") {
@@ -57,7 +59,7 @@ class MapTypeSpec extends AnyFunSuite {
     val doc = SchemaDoc.schema(schemaJson)
     val colPath = df.select(col("doc_num"),
       ColumnCompiler.valid(doc, payload, payloadType).as("fast"),
-      (size(ColumnCompiler.errors(doc, payload, payloadType)) === 0).as("viaErrors"))
+      (size(ColumnCompiler.ungatedErrors(doc, payload, payloadType)) === 0).as("viaErrors"))
     val rowPath = RowValidator.validateRows(spark, df, schemaJson)
       .select(col("doc_num"), col("valid").as("rowValid"))
     val joined = colPath.join(rowPath, "doc_num").orderBy("doc_num").collect()
@@ -67,7 +69,8 @@ class MapTypeSpec extends AnyFunSuite {
     }
     val verdicts = joined.map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     assert(verdicts === Map(0L -> true, 1L -> false, 2L -> false, 3L -> false,
-      4L -> false, 5L -> false, 6L -> false, 7L -> false, 8L -> false, 9L -> true))
+      4L -> false, 5L -> false, 6L -> false, 7L -> false, 8L -> false, 9L -> true,
+      10L -> false))
   }
 
   test("violation rows carry dynamic map keys in paths") {

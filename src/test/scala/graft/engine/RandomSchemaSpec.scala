@@ -38,6 +38,68 @@ class RandomSchemaSpec extends AnyFunSuite {
     Gen.const(JObj.of("enum" -> JArr(Vector(jnum(0), jnum(16), jstr("zero"))))),
     Gen.const(JObj.of("type" -> JArr(Vector(jstr("integer"), jstr("null"))))))
 
+  private def arr(xs: String*): JVal = JArr(xs.map(jstr).toVector)
+
+  /** Object-shape keywords over a struct with fields `fields` (plus a name
+    * the struct lacks): dependencies in array and schema form,
+    * propertyNames, patternProperties, additionalProperties (false and a
+    * subschema) and min/maxProperties. Several may co-occur, so
+    * additionalProperties meets patternProperties. */
+  private def objectShapeKw(fields: Vector[String]): Gen[Vector[(String, JVal)]] = {
+    val names = fields :+ "missing"
+    // a subschema whose keywords each bind one JSON type, so it is
+    // meaningful whatever the field's type
+    val anyTyped = Gen.oneOf(
+      JObj.of("maxLength" -> jnum(3)),
+      JObj.of("minimum" -> jnum(1), "minLength" -> jnum(2)),
+      JObj.of("type" -> jstr("string")),
+      JObj.of("minItems" -> jnum(2), "pattern" -> jstr("^doc-")))
+    val patternProps: Gen[(String, JVal)] =
+      for (p <- Gen.oneOf("_", "^(text|doc)", "s$", "^o|^k"); sub <- anyTyped)
+        yield "patternProperties" -> JObj.of(p -> sub)
+    val additional: Gen[(String, JVal)] =
+      Gen.oneOf(Gen.const(JBool(false)), anyTyped).map(s => "additionalProperties" -> s)
+    val one: Gen[(String, JVal)] = Gen.oneOf(
+      for (k <- Gen.oneOf(names); ds <- Gen.someOf(names))
+        yield "dependencies" -> JObj.of(k -> JArr(ds.map(jstr).toVector)),
+      for (k <- Gen.oneOf(names); n <- Gen.choose(1, fields.size))
+        yield "dependencies" -> JObj.of(k -> JObj.of("minProperties" -> jnum(n))),
+      for (k <- Gen.oneOf(names); sub <- anyTyped)
+        yield "dependencies" -> JObj.of(k -> JObj.of("properties" -> JObj.of(fields.head -> sub))),
+      Gen.oneOf(JObj.of("maxLength" -> jnum(4)), JObj.of("pattern" -> jstr("^[a-z_]+$")),
+        JObj.of("enum" -> arr("kind", "text", "offset", "doc_id")))
+        .map(s => "propertyNames" -> s),
+      patternProps,
+      additional,
+      Gen.choose(0, 4).map(n => "minProperties" -> jnum(n)),
+      Gen.choose(1, 4).map(n => "maxProperties" -> jnum(n)))
+    Gen.frequency(
+      3 -> Gen.choose(1, 3).flatMap(n => Gen.listOfN(n, one))
+        .map(kws => kws.toVector.groupBy(_._1).map(_._2.head).toVector.sortBy(_._1)),
+      // a property matched by a pattern is not additional
+      1 -> Gen.zip(patternProps, additional).map { case (p, a) => Vector(p, a) })
+  }
+
+  private val spanFields = Vector("kind", "text", "media_ref", "offset")
+
+  /** Conditionals and conjunctions inside `items`. */
+  private val itemLogicKw: Gen[Vector[(String, JVal)]] = Gen.oneOf(
+    for (k <- Gen.oneOf("text", "media"); off <- intPred) yield Vector[(String, JVal)](
+      "if" -> JObj.of("properties" -> JObj.of("kind" -> JObj.of("const" -> jstr(k)))),
+      "then" -> JObj.of("required" -> arr("media_ref")),
+      "else" -> JObj.of("properties" -> JObj.of("offset" -> off))),
+    intPred.map(off => Vector[(String, JVal)](
+      "if" -> JObj.of("required" -> arr("text")),
+      "then" -> JObj.of("properties" -> JObj.of("offset" -> off)))),
+    for (off <- intPred; req <- Gen.someOf(spanFields)) yield Vector[(String, JVal)](
+      "allOf" -> JArr(Vector(
+        JObj.of("properties" -> JObj.of("offset" -> off)),
+        JObj.of("required" -> JArr(req.map(jstr).toVector))))),
+    // the doc schema's own shape: an `if` wrapped in `allOf`
+    Gen.const(Vector[(String, JVal)]("allOf" -> JArr(Vector(JObj.of(
+      "if" -> JObj.of("properties" -> JObj.of("kind" -> JObj.of("const" -> jstr("media")))),
+      "then" -> JObj.of("properties" -> JObj.of("media_ref" -> JObj.of("type" -> jstr("string"))))))))))
+
   private val spanItemSchema: Gen[JObj] = for {
     kindPred <- Gen.oneOf(
       JObj.of("enum" -> JArr(Vector(jstr("text"), jstr("media")))),
@@ -47,15 +109,31 @@ class RandomSchemaSpec extends AnyFunSuite {
       JObj.of("type" -> jstr("string")))
     offPred <- intPred
     useReq <- Gen.oneOf(true, false)
+    extras <- Gen.frequency(
+      4 -> Gen.const(Vector.empty[(String, JVal)]),
+      2 -> objectShapeKw(spanFields),
+      2 -> itemLogicKw)
   } yield {
     val base = Vector(
       "type" -> (jstr("object"): JVal),
       "properties" -> (JObj.of("kind" -> kindPred, "offset" -> offPred): JVal))
-    JObj(if (useReq) base :+ ("required" -> (JArr(Vector(jstr("kind"))): JVal)) else base)
+    JObj((if (useReq) base :+ ("required" -> (JArr(Vector(jstr("kind"))): JVal)) else base) ++ extras)
   }
 
+  private val spansItems: Gen[Vector[(String, JVal)]] = Gen.frequency(
+    4 -> spanItemSchema.map(items => Vector[(String, JVal)]("items" -> items)),
+    // tuple form: positions 0 and 1 get their own schema, the rest
+    // `additionalItems` (absent, false or a schema)
+    1 -> (for {
+      a <- spanItemSchema
+      b <- spanItemSchema
+      pad <- Gen.oneOf(Gen.const(Vector.empty[(String, JVal)]),
+        Gen.const(Vector[(String, JVal)]("additionalItems" -> JBool(false))),
+        spanItemSchema.map(c => Vector[(String, JVal)]("additionalItems" -> c)))
+    } yield Vector[(String, JVal)]("items" -> JArr(Vector(a, b))) ++ pad))
+
   private val spansPred: Gen[JObj] = for {
-    items <- spanItemSchema
+    items <- spansItems
     minI <- Gen.choose(0, 3)
     maxI <- Gen.choose(2, 6)
     extras <- Gen.someOf(
@@ -64,9 +142,7 @@ class RandomSchemaSpec extends AnyFunSuite {
       Vector[(String, JVal)]("uniqueItems" -> JBool(true)),
       Vector[(String, JVal)]("contains" -> JObj.of("properties" ->
         JObj.of("kind" -> JObj.of("const" -> jstr("media"))))))
-  } yield JObj(Vector(
-    "type" -> (jstr("array"): JVal),
-    "items" -> (items: JVal)) ++ extras.flatten)
+  } yield JObj(Vector("type" -> (jstr("array"): JVal)) ++ items ++ extras.flatten)
 
   private val docSchemaGen: Gen[JObj] = for {
     idPred <- stringPred
@@ -79,7 +155,8 @@ class RandomSchemaSpec extends AnyFunSuite {
         JArr(ps.map(p => JObj.of("properties" -> JObj.of("doc_id" -> p))).toVector))),
       2 -> Gen.listOfN(2, Gen.choose(0, 5)).map(ns => Vector[(String, JVal)]("oneOf" ->
         JArr(ns.map(n => JObj.of("properties" -> JObj.of("spans" ->
-          JObj.of("minItems" -> jnum(n))))).toVector).asInstanceOf[JVal])))
+          JObj.of("minItems" -> jnum(n))))).toVector).asInstanceOf[JVal])),
+      2 -> objectShapeKw(Vector("doc_id", "spans")))
   } yield JObj(Vector(
     "type" -> (jstr("object"): JVal),
     "required" -> (JArr(Vector(jstr("doc_id"))): JVal),
@@ -92,7 +169,9 @@ class RandomSchemaSpec extends AnyFunSuite {
       1 -> Gen.const("imag"), 1 -> Gen.const(null))
     o <- Gen.frequency(6 -> Gen.choose(-5, 120).map(Integer.valueOf),
       1 -> Gen.const(null: Integer))
-  } yield Row(k, "t", null, o)
+    t <- Gen.frequency(3 -> Gen.const("t"), 1 -> Gen.const("text"), 1 -> Gen.const(null))
+    m <- Gen.frequency(2 -> Gen.const(null), 1 -> Gen.const("m-1"))
+  } yield Row(k, t, m, o)
 
   private val docGen: Gen[Row] = for {
     id <- Gen.frequency(4 -> Gen.choose(1, 3).map(i => s"doc-$i"),
@@ -135,11 +214,12 @@ class RandomSchemaSpec extends AnyFunSuite {
           val doc = graft.schema.SchemaDoc.schema(schemaJson)
           Some(df.select(col("doc_num"),
             ColumnCompiler.valid(doc, payload, payloadType).as("fast"),
-            (size(ColumnCompiler.errors(doc, payload, payloadType)) === 0).as("viaErrors")))
+            (size(ColumnCompiler.ungatedErrors(doc, payload, payloadType)) === 0).as("viaErrors")))
         } catch { case _: ColumnCompiler.Unsupported => fellBack += 1; None }
 
       colPath.foreach { cp =>
-        val rp = RowValidator.validateRows(spark, df.select("doc_num", "doc_id", "spans"), schemaJson)
+        // the instance is (doc_id, spans), the same fields the column path sees
+        val rp = RowValidator.validateRows(spark, df, schemaJson, Some(Seq("doc_id", "spans")))
           .select(col("doc_num"), col("valid").as("rowValid"))
         val joined = cp.join(rp, "doc_num").collect()
         joined.foreach { r =>
@@ -151,5 +231,27 @@ class RandomSchemaSpec extends AnyFunSuite {
       }
     }
     info(s"schemas compiled: ${nSchemas - fellBack}, row-core fallbacks: $fellBack")
+  }
+
+  test("struct additionalProperties skips fields matched by patternProperties") {
+    // a struct field matched by a pattern is not additional, so `false`
+    // must not flag it
+    val schemaJson = Json.render(JObj.of("properties" -> JObj.of("spans" -> JObj.of(
+      "items" -> JObj.of(
+        "properties" -> JObj.of("kind" -> JObj.of("type" -> jstr("string"))),
+        "patternProperties" -> JObj.of("^(text|off)" -> JObj.of("minimum" -> jnum(0))),
+        "additionalProperties" -> JBool(false))))))
+    val docs = Seq(
+      Row("doc-1", Seq(Row("text", "t", null, 3))),       // only pattern fields
+      Row("doc-2", Seq(Row("text", "t", "m-1", 3))),      // media_ref is additional
+      Row("doc-3", Seq(Row("text", null, null, -1))))     // offset fails its pattern
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(docs, 1), dfSchema)
+      .withColumn("doc_num", monotonically_increasing_id())
+    val verdicts = ValidationJob.withVerdicts(spark, df, schemaJson)
+      .select("doc_id", "valid").collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
+    assert(verdicts === Map("doc-1" -> true, "doc-2" -> false, "doc-3" -> false))
+    val rowCore = RowValidator.validateRows(spark, df, schemaJson, Some(Seq("doc_id", "spans")))
+      .select("doc_id", "valid").collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
+    assert(verdicts === rowCore)
   }
 }

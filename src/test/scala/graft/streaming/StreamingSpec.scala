@@ -60,6 +60,32 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("streaming validation falls back to the row core and matches batch verdicts") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    // recursive $ref: not column-expressible, so both paths take the row core
+    val meta = """{"$ref":"http://json-schema.org/draft-07/schema#"}"""
+    val base = Seq((1L, "alpha beta gamma"), (2L, "delta words here"),
+      (97L, "zero spans doc"), (7L, "injected duplicate id"))
+    val input = MemoryStream[(Long, String)]
+    val validated = StreamingChecks.validatedStream(
+      DocTable.fromBase(input.toDF().toDF("doc_id", "text")), meta)
+    assert(validated.columns.takeRight(2).toSeq === Seq("valid", "errors"))
+    val q = validated.select("doc_num", "valid").writeStream.format("memory")
+      .queryName("meta_verdicts").outputMode("append").start()
+    try {
+      input.addData(base: _*)
+      q.processAllAvailable()
+      def verdicts(df: org.apache.spark.sql.DataFrame) =
+        df.select("doc_num", "valid").collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+      val streamed = verdicts(spark.table("meta_verdicts"))
+      val batch = verdicts(graft.engine.ValidationJob.withVerdicts(
+        spark, DocTable.fromBase(base.toDF("doc_id", "text")), meta))
+      assert(streamed.size === base.size)
+      assert(streamed === batch)
+    } finally q.stop()
+  }
+
   test("windowed bins + drift scoring: streaming histogram matches batch PSI") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
