@@ -99,6 +99,8 @@ object RowValidator {
     }(Encoders.row(outSchema))
   }
 
+  private val RowCoreOptions = Options()
+
   /** The row core's verdict on one instance: `valid` plus one
     * `mk(path, keyword, message)` per [[leafErrors]] violation. Every
     * row-core entry point (validateRows, the schema registry's row-core
@@ -106,7 +108,7 @@ object RowValidator {
     * all of them emit the same violation rows. */
   private def verdict[R](schema: SchemaDoc, inst: JVal)(
       mk: (String, String, String) => R): (Boolean, Vector[R]) = {
-    val res = Validator.validate(schema, inst, Options())
+    val res = Validator.validate(schema, inst, RowCoreOptions)
     (res.valid, leafErrors(res.errors).map(v => mk(v.path, v.keyword, v.message)))
   }
 
@@ -125,11 +127,13 @@ object RowValidator {
     }
   }
 
+  /** Applicator keywords whose violation only summarizes child causes. */
+  private val parents = Set("properties", "items", "allOf", "anyOf", "dependencies",
+    "patternProperties", "additionalProperties", "then", "else", "$ref")
+
   /** The engine's exploded violation rows are the flattened leaves: drop
     * applicator-level parent entries that only summarize child causes. */
-  def leafErrors(errors: Vector[Violation]): Vector[Violation] = {
-    val parents = Set("properties", "items", "allOf", "anyOf", "dependencies",
-      "patternProperties", "additionalProperties", "then", "else", "$ref")
+  def leafErrors(errors: Vector[Violation]): Vector[Violation] =
     errors.filterNot { v =>
       // applicator summary rows, when any deeper/leaf cause exists
       (parents.contains(v.keyword) &&
@@ -143,5 +147,4 @@ object RowValidator {
       case Vector() if errors.nonEmpty => errors.take(1) // keep at least one row
       case leaves => leaves
     }
-  }
 }

@@ -66,20 +66,8 @@ final case class Options(
   */
 object Validator {
 
-  /** Canonical keyword evaluation order (`validate.cljc:766-801`). */
-  val KeywordOrder: Vector[String] = Vector(
-    "$schema", "definitions",
-    "title", "description", "default", "readOnly", "writeOnly", "examples",
-    "type", "enum", "const",
-    "multipleOf", "maximum", "exclusiveMinimum", "minimum", "exclusiveMaximum",
-    "maxLength", "minLength", "pattern",
-    "items", "additionalItems", "maxItems", "minItems", "uniqueItems", "contains",
-    "maxProperties", "minProperties", "required", "properties",
-    "patternProperties", "additionalProperties", "dependencies", "propertyNames",
-    "if", "then", "else",
-    "allOf", "anyOf", "oneOf", "not",
-    "format",
-    "contentEncoding", "contentMediaType")
+  /** The reference's keyword evaluation order, [[SchemaDoc.KeywordOrder]]. */
+  val KeywordOrder: Vector[String] = SchemaDoc.KeywordOrder
 
   final class RefResolutionException(msg: String) extends RuntimeException(msg)
 
@@ -181,32 +169,39 @@ object Validator {
 
   private val NoOp = KwOut()
 
+  /** The reference's keyword fold (`validate.cljc:803-823`). The reference
+    * folds over `(distinct (concat keywords (keys schema)))`
+    * (`validate.cljc:823`) and looks each name up in the schema, at every
+    * node for every instance. Here the fold walks the node's keyword plan
+    * instead — its draft-7 keywords with their values, in that order —
+    * which [[SchemaDoc.compile]] works out once per schema node. Only a
+    * custom `Options.keywordOrder` plans the node again on each call. */
   private def keywordFold(schema: JObj, instance0: JVal, ctx: Ctx, path: String): VResult = {
-    val order = ctx.opts.keywordOrder.getOrElse(KeywordOrder)
-    val kws = (order ++ schema.keys).distinct
+    val plan = ctx.opts.keywordOrder match {
+      case None        => ctx.doc.keywordPlan(schema)
+      case Some(order) => SchemaDoc.keywordPlan(schema, order)
+    }
     var inst = instance0
     var ann = Map.empty[String, JVal]
     var typ: Option[String] = None
-    val errs = Vector.newBuilder[Violation]
+    var errs = Vector.empty[Violation]
     val journal = if (ctx.opts.journal) Vector.newBuilder[JournalEntry] else null
-    var anyError = false
-    kws.foreach { kw =>
-      schema.get(kw) match {
-        case None => ()
-        case Some(v) =>
-          val out = processKeyword(kw, v, schema, inst, ann, ctx, path)
-          if (out.errors.nonEmpty) { anyError = true; errs ++= out.errors }
-          out.instance.foreach(inst = _)
-          out.annotations.foreach(ann = _)
-          out.instanceType.foreach(typ = _)
-          // the reference journals only non-nil keyword results
-          // (validate.cljc:805-818); a NoOp outcome ≈ nil
-          if (journal != null && out != NoOp)
-            journal += JournalEntry(kw, out.errors, out.instance, out.annotations,
-              out.instanceType.flatten)
-      }
+    var i = 0
+    while (i < plan.length) {
+      val (kw, v) = plan(i)
+      val out = processKeyword(kw, v, schema, inst, ann, ctx, path)
+      if (out.errors.nonEmpty) errs ++= out.errors
+      out.instance.foreach(inst = _)
+      out.annotations.foreach(ann = _)
+      out.instanceType.foreach(typ = _)
+      // the reference journals only non-nil keyword results
+      // (validate.cljc:805-818); a NoOp outcome ≈ nil
+      if (journal != null && out != NoOp)
+        journal += JournalEntry(kw, out.errors, out.instance, out.annotations,
+          out.instanceType.flatten)
+      i += 1
     }
-    VResult(!anyError, errs.result(), inst, ann, typ,
+    VResult(errs.isEmpty, errs, inst, ann, typ,
       if (journal != null) journal.result() else Vector.empty)
   }
 
@@ -328,15 +323,17 @@ object Validator {
       }
 
     // ---- strings (validate.cljc:264-283) ----
+    // Length and count bounds compare as decimals, like the reference's
+    // numeric `<`/`>`: a bound past Int range must not wrap.
     case "maxLength" =>
       (instance, v) match {
-        case (s: JStr, n: JNum) if s.codePointLength > n.v.toInt =>
+        case (s: JStr, n: JNum) if n.v < s.codePointLength =>
           KwOut(errors = one(path, kw, "String is too long"))
         case _ => NoOp
       }
     case "minLength" =>
       (instance, v) match {
-        case (s: JStr, n: JNum) if s.codePointLength < n.v.toInt =>
+        case (s: JStr, n: JNum) if n.v > s.codePointLength =>
           KwOut(errors = one(path, kw, "String is too short"))
         case _ => NoOp
       }
@@ -352,11 +349,11 @@ object Validator {
     // ---- arrays (validate.cljc:288-341) ----
     case "items" =>
       instance match {
-        case JArr(elems) =>
+        case arr @ JArr(elems) =>
           v match {
             case sub: JObj =>
-              itemsResult(elems.zipWithIndex.map { case (el, i) =>
-                (i, validateAt(sub, el, ctx, s"$path/$i"))
+              itemsResult(arr, elems.zipWithIndex.map { case (el, i) =>
+                validateAt(sub, el, ctx, s"$path/$i")
               }, path)
             case JBool(b) =>
               // Boolean form: only `false` + non-empty array errors
@@ -368,9 +365,9 @@ object Validator {
               // Tuple form: trailing elements validate against
               // `additionalItems` (absent → accept-all) — validate.cljc:307-318.
               val pad = schema.get("additionalItems").getOrElse(JNull)
-              itemsResult(elems.zipWithIndex.map { case (el, i) =>
+              itemsResult(arr, elems.zipWithIndex.map { case (el, i) =>
                 val sub = if (i < tuple.length) tuple(i) else pad
-                (i, validateAt(sub, el, ctx, s"$path/$i"))
+                validateAt(sub, el, ctx, s"$path/$i")
               }, path)
             case _ => NoOp
           }
@@ -383,13 +380,13 @@ object Validator {
 
     case "maxItems" =>
       (instance, v) match {
-        case (JArr(elems), n: JNum) if elems.length > n.v.toInt =>
+        case (JArr(elems), n: JNum) if n.v < elems.length =>
           KwOut(errors = one(path, kw, "maxItems exceeded"))
         case _ => NoOp
       }
     case "minItems" =>
       (instance, v) match {
-        case (JArr(elems), n: JNum) if elems.length < n.v.toInt =>
+        case (JArr(elems), n: JNum) if n.v > elems.length =>
           KwOut(errors = one(path, kw, "minItems not reached"))
         case _ => NoOp
       }
@@ -410,13 +407,13 @@ object Validator {
     // ---- objects (validate.cljc:343-487) ----
     case "maxProperties" =>
       (instance, v) match {
-        case (o: JObj, n: JNum) if o.fields.length > n.v.toInt =>
+        case (o: JObj, n: JNum) if n.v < o.fields.length =>
           KwOut(errors = one(path, kw, "Max properties exceeded"))
         case _ => NoOp
       }
     case "minProperties" =>
       (instance, v) match {
-        case (o: JObj, n: JNum) if o.fields.length < n.v.toInt =>
+        case (o: JObj, n: JNum) if n.v > o.fields.length =>
           KwOut(errors = one(path, kw, "Min properties not reached"))
         case _ => NoOp
       }
@@ -466,14 +463,16 @@ object Validator {
           // Validate each *present* property that has a subschema; merge
           // transformed children back (validate.cljc:391-415). On success,
           // child annotations nest under the reserved ":properties" key
-          // (a Clojure keyword in the reference — collision-free).
+          // (a Clojure keyword in the reference — collision-free). Until a
+          // child changes, `inst` stays `o`: rebuilding it with an
+          // unchanged child would give an equal object.
           var inst = o
           var causes = Vector.empty[Violation]
           val childAnn = Vector.newBuilder[(String, JVal)]
           o.fields.foreach { case (k, child) =>
             props.get(k).foreach { sub =>
               val r = validateAt(sub, child, ctx, s"$path/$k")
-              inst = inst.updated(k, r.instance)
+              if ((r.instance ne child) || (inst ne o)) inst = inst.updated(k, r.instance)
               childAnn += k -> JObj(r.annotations.toVector)
               if (!r.valid) causes ++= r.errors
             }
@@ -714,12 +713,15 @@ object Validator {
     case _ => NoOp // unknown keywords are ignored (validate.cljc:118-124)
   }
 
-  private def itemsResult(children: Vector[(Int, VResult)], path: String): KwOut = {
-    val bad = children.filter(!_._2.valid)
-    if (bad.isEmpty)
-      KwOut(instance = Some(JArr(children.map(_._2.instance))))
-    else
+  /** `items`' outcome over the element results of `arr`; when no element
+    * changed, the instance is `arr` itself, not a copy. */
+  private def itemsResult(arr: JArr, results: Vector[VResult], path: String): KwOut = {
+    val bad = results.filter(!_.valid)
+    if (bad.nonEmpty)
       KwOut(errors = Violation(path, "items", "Not all items are valid") +:
-        bad.flatMap(_._2.errors))
+        bad.flatMap(_.errors))
+    else if (results.lazyZip(arr.items).forall(_.instance eq _))
+      KwOut(instance = Some(arr))
+    else KwOut(instance = Some(JArr(results.map(_.instance))))
   }
 }

@@ -57,6 +57,15 @@ class EngineSpec extends AnyFunSuite {
     assert(colViols === rowViols)
   }
 
+  test("a minItems bound past Int range marks every document invalid") {
+    // the column compiler leaves such a bound to the row core
+    val schema = DocTable.docSchemaJson.replace("\"minItems\": 1", "\"minItems\": 4294967297")
+    assert(schema != DocTable.docSchemaJson)
+    val verdicts = ValidationJob.withVerdicts(spark, docs, schema)
+    assert(verdicts.count() === docs.count())
+    assert(verdicts.where(col("valid")).count() === 0)
+  }
+
   test("partition verdicts are exhaustive and deterministic") {
     val verdicts = ValidationJob.withVerdicts(spark, docs, DocTable.docSchemaJson)
     val parts = ValidationJob.partitionVerdicts(verdicts, col("doc_num"), 8).collect()

@@ -36,6 +36,24 @@ class ValidateUnitSpec extends AnyFunSuite {
       "{}") === (true, Json.parse("""{"foo":"bar"}""")))
   }
 
+  test("a default injected inside items → properties reaches the result instance") {
+    val schema =
+      """{"type":"array","items":{"type":"object","properties":{
+        |  "a":{"type":"object","required":["b"],
+        |    "properties":{"b":{"type":"string","default":"z"}}},
+        |  "c":{"type":"integer"}}}}""".stripMargin
+    assert(run(schema, """[{"a":{},"c":1},{"a":{"b":"y"},"c":2}]""") ===
+      (true, Json.parse("""[{"a":{"b":"z"},"c":1},{"a":{"b":"y"},"c":2}]""")))
+  }
+
+  test("an instance no keyword transforms comes back as the same object") {
+    val inst = Json.parse("""[{"a":{"b":"y"},"c":1}]""")
+    val r = Validator.validate(SchemaDoc.schema(
+      """{"items":{"properties":{"a":{"properties":{"b":{"type":"string"}}},"c":{}}}}"""), inst)
+    assert(r.valid)
+    assert(r.instance eq inst)
+  }
+
   test("no recovery without a default; no implied defaults (validate_test.cljc:327-379)") {
     val schema =
       """{"type":"object","required":["foo"],
@@ -113,6 +131,33 @@ class ValidateUnitSpec extends AnyFunSuite {
       JStr("42"), coerce)
     assert(r.valid)
     assert(r.instance === JNum(BigDecimal(42)))
+  }
+
+  test("journal follows a custom keywordOrder; unlisted keywords follow in schema order") {
+    val schema = SchemaDoc.schema("""{"maximum":10,"type":"integer","title":"T","description":"D"}""")
+    def journaled(opts: Options) =
+      Validator.validate(schema, JNum(50L), opts.copy(journal = true)).journal.map(_.keyword)
+    assert(journaled(Options()) === Vector("title", "description", "type", "maximum"))
+    assert(journaled(Options(keywordOrder = Some(Seq("maximum", "description")))) ===
+      Vector("maximum", "description", "type", "title"))
+  }
+
+  test("$comment, $id and unknown keywords leave no journal entry") {
+    val schema = SchemaDoc.schema(
+      """{"$id":"http://example.com/s","$comment":"c","x-custom":1,"title":"T"}""")
+    for (order <- Seq(None, Some(Seq("$comment", "x-custom", "$id", "title")))) {
+      val r = Validator.validate(schema, JNum(1L), Options(keywordOrder = order, journal = true))
+      assert(r.journal.map(_.keyword) === Vector("title"), s"order $order")
+    }
+  }
+
+  test("length and count bounds past Int range do not wrap") {
+    assert(run("""{"minLength":3000000000}""", "\"abc\"")._1 === false)
+    assert(run("""{"maxLength":4294967296}""", "\"abc\"")._1 === true)
+    assert(run("""{"minItems":4294967297}""", "[1]")._1 === false)
+    assert(run("""{"maxItems":4294967296}""", "[1]")._1 === true)
+    assert(run("""{"minProperties":4294967298}""", """{"a":1,"b":2}""")._1 === false)
+    assert(run("""{"maxProperties":4294967296}""", """{"a":1,"b":2}""")._1 === true)
   }
 
   test("JSON pointer evaluation (jsonpointer.cljc:7-49)") {
