@@ -10,10 +10,11 @@ import org.apache.spark.sql.types._
   * statically-typed Dataset — the engine's bulk validation path.
   *
   * Each keyword is compiled once, into a small plan tree ([[Plan]]), and
-  * the tree is lowered twice: to the allocation-free boolean verdict
-  * ([[valid]]) and to the violation array ([[errors]]). So valid ⟺ no
-  * violations holds by construction, like the reference's `:valid?` (no
-  * errors, `validate.cljc:99-116`).
+  * the tree is lowered three ways: to the allocation-free boolean verdict
+  * ([[valid]]), to the violation array ([[errors]]), and, for the element
+  * plan of object `items`, to one boolean over whole field arrays
+  * (`arrayValidOf`). So valid ⟺ no violations holds by construction, like
+  * the reference's `:valid?` (no errors, `validate.cljc:99-116`).
   *
   * Output of [[errors]] is `array<struct<path,keyword,message>>` holding the
   * *leaf* violations (the reference nests causes under applicator errors,
@@ -70,30 +71,35 @@ object ColumnCompiler {
     errorsOf(plan(doc, col, dt))
 
   private def plan(doc: SchemaDoc, col: Column, dt: DataType): Plan =
-    compile(doc.root, col, dt, lit(""), doc, Set.empty)
+    compile(doc.root, col, dt, lit(""), doc, Set.empty, None, readLater = false)
 
-  // --- the plan tree and its two lowerings ----------------------------------
+  // --- the plan tree and its three lowerings --------------------------------
 
   private sealed trait Plan
-  /** A leaf: one violation at `path` unless `ok` holds (null fails). */
-  private final case class Check(ok: Column, path: Column, keyword: String, message: String)
-    extends Plan
+  /** A leaf: one violation at `path` unless `ok` holds (null fails);
+    * `overArray` is its all-elements form over the subject's twin. */
+  private final case class Check(ok: Column, path: Column, keyword: String, message: String,
+      overArray: Option[Column] = None) extends Plan
   private final case class All(parts: Seq[Plan]) extends Plan
   /** `inner` applies unless `absent` holds (null = absent gating). */
   private final case class Gate(absent: Column, inner: Plan) extends Plan
-  /** `body(element, index)` holds for every element of `arr`; `fast` is an
-    * optional boolean-only form of the whole node. */
+  /** `body(element, index)` holds for every element of `arr`; `fast` is a
+    * boolean-only form of the whole node: the element plan's `arrayValidOf`
+    * for object `items`, a positional `forall` for tuple `items`. */
   private final case class Each(arr: Column, body: (Column, Column) => Plan,
       fast: Option[Column] = None) extends Plan
   /** if/then/else: `whenTrue` applies when `test` holds, else `whenFalse`. */
   private final case class Cond(test: Column, whenTrue: Plan, whenFalse: Plan) extends Plan
 
   private val pass: Plan = All(Nil)
+  private def all(parts: Seq[Plan]): Plan = All(parts.filter(_ != pass))
+  private def gate(absent: Column, inner: Plan): Plan =
+    if (inner == pass) pass else Gate(absent, inner)
 
   private def ok(cond: Column): Column = coalesce(cond, lit(false))
 
   private def validOf(p: Plan): Column = p match {
-    case Check(c, _, _, _) => ok(c)
+    case Check(c, _, _, _, _) => ok(c)
     case All(parts)        => parts.map(validOf).reduceOption(_ && _).getOrElse(lit(true))
     case Gate(absent, in)  => ok(absent || validOf(in))
     // without `fast` the index feeds only violation paths, which this
@@ -108,7 +114,7 @@ object ColumnCompiler {
     when(coalesce(cond, lit(false)), ifTrue).otherwise(ifFalse)
 
   private def errorsOf(p: Plan): Column = p match {
-    case Check(c, path, kw, msg) =>
+    case Check(c, path, kw, msg, _) =>
       whenOr(c, noErrors, array(struct(
         path.as("path"), lit(kw).as("keyword"), lit(msg).as("message"))).cast(errorType))
     case All(parts) =>
@@ -117,6 +123,24 @@ object ColumnCompiler {
     case Each(arr, body, _) =>
       flatten(transform(arr, (x, i) => errorsOf(body(x, i)))).cast(errorType)
     case Cond(test, t, f) => whenOr(test, errorsOf(t), errorsOf(f))
+  }
+
+  /** The element plan of object `items` lowered to one boolean over
+    * field-array twins: the checks' `overArray` forms, conjoined in plan
+    * order; None when a check has none. Only subjects present in every
+    * element or gated on their own null get a twin, so every gate here is
+    * such a gate and drops out. */
+  private def arrayValidOf(p: Plan): Option[Column] = {
+    def conjuncts(p: Plan): Option[Seq[Column]] = p match {
+      case Check(_, _, _, _, over) => over.map(Seq(_))
+      case All(parts) =>
+        val cs = parts.map(conjuncts)
+        Option.when(cs.forall(_.isDefined))(cs.flatten.flatten)
+      case Gate(_, in) => conjuncts(in)
+      case Cond(_, t, f) => Option.when(t == pass && f == pass)(Nil)
+      case _: Each => None // nested items
+    }
+    conjuncts(p).map(_.reduceOption(_ && _).getOrElse(lit(true)))
   }
 
   // ---------------------------------------------------------------------------
@@ -193,9 +217,13 @@ object ColumnCompiler {
     case _        => true
   }
 
+  /** `twin`, inside an `items` element plan, is the subject's field-array
+    * twin: its values across all elements, null where it is absent.
+    * `readLater`: a keyword evaluated after this subschema may read the
+    * subject as the row core left it (see `required`). */
   private def compile(
-      schema: JVal, col: Column, dt: DataType, path: Column,
-      doc: SchemaDoc, seen: Set[String]): Plan = schema match {
+      schema: JVal, col: Column, dt: DataType, path: Column, doc: SchemaDoc,
+      seen: Set[String], twin: Option[Column], readLater: Boolean): Plan = schema match {
     case JBool(true) | JNull => pass
     case JBool(false)        => Check(lit(false), path, "false", "Schema is false")
     case o: JObj if o.has("$ref") =>
@@ -208,9 +236,9 @@ object ColumnCompiler {
       }
       if (seen.contains(refStr))
         throw Unsupported(s"recursive $$ref $refStr cannot compile to a finite Column tree")
-      compile(resolveStatic(o, doc), col, dt, path, doc, seen + refStr)
+      compile(resolveStatic(o, doc), col, dt, path, doc, seen + refStr, twin, readLater)
     case o: JObj =>
-      All(o.fields.map { case (kw, v) => keyword(kw, v, o, col, dt, path, doc, seen) })
+      all(o.fields.map { case (kw, v) => keyword(kw, v, o, col, dt, path, doc, seen, twin, readLater) })
     case other => throw Unsupported(s"invalid schema of type ${other.typeName}")
   }
 
@@ -253,14 +281,23 @@ object ColumnCompiler {
     case _ => false
   }
 
+  /** Keywords that read an object or array after a keyword before them in
+    * the row core's order (`SchemaDoc.KeywordOrder`) changed it. */
+  private val laterReaders = Set("uniqueItems", "contains", "patternProperties",
+    "additionalProperties", "dependencies", "propertyNames", "if", "allOf", "anyOf", "oneOf", "not")
+
   /** The plan of one keyword of `schema`, applied to `col`. Keywords that
     * do not apply to the column's JSON type, and unknown keywords (like the
     * reference, `validate.cljc:118-124`), pass. */
   private def keyword(
       kw: String, v: JVal, schema: JObj, col: Column, dt: DataType, path: Column,
-      doc: SchemaDoc, seen: Set[String]): Plan = {
+      doc: SchemaDoc, seen: Set[String], twin: Option[Column], readLater: Boolean): Plan = {
 
-    def sub(s: JVal, c: Column, d: DataType, p: Column): Plan = compile(s, c, d, p, doc, seen)
+    val order = SchemaDoc.KeywordOrder
+    val readAfter = readLater ||
+      schema.keys.exists(k => laterReaders(k) && order.indexOf(k) > order.indexOf(kw))
+    def sub(s: JVal, c: Column, d: DataType, p: Column, tw: Option[Column] = None): Plan =
+      compile(s, c, d, p, doc, seen, tw, readAfter)
     def subValid(s: JVal, c: Column, d: DataType): Column = validOf(sub(s, c, d, path))
     def at(k: String): Column = concat(path, lit(s"/$k"))
     def atKey(k: Column): Column = concat(path, lit("/"), k)
@@ -276,10 +313,19 @@ object ColumnCompiler {
 
     val jsonType = jsonTypeOf(dt)
     val numeric = jsonType == "number" || jsonType == "integer"
+    val scalar = numeric || jsonType == "string" || jsonType == "boolean"
     def onlyIf(applies: Boolean)(p: => Plan): Plan = if (applies) p else pass
-    def bounded(holds: Column => Column): Plan = {
+    // the twin's extreme (nulls skipped) against the bound
+    def bounded(extreme: Column => Column, holds: (Column, Column) => Column): Plan = {
       val bound = v match { case n: JNum => literal(n); case _ => bad }
-      onlyIf(numeric)(Check(col.isNull || holds(bound), path, kw, s"Failed $kw check"))
+      onlyIf(numeric)(Check(col.isNull || holds(col, bound), path, kw, s"Failed $kw check",
+        twin.map(a => coalesce(holds(extreme(a), bound), lit(true)))))
+    }
+    // every twin value is one of `values` or null (absent); array_except
+    // keeps whole-stage codegen, unlike array_compact or filter
+    def inValues(values: Vector[JVal]): Option[Column] = twin.filter(_ => scalar).map { a =>
+      val allowed = values.filter(x => x != JNull && literalComparable(x, jsonType)).map(literal)
+      size(array_except(a, array(allowed :+ lit(null).cast(dt): _*))) === 0
     }
 
     // object keywords: applied to non-null struct / string-keyed map values
@@ -287,7 +333,7 @@ object ColumnCompiler {
       case _: StructType | MapType(StringType, _, _) => true
       case _ => false
     }
-    def onObject(p: => Plan): Plan = if (isObject) Gate(col.isNull, p) else pass
+    def onObject(p: => Plan): Plan = if (isObject) gate(col.isNull, p) else pass
     // property `k` of the object and its type; None when a struct lacks it
     def member(k: String): Option[(Column, DataType)] = dt match {
       case st: StructType => st.fields.find(_.name == k).map(f => (col.getField(k), f.dataType))
@@ -307,7 +353,9 @@ object ColumnCompiler {
             (col.cast(DoubleType) % 1.0) === 0.0 // whole-valued check without ANSI long-overflow
           case _ => lit(false)
         }
-        Check(when(col.isNull, lit(allowed.contains("null"))).otherwise(nonNullOk),
+        // a subject with a twin is never null where it is checked
+        if (twin.isDefined && typeAdmits(allowed, jsonType)) pass
+        else Check(when(col.isNull, lit(allowed.contains("null"))).otherwise(nonNullOk),
           path, "type", s"Instance is not of type ${allowed.mkString(" or ")}")
 
       case "enum" =>
@@ -319,7 +367,7 @@ object ColumnCompiler {
           .otherwise(values.filter(_ != JNull).map(s =>
               if (literalComparable(s, jsonType)) col === literal(s) else lit(false))
             .reduceOption(_ || _).getOrElse(lit(false)))
-        Check(cond, path, "enum", "Value must be in enum")
+        Check(cond, path, "enum", "Value must be in enum", inValues(values))
 
       case "const" =>
         val cond = v match {
@@ -327,7 +375,7 @@ object ColumnCompiler {
           case s if !literalComparable(s, jsonType) => lit(false) // see enum
           case s => col === literal(s)
         }
-        Check(cond, path, "const", "Value must be equal to const")
+        Check(cond, path, "const", "Value must be equal to const", inValues(Vector(v)))
 
       case "multipleOf" =>
         // Exact-decimal remainder like the reference's BigDecimal path;
@@ -336,10 +384,10 @@ object ColumnCompiler {
         onlyIf(numeric)(Check(col.isNull || multipleOfCond(col, dt, m), path,
           "multipleOf", "Failed multipleOf check"))
 
-      case "maximum"          => bounded(col <= _)
-      case "minimum"          => bounded(col >= _)
-      case "exclusiveMaximum" => bounded(col < _)
-      case "exclusiveMinimum" => bounded(col > _)
+      case "maximum"          => bounded(array_max, _ <= _)
+      case "minimum"          => bounded(array_min, _ >= _)
+      case "exclusiveMaximum" => bounded(array_max, _ < _)
+      case "exclusiveMinimum" => bounded(array_min, _ > _)
 
       case "maxLength" | "minLength" =>
         // Spark `length` on strings counts characters (code points for
@@ -365,15 +413,18 @@ object ColumnCompiler {
         def atIndex(i: Column) = concat(path, lit("/"), i.cast(StringType))
         (v, dt) match {
           case (s: JObj, ArrayType(elem, containsNull)) =>
-            // Vectorized fast path: when every element-schema keyword
-            // reduces to field-array operations (array_except / array_min
-            // / array_max over extracted field columns), skip the
-            // interpreted per-element lambda entirely. Higher-order
-            // functions are CodegenFallback in Spark — on a billion-row
-            // scan their per-element boxing dominates; the extracted-
-            // array form stays inside whole-stage codegen.
-            Gate(col.isNull, Each(col, (x, i) => sub(s, x, elem, atIndex(i)),
-              vectorItemsValid(s, col, elem, containsNull)))
+            // Non-null struct elements have the array as their twin, so
+            // `arrayValidOf` can replace `forall` (CodegenFallback: boxes
+            // every element outside whole-stage codegen) by field-array
+            // ops that stay inside it. That form ignores the element, so
+            // nulls stand in for it.
+            val twin = elem match {
+              case _: StructType if !containsNull => Some(col)
+              case _ => None
+            }
+            val body = (x: Column, i: Column) => sub(s, x, elem, atIndex(i), twin)
+            gate(col.isNull, Each(col, body,
+              twin.flatMap(_ => arrayValidOf(body(lit(null), lit(null))))))
           case (JBool(b), _: ArrayType) =>
             onlyIf(!b)(Check(col.isNull || size(col) === 0, path, "items",
               "Items must be empty to satisfy a false schema"))
@@ -412,26 +463,44 @@ object ColumnCompiler {
 
       case "required" =>
         val names = strings(kw, v)
-        onObject(All(names.map { k =>
+        onObject(all(names.map { k =>
           // Required-recovery semantics (validate.cljc:353-389): a missing
           // key whose subschema has a *valid* default is not a violation.
+          // The row core injects the default, which the plan cannot see,
+          // so a keyword that reads the instance later leaves it to the
+          // row core.
           val recoverable = schema.get("properties").collect { case p: JObj => p.get(k) }.flatten
             .exists {
               case prop: JObj => prop.get("default").exists(rowCoreValid(prop, _))
               case _ => false
             }
           val present = member(k).map { case (c, _) => col.isNull || c.isNotNull }
-          if (recoverable) pass
-          else Check(present.getOrElse(lit(false)), at(k), "required", "Required property not in object")
+          // a twin reaches a struct only as a non-null element
+          val everywhere = (dt, twin) match {
+            case (st: StructType, Some(a)) => Some(st.fields.find(_.name == k).fold(size(a) === 0)(f =>
+              if (!f.nullable) lit(true)
+              else size(array_intersect(a.getField(k), array(lit(null).cast(f.dataType)))) === 0))
+            case _ => None
+          }
+          if (recoverable && readAfter) throw Unsupported(s"later keywords read the default of $k")
+          else if (recoverable) pass
+          else Check(present.getOrElse(lit(false)), at(k), "required",
+            "Required property not in object", everywhere)
         }))
 
       case "properties" =>
         val props = objectValue
-        onObject(All(props.fields.flatMap { case (k, s) =>
+        onObject(all(props.fields.flatMap { case (k, s) =>
           member(k).collect {
             // statically-true children never enter the plan, so the scan
-            // can prune their columns
-            case (c, t) if !gatedStaticTrue(s, t) => Gate(c.isNull, sub(s, c, t, at(k)))
+            // can prune their columns. Only scalar fields get a twin:
+            // `required`'s twin form assumes a subject present everywhere.
+            case (c, t) if !gatedStaticTrue(s, t) =>
+              val fieldTwin = t match {
+                case _: StructType | _: ArrayType | _: MapType => None
+                case _ => twin.map(_.getField(k))
+              }
+              gate(c.isNull, sub(s, c, t, at(k), fieldTwin))
           }
         }))
 
@@ -522,7 +591,7 @@ object ColumnCompiler {
         }
 
       // Applicators test their subschemas with the boolean lowering.
-      case "allOf" => All(subschemas.map(sub(_, col, dt, path)))
+      case "allOf" => all(subschemas.map(sub(_, col, dt, path, twin)))
 
       case "anyOf" =>
         Check(subschemas.map(subValid(_, col, dt)).reduce(_ || _),
@@ -535,130 +604,12 @@ object ColumnCompiler {
       case "not" => Check(!ok(subValid(v, col, dt)), path, "not", "Schema should not be valid")
 
       case "if" =>
-        def branch(k: String) = schema.get(k).map(sub(_, col, dt, path)).getOrElse(pass)
+        // the branches get the twin only so an admitted `type` folds to pass
+        def branch(k: String) = schema.get(k).map(sub(_, col, dt, path, twin)).getOrElse(pass)
         Cond(ok(subValid(v, col, dt)), branch("then"), branch("else"))
 
       case _ => pass // inert and unknown keywords
     }
-  }
-
-  /** Try to compile an object-form `items` element schema into lambda-free
-    * array-column conditions. Returns None (⇒ lambda fallback) unless EVERY
-    * keyword is either statically satisfied by the element StructType or
-    * expressible over extracted field arrays. Conservative by design. */
-  private def vectorItemsValid(
-      itemSchema: JObj, arrCol: Column, elemDt: DataType,
-      containsNull: Boolean): Option[Column] = {
-    val elem = elemDt match {
-      case st: StructType if !containsNull => st
-      case _ => return None
-    }
-
-    // per-field subschema → Some(conds) if fully vectorizable
-    def fieldConds(sub0: JVal, fname: String, ft: DataType, nullable: Boolean): Option[Seq[Column]] = {
-      val arrF = arrCol.getField(fname)
-      val ftJson = try Some(jsonTypeOf(ft)) catch { case _: Unsupported => None }
-      // scalar enum/const entries: a null field value means the property is
-      // ABSENT (gated out), so nullable fields get a null sentinel in the
-      // allowed list (array_except treats null as a distinct removable
-      // value — codegen'd, unlike array_compact/filter). Type-incompatible
-      // entries can never equal a typed column value and are dropped.
-      def allowedValuesCond(items: Vector[JVal]): Option[Seq[Column]] =
-        if (!items.forall(i =>
-            i.isInstanceOf[JStr] || i.isInstanceOf[JNum] || i.isInstanceOf[JBool])) None
-        else ftJson.map { jt =>
-          val comparable = items.filter(literalComparable(_, jt)).map(literal)
-          val allowed = if (nullable) comparable :+ lit(null).cast(ft) else comparable
-          if (allowed.isEmpty) Seq(size(arrCol) === 0)
-          else Seq(size(array_except(arrF, array(allowed: _*))) === 0)
-        }
-      sub0 match {
-        case JBool(true) | JNull => Some(Nil)
-        case o: JObj if o.has("$ref") => None
-        case o: JObj =>
-          val parts = o.fields.map {
-            case (k, _) if inertKeywords.contains(k) => Some(Nil)
-            case ("type", tv) =>
-              // inside `properties` the child check is gated on non-null, so a
-              // nullable field only needs compatibility for its non-null values
-              if (ftJson.exists(typeAdmits(typeList(tv), _))) Some(Nil) else None
-            case ("enum", JArr(items)) => allowedValuesCond(items)
-            case ("const", c) => allowedValuesCond(Vector(c))
-            case ("minimum", b: JNum) if numericType(ft) =>
-              // array_min skips null elements — matches the non-null gating
-              Some(Seq(coalesce(array_min(arrF) >= literal(b), lit(true))))
-            case ("exclusiveMinimum", b: JNum) if numericType(ft) =>
-              Some(Seq(coalesce(array_min(arrF) > literal(b), lit(true))))
-            case ("maximum", b: JNum) if numericType(ft) =>
-              Some(Seq(coalesce(array_max(arrF) <= literal(b), lit(true))))
-            case ("exclusiveMaximum", b: JNum) if numericType(ft) =>
-              Some(Seq(coalesce(array_max(arrF) < literal(b), lit(true))))
-            case _ => None
-          }
-          if (parts.forall(_.isDefined)) Some(parts.flatMap(_.get)) else None
-        case _ => None
-      }
-    }
-
-    def numericType(ft: DataType): Boolean = ft match {
-      case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType | _: DecimalType => true
-      case _ => false
-    }
-
-    // element-schema subtree statically true? (zero conditions needed)
-    def staticTrue(s: JVal): Boolean = elementConds(s).exists(_.isEmpty)
-
-    // whole element schema → Some(conds)
-    def elementConds(s: JVal): Option[Seq[Column]] = s match {
-      case JBool(true) | JNull => Some(Nil)
-      case o: JObj if o.has("$ref") => None
-      case o: JObj =>
-        val parts = o.fields.map {
-          case (k, _) if inertKeywords.contains(k) && k != "then" && k != "else" => Some(Nil)
-          case ("type", tv) =>
-            // non-null struct elements are always objects
-            if (typeList(tv).contains("object")) Some(Nil) else None
-          case ("required", JArr(reqs)) =>
-            // non-nullable field: statically present. Nullable field:
-            // null-presence detected with codegen'd array_intersect against
-            // a null singleton (null field value = absent property). Field
-            // missing from the struct entirely: required fails whenever the
-            // array is non-empty.
-            Some(reqs.collect { case JStr(n) => n }.flatMap { n =>
-              elem.fields.find(_.name == n) match {
-                case Some(f) if !f.nullable => Nil
-                case Some(f) =>
-                  Seq(size(array_intersect(arrCol.getField(n),
-                    array(lit(null).cast(f.dataType)))) === 0)
-                case None => Seq(size(arrCol) === 0)
-              }
-            })
-          case ("properties", props: JObj) =>
-            val perField = props.fields.map { case (fname, sub0) =>
-              elem.fields.find(_.name == fname) match {
-                case Some(f) => fieldConds(sub0, fname, f.dataType, f.nullable)
-                case None    => Some(Nil) // property absent from struct → never present → gated out
-              }
-            }
-            if (perField.forall(_.isDefined)) Some(perField.flatMap(_.get)) else None
-          case ("allOf", JArr(subs)) =>
-            val inner = subs.map(elementConds)
-            if (inner.forall(_.isDefined)) Some(inner.flatMap(_.get)) else None
-          case ("if", _) =>
-            // safe only when both branches are statically true for this
-            // struct — then the conditional contributes nothing
-            val thenOk = o.get("then").forall(staticTrue)
-            val elseOk = o.get("else").forall(staticTrue)
-            if (thenOk && elseOk) Some(Nil) else None
-          case ("then" | "else", _) => Some(Nil) // evaluated via their `if`
-          case _ => None
-        }
-        if (parts.forall(_.isDefined)) Some(parts.flatMap(_.get)) else None
-      case _ => None
-    }
-
-    elementConds(itemSchema)
-      .map(conds => conds.reduceOption(_ && _).getOrElse(lit(true)))
   }
 }
 

@@ -8,8 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Differential fuzzing: random interleaved docs (valid and broken in every
   * dimension) must get identical verdicts and leaf violations from the
-  * Catalyst column path and the row-level jinx-semantics core — for BOTH the
-  * vectorized (non-nullable fields) and lambda (nullable fields) plans. */
+  * Catalyst column path and the row-level jinx-semantics core. Both specs
+  * take the field-array lowering of `items` (span elements are non-null):
+  * one with non-nullable span fields, one with nullable fields, where a
+  * null field is an absent property. */
 class RandomDocsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 

@@ -100,24 +100,41 @@ class RandomSchemaSpec extends AnyFunSuite {
       "if" -> JObj.of("properties" -> JObj.of("kind" -> JObj.of("const" -> jstr("media")))),
       "then" -> JObj.of("properties" -> JObj.of("media_ref" -> JObj.of("type" -> jstr("string"))))))))))
 
+  /** `p`, sometimes with a `default` that may or may not validate against
+    * it: a valid default lets `required` recover a missing property. */
+  private def withDefault(p: JObj): Gen[JObj] = Gen.frequency(
+    1 -> Gen.const(p),
+    1 -> Gen.oneOf(jstr("text"), jstr("t"), jnum(0), jnum(7), JNull)
+      .map(d => JObj(p.fields :+ ("default" -> d))))
+
   private val spanItemSchema: Gen[JObj] = for {
     kindPred <- Gen.oneOf(
       JObj.of("enum" -> JArr(Vector(jstr("text"), jstr("media")))),
       // mixed-type entries: the numeric can never match a string column
       JObj.of("enum" -> JArr(Vector(jstr("text"), jnum(7)))),
       JObj.of("const" -> jstr("text")),
-      JObj.of("type" -> jstr("string")))
-    offPred <- intPred
-    useReq <- Gen.oneOf(true, false)
+      JObj.of("type" -> jstr("string"))).flatMap(withDefault)
+    offPred <- intPred.flatMap(withDefault)
+    // nullable string fields; null means absent, so `required` may fail
+    textPred <- Gen.oneOf(
+      JObj.of("type" -> arr("string", "null")),
+      JObj.of("maxLength" -> jnum(1)),
+      JObj.of("enum" -> arr("t", "m-1"))).flatMap(withDefault)
+    textProps <- Gen.someOf("text", "media_ref")
+    required <- Gen.frequency(
+      2 -> Gen.const(Vector.empty[String]),
+      2 -> Gen.const(Vector("kind")),
+      2 -> Gen.someOf(spanFields).map(_.toVector),
+      2 -> Gen.oneOf("text", "media_ref").map(Vector(_)))
     extras <- Gen.frequency(
       4 -> Gen.const(Vector.empty[(String, JVal)]),
       2 -> objectShapeKw(spanFields),
       2 -> itemLogicKw)
   } yield {
-    val base = Vector(
-      "type" -> (jstr("object"): JVal),
-      "properties" -> (JObj.of("kind" -> kindPred, "offset" -> offPred): JVal))
-    JObj((if (useReq) base :+ ("required" -> (JArr(Vector(jstr("kind"))): JVal)) else base) ++ extras)
+    val props = Vector("kind" -> (kindPred: JVal), "offset" -> (offPred: JVal)) ++
+      textProps.map(_ -> (textPred: JVal))
+    val base = Vector("type" -> (jstr("object"): JVal), "properties" -> (JObj(props): JVal))
+    JObj((if (required.isEmpty) base else base :+ ("required" -> JArr(required.map(jstr)))) ++ extras)
   }
 
   private val spansItems: Gen[Vector[(String, JVal)]] = Gen.frequency(
@@ -173,25 +190,29 @@ class RandomSchemaSpec extends AnyFunSuite {
     m <- Gen.frequency(2 -> Gen.const(null), 1 -> Gen.const("m-1"))
   } yield Row(k, t, m, o)
 
-  private val docGen: Gen[Row] = for {
+  /** `nullSpan`: some span elements are null (arrays with containsNull). */
+  private def docGen(nullSpan: Boolean): Gen[Row] = for {
     id <- Gen.frequency(4 -> Gen.choose(1, 3).map(i => s"doc-$i"),
       2 -> Gen.const("doc-x"), 1 -> Gen.const(null),
       // format-shaped strings so format predicates see both outcomes
       1 -> Gen.oneOf("1.2.3.4", "2020-01-01T00:00:00Z", "spark.apache.org",
         "http://x/y", "[a-z)+"))
     n <- Gen.choose(0, 6)
-    spans <- Gen.listOfN(n, spanGen)
+    spans <- Gen.listOfN(n, if (nullSpan) Gen.frequency(9 -> spanGen, 1 -> Gen.const(null: Row))
+      else spanGen)
     nullSpans <- Gen.frequency(8 -> Gen.const(false), 1 -> Gen.const(true))
   } yield Row(id, if (nullSpans) null else spans)
 
-  private val dfSchema = StructType(Seq(
+  /** containsNull = true is the shape of every parquet- or JSON-read table. */
+  private def dfSchemaWith(containsNull: Boolean) = StructType(Seq(
     StructField("doc_id", StringType, nullable = true),
     StructField("spans", ArrayType(StructType(Seq(
       StructField("kind", StringType, nullable = true),
       StructField("text", StringType, nullable = true),
       StructField("media_ref", StringType, nullable = true),
       StructField("offset", IntegerType, nullable = true))),
-      containsNull = false), nullable = true)))
+      containsNull = containsNull), nullable = true)))
+  private val dfSchema = dfSchemaWith(containsNull = false)
 
   // deep-fuzz knobs for one-off stress runs (defaults = CI-fast)
   private val nSchemas = sys.env.getOrElse("GRAFT_FUZZ_SCHEMAS", "20").toInt
@@ -201,15 +222,19 @@ class RandomSchemaSpec extends AnyFunSuite {
     var seed = rng.Seed(2026L)
     var fellBack = 0
     (0 until nSchemas).foreach { i =>
+      // half the schemas run over arrays whose elements may be null
+      val containsNull = i % 2 == 1
       val schema = docSchemaGen.pureApply(Gen.Parameters.default, seed); seed = seed.next
-      val docs = Gen.listOfN(nDocs, docGen).pureApply(Gen.Parameters.default, seed); seed = seed.next
+      val docs = Gen.listOfN(nDocs, docGen(containsNull))
+        .pureApply(Gen.Parameters.default, seed); seed = seed.next
       val schemaJson = Json.render(schema)
-      val df = spark.createDataFrame(spark.sparkContext.parallelize(docs, 2), dfSchema)
+      val dfType = dfSchemaWith(containsNull)
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(docs, 2), dfType)
         .withColumn("doc_num", monotonically_increasing_id())
 
       val colPath =
         try {
-          val payloadType = StructType(dfSchema.fields)
+          val payloadType = StructType(dfType.fields)
           val payload = struct(col("doc_id"), col("spans"))
           val doc = graft.schema.SchemaDoc.schema(schemaJson)
           Some(df.select(col("doc_num"),
@@ -224,9 +249,9 @@ class RandomSchemaSpec extends AnyFunSuite {
         val joined = cp.join(rp, "doc_num").collect()
         joined.foreach { r =>
           assert(r.getBoolean(1) === r.getBoolean(2),
-            s"fast≠errors schema#$i: $schemaJson doc_num=${r.getLong(0)}")
+            s"fast≠errors schema#$i (containsNull=$containsNull): $schemaJson doc_num=${r.getLong(0)}")
           assert(r.getBoolean(1) === r.getBoolean(3),
-            s"col≠row schema#$i: $schemaJson doc_num=${r.getLong(0)}")
+            s"col≠row schema#$i (containsNull=$containsNull): $schemaJson doc_num=${r.getLong(0)}")
         }
       }
     }
@@ -253,5 +278,48 @@ class RandomSchemaSpec extends AnyFunSuite {
     val rowCore = RowValidator.validateRows(spark, df, schemaJson, Some(Seq("doc_id", "spans")))
       .select("doc_id", "valid").collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
     assert(verdicts === rowCore)
+  }
+
+  test("required inside items recovers a missing property from a valid default on every path") {
+    // a null `text` is absent; `required` accepts it when the property's
+    // default validates (validate.cljc:353-389), and flags it otherwise.
+    // The row core injects the default, so a later keyword reads it.
+    def verdicts(default: JVal, later: (String, JVal)*): (Map[String, Boolean],
+        Set[(String, String, String)]) = {
+      val schemaJson = Json.render(JObj.of("properties" -> JObj.of("spans" -> JObj(Vector(
+        "items" -> JObj.of(
+          "required" -> arr("text"),
+          "properties" -> JObj.of("text" -> JObj.of(
+            "type" -> arr("string", "null"), "default" -> default)))) ++ later))))
+      val docs = Seq(
+        Row("doc-1", Seq(Row("text", null, null, 0))),
+        Row("doc-2", Seq(Row("text", "t", null, 0))))
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(docs, 1), dfSchema)
+        .withColumn("doc_num", monotonically_increasing_id())
+      def byDoc(out: org.apache.spark.sql.DataFrame) =
+        out.select("doc_id", "valid").collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
+      val full = ValidationJob.withVerdicts(spark, df, schemaJson)
+      val v = byDoc(full)
+      assert(byDoc(ValidationJob.withVerdictsOnly(spark, df, schemaJson)) === v)
+      val registry = SchemaRegistry.compile(Map("s" -> schemaJson))
+      assert(byDoc(SchemaRegistry.validateWith(spark,
+        df.select(col("doc_id"), col("spans"), lit("s").as("schema_name")),
+        registry, "schema_name")) === v)
+      assert(byDoc(RowValidator.validateRows(spark, df, schemaJson,
+        Some(Seq("doc_id", "spans")))) === v)
+      val rows = ValidationJob.violations(full).select("doc_id", "path", "keyword").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+      // valid ⟺ no violation rows
+      assert(v.filter(!_._2).keySet === rows.map(_._1))
+      (v, rows)
+    }
+    assert(verdicts(jstr("x")) === (Map("doc-1" -> true, "doc-2" -> true), Set.empty))
+    assert(verdicts(jnum(7)) === (Map("doc-1" -> false, "doc-2" -> true),
+      Set(("doc-1", "/spans/0/text", "required"))))
+    // doc-1's only span gets text "x", so no span has text "t"
+    val (v, rows) = verdicts(jstr("x"),
+      "contains" -> JObj.of("properties" -> JObj.of("text" -> JObj.of("const" -> jstr("t")))))
+    assert(v === Map("doc-1" -> false, "doc-2" -> true))
+    assert(rows.map(_._3) === Set("contains"))
   }
 }
