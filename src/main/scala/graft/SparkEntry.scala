@@ -250,20 +250,19 @@ object SparkEntry {
         .toDF("measure", "score").orderBy("measure")
     }),
 
-    // sketch-based drift (typed Aggregator + mergeable quantile sketch):
-    // reference vs current population of events.value. The sketch's merge
-    // order is nondeterministic, so raw quantile estimates can't be
-    // hash-oracled; instead each row is a deterministic BOUND CHECK: the
-    // sketch's quantile estimate must land inside the exact value interval
-    // [exact(q−ε), exact(q+ε)] with ε = 0.05 rank slack (≈10× the t-digest
-    // theoretical bound 2·q(1−q)/compression at the median — generous
-    // enough to be merge-order-stable, tight enough that a broken sketch
-    // fails). The interval endpoints are exact percentiles computed in
-    // Spark and independently re-derived by DuckDB quantile_cont (same
-    // p·(n−1) interpolation), so the hash match verifies both the exact
-    // percentile parity AND the sketch's rank-error contract.
+    // sketch-based drift (native KLL sketch): reference vs current
+    // population of events.value. KLL compaction is randomized, so raw
+    // quantile estimates can't be hash-oracled; instead each row is a
+    // deterministic BOUND CHECK: the sketch's quantile estimate must land
+    // inside the exact value interval [exact(q−ε), exact(q+ε)] with ε = 0.05
+    // rank slack (≈4× KLL's normalized rank error at k = QuantileSketch.K,
+    // 1.33% with 99% confidence, whatever the input or merge order — tight
+    // enough that a broken sketch fails). The interval endpoints are exact
+    // percentiles from the same grouped aggregate, independently re-derived
+    // by DuckDB quantile_cont (same p·(n−1) interpolation), so the hash
+    // match verifies both the exact percentile parity AND the sketch's
+    // rank-error contract.
     "q_drift_sketch" -> ((s, dir) => {
-      val events = s.read.parquet(s"$dir/events.parquet")
       // (measure, sketch probe q, exact lo probe q−ε, exact hi probe q+ε) —
       // probe quantiles are decimal literals (not q±ε arithmetic) so the
       // Spark and DuckDB probe doubles parse bit-identically
@@ -272,33 +271,25 @@ object SparkEntry {
       def r6(x: Double) = new java.math.BigDecimal(x)
         .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
       import s.implicits._
-      // the two populations' sketch and exact-percentile jobs are four
-      // INDEPENDENT actions — submit them concurrently so their stages
-      // interleave in the scheduler (guide §2.6; values are unchanged,
-      // each job computes exactly what the sequential form did)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
       val probeSql = qs.flatMap(t => Seq(t._3, t._4))
         .map(p => s"${p}D").mkString("array(", ", ", ")")
-      val futures = Seq("cur" -> (col("event_id") % 2 === 1),
-          "ref" -> (col("event_id") % 2 === 0)).map { case (name, pred) =>
-        val pop = events.where(pred)
-        val fSk = Future(TypedAggregators.sketchColumn(pop, "value"))
-        val fExact = Future(pop.select(
-            expr(s"percentile(CAST(value AS DOUBLE), $probeSql)").as("p"))
-          .collect()(0).getAs[scala.collection.Seq[Double]]("p"))
-        (name, fSk, fExact)
+      val checks = qs.zipWithIndex.map { case ((m, q, _, _), i) =>
+        val lo = col("p")(2 * i); val hi = col("p")(2 * i + 1)
+        struct(lit(m).as("measure"), lo.as("lo"), hi.as("hi"),
+          kll_sketch_get_quantile_double(col("sk"), lit(q)).between(lo, hi).as("within_bound"))
       }
-      futures.flatMap { case (name, fSk, fExact) =>
-        val sk = Await.result(fSk, Duration.Inf)
-        val exact = Await.result(fExact, Duration.Inf)
-        qs.zipWithIndex.map { case ((m, q, _, _), i) =>
-          val lo = exact(2 * i); val hi = exact(2 * i + 1)
-          val v = sk.quantile(q)
-          (name, m, r6(lo), r6(hi), v >= lo && v <= hi)
-        }
-      }.toDF("population", "measure", "lo", "hi", "within_bound")
+      // one scan: both populations' sketches and exact percentiles; the
+      // population split is the oracle's CASE (a null id is 'cur')
+      s.read.parquet(s"$dir/events.parquet")
+        .groupBy(when(col("event_id") % 2 === 0, "ref").otherwise("cur").as("population"))
+        .agg(kll_sketch_agg_double(col("value").cast("double"), QuantileSketch.K).as("sk"),
+          expr(s"percentile(CAST(value AS DOUBLE), $probeSql)").as("p"))
+        .select(col("population"), explode(array(checks: _*)).as("c"))
+        .select("population", "c.*")
+        .collect().toSeq
+        .map(r => (r.getString(0), r.getString(1), r6(r.getDouble(2)), r6(r.getDouble(3)),
+          r.getBoolean(4)))
+        .toDF("population", "measure", "lo", "hi", "within_bound")
         .orderBy("population", "measure")
     }),
 

@@ -259,10 +259,12 @@ object ColumnCompiler {
     "$schema", "$id", "$comment", "definitions", "title", "description",
     "default", "readOnly", "writeOnly", "examples",
     // handled by their governing keyword:
-    "additionalItems", "then", "else",
-    // contentEncoding only errors on undecodable base64; treat as inert for
-    // columnar data (no base64 columns in the typed mapping)
-    "contentEncoding", "contentMediaType")
+    "additionalItems", "then", "else")
+
+  /** Keywords that decode a string value in the row core (reporting
+    * undecodable content, handing later keywords the parsed value); no
+    * Column form, so a string subject falls back. Inert on other types. */
+  private val contentKeywords = Set("contentEncoding", "contentMediaType")
 
   /** True when `schema` is trivially satisfied for a NON-NULL value of
     * Spark type `dt` (the gating contexts — properties children, item
@@ -275,7 +277,7 @@ object ColumnCompiler {
     case o: JObj if o.has("$ref") => false
     case o: JObj =>
       o.fields.forall { case (kw, v) =>
-        inertKeywords.contains(kw) || (kw == "type" &&
+        inertKeywords.contains(kw) || (contentKeywords(kw) && dt != StringType) || (kw == "type" &&
           (try typeAdmits(typeList(v), jsonTypeOf(dt)) catch { case _: Unsupported => false }))
       }
     case _ => false
@@ -607,6 +609,9 @@ object ColumnCompiler {
         // the branches get the twin only so an admitted `type` folds to pass
         def branch(k: String) = schema.get(k).map(sub(_, col, dt, path, twin)).getOrElse(pass)
         Cond(ok(subValid(v, col, dt)), branch("then"), branch("else"))
+
+      case k if contentKeywords(k) =>
+        if (jsonType == "string") throw Unsupported(s"$k on a string value") else pass
 
       case _ => pass // inert and unknown keywords
     }

@@ -1,166 +1,61 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.datasketches.kll.KllDoublesSketch
+import org.apache.datasketches.memory.Memory
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
-/** Mergeable quantile sketch — a compact t-digest-style centroid summary.
+/** A KLL quantile sketch (Karnin, Lang & Liberty), read from the compact
+  * bytes Spark's native `kll_sketch_agg_double` / `kll_merge_agg_double`
+  * produce. The bytes are the whole state: they merge across partitions
+  * and snapshots (`kll_merge_agg_double`) and checkpoint as a plain binary
+  * column. KLL's rank-error bound holds whatever the input or merge
+  * order: at k = [[QuantileSketch.K]] the normalized rank error is ≤ 1.33%
+  * with 99% confidence.
   *
-  * Centroids are (mean, weight) pairs kept sorted; inserts add unit
-  * centroids, and [[compress]] greedily merges neighbors under the usual
-  * t-digest size bound k·q(1−q), which keeps tail quantiles precise. The
-  * buffer is a plain serializable case-class-free structure (two arrays), so
-  * it is (a) mergeable across partitions/snapshots and (b) checkpointable —
-  * the properties the north rule requires for drift tracking at 10^12 rows.
-  */
-final class QuantileSketch(
-    val compression: Int,
-    var means: Array[Double],
-    var weights: Array[Double],
-    var count: Long) extends Serializable {
+  * Nulls and NaNs are not counted (KLL skips NaN on update), so `count` is
+  * the number of non-null, non-NaN values. An empty sketch has `count` 0
+  * and `quantile` NaN. */
+final class QuantileSketch(val bytes: Array[Byte]) {
+  private val kll: KllDoublesSketch = KllDoublesSketch.heapify(Memory.wrap(bytes))
 
-  def this(compression: Int) = this(compression, Array.empty, Array.empty, 0L)
+  def count: Long = kll.getN
 
-  // insert buffer: values batch up and flush in one sorted merge (amortized
-  // O(log n) per insert instead of a full centroid merge each time)
-  private val pending = scala.collection.mutable.ArrayBuffer.empty[Double]
-
-  def insert(x: Double): QuantileSketch = {
-    pending += x
-    if (pending.length >= 512) flush()
-    this
-  }
-
-  def flush(): Unit = {
-    if (pending.isEmpty) return
-    val sorted = pending.toArray.sorted
-    pending.clear()
-    val other = new QuantileSketch(
-      compression, sorted, Array.fill(sorted.length)(1.0), sorted.length.toLong)
-    val merged = mergeFlushed(other)
-    means = merged.means; weights = merged.weights; count = merged.count
-  }
-
-  def merge(other: QuantileSketch): QuantileSketch = {
-    flush(); other.flush()
-    mergeFlushed(other)
-  }
-
-  // checkpoint consistency: a serialized sketch is always flushed, so the
-  // persisted (means, weights, count) are the complete state — `count` read
-  // from a restored checkpoint is exact, never lagging the insert buffer
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    flush()
-    out.defaultWriteObject()
-  }
-
-  private def mergeFlushed(other: QuantileSketch): QuantileSketch = {
-    if (other.count == 0) return this
-    if (count == 0) return other
-    val n = means.length + other.means.length
-    val m = new Array[Double](n)
-    val w = new Array[Double](n)
-    var i = 0; var j = 0; var k = 0
-    while (i < means.length || j < other.means.length) {
-      val takeLeft = j >= other.means.length ||
-        (i < means.length && means(i) <= other.means(j))
-      if (takeLeft) { m(k) = means(i); w(k) = weights(i); i += 1 }
-      else { m(k) = other.means(j); w(k) = other.weights(j); j += 1 }
-      k += 1
-    }
-    val merged = new QuantileSketch(compression, m, w, count + other.count)
-    merged.compress()
-    merged
-  }
-
-  private def qBound(q: Double): Double =
-    4.0 * count * q * (1 - q) / compression
-
-  def compress(): Unit = {
-    if (means.length <= 1) return
-    val m = new Array[Double](means.length)
-    val w = new Array[Double](means.length)
-    var k = 0
-    m(0) = means(0); w(0) = weights(0)
-    var acc = weights(0)
-    var i = 1
-    while (i < means.length) {
-      val q = (acc - w(k) / 2) / count.toDouble
-      if (w(k) + weights(i) <= math.max(1.0, qBound(q))) {
-        // merge into current centroid
-        val tw = w(k) + weights(i)
-        m(k) = (m(k) * w(k) + means(i) * weights(i)) / tw
-        w(k) = tw
-      } else {
-        k += 1
-        m(k) = means(i); w(k) = weights(i)
-      }
-      acc += weights(i)
-      i += 1
-    }
-    means = m.take(k + 1)
-    weights = w.take(k + 1)
-  }
-
-  /** Quantile estimate by linear interpolation over centroid midpoints. */
-  def quantile(q: Double): Double = {
-    flush()
-    if (count == 0) return Double.NaN
-    if (means.length == 1) return means(0)
-    val target = q * count
-    var acc = 0.0
-    var i = 0
-    while (i < means.length) {
-      val mid = acc + weights(i) / 2
-      if (target <= mid) {
-        if (i == 0) return means(0)
-        val prevMid = acc - weights(i - 1) / 2
-        val frac = (target - prevMid) / (mid - prevMid)
-        return means(i - 1) + frac * (means(i) - means(i - 1))
-      }
-      acc += weights(i)
-      i += 1
-    }
-    means.last
-  }
-
-  /** Approximate CDF at x (for two-sample KS over sketches). */
-  def cdf(x: Double): Double = {
-    flush()
-    if (count == 0) return Double.NaN
-    var acc = 0.0
-    var i = 0
-    while (i < means.length && means(i) <= x) { acc += weights(i); i += 1 }
-    math.min(1.0, acc / count)
-  }
+  /** The retained item at normalized rank `q` ∈ [0, 1]; NaN when empty. */
+  def quantile(q: Double): Double = if (kll.isEmpty) Double.NaN else kll.getQuantile(q)
 }
 
 object QuantileSketch {
-  def single(x: Double, compression: Int): QuantileSketch =
-    new QuantileSketch(compression, Array(x), Array(1.0), 1L)
+  /** KLL accuracy parameter: Spark's default. */
+  val K = 200
 
-  /** Two-sample KS statistic over two sketches, evaluated at both sketches'
-    * centroid locations (driver-side, tiny). */
+  /** Two-sample KS statistic over two sketches: the largest rank gap at
+    * both sketches' retained items (driver-side, tiny). 0 when either is
+    * empty. */
   def ks(a: QuantileSketch, b: QuantileSketch): Double = {
-    a.flush(); b.flush()
-    val points = (a.means ++ b.means).sorted
-    if (points.isEmpty) return 0.0
-    points.map(x => math.abs(a.cdf(x) - b.cdf(x))).max
+    if (a.kll.isEmpty || b.kll.isEmpty) return 0.0
+    val points = (a.kll.getSortedView.getQuantiles ++ b.kll.getSortedView.getQuantiles).distinct.sorted
+    val ra = a.kll.getCDF(points); val rb = b.kll.getCDF(points)
+    points.indices.map(i => math.abs(ra(i) - rb(i))).max
   }
 
-  /** PSI over two sketches using `bins` equal-width bins spanning both. */
+  /** PSI over two sketches using `bins` equal-width bins spanning both. 0
+    * when either is empty. */
   def psi(a: QuantileSketch, b: QuantileSketch, bins: Int = 10, alpha: Double = 0.5): Double = {
-    a.flush(); b.flush()
-    if (a.count == 0 || b.count == 0) return 0.0
-    val lo = math.min(a.means.head, b.means.head)
-    val hi = math.max(a.means.last, b.means.last)
+    if (a.kll.isEmpty || b.kll.isEmpty) return 0.0
+    val lo = math.min(a.kll.getMinItem, b.kll.getMinItem)
+    val hi = math.max(a.kll.getMaxItem, b.kll.getMaxItem)
     if (hi <= lo) return 0.0
-    val edges = (0 to bins).map(i => lo + (hi - lo) * i / bins)
-    def massIn(s: QuantileSketch, l: Double, h: Double): Double =
-      math.max(0.0, s.cdf(h) - s.cdf(l)) * s.count
-    val aCounts = (0 until bins).map(i => massIn(a, edges(i), edges(i + 1)).round)
-    val bCounts = (0 until bins).map(i => massIn(b, edges(i), edges(i + 1)).round)
-    Drift.psi(aCounts, bCounts, alpha)
+    // inner edges, strictly increasing as getCDF requires (they collapse
+    // when hi − lo is a few ulps); its last entry is 1.0, so the bins cover
+    // every value
+    val edges = (1 until bins).map(i => lo + (hi - lo) * i / bins).distinct.toArray
+    def counts(s: QuantileSketch): Seq[Long] = {
+      val cdf = s.kll.getCDF(edges)
+      cdf.indices.map(i => ((cdf(i) - (if (i == 0) 0.0 else cdf(i - 1))) * s.count).round)
+    }
+    Drift.psi(counts(a), counts(b), alpha)
   }
 }
 
@@ -226,9 +121,9 @@ final class MGSketch(
 }
 
 /** Typed Aggregators (north rule: "streaming stats via typed Aggregators"):
-  * per-column stats, the quantile sketch and the heavy-hitters sketch, all
-  * usable as `Dataset.select(agg.toColumn)` or registered column
-  * functions. */
+  * per-column stats and the heavy-hitters sketch, both usable as
+  * `Dataset.select(agg.toColumn)` or registered column functions, plus the
+  * native quantile sketch of a column. */
 object TypedAggregators {
 
   final case class Stats(
@@ -253,30 +148,14 @@ object TypedAggregators {
       def outputEncoder: Encoder[Stats] = Encoders.product[Stats]
     }
 
-  /** Quantile-sketch aggregator; buffer serialized via Kryo (mergeable +
-    * checkpointable across snapshots). */
-  def quantileAgg(compression: Int = 100): Aggregator[java.lang.Double, QuantileSketch, QuantileSketch] =
-    new Aggregator[java.lang.Double, QuantileSketch, QuantileSketch] {
-      def zero: QuantileSketch = new QuantileSketch(compression)
-      def reduce(b: QuantileSketch, x: java.lang.Double): QuantileSketch =
-        if (x == null) b else b.insert(x)
-      def merge(a: QuantileSketch, b: QuantileSketch): QuantileSketch = a.merge(b)
-      def finish(r: QuantileSketch): QuantileSketch = { r.flush(); r }
-      def bufferEncoder: Encoder[QuantileSketch] = Encoders.kryo[QuantileSketch]
-      def outputEncoder: Encoder[QuantileSketch] = Encoders.kryo[QuantileSketch]
-    }
-
-  /** Sketch a column of `df` (one pass, partial-merge across partitions). */
-  def sketchColumn(df: DataFrame, valueCol: String, compression: Int = 100): QuantileSketch = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(valueCol).cast("double")).as[java.lang.Double]
-      .select(quantileAgg(compression).toColumn)
-      .collect()(0)
-  }
+  /** Sketch a column of `df`: one `kll_sketch_agg_double` pass, partial
+    * sketches merged across partitions. */
+  def sketchColumn(df: DataFrame, valueCol: String): QuantileSketch =
+    new QuantileSketch(df.agg(kll_sketch_agg_double(col(valueCol).cast("double"), QuantileSketch.K))
+      .collect()(0).getAs[Array[Byte]](0))
 
   /** Misra-Gries heavy-hitters aggregator (buffer via Kryo, mergeable across
-    * partitions and snapshots like [[quantileAgg]]). */
+    * partitions and snapshots). */
   def heavyHittersAgg(capacity: Int): Aggregator[String, MGSketch, MGSketch] =
     new Aggregator[String, MGSketch, MGSketch] {
       def zero: MGSketch = new MGSketch(capacity)

@@ -1,6 +1,9 @@
 package graft.engine
 
+import graft.schema.SchemaDoc
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Engine checks against independently-computed expectations, plus the
@@ -149,5 +152,40 @@ class EngineSpec extends AnyFunSuite {
     val bad = ValidationJob.spanMismatches(docs, perturbed)
     assert(bad.count() === 1)
     assert(bad.collect()(0).getAs[Long]("doc_num") === 5L)
+  }
+
+  test("content keywords on a string value send the schema to the row core") {
+    // the row core decodes string content and reports what does not decode
+    // (validate.cljc:697-740); the compiled path has no such check, so it
+    // must not report such a value valid
+    val s = spark
+    import s.implicits._
+    val frame = Seq("{not json", "!!!", """{"a":1}""", "aGk=").zipWithIndex
+      .map { case (id, i) => (id, i.toLong) }.toDF("doc_id", "doc_num")
+    def check(kw: String, value: String, message: String, validIds: Set[String]): Unit = {
+      val keyword = s"""{"$kw":"$value"}"""
+      val schemaJson = s"""{"properties":{"doc_id":$keyword}}"""
+      intercept[ColumnCompiler.Unsupported](ColumnCompiler.valid(
+        SchemaDoc.schema(schemaJson), struct(col("doc_id")), StructType(frame.schema.fields.take(1))))
+      intercept[ColumnCompiler.Unsupported](
+        ColumnCompiler.valid(SchemaDoc.schema(keyword), col("doc_id"), StringType))
+      // inert on a non-string value
+      val onLong = ColumnCompiler.valid(SchemaDoc.schema(keyword), col("doc_num"), LongType)
+      assert(frame.select(onLong).as[Boolean].collect().forall(identity))
+      def byId(out: DataFrame) =
+        out.select("doc_id", "valid").as[(String, Boolean)].collect().toMap
+      val expected = frame.select("doc_id").as[String].collect().map(id => id -> validIds(id)).toMap
+      val full = ValidationJob.withVerdicts(spark, frame, schemaJson)
+      assert(byId(full) === expected, kw)
+      assert(byId(ValidationJob.withVerdictsOnly(spark, frame, schemaJson)) === expected, kw)
+      assert(byId(RowValidator.validateRows(spark, frame, schemaJson, Some(Seq("doc_id")))) ===
+        expected, kw)
+      val rows = ValidationJob.violations(full).select("doc_id", "path", "keyword", "message")
+        .as[(String, String, String, String)].collect().toSet
+      assert(rows === expected.collect { case (id, false) => (id, "/doc_id", kw, message) }.toSet)
+    }
+    check("contentMediaType", "application/json", "Instance is not application/json",
+      Set("""{"a":1}"""))
+    check("contentEncoding", "base64", "Not base64", Set("aGk="))
   }
 }

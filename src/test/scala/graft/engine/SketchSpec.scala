@@ -1,11 +1,13 @@
 package graft.engine
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, rng}
 
-/** Quantile sketch accuracy + mergeability + the typed aggregators, against
-  * exact computations. */
+/** Native KLL quantile sketch accuracy, mergeability (across partitions,
+  * of sketch bytes, through a parquet checkpoint) and the typed
+  * aggregators, against exact computations. */
 class SketchSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -14,10 +16,35 @@ class SketchSpec extends AnyFunSuite {
     s(math.min(s.length - 1, math.max(0, (q * s.length).toInt)))
   }
 
+  /** Fraction of the sorted values ≤ x. */
+  private def rankOf(sorted: Array[Double], x: Double): Double = {
+    var lo = 0; var hi = sorted.length
+    while (lo < hi) { val m = (lo + hi) >>> 1; if (sorted(m) <= x) lo = m + 1 else hi = m }
+    lo.toDouble / sorted.length
+  }
+
+  /** `xs` in order as column `v` (with its index `i`), cut into `parts`
+    * contiguous partitions. */
+  private def frame(xs: Seq[Double], parts: Int = 4): DataFrame = {
+    val s = spark
+    import s.implicits._
+    s.sparkContext.parallelize(xs.zipWithIndex, parts).toDF("v", "i")
+  }
+
+  private def sketchOf(xs: Seq[Double], parts: Int = 4): QuantileSketch =
+    TypedAggregators.sketchColumn(frame(xs, parts), "v")
+
+  /** One sketch (bytes column `sk`) per group `g` of `df`. */
+  private def sketchesBy(df: DataFrame, key: Column): DataFrame =
+    df.groupBy(key.as("g")).agg(kll_sketch_agg_double(col("v"), QuantileSketch.K).as("sk"))
+
+  /** Merge a column `sk` of sketch bytes into one sketch. */
+  private def merged(sketches: DataFrame): QuantileSketch =
+    new QuantileSketch(sketches.agg(kll_merge_agg_double(col("sk"))).collect()(0).getAs[Array[Byte]](0))
+
   test("sketch quantiles track exact quantiles on uniform data") {
     val xs = (0 until 20000).map(i => (i * 37 % 20000).toDouble)
-    val sk = new QuantileSketch(100)
-    xs.foreach(sk.insert)
+    val sk = sketchOf(xs)
     Seq(0.1, 0.25, 0.5, 0.75, 0.9, 0.99).foreach { q =>
       val approx = sk.quantile(q)
       val exact = exactQuantile(xs, q)
@@ -28,24 +55,22 @@ class SketchSpec extends AnyFunSuite {
 
   test("merging partial sketches equals one big sketch (partition merge)") {
     val xs = (0 until 10000).map(i => math.sin(i).abs * 1000)
-    val whole = new QuantileSketch(100)
-    xs.foreach(whole.insert)
-    val parts = xs.grouped(1000).map { chunk =>
-      val s = new QuantileSketch(100); chunk.foreach(s.insert); s
-    }.reduce(_ merge _)
+    val whole = sketchOf(xs, parts = 1)
+    val parts = merged(sketchesBy(frame(xs), floor(col("i") / 1000)))
     Seq(0.1, 0.5, 0.9).foreach { q =>
       assert(math.abs(whole.quantile(q) - parts.quantile(q)) / 1000 < 0.02)
     }
     assert(parts.count === xs.length)
   }
 
-  test("sketch is checkpointable (java-serializable round trip)") {
-    val sk = new QuantileSketch(50)
-    (0 until 5000).foreach(i => sk.insert(i.toDouble))
-    val bos = new java.io.ByteArrayOutputStream()
-    val oos = new java.io.ObjectOutputStream(bos); oos.writeObject(sk); oos.close()
-    val in = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bos.toByteArray))
-    val back = in.readObject().asInstanceOf[QuantileSketch]
+  test("sketch is checkpointable (bytes round trip through parquet)") {
+    val s = spark
+    import s.implicits._
+    val sk = sketchOf((0 until 5000).map(_.toDouble))
+    val dir = java.nio.file.Files.createTempDirectory("sketch-ckpt").resolve("sk").toString
+    Seq(sk.bytes).toDF("sk").write.parquet(dir)
+    val back = new QuantileSketch(spark.read.parquet(dir).as[Array[Byte]].collect()(0))
+    assert(back.bytes.sameElements(sk.bytes))
     assert(math.abs(back.quantile(0.5) - sk.quantile(0.5)) < 1e-9)
     assert(back.count === sk.count)
   }
@@ -58,48 +83,45 @@ class SketchSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(7)
     val xs = Array.fill(n)(
       if (rnd.nextInt(20) == 0) 500 + rnd.nextGaussian() * 200 // heavy tail
-      else rnd.nextDouble() * 100)
-    val global = new QuantileSketch(100); xs.foreach(global.insert)
-    val parts = Array.fill(1000)(new QuantileSketch(100))
-    xs.zipWithIndex.foreach { case (v, i) => parts(i % 1000).insert(v) }
-    val flat = parts.reduce(_ merge _)
+      else rnd.nextDouble() * 100).toSeq
+    val global = sketchOf(xs, parts = 1)
+    val flat = sketchOf(xs, parts = 1000)
     assert(flat.count === n.toLong)
-    val sorted = xs.sorted
-    def rankOf(x: Double): Double = sorted.count(_ <= x).toDouble / n
+    val sorted = xs.toArray.sorted
     for (q <- Seq(0.01, 0.1, 0.5, 0.9, 0.99)) {
-      val rf = rankOf(flat.quantile(q))
-      val rg = rankOf(global.quantile(q))
+      val rf = rankOf(sorted, flat.quantile(q))
+      val rg = rankOf(sorted, global.quantile(q))
       assert(math.abs(rf - q) <= 0.05, s"q=$q flat-merged rank $rf")
       assert(math.abs(rg - q) <= 0.05, s"q=$q global rank $rg")
     }
-    // tree-shaped merge (the real cluster reduction) holds the same bound
-    val tree = parts.grouped(32).map(_.reduce(_ merge _)).reduce(_ merge _)
+    // tree-shaped merge of the partition sketches' bytes (the real cluster
+    // reduction) holds the same bound
+    val perPartition = sketchesBy(frame(xs), col("i") % 1000)
+    val tree = merged(perPartition.groupBy(col("g") % 32)
+      .agg(kll_merge_agg_double(col("sk")).as("sk")))
+    assert(tree.count === n.toLong)
     for (q <- Seq(0.1, 0.5, 0.9)) {
-      val rt = rankOf(tree.quantile(q))
+      val rt = rankOf(sorted, tree.quantile(q))
       assert(math.abs(rt - q) <= 0.05, s"q=$q tree-merged rank $rt")
     }
   }
 
   test("checkpoint/restore mid-stream, then continue: matches the uninterrupted sketch") {
-    // simulated snapshot boundary: sketch half the stream, serialize (what
-    // the checkpoint sink persists), restore, sketch the rest — quantiles
-    // must match a never-interrupted sketch within rank error.
+    // simulated snapshot boundary: sketch half the stream, write its bytes
+    // (what the checkpoint sink persists), read them back, merge with the
+    // rest of the stream's sketch — quantiles must match a never-interrupted
+    // sketch within rank error.
     def f(i: Int): Double = ((i.toLong * 2654435761L) % 100000L).toDouble / 100.0
-    val uninterrupted = new QuantileSketch(100)
-    (0 until 100000).foreach(i => uninterrupted.insert(f(i)))
-    val first = new QuantileSketch(100)
-    (0 until 50000).foreach(i => first.insert(f(i)))
-    val bos = new java.io.ByteArrayOutputStream()
-    val oos = new java.io.ObjectOutputStream(bos); oos.writeObject(first); oos.close()
-    val restored = new java.io.ObjectInputStream(
-      new java.io.ByteArrayInputStream(bos.toByteArray))
-      .readObject().asInstanceOf[QuantileSketch]
-    (50000 until 100000).foreach(i => restored.insert(f(i)))
-    restored.flush() // count is exact at flush points (and at serialization)
+    val xs = (0 until 100000).map(f)
+    val uninterrupted = sketchOf(xs)
+    val dir = java.nio.file.Files.createTempDirectory("sketch-ckpt").resolve("first").toString
+    sketchesBy(frame(xs.take(50000)), lit(0)).select("sk").write.parquet(dir)
+    val rest = sketchesBy(frame(xs.drop(50000)), lit(0)).select("sk")
+    val restored = merged(spark.read.parquet(dir).unionByName(rest))
     assert(restored.count === 100000L)
-    val sorted = (0 until 100000).map(f).sorted
+    val sorted = xs.toArray.sorted
     for (q <- Seq(0.1, 0.5, 0.9)) {
-      val r = sorted.count(_ <= restored.quantile(q)).toDouble / 100000
+      val r = rankOf(sorted, restored.quantile(q))
       assert(math.abs(r - q) <= 0.03, s"q=$q restored rank $r")
       assert(math.abs(restored.quantile(q) - uninterrupted.quantile(q)) <=
         (sorted.last - sorted.head) * 0.02, s"q=$q restored vs uninterrupted")
@@ -107,9 +129,6 @@ class SketchSpec extends AnyFunSuite {
   }
 
   test("sketch KS/PSI: same distribution ~0, shifted >> 0") {
-    def sketchOf(xs: Seq[Double]): QuantileSketch = {
-      val s = new QuantileSketch(100); xs.foreach(s.insert); s
-    }
     val a = sketchOf((0 until 5000).map(i => (i % 100).toDouble))
     val b = sketchOf((0 until 5000).map(i => ((i * 7) % 100).toDouble))
     val c = sketchOf((0 until 5000).map(i => (i % 100).toDouble + 50))
@@ -117,6 +136,56 @@ class SketchSpec extends AnyFunSuite {
     assert(QuantileSketch.ks(a, c) > 0.2)
     assert(QuantileSketch.psi(a, b) < 0.05)
     assert(QuantileSketch.psi(a, c) > 0.3)
+  }
+
+  test("rank error stays bounded on adversarial orders at any partitioning") {
+    // the input orders that break order-sensitive sketches (sorted, reversed,
+    // zoom-in, clustered bursts, heavy-tailed), each cut into contiguous
+    // partitions so every partition sees the adversarial order
+    val n = 50000
+    val rnd = new scala.util.Random(11)
+    val clusters = rnd.shuffle((0 until 50).toVector)
+    val streams = Seq(
+      "sorted" -> (0 until n).map(_.toDouble),
+      "reversed" -> (0 until n).reverse.map(_.toDouble),
+      "zoom-in" -> (0 until n).map(i => (if (i % 2 == 0) i / 2 else n - 1 - i / 2).toDouble),
+      "clustered" -> clusters.flatMap(c => Seq.fill(n / 50)(c * 1000 + rnd.nextDouble())),
+      "heavy-tailed" -> Seq.fill(n)(math.pow(1 - rnd.nextDouble(), -1 / 1.1)))
+    for ((name, xs) <- streams; parts <- Seq(1, 7, 64)) {
+      val sk = sketchOf(xs, parts)
+      assert(sk.count === n.toLong, s"$name/$parts")
+      val sorted = xs.toArray.sorted
+      for (q <- Seq(0.01, 0.1, 0.5, 0.9, 0.99)) {
+        val r = rankOf(sorted, sk.quantile(q))
+        assert(math.abs(r - q) <= 0.05, s"$name over $parts partitions: q=$q rank $r")
+      }
+    }
+  }
+
+  test("empty, all-null and NaN values: nothing counted, NaN quantile, zero drift") {
+    val s = spark
+    import s.implicits._
+    val some = sketchOf((0 until 100).map(_.toDouble))
+    val empties = Seq(
+      "empty frame" -> TypedAggregators.sketchColumn(Seq.empty[Double].toDF("v"), "v"),
+      "all null" -> TypedAggregators.sketchColumn(
+        Seq[Option[Double]](None, None).toDF("v"), "v"),
+      "all NaN" -> sketchOf(Seq(Double.NaN, Double.NaN)))
+    for ((name, e) <- empties) {
+      assert(e.count === 0L, name)
+      assert(e.quantile(0.5).isNaN, name)
+      for ((x, y) <- Seq((e, e), (e, some), (some, e))) {
+        assert(QuantileSketch.ks(x, y) === 0.0, name)
+        assert(QuantileSketch.psi(x, y) === 0.0, name)
+      }
+    }
+    // two values an ulp apart: the equal-width edges collapse
+    val ulp = QuantileSketch.psi(sketchOf(Seq(1.0)), sketchOf(Seq(math.nextUp(1.0))))
+    assert(ulp > 0 && !ulp.isInfinite)
+    // KLL skips NaN: only the three numbers are counted
+    val mixed = sketchOf(Seq(Double.NaN, 1.0, 2.0, Double.NaN, 3.0))
+    assert(mixed.count === 3L)
+    assert(mixed.quantile(1.0) === 3.0)
   }
 
   test("typed stats aggregator matches exact column stats over Spark") {
@@ -147,9 +216,7 @@ class SketchSpec extends AnyFunSuite {
     val seed0 = rng.Seed(42L)
     (0 until 20).foldLeft(seed0) { (seed, _) =>
       val xs = gen.pureApply(Gen.Parameters.default, seed)
-      val sk = new QuantileSketch(100)
-      xs.foreach(sk.insert)
-      val med = sk.quantile(0.5)
+      val med = sketchOf(xs).quantile(0.5)
       val rank = xs.count(_ <= med).toDouble / xs.length
       assert(rank >= 0.40 && rank <= 0.60, s"median rank $rank")
       seed.next
