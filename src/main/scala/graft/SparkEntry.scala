@@ -268,15 +268,20 @@ object SparkEntry {
       // Spark and DuckDB probe doubles parse bit-identically
       val qs = Seq(("p10", 0.1, "0.05", "0.15"), ("p50", 0.5, "0.45", "0.55"),
         ("p90", 0.9, "0.85", "0.95"))
-      def r6(x: Double) = new java.math.BigDecimal(x)
-        .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+      // a population with no non-null value has NULL bounds and passes,
+      // like the oracle
+      def r6(r: org.apache.spark.sql.Row, i: Int) = Option.unless(r.isNullAt(i))(
+        new java.math.BigDecimal(r.getDouble(i))
+          .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue())
       import s.implicits._
       val probeSql = qs.flatMap(t => Seq(t._3, t._4))
         .map(p => s"${p}D").mkString("array(", ", ", ")")
       val checks = qs.zipWithIndex.map { case ((m, q, _, _), i) =>
         val lo = col("p")(2 * i); val hi = col("p")(2 * i + 1)
         struct(lit(m).as("measure"), lo.as("lo"), hi.as("hi"),
-          kll_sketch_get_quantile_double(col("sk"), lit(q)).between(lo, hi).as("within_bound"))
+          when(kll_sketch_get_n_double(col("sk")) === 0, lit(true))
+            .otherwise(kll_sketch_get_quantile_double(col("sk"), lit(q)).between(lo, hi))
+            .as("within_bound"))
       }
       // one scan: both populations' sketches and exact percentiles; the
       // population split is the oracle's CASE (a null id is 'cur')
@@ -287,8 +292,7 @@ object SparkEntry {
         .select(col("population"), explode(array(checks: _*)).as("c"))
         .select("population", "c.*")
         .collect().toSeq
-        .map(r => (r.getString(0), r.getString(1), r6(r.getDouble(2)), r6(r.getDouble(3)),
-          r.getBoolean(4)))
+        .map(r => (r.getString(0), r.getString(1), r6(r, 2), r6(r, 3), r.getBoolean(4)))
         .toDF("population", "measure", "lo", "hi", "within_bound")
         .orderBy("population", "measure")
     }),

@@ -21,9 +21,16 @@ import org.apache.spark.sql.types._
   * `validate.cljc:824-832`; the engine's exploded violation rows are the
   * flattened leaves — same validity semantics: valid ⟺ zero leaves).
   *
-  * Everything is built from `org.apache.spark.sql.functions` (no UDFs), so
-  * whole-stage codegen applies and the plan scales: validation is a narrow
-  * map over the scan, no shuffle.
+  * Everything is built from `org.apache.spark.sql.functions` (no UDFs), and
+  * validation is a narrow map over the scan, no shuffle. The boolean
+  * lowering stays inside whole-stage codegen wherever it needs no lambda:
+  * object `items` over struct elements (nullable ones too, when the
+  * element's own `type` rejects null) use the field-array form. `forall`,
+  * `exists` and `transform` are CodegenFallback and take a projection that
+  * holds them out of codegen, so `ValidationJob.withVerdicts` evaluates
+  * the error lowering, which needs them for paths and messages, interpreted
+  * inside the native [[graft.engine.expressions.ViolationsOf]], for failing
+  * rows only.
   *
   * Mapping decisions for columnar data (documented divergence from the
   * dynamic-JSON world): a NULL struct field means *absent* (Parquet cannot
@@ -65,10 +72,13 @@ object ColumnCompiler {
   def valid(doc: SchemaDoc, col: Column, dt: DataType): Column =
     validOf(plan(doc, col, dt))
 
-  /** The violation array without [[errors]]' `when(valid, [])`
-    * short-circuit, for callers that hold the verdict already. */
-  private[engine] def ungatedErrors(doc: SchemaDoc, col: Column, dt: DataType): Column =
-    errorsOf(plan(doc, col, dt))
+  /** [[valid]] and the violation array without [[errors]]'
+    * `when(valid, [])` short-circuit, for callers that hold the verdict
+    * already: two lowerings of one compiled plan. */
+  private[engine] def lowerings(doc: SchemaDoc, col: Column, dt: DataType): (Column, Column) = {
+    val p = plan(doc, col, dt)
+    (validOf(p), errorsOf(p))
+  }
 
   private def plan(doc: SchemaDoc, col: Column, dt: DataType): Plan =
     compile(doc.root, col, dt, lit(""), doc, Set.empty, None, readLater = false)
@@ -415,18 +425,29 @@ object ColumnCompiler {
         def atIndex(i: Column) = concat(path, lit("/"), i.cast(StringType))
         (v, dt) match {
           case (s: JObj, ArrayType(elem, containsNull)) =>
-            // Non-null struct elements have the array as their twin, so
+            // Struct elements have the array as their twin, so
             // `arrayValidOf` can replace `forall` (CodegenFallback: boxes
             // every element outside whole-stage codegen) by field-array
             // ops that stay inside it. That form ignores the element, so
             // nulls stand in for it.
-            val twin = elem match {
-              case _: StructType if !containsNull => Some(col)
-              case _ => None
+            def body(twin: Option[Column]) =
+              (x: Column, i: Column) => sub(s, x, elem, atIndex(i), twin)
+            def overFields = arrayValidOf(body(Some(col))(lit(null), lit(null)))
+            // A null element fails `type: object` and passes every object
+            // keyword. When the element's own `type` rejects null, "no null
+            // element and the field-array form" is exact: without one the
+            // data is the non-null case, with one both sides are false.
+            // Otherwise the element plan keeps no twin, so an admitted
+            // `type` does not fold to pass for a null element.
+            val rejectsNull =
+              !s.has("$ref") && s.get("type").exists(t => !typeList(t).contains("null"))
+            val (twin, fast) = elem match {
+              case _: StructType if !containsNull => (Some(col), overFields)
+              case _: StructType if rejectsNull => (None, overFields.map(
+                size(array_intersect(col, array(lit(null).cast(elem)))) === 0 && _))
+              case _ => (None, None)
             }
-            val body = (x: Column, i: Column) => sub(s, x, elem, atIndex(i), twin)
-            gate(col.isNull, Each(col, body,
-              twin.flatMap(_ => arrayValidOf(body(lit(null), lit(null))))))
+            gate(col.isNull, Each(col, body(twin), fast))
           case (JBool(b), _: ArrayType) =>
             onlyIf(!b)(Check(col.isNull || size(col) === 0, path, "items",
               "Items must be empty to satisfy a false schema"))

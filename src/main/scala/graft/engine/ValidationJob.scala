@@ -1,5 +1,6 @@
 package graft.engine
 
+import graft.engine.expressions.ViolationsOf
 import graft.schema.SchemaDoc
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -19,27 +20,28 @@ object ValidationJob {
   /** `docs` must carry the interleaved shape (doc_id, spans) — extra columns
     * pass through. Adds `valid` + `errors`.
     *
-    * Two-projection shape: `valid` comes from the lambda-free boolean plan
-    * (whole-stage codegen'd — any CodegenFallback expression in a projection
-    * disables codegen for the WHOLE operator), and the error-construction
-    * expression — which needs per-element lambdas for paths/messages — runs
-    * in a second thin projection gated on the precomputed boolean, so valid
-    * rows pay one boolean column read instead of an interpreted tree walk,
-    * and failing rows do not evaluate the boolean plan again. Both columns
-    * are lowerings of one compiled plan, so valid ⟺ errors is empty holds
-    * by construction; EngineSpec, MapTypeSpec and RandomSchemaSpec still
-    * check it row by row. */
+    * Two-projection shape: `valid` comes from the boolean lowering
+    * (whole-stage codegen'd unless it needs a lambda — any CodegenFallback
+    * expression in a projection disables codegen for the WHOLE operator),
+    * and `errors` is a second thin projection gated on the precomputed
+    * boolean, so valid rows pay one boolean column read and failing rows do
+    * not evaluate the boolean plan again. The error lowering needs
+    * per-element lambdas for paths and messages, so it runs interpreted
+    * inside the native [[graft.engine.expressions.ViolationsOf]], which
+    * keeps the `errors` projection in generated code and is evaluated for
+    * failing rows only. Both columns are lowerings of one compiled plan, so valid ⟺ errors is
+    * empty holds by construction; EngineSpec, MapTypeSpec and
+    * RandomSchemaSpec still check it row by row. */
   def withVerdicts(spark: SparkSession, docs: DataFrame, schemaJson: String): DataFrame =
     compiledOrRowCore(spark, docs, schemaJson, keepErrors = true) { (doc, payload, payloadType) =>
-      val boolPlan = ColumnCompiler.valid(doc, payload, payloadType)
-      val errs = ColumnCompiler.ungatedErrors(doc, payload, payloadType)
+      val (boolPlan, errs) = ColumnCompiler.lowerings(doc, payload, payloadType)
       val passthrough = docs.columns.filterNot(c => c == "errors" || c == "valid")
       // (passthrough…, valid, errors) — same column ORDER as the RowValidator
       // fallback, so positional consumers (and parquet written from a mix of
       // both paths) see one schema regardless of column-expressibility
       docs.withColumn("valid", boolPlan)
-        .withColumn("errors",
-          when(col("valid"), array().cast(ColumnCompiler.errorType)).otherwise(errs))
+        .withColumn("errors", when(col("valid"), array().cast(ColumnCompiler.errorType))
+          .otherwise(ViolationsOf.over(spark, payload, payloadType, errs)))
         .select((passthrough.map(col).toSeq :+ col("valid") :+ col("errors")): _*)
     }
 

@@ -33,9 +33,8 @@ class EngineSpec extends AnyFunSuite {
     val payloadFields = docs.schema.fields.filter(f => f.name == "doc_id" || f.name == "spans")
     val payload = struct(payloadFields.map(f => col(f.name)).toSeq: _*)
     val dt = org.apache.spark.sql.types.StructType(payloadFields)
-    val both = docs.select(
-      ColumnCompiler.valid(doc, payload, dt).as("fast"),
-      (size(ColumnCompiler.ungatedErrors(doc, payload, dt)) === 0).as("viaErrors"))
+    val (fast, errs) = ColumnCompiler.lowerings(doc, payload, dt)
+    val both = docs.select(fast.as("fast"), (size(errs) === 0).as("viaErrors"))
     assert(both.where(col("fast") =!= col("viaErrors")).count() === 0)
   }
 

@@ -57,9 +57,8 @@ class MapTypeSpec extends AnyFunSuite {
     val payloadType = StructType(dfSchema.fields.filter(_.name == "props"))
     val payload = struct(col("props"))
     val doc = SchemaDoc.schema(schemaJson)
-    val colPath = df.select(col("doc_num"),
-      ColumnCompiler.valid(doc, payload, payloadType).as("fast"),
-      (size(ColumnCompiler.ungatedErrors(doc, payload, payloadType)) === 0).as("viaErrors"))
+    val (fast, errs) = ColumnCompiler.lowerings(doc, payload, payloadType)
+    val colPath = df.select(col("doc_num"), fast.as("fast"), (size(errs) === 0).as("viaErrors"))
     val rowPath = RowValidator.validateRows(spark, df, schemaJson)
       .select(col("doc_num"), col("valid").as("rowValid"))
     val joined = colPath.join(rowPath, "doc_num").orderBy("doc_num").collect()

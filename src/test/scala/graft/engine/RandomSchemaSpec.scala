@@ -237,9 +237,8 @@ class RandomSchemaSpec extends AnyFunSuite {
           val payloadType = StructType(dfType.fields)
           val payload = struct(col("doc_id"), col("spans"))
           val doc = graft.schema.SchemaDoc.schema(schemaJson)
-          Some(df.select(col("doc_num"),
-            ColumnCompiler.valid(doc, payload, payloadType).as("fast"),
-            (size(ColumnCompiler.ungatedErrors(doc, payload, payloadType)) === 0).as("viaErrors")))
+          val (fast, errs) = ColumnCompiler.lowerings(doc, payload, payloadType)
+          Some(df.select(col("doc_num"), fast.as("fast"), (size(errs) === 0).as("viaErrors")))
         } catch { case _: ColumnCompiler.Unsupported => fellBack += 1; None }
 
       colPath.foreach { cp =>
@@ -321,5 +320,62 @@ class RandomSchemaSpec extends AnyFunSuite {
       "contains" -> JObj.of("properties" -> JObj.of("text" -> JObj.of("const" -> jstr("t")))))
     assert(v === Map("doc-1" -> false, "doc-2" -> true))
     assert(rows.map(_._3) === Set("contains"))
+  }
+
+  test("null span elements: each items `type` form agrees with the row core, violations included") {
+    // containsNull = true, the shape of a file-read table
+    val docs = Seq(
+      Row("doc-1", Seq(Row("text", "t", null, 0), null)),     // a null element
+      Row("doc-2", Seq(null, Row("imag", "t", null, -1))),    // beside a bad sibling
+      Row("doc-3", Seq(Row(null, "t", null, 0))),             // a missing kind
+      Row("doc-4", Seq(Row("media", null, null, 1))),         // media with no ref
+      Row("doc-5", Seq(Row("text", "t", null, 0), Row("media", null, "m-1", 2))))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(docs, 2),
+      dfSchemaWith(containsNull = true)).withColumn("doc_num", monotonically_increasing_id())
+    val mediaHasRef = JObj.of(
+      "if" -> JObj.of("properties" -> JObj.of("kind" -> JObj.of("const" -> jstr("media")))),
+      "then" -> JObj.of("properties" -> JObj.of("media_ref" -> JObj.of("type" -> jstr("string")))))
+    // without `required`, only the type check sees a null element
+    def element(typ: Option[JVal], typeInAllOf: Boolean, required: Boolean = true): JVal = JObj(
+      typ.map("type" -> _).toVector ++ Option.when(required)("required" -> arr("kind", "offset")) ++
+        Vector(
+          "properties" -> JObj.of(
+            "kind" -> JObj.of("enum" -> arr("text", "media")),
+            "media_ref" -> JObj.of("type" -> arr("string", "null")),
+            "offset" -> JObj.of("type" -> jstr("integer"), "minimum" -> jnum(0))),
+          "allOf" -> JArr(
+            Option.when(typeInAllOf)(JObj.of("type" -> jstr("object"))).toVector :+ mediaHasRef)))
+    val nullFails = Map("doc-1" -> false, "doc-2" -> false, "doc-3" -> false, "doc-4" -> true,
+      "doc-5" -> true)
+    val nullPasses = nullFails + ("doc-1" -> true)
+    // (items schema, expected verdicts, whether `valid` keeps forall)
+    val cases = Seq(
+      (element(Some(jstr("object")), typeInAllOf = false), nullFails, false),
+      (element(Some(jstr("object")), typeInAllOf = false, required = false),
+        nullFails + ("doc-3" -> true), false),
+      (element(Some(arr("object", "null")), typeInAllOf = false), nullPasses, true),
+      (element(None, typeInAllOf = false), nullPasses, true),
+      (element(None, typeInAllOf = true), nullFails, true))
+    cases.foreach { case (items, expected, keepsForall) =>
+      val schemaJson = Json.render(JObj.of("properties" -> JObj.of("spans" -> JObj.of("items" -> items))))
+      def byDoc(out: org.apache.spark.sql.DataFrame) =
+        out.select("doc_id", "valid").collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
+      def leaves(out: org.apache.spark.sql.DataFrame) =
+        out.select(col("doc_id"), explode(col("errors")).as("v"))
+          .select("doc_id", "v.path", "v.keyword").collect()
+          .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+      val only = ValidationJob.withVerdictsOnly(spark, df, schemaJson)
+      assert(only.queryExecution.optimizedPlan.toString.contains("forall(") === keepsForall, schemaJson)
+      val full = ValidationJob.withVerdicts(spark, df, schemaJson)
+      val rowCore = RowValidator.validateRows(spark, df, schemaJson, Some(Seq("doc_id", "spans")))
+      assert(byDoc(only) === expected, schemaJson)
+      assert(byDoc(full) === expected, schemaJson)
+      assert(byDoc(rowCore) === expected, schemaJson)
+      val rows = leaves(full)
+      assert(rows === leaves(rowCore), schemaJson)
+      // valid ⟺ no violation rows
+      assert(expected.filter(!_._2).keySet === rows.map(_._1), schemaJson)
+      if (!expected("doc-1")) assert(rows.contains(("doc-1", "/spans/1", "type")))
+    }
   }
 }

@@ -188,6 +188,23 @@ class SketchSpec extends AnyFunSuite {
     assert(mixed.quantile(1.0) === 3.0)
   }
 
+  test("q_drift_sketch: a population with no non-null value gets NULL bounds and passes") {
+    // 100 events; the even event_ids (population 'ref') have a null value
+    val dir = java.nio.file.Files.createTempDirectory("graft-drift-empty").toString
+    spark.range(100).select(col("id").as("event_id"),
+        when(col("id") % 2 === 1, col("id").cast("double")).as("value"))
+      .write.parquet(s"$dir/events.parquet")
+    val rows = graft.SparkEntry.queries("q_drift_sketch")(spark, dir).collect()
+      .map(r => (r.getString(0), r.getString(1), Option(r.get(2)), Option(r.get(3)), r.getBoolean(4)))
+    assert(rows.toSeq.filter(_._1 == "ref") ===
+      Seq("p10", "p50", "p90").map(m => ("ref", m, None, None, true)))
+    // 'cur' holds 1, 3, …, 99: exact percentiles at q ± 0.05
+    assert(rows.toSeq.filter(_._1 == "cur") === Seq(
+      ("cur", "p10", Some(5.9), Some(15.7), true),
+      ("cur", "p50", Some(45.1), Some(54.9), true),
+      ("cur", "p90", Some(84.3), Some(94.1), true)))
+  }
+
   test("typed stats aggregator matches exact column stats over Spark") {
     import spark.implicits._
     val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
