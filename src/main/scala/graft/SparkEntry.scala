@@ -165,8 +165,8 @@ object SparkEntry {
 
     // the compiled draft-7 validation plan over a classic relational table:
     // numeric bounds / pattern / enum constraints on lineitem compile to
-    // one codegen'd projection; emits the violating rows with their leaf
-    // error counts (+ an injected row failing every rule)
+    // a codegen'd filter; emits the violating rows with their leaf error
+    // counts (+ an injected row failing every rule)
     "q_lineitem_validate" -> ((s, dir) => {
       import s.implicits._
       val li = s.read.parquet(s"$dir/lineitem.parquet")
@@ -181,14 +181,12 @@ object SparkEntry {
           |  "l_discount":{"minimum":0,"maximum":0.09},
           |  "l_returnflag":{"pattern":"^[ARN]$"},
           |  "l_linestatus":{"enum":["O","F"]}}}""".stripMargin
-      val doc = graft.schema.SchemaDoc.schema(schemaJson)
       val fields = li.schema.fields
-      val payload = struct(fields.map(f => col(f.name)).toSeq: _*)
-      val errs = ColumnCompiler.errors(doc, payload,
-        org.apache.spark.sql.types.StructType(fields))
-      li.withColumn("n_errors", size(errs))
-        .where(col("n_errors") > 0)
-        .select(col("l_orderkey"), col("l_linenumber"), col("n_errors"))
+      val (valid, violations) = ValidationJob.compiled(s, graft.schema.SchemaDoc.schema(schemaJson),
+        struct(fields.map(f => col(f.name)).toSeq: _*), StructType(fields), "q_lineitem_validate")
+        .getOrElse(sys.error("the lineitem schema must compile to Columns"))
+      li.where(!valid)
+        .select(col("l_orderkey"), col("l_linenumber"), size(violations()).as("n_errors"))
         .orderBy("l_orderkey", "l_linenumber")
     }),
 

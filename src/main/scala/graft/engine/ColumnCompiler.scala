@@ -11,12 +11,12 @@ import org.apache.spark.sql.types._
   *
   * Each keyword is compiled once, into a small plan tree ([[Plan]]), and
   * the tree is lowered three ways: to the allocation-free boolean verdict
-  * ([[valid]]), to the violation array ([[errors]]), and, for the element
-  * plan of object `items`, to one boolean over whole field arrays
-  * (`arrayValidOf`). So valid ⟺ no violations holds by construction, like
-  * the reference's `:valid?` (no errors, `validate.cljc:99-116`).
+  * ([[valid]]), to the violation array (the second of [[lowerings]]), and,
+  * for the element plan of object `items`, to one boolean over whole field
+  * arrays (`arrayValidOf`). So valid ⟺ no violations holds by construction,
+  * like the reference's `:valid?` (no errors, `validate.cljc:99-116`).
   *
-  * Output of [[errors]] is `array<struct<path,keyword,message>>` holding the
+  * The violation array is `array<struct<path,keyword,message>>` holding the
   * *leaf* violations (the reference nests causes under applicator errors,
   * `validate.cljc:824-832`; the engine's exploded violation rows are the
   * flattened leaves — same validity semantics: valid ⟺ zero leaves).
@@ -27,10 +27,10 @@ import org.apache.spark.sql.types._
   * object `items` over struct elements (nullable ones too, when the
   * element's own `type` rejects null) use the field-array form. `forall`,
   * `exists` and `transform` are CodegenFallback and take a projection that
-  * holds them out of codegen, so `ValidationJob.withVerdicts` evaluates
-  * the error lowering, which needs them for paths and messages, interpreted
-  * inside the native [[graft.engine.expressions.ViolationsOf]], for failing
-  * rows only.
+  * holds them out of codegen, so every bulk caller (`ValidationJob.compiled`)
+  * evaluates the error lowering, which needs them for paths and messages,
+  * interpreted inside the native [[graft.engine.expressions.ViolationsOf]],
+  * for failing rows only.
   *
   * Mapping decisions for columnar data (documented divergence from the
   * dynamic-JSON world): a NULL struct field means *absent* (Parquet cannot
@@ -40,7 +40,7 @@ import org.apache.spark.sql.types._
   * Schemas using keywords that cannot be expressed as a finite Column tree
   * (recursive or external $ref, Spark types with no JSON mapping, malformed
   * keyword values …) throw [[ColumnCompiler.Unsupported]]; callers fall back
-  * to the row-level core ([[ValidationJob]]'s row-core fallback).
+  * to the row-level core (`ValidationJob.compiled` returns None).
   */
 object ColumnCompiler {
 
@@ -52,32 +52,19 @@ object ColumnCompiler {
     StructField("path", StringType, nullable = true),
     StructField("keyword", StringType, nullable = false),
     StructField("message", StringType, nullable = false))), containsNull = false)
+  private[engine] val noErrors: Column = array().cast(errorType)
 
-  /** Compile `schema` (a compiled [[SchemaDoc]]) to an error-array Column
-    * over input column `col` of Spark type `dt`.
-    *
-    * Hot-path shape: a row first runs the allocation-free boolean plan
-    * ([[valid]]); only rows that FAIL it evaluate the error-construction
-    * branch. On mostly-valid data (the normal case) validation therefore
-    * costs comparisons only — no array/struct/string allocation — which is
-    * what lets the narrow validation stage scale with cores at 10^12 rows.
-    */
-  def errors(doc: SchemaDoc, col: Column, dt: DataType): Column = {
-    val p = plan(doc, col, dt)
-    when(validOf(p), noErrors).otherwise(errorsOf(p))
-  }
-
-  /** Allocation-free boolean validity plan: the same plan tree as
-    * [[errors]], lowered to one boolean. */
+  /** Allocation-free boolean validity plan of `doc` over input column
+    * `col` of Spark type `dt`. */
   def valid(doc: SchemaDoc, col: Column, dt: DataType): Column =
     validOf(plan(doc, col, dt))
 
-  /** [[valid]] and the violation array without [[errors]]'
-    * `when(valid, [])` short-circuit, for callers that hold the verdict
-    * already: two lowerings of one compiled plan. */
-  private[engine] def lowerings(doc: SchemaDoc, col: Column, dt: DataType): (Column, Column) = {
+  /** [[valid]] and the violation array: two lowerings of one compiled
+    * plan. The error lowering is built only when called, so a caller that
+    * needs the verdict alone never pays for it. */
+  private[engine] def lowerings(doc: SchemaDoc, col: Column, dt: DataType): (Column, () => Column) = {
     val p = plan(doc, col, dt)
-    (validOf(p), errorsOf(p))
+    (validOf(p), () => errorsOf(p))
   }
 
   private def plan(doc: SchemaDoc, col: Column, dt: DataType): Plan =
@@ -118,7 +105,6 @@ object ColumnCompiler {
     case Cond(test, t, f)  => ok(when(test, validOf(t)).otherwise(validOf(f)))
   }
 
-  private def noErrors: Column = array().cast(errorType)
 
   private def whenOr(cond: Column, ifTrue: Column, ifFalse: Column): Column =
     when(coalesce(cond, lit(false)), ifTrue).otherwise(ifFalse)

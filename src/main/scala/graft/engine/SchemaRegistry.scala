@@ -2,7 +2,7 @@ package graft.engine
 
 import graft.schema.SchemaDoc
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -28,58 +28,51 @@ object SchemaRegistry {
     new SchemaRegistry(sources.map { case (k, v) => k -> SchemaDoc.schema(v) })
 
   /** Validate each row against the schema its `schemaCol` names. Adds
-    * `valid` + `errors` like [[ValidationJob.withVerdicts]].
-    *
-    * Hybrid per-schema dispatch: every column-expressible schema compiles
-    * into a CASE chain of Catalyst plans — whole-stage codegen, no per-row
-    * interpretation, no JVal allocation; at 10^12 rows this is the only
-    * acceptable shape. Rows naming a schema the compiler can NOT express
-    * (recursive $ref, dynamic objects, content decoding) are routed — and
-    * ONLY those rows — to the broadcast row core; one inexpressible schema
-    * no longer drags the whole registry off the compiled path. */
+    * `valid` + `errors` like [[ValidationJob.withVerdicts]], from the same
+    * compiled step (`ValidationJob.compiled`): two `CASE schema_name` chains
+    * pick a row's boolean verdict and, for failing rows only, its violation
+    * array, both inside whole-stage codegen. Rows naming a schema the
+    * compiler can NOT express (recursive $ref, dynamic objects, content
+    * decoding) are routed — and ONLY those rows — to the broadcast row core,
+    * so one inexpressible schema does not drag the whole registry off the
+    * compiled path. */
   def validateWith(
       spark: SparkSession, df: DataFrame,
       registry: SchemaRegistry, schemaCol: String): DataFrame = {
     val payloadFields = df.schema.fields.filter(_.name != schemaCol)
     val payloadType = StructType(payloadFields)
     val payload = struct(payloadFields.map(f => col(f.name)).toSeq: _*)
-    val compiled: Seq[(String, org.apache.spark.sql.Column)] =
-      registry.schemas.toSeq.sortBy(_._1).flatMap { case (n, doc) =>
-        try Some(n -> ColumnCompiler.errors(doc, payload, payloadType))
-        catch { case _: ColumnCompiler.Unsupported => None }
+    // (name, verdict, violations) per compiled schema
+    val compiled = registry.schemas.toSeq.sortBy(_._1).flatMap { case (n, doc) =>
+      ValidationJob.compiled(spark, doc, payload, payloadType, s"registry schema '$n'")
+        .map { case (valid, violations) => (n, valid, violations) }
+    }
+    val compiledNames = compiled.map(_._1)
+    if (compiled.isEmpty) rowCoreValidateWith(spark, df, registry, schemaCol)
+    else {
+      def dispatch(branches: Seq[Column]): Column = {
+        val arms = compiledNames.zip(branches).map { case (n, b) => (col(schemaCol) === n, b) }
+        arms.tail.foldLeft(when(arms.head._1, arms.head._2)) { case (c, (t, b)) => c.when(t, b) }
       }
-    val rowCoreNames = registry.names -- compiled.map(_._1).toSet
-    compiled match {
-      case Seq() => rowCoreValidateWith(spark, df, registry, schemaCol)
-      case (n0, p0) +: rest =>
-        val compiledNames = compiled.map(_._1)
-        // unknown schema name raises, mirroring the row path's lookup error
-        val chain = rest.foldLeft(when(col(schemaCol) === n0, p0)) {
-          case (acc, (n, p)) => acc.when(col(schemaCol) === n, p)
-        }.otherwise(raise_error(concat(
-          lit("no schema '"), col(schemaCol),
-          lit(s"' in registry (${registry.names.toSeq.sorted.mkString(", ")})"))))
-        // filter BEFORE the projection so the CASE chain (and its
-        // raise_error otherwise-branch) never evaluates on row-core rows
-        val columnarInput =
-          if (rowCoreNames.isEmpty) df
-          else df.where(col(schemaCol).isin(compiledNames: _*))
-        val columnar = columnarInput.withColumn("valid", lit(true))
-          .withColumn("errors", chain)
-          .withColumn("valid", size(col("errors")) === 0)
-        if (rowCoreNames.isEmpty) columnar
-        else
-          // both branches emit (…, valid, errors); unknown names route to
-          // the row core, whose registry lookup raises the same error the
-          // CASE chain's otherwise would. NULL schema names must ALSO fall
-          // through to the row core: `isin` evaluates to NULL for them, so
-          // a bare not(isin(...)) would silently drop the row from both
-          // branches — coalesce the predicate so NULL routes to the row
-          // core's lookup error instead of vanishing.
-          columnar.unionByName(rowCoreValidateWith(spark,
-            df.where(not(coalesce(
-              col(schemaCol).isin(compiledNames: _*), lit(false)))),
-            registry, schemaCol))
+      // an unknown or NULL name raises, like the row core's registry lookup
+      val valid = dispatch(compiled.map(_._2)).otherwise(raise_error(concat(
+        lit("no schema '"), coalesce(col(schemaCol), lit("null")),
+        lit(s"' in registry (${registry.names.toSeq.sorted.mkString(", ")})"))))
+      val allCompiled = compiledNames.size == registry.names.size
+      // filter BEFORE the projection so the CASE chains (and the
+      // raise_error otherwise-branch) never evaluate on row-core rows
+      val columnar = (if (allCompiled) df else df.where(col(schemaCol).isin(compiledNames: _*)))
+        .withColumn("valid", valid)
+        .withColumn("errors", when(col("valid"), ColumnCompiler.noErrors)
+          .otherwise(dispatch(compiled.map(_._3()))))
+      if (allCompiled) columnar
+      else
+        // both branches emit (…, valid, errors). `isin` is NULL for a NULL
+        // name, so the coalesce routes such rows to the row core's lookup
+        // error instead of dropping them from both branches.
+        columnar.unionByName(rowCoreValidateWith(spark,
+          df.where(not(coalesce(col(schemaCol).isin(compiledNames: _*), lit(false)))),
+          registry, schemaCol))
     }
   }
 

@@ -33,15 +33,13 @@ object ValidationJob {
     * empty holds by construction; EngineSpec, MapTypeSpec and
     * RandomSchemaSpec still check it row by row. */
   def withVerdicts(spark: SparkSession, docs: DataFrame, schemaJson: String): DataFrame =
-    compiledOrRowCore(spark, docs, schemaJson, keepErrors = true) { (doc, payload, payloadType) =>
-      val (boolPlan, errs) = ColumnCompiler.lowerings(doc, payload, payloadType)
+    compiledOrRowCore(spark, docs, schemaJson, keepErrors = true) { (valid, violations) =>
       val passthrough = docs.columns.filterNot(c => c == "errors" || c == "valid")
       // (passthrough…, valid, errors) — same column ORDER as the RowValidator
       // fallback, so positional consumers (and parquet written from a mix of
       // both paths) see one schema regardless of column-expressibility
-      docs.withColumn("valid", boolPlan)
-        .withColumn("errors", when(col("valid"), array().cast(ColumnCompiler.errorType))
-          .otherwise(ViolationsOf.over(spark, payload, payloadType, errs)))
+      docs.withColumn("valid", valid)
+        .withColumn("errors", when(col("valid"), ColumnCompiler.noErrors).otherwise(violations()))
         .select((passthrough.map(col).toSeq :+ col("valid") :+ col("errors")): _*)
     }
 
@@ -49,25 +47,43 @@ object ValidationJob {
     * boolean plan (no error construction at all), for monitoring-style runs
     * that only need pass/fail rates. */
   def withVerdictsOnly(spark: SparkSession, docs: DataFrame, schemaJson: String): DataFrame =
-    compiledOrRowCore(spark, docs, schemaJson, keepErrors = false) { (doc, payload, payloadType) =>
-      docs.withColumn("valid", ColumnCompiler.valid(doc, payload, payloadType))
+    compiledOrRowCore(spark, docs, schemaJson, keepErrors = false) { (valid, _) =>
+      docs.withColumn("valid", valid)
     }
 
-  /** Runs `columnar` on the compiled schema and the (doc_id, spans) payload.
-    * A schema the Column compiler cannot express falls back to the row core
-    * over the same payload fields — NOT the whole row — so the two paths
-    * agree on object-shape keywords; `keepErrors = false` drops its
+  /** `doc` compiled over `payload`, a struct of the fields of `payloadType`:
+    * the boolean verdict, and a builder (driver-side analysis on each call,
+    * so verdict-only callers skip it) of the violation array inside
+    * [[ViolationsOf]], meant for failing rows only. None, with a WARN line
+    * naming the schema (`name`) and the reason, when the compiler cannot
+    * express the schema: the caller validates on the row core. */
+  private[graft] def compiled(spark: SparkSession, doc: SchemaDoc, payload: Column,
+      payloadType: StructType, name: String): Option[(Column, () => Column)] =
+    try {
+      val (valid, errors) = ColumnCompiler.lowerings(doc, payload, payloadType)
+      Some((valid, () => ViolationsOf.over(spark, payload, payloadType, errors())))
+    } catch {
+      case u: ColumnCompiler.Unsupported =>
+        log.warn(s"$name falls back to the row core: ${u.reason}")
+        None
+    }
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** Runs `columnar` on the schema compiled over the (doc_id, spans)
+    * payload. A schema the Column compiler cannot express falls back to the
+    * row core over the same payload fields — NOT the whole row — so the two
+    * paths agree on object-shape keywords; `keepErrors = false` drops its
     * `errors` column. */
   private def compiledOrRowCore(
       spark: SparkSession, docs: DataFrame, schemaJson: String, keepErrors: Boolean)(
-      columnar: (SchemaDoc, Column, StructType) => DataFrame): DataFrame = {
-    val doc = SchemaDoc.schema(schemaJson)
+      columnar: (Column, () => Column) => DataFrame): DataFrame = {
     val payloadFields = docs.schema.fields.filter(f => f.name == "doc_id" || f.name == "spans")
     val payloadType = StructType(payloadFields)
     val payload = struct(payloadFields.map(f => col(f.name)).toSeq: _*)
-    try columnar(doc, payload, payloadType)
-    catch {
-      case _: ColumnCompiler.Unsupported =>
+    compiled(spark, SchemaDoc.schema(schemaJson), payload, payloadType, "schema") match {
+      case Some((valid, violations)) => columnar(valid, violations)
+      case None =>
         val rows = RowValidator.validateRows(spark, docs, schemaJson,
           Some(payloadFields.map(_.name).toSeq))
         if (keepErrors) rows else rows.drop("errors")

@@ -34,7 +34,7 @@ class EngineSpec extends AnyFunSuite {
     val payload = struct(payloadFields.map(f => col(f.name)).toSeq: _*)
     val dt = org.apache.spark.sql.types.StructType(payloadFields)
     val (fast, errs) = ColumnCompiler.lowerings(doc, payload, dt)
-    val both = docs.select(fast.as("fast"), (size(errs) === 0).as("viaErrors"))
+    val both = docs.select(fast.as("fast"), (size(errs()) === 0).as("viaErrors"))
     assert(both.where(col("fast") =!= col("viaErrors")).count() === 0)
   }
 

@@ -46,7 +46,7 @@ class FormatCheckSpec extends AnyFunSuite {
     val ptype = org.apache.spark.sql.types.StructType(df.schema.fields)
     // compiles — no Unsupported — and the plan has no row-core map
     val out = df.withColumn("errors",
-      ColumnCompiler.errors(schema, struct(col("ts"), col("host")), ptype))
+      ColumnCompiler.lowerings(schema, struct(col("ts"), col("host")), ptype)._2())
     assert(!out.queryExecution.optimizedPlan.toString.contains("DeserializeToObject"))
     val verdicts = out.select(size(col("errors")) === 0).collect().map(_.getBoolean(0))
     assert(verdicts.toSeq === Seq(true, false))

@@ -58,7 +58,7 @@ class MapTypeSpec extends AnyFunSuite {
     val payload = struct(col("props"))
     val doc = SchemaDoc.schema(schemaJson)
     val (fast, errs) = ColumnCompiler.lowerings(doc, payload, payloadType)
-    val colPath = df.select(col("doc_num"), fast.as("fast"), (size(errs) === 0).as("viaErrors"))
+    val colPath = df.select(col("doc_num"), fast.as("fast"), (size(errs()) === 0).as("viaErrors"))
     val rowPath = RowValidator.validateRows(spark, df, schemaJson)
       .select(col("doc_num"), col("valid").as("rowValid"))
     val joined = colPath.join(rowPath, "doc_num").orderBy("doc_num").collect()
@@ -77,7 +77,7 @@ class MapTypeSpec extends AnyFunSuite {
     val payloadType = StructType(dfSchema.fields.filter(_.name == "props"))
     val doc = SchemaDoc.schema(schemaJson)
     val viols = df.where(col("doc_num") === 3)
-      .select(explode(ColumnCompiler.errors(doc, struct(col("props")), payloadType)).as("v"))
+      .select(explode(ColumnCompiler.lowerings(doc, struct(col("props")), payloadType)._2()).as("v"))
       .select("v.path", "v.keyword").collect()
     assert(viols.exists(r => r.getString(0) == "/props/num_a" && r.getString(1) == "pattern"),
       viols.mkString(","))

@@ -73,29 +73,47 @@ class PlanSpec extends AnyFunSuite {
       s"expected vectorized item conditions: ${validLine.take(300)}")
   }
 
-  test("whole-stage codegen covers both validation projections over a parquet-read table") {
-    // a file-read array is containsNull = true, unlike the in-memory table
+  /** `df` written to parquet and read back: a file-read array is
+    * containsNull = true, unlike the in-memory table. */
+  private def fileBacked(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val tmp = java.nio.file.Files.createTempDirectory("graft-codegen").toString
-    DocTable.docs(spark, sfDir).write.mode("overwrite").parquet(tmp)
-    val docs = spark.read.parquet(tmp)
-    assert(docs.schema("spans").dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType]
+    df.write.mode("overwrite").parquet(tmp)
+    val back = spark.read.parquet(tmp)
+    assert(back.schema("spans").dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType]
       .containsNull)
-    // lambdas may appear only inside graft_violations, which prints its
-    // payload alone
-    def projections(df: org.apache.spark.sql.DataFrame, names: String*): Unit = {
-      val lines = physical(df).linesIterator.toSeq
-      names.foreach { name =>
-        // the operator, after the tree-drawing prefix
-        val line = lines.find(_.contains(s"AS $name")).getOrElse("").dropWhile(" :+-".contains(_))
-        assert(line.startsWith("*("), s"$name projection must be codegen'd: ${line.take(400)}")
-        assert(!line.contains("forall(") && !line.contains("transform("),
-          s"$name projection must hold no interpreted lambdas: ${line.take(400)}")
-      }
+    back
+  }
+
+  /** The named projections of `df` run in whole-stage codegen. Lambdas may
+    * appear only inside graft_violations, which prints its payload alone. */
+  private def projections(df: org.apache.spark.sql.DataFrame, names: String*): Unit = {
+    val lines = physical(df).linesIterator.toSeq
+    names.foreach { name =>
+      // the operator, after the tree-drawing prefix
+      val line = lines.find(_.contains(s"AS $name")).getOrElse("").dropWhile(" :+-".contains(_))
+      assert(line.startsWith("*("), s"$name projection must be codegen'd: ${line.take(400)}")
+      assert(!line.contains("forall(") && !line.contains("transform("),
+        s"$name projection must hold no interpreted lambdas: ${line.take(400)}")
     }
+  }
+
+  test("whole-stage codegen covers both validation projections over a parquet-read table") {
+    val docs = fileBacked(DocTable.docs(spark, sfDir))
     projections(ValidationJob.withVerdictsOnly(spark, docs, DocTable.docSchemaJson), "valid")
     val full = ValidationJob.withVerdicts(spark, docs, DocTable.docSchemaJson)
     projections(full, "valid", "errors")
     assert(physical(full).contains("graft_violations("))
+  }
+
+  test("whole-stage codegen covers the schema registry's projections over a parquet-read table") {
+    val docs = fileBacked(DocTable.docs(spark, sfDir).withColumn("schema_name",
+      when(col("doc_num") % 2 === 0, lit("doc")).otherwise(lit("id-only"))))
+    val registry = SchemaRegistry.compile(Map(
+      "doc" -> DocTable.docSchemaJson,
+      "id-only" -> """{"required":["doc_id"],"properties":{"doc_id":{"pattern":"^doc-"}}}"""))
+    val verdicts = SchemaRegistry.validateWith(spark, docs, registry, "schema_name")
+    projections(verdicts, "valid", "errors")
+    assert(physical(verdicts).contains("graft_violations("))
   }
 
   test("salted dedup pre-aggregates before the final shuffle (two-phase)") {

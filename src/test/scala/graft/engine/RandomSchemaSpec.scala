@@ -238,7 +238,7 @@ class RandomSchemaSpec extends AnyFunSuite {
           val payload = struct(col("doc_id"), col("spans"))
           val doc = graft.schema.SchemaDoc.schema(schemaJson)
           val (fast, errs) = ColumnCompiler.lowerings(doc, payload, payloadType)
-          Some(df.select(col("doc_num"), fast.as("fast"), (size(errs) === 0).as("viaErrors")))
+          Some(df.select(col("doc_num"), fast.as("fast"), (size(errs()) === 0).as("viaErrors")))
         } catch { case _: ColumnCompiler.Unsupported => fellBack += 1; None }
 
       colPath.foreach { cp =>

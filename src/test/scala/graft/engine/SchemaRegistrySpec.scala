@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -43,14 +43,22 @@ class SchemaRegistrySpec extends AnyFunSuite {
     assert(mentions(e))
   }
 
+  /** Per-row `(id, valid)`, and the sorted `(id, path, keyword, message)`
+    * violation rows. */
+  private def outcome(verdicts: DataFrame) = {
+    val rows = verdicts.collect()
+    (rows.map(r => (r.getAs[Long]("id"), r.getAs[Boolean]("valid"))).sortBy(_._1).toSeq,
+      rows.flatMap(r => r.getSeq[Row](r.fieldIndex("errors")).map(v => (r.getAs[Long]("id"),
+        v.getAs[String]("path"), v.getAs[String]("keyword"), v.getAs[String]("message"))))
+        .sorted.toSeq)
+  }
+
   test("compiled CASE dispatch agrees with the broadcast row core (differential)") {
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
-    def key(r: Row) = (r.getLong(0), r.getBoolean(3), r.getSeq[Row](4).length)
-    val compiled = SchemaRegistry.validateWith(spark, df, registry, "schema_name")
-      .collect().map(key).sortBy(_._1)
-    val rowCore = SchemaRegistry.rowCoreValidateWith(spark, df, registry, "schema_name")
-      .collect().map(key).sortBy(_._1)
-    assert(compiled.toSeq === rowCore.toSeq)
+    val compiled = outcome(SchemaRegistry.validateWith(spark, df, registry, "schema_name"))
+    val rowCore = outcome(SchemaRegistry.rowCoreValidateWith(spark, df, registry, "schema_name"))
+    assert(compiled === rowCore)
+    assert(compiled._2.map(_._1).distinct === Seq(1L, 3L, 4L))
     // and the compiled path really is the one validateWith picked: its plan
     // must contain no mapPartitions (DeserializeToObject) node
     val plan = SchemaRegistry.validateWith(spark, df, registry, "schema_name")
@@ -82,12 +90,9 @@ class SchemaRegistrySpec extends AnyFunSuite {
       Row(4L, "short-text", null), Row(5L, "meta", "x")), 2), schema)
     val out = SchemaRegistry.validateWith(spark, df, reg, "schema_name")
     // differential: hybrid ≡ all-rows row core
-    def key(r: Row) = (r.getLong(0), r.getBoolean(3), r.getSeq[Row](4).length)
-    val got = out.collect().map(key).sortBy(_._1)
-    val want = SchemaRegistry.rowCoreValidateWith(spark, df, reg, "schema_name")
-      .collect().map(key).sortBy(_._1)
-    assert(got.toSeq === want.toSeq)
-    assert(got.map(_._1).toSeq === (0L to 5L))
+    val got = outcome(out)
+    assert(got === outcome(SchemaRegistry.rowCoreValidateWith(spark, df, reg, "schema_name")))
+    assert(got._1.map(_._1) === (0L to 5L))
     // plan: a union of exactly ONE row-core branch (DeserializeToObject) and
     // a columnar branch whose CASE dispatch stays compiled — the
     // inexpressible schema must not drag the whole registry off the
@@ -104,17 +109,20 @@ class SchemaRegistrySpec extends AnyFunSuite {
     // must instead reach the row core and raise its lookup error
     val nullableSchema = StructType(schema.fields.map(f =>
       if (f.name == "schema_name") f.copy(nullable = true) else f))
-    val reg = SchemaRegistry.compile(Map(
+    val hybrid = SchemaRegistry.compile(Map(
       "short-text" -> """{"properties":{"payload":{"type":"string","maxLength":5}},"required":["payload"]}""",
       "meta" -> """{"$ref":"http://json-schema.org/draft-07/schema#"}"""))
-    val df = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
-      Row(0L, "short-text", "hi"), Row(1L, null, "x"), Row(2L, "meta", "x")), 1),
-      nullableSchema)
-    val e = intercept[Throwable] {
-      SchemaRegistry.validateWith(spark, df, reg, "schema_name").collect()
+    // with every schema compiled the CASE chain raises instead; `concat`
+    // with a NULL name is NULL, so the message must coalesce the name
+    Seq(hybrid -> Seq(Row(0L, "short-text", "hi"), Row(1L, null, "x"), Row(2L, "meta", "x")),
+      registry -> Seq(Row(0L, "short-text", "hi"), Row(1L, null, "x"))).foreach { case (reg, input) =>
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(input, 1), nullableSchema)
+      val e = intercept[Throwable] {
+        SchemaRegistry.validateWith(spark, df, reg, "schema_name").collect()
+      }
+      def mentions(t: Throwable): Boolean = t != null &&
+        (Option(t.getMessage).exists(_.contains("no schema 'null'")) || mentions(t.getCause))
+      assert(mentions(e), s"${reg.names}: $e")
     }
-    def mentions(t: Throwable): Boolean = t != null &&
-      (Option(t.getMessage).exists(_.contains("no schema 'null'")) || mentions(t.getCause))
-    assert(mentions(e))
   }
 }
