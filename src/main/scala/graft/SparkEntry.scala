@@ -223,9 +223,7 @@ object SparkEntry {
         .withColumn("l_shipdate",
           when(col("l_orderkey") % 17 === 1, lit(null).cast("timestamp"))
             .otherwise(col("l_shipdate")))
-      // single tagged pass over both snapshots (half the stages / generated
-      // classes of the two-pass evidenceDiff; identical output, spec-pinned)
-      SchemaInfer.evidenceDiffPaired(ref, cur)
+      SchemaInfer.evidenceDiff(SchemaInfer.evidence(ref), SchemaInfer.evidence(cur))
     }),
 
     "q_drift_bins" -> ((s, dir) =>

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
   *
   * Each keyword is compiled once, into a small plan tree ([[Plan]]), and
   * the tree is lowered three ways: to the allocation-free boolean verdict
-  * ([[valid]]), to the violation array (the second of [[lowerings]]), and,
+  * (the first of [[lowerings]]), to the violation array (the second), and,
   * for the element plan of object `items`, to one boolean over whole field
   * arrays (`arrayValidOf`). So valid ⟺ no violations holds by construction,
   * like the reference's `:valid?` (no errors, `validate.cljc:99-116`).
@@ -54,14 +54,10 @@ object ColumnCompiler {
     StructField("message", StringType, nullable = false))), containsNull = false)
   private[engine] val noErrors: Column = array().cast(errorType)
 
-  /** Allocation-free boolean validity plan of `doc` over input column
-    * `col` of Spark type `dt`. */
-  def valid(doc: SchemaDoc, col: Column, dt: DataType): Column =
-    validOf(plan(doc, col, dt))
-
-  /** [[valid]] and the violation array: two lowerings of one compiled
-    * plan. The error lowering is built only when called, so a caller that
-    * needs the verdict alone never pays for it. */
+  /** The allocation-free boolean validity of `doc` over input column `col`
+    * of Spark type `dt`, and the violation array: two lowerings of one
+    * compiled plan. The error lowering is built only when called, so a
+    * caller that needs the verdict alone never pays for it. */
   private[engine] def lowerings(doc: SchemaDoc, col: Column, dt: DataType): (Column, () => Column) = {
     val p = plan(doc, col, dt)
     (validOf(p), () => errorsOf(p))

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -449,20 +449,15 @@ object Pipeline {
         .where(col("tok") =!= "")
         .select(col("id"), expressions.Hash64Functions.hashBucketCol(
           concat(lit("dsir:"), col("tok")), seed, buckets).as("b"))
-    def marginals(df: DataFrame): Map[Long, Long] =
-      toks(df).groupBy("b").agg(count(lit(1)).as("c"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // the two marginal aggregations are independent jobs — run them
-    // concurrently so their stages interleave (the SchemaInfer.diffRows
-    // move); results are unchanged, each job computes what it did before
-    val (tCounts, rCounts) = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val ft = Future(marginals(target))
-      val fr = Future(marginals(raw))
-      (Await.result(ft, Duration.Inf), Await.result(fr, Duration.Inf))
-    }
+    // both marginals in one job: the side-tagged token frames union into
+    // one grouped count, their scans side by side
+    val (tRows, rRows) = toks(target).withColumn("t", lit(true))
+      .unionByName(toks(raw).withColumn("t", lit(false)))
+      .groupBy("t", "b").count()
+      .collect().partition(_.getBoolean(0))
+    def marginals(rows: Array[Row]): Map[Long, Long] =
+      rows.map(r => r.getLong(1) -> r.getLong(2)).toMap
+    val (tCounts, rCounts) = (marginals(tRows), marginals(rRows))
     val tTot = tCounts.values.sum.toDouble
     val rTot = rCounts.values.sum.toDouble
     val lrArr = Array.tabulate(buckets) { b =>

@@ -1,7 +1,7 @@
 package graft.engine
 
 import graft.json.{JArr, JBool, JNum, JObj, JStr, JVal, Json}
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
@@ -17,12 +17,15 @@ import org.apache.spark.sql.types._
   * (drift in structure surfaces as violations, complementing the
   * distribution drift of [[Checks.ksDrift]]).
   *
-  * Scale shape: ONE aggregate pass per nesting frame (the root frame plus
-  * one exploded frame per array path — depth-bounded by the schema, not the
-  * data). Every metric is partial-aggregable, so map-side combine applies
-  * and each shuffle carries one row per partition. The only driver-side
-  * materialization is one evidence row per schema path plus ≤ [[enumMax]]
-  * values per flagged enum column.
+  * Scale shape: ONE scan feeding one two-level grouped aggregate. Each row
+  * of the table explodes into one `(path, typed value key)` row per leaf,
+  * for the root frame and for the items of every array descent alike (the
+  * nesting depth is bounded by the schema, not the data). The first level
+  * groups by (path, key) — one row per distinct value — and the second by
+  * path, so no metric needs a per-leaf `count_distinct` branch or an
+  * `Expand`. Both levels combine map-side. The only driver-side
+  * materialization is one evidence row per schema path, its enum CSV
+  * holding ≤ [[enumMax]] values.
   *
   * Inference rules (deterministic, each SQL-expressible — the DuckDB
   * oracles `q_infer_lineitem` / `q_infer_docs` recompute them):
@@ -57,10 +60,9 @@ object SchemaInfer {
     sb.toString
   }
 
-  /** Split a '|'-joined evidence CSV into its ESCAPED tokens, honoring the
+  /** Split a '|'-joined evidence CSV back into its values, undoing the
     * [[escapeEnumValue]] encoding (a backslash escapes the next char, so an
-    * escaped '|' never splits). Inverse of the finish-side join; tokens stay
-    * escaped — comparisons only need injectivity, not the raw value. */
+    * escaped '|' never splits). Inverse of the finish-side join. */
   private[engine] def splitEnumValues(joined: String): Vector[String] = {
     val out = Vector.newBuilder[String]
     val sb = new java.lang.StringBuilder
@@ -68,7 +70,7 @@ object SchemaInfer {
     while (i < joined.length) {
       val c = joined.charAt(i)
       if (c == '\\' && i + 1 < joined.length) {
-        sb.append(c).append(joined.charAt(i + 1)); i += 2
+        sb.append(joined.charAt(i + 1)); i += 2
       } else if (c == '|') {
         out += sb.toString; sb.setLength(0); i += 1
       } else { sb.append(c); i += 1 }
@@ -105,10 +107,9 @@ object SchemaInfer {
     * 10¹²-row free-text column, say) costs a fixed ~17-string buffer —
     * the unbounded `collect_set` it replaces buffered the column's ENTIRE
     * distinct value set per partition before the projection discarded it.
-    * Output: the '|'-joined UTF-8-sorted set when distinct ≤ [[enumMax]],
-    * NULL on overflow — identical to the old value in every case the
-    * evidence projection's `distinct_count BETWEEN 1 AND enumMax` guard
-    * lets through. */
+    * Output: the '|'-joined UTF-8-sorted set when 1 ≤ distinct ≤
+    * [[enumMax]], NULL otherwise — so it is the `enum_vals` column as it
+    * stands. */
   private val boundedEnumSet: UserDefinedFunction = udaf(
     new Aggregator[String, EnumBuf, String] {
       def zero: EnumBuf = EnumBuf(over = false, new java.util.HashSet[String]())
@@ -156,147 +157,134 @@ object SchemaInfer {
   private case object KTs extends Kind
   private case object KObj extends Kind // map/binary leaves: type only
 
-  private final case class Leaf(path: String, expr: Column, kind: Kind, nullable: Boolean)
-
-  private def scalarKind(dt: DataType): Kind = dt match {
+  private def kindOf(dt: DataType): Kind = dt match {
     case ByteType | ShortType | IntegerType | LongType => KInt
     case FloatType | DoubleType | _: DecimalType => KNum
     case StringType => KStr
     case BooleanType => KBool
+    case _: ArrayType => KArr
     case DateType => KDate
     case TimestampType => KTs
     case TimestampNTZType => KTs
     case _ => KObj
   }
 
-  // Leaves of one nesting frame + the array descents that start new frames.
-  // Paths are JSON-pointer-ish, with a star segment marking array items
-  // (the `kind` field of `spans` items gets the path /spans + /star/kind
-  // where "star" is the literal asterisk character).
-  private def leavesOf(path: String, e: Column, dt: DataType, nullable: Boolean)
-      : (Seq[Leaf], Seq[(String, Column, DataType, Boolean)]) = dt match {
-    case st: StructType =>
-      val parts = st.fields.toSeq.map(f =>
-        leavesOf(s"$path/${f.name}", e.getField(f.name), f.dataType,
-          nullable || f.nullable))
-      (parts.flatMap(_._1), parts.flatMap(_._2))
-    case at: ArrayType =>
-      (Seq(Leaf(path, e, KArr, nullable)),
-        Seq((s"$path/*", e, at.elementType, at.containsNull)))
-    case _ => (Seq(Leaf(path, e, scalarKind(dt), nullable)), Nil)
+  // Every leaf under (path, dt): a struct contributes its fields' leaves,
+  // an array is a leaf itself (its size) AND starts a new nesting frame
+  // whose items live at path + "/*" (the `kind` field of `spans` items
+  // gets the path /spans + /star/kind, "star" being the asterisk).
+  private def leaves(path: String, dt: DataType): Seq[(String, DataType)] = dt match {
+    case st: StructType => st.fields.toSeq.flatMap(f => leaves(s"$path/${f.name}", f.dataType))
+    case at: ArrayType => (path -> at) +: leaves(s"$path/*", at.elementType)
+    case _ => Seq(path -> dt)
+  }
+
+  /** The field of the value key that a leaf of type `dt` fills: one field
+    * per value domain, so grouping by the key groups exactly as
+    * `count_distinct` over the column does. Integral types widen to long
+    * and float to double (both injective; Spark normalizes −0.0 and NaN in
+    * grouping keys, struct fields included), each decimal type keeps its
+    * own exact field, an array keys on its size. Dates, timestamps and
+    * type-only leaves fill none: their key only marks a non-null value. */
+  private def keyField(dt: DataType): Option[StructField] = dt match {
+    case ByteType | ShortType | IntegerType | LongType => Some(StructField("l", LongType))
+    case FloatType | DoubleType => Some(StructField("d", DoubleType))
+    case d: DecimalType => Some(StructField(s"dec_${d.precision}_${d.scale}", d))
+    case StringType => Some(StructField("s", StringType))
+    case BooleanType => Some(StructField("b", BooleanType))
+    case _: ArrayType => Some(StructField("n", IntegerType))
+    case _ => None
   }
 
   /** Evidence table: one row per schema path —
     * (path, json_type, required, min_value, max_value, min_len, max_len,
-    * distinct_count, enum_vals, format). */
-  def evidence(df: DataFrame): DataFrame =
-    frames(df).map { case (frame, leaves) => frameEvidence(frame, leaves) }
-      .reduce(_.unionAll(_)).orderBy("path")
-
-  /** (frame, its leaves) for the root and every array descent, recursively.
-    * `carry` names a tag column that is NOT evidence (no leaf for it) but
-    * must ride through every array-descent frame — the two-snapshot
-    * single-pass path groups each branch aggregate by it. */
-  private def frames(
-      df: DataFrame, carry: Option[String] = None): Seq[(DataFrame, Seq[Leaf])] = {
-    def rec(frame: DataFrame, roots: Seq[(String, Column, DataType, Boolean)])
-        : Seq[(DataFrame, Seq[Leaf])] = {
-      val parts = roots.map { case (p, c, t, n) => leavesOf(p, c, t, n) }
-      val own = (frame, parts.flatMap(_._1))
-      val kids = parts.flatMap(_._2).flatMap { case (path, expr, elem, elemNullable) =>
-        rec(frame.select(carry.map(col).toSeq :+ explode(expr).as("__item"): _*),
-          Seq((path, col("__item"), elem, elemNullable)))
+    * distinct_count, enum_vals, format).
+    *
+    * Every leaf value of every frame becomes one `(path, key)` row, with
+    * the key NULL exactly when the value is. Grouping by (path, key) and
+    * counting leaves one row per distinct value; grouping those by path
+    * derives every column: `total`/`nulls` are sums of the counts,
+    * `distinct_count` counts the non-null keys, and the bounds, the
+    * integral-narrowing and date-format checks and the enum set run over
+    * the distinct values. A zero-count NULL-key seed per path gives an empty
+    * frame (an empty table, an all-empty array column) its row. */
+  def evidence(df: DataFrame): DataFrame = {
+    val all = df.schema.fields.toSeq.flatMap(f => leaves(s"/${f.name}", f.dataType))
+    val keyType = StructType(all.flatMap(l => keyField(l._2)).distinct)
+    val pairType = ArrayType(StructType(Seq(
+      StructField("path", StringType), StructField("key", keyType))))
+    def pair(path: String, e: Column, dt: DataType): Column = {
+      val own = keyField(dt).map(_.name)
+      val v = if (dt.isInstanceOf[ArrayType]) size(e) else e
+      val key = struct(keyType.fields.toSeq.map(f =>
+        (if (own.contains(f.name)) v else lit(null)).cast(f.dataType).as(f.name)): _*)
+      struct(lit(path).as("path"), when(e.isNotNull, key).as("key"))
+    }
+    // the (path, key) pairs of one row of a frame: its own leaves, then
+    // the pairs of every array descent's items (a NULL array has none)
+    def pairs(roots: Seq[(String, Column, DataType)]): Column = {
+      def walk(path: String, e: Column, dt: DataType): (Seq[Column], Seq[Column]) = dt match {
+        case st: StructType =>
+          val parts = st.fields.toSeq.map(f =>
+            walk(s"$path/${f.name}", e.getField(f.name), f.dataType))
+          (parts.flatMap(_._1), parts.flatMap(_._2))
+        case at: ArrayType =>
+          val items = flatten(transform(e, x => pairs(Seq((s"$path/*", x, at.elementType)))))
+          (Seq(pair(path, e, at)), Seq(coalesce(items, array().cast(pairType))))
+        case _ => (Seq(pair(path, e, dt)), Nil)
       }
-      own +: kids
+      val parts = roots.map { case (p, e, dt) => walk(p, e, dt) }
+      concat(array(parts.flatMap(_._1): _*) +: parts.flatMap(_._2): _*)
     }
-    rec(df, df.schema.fields.toSeq.filterNot(f => carry.contains(f.name)).map(f =>
-      (s"/${f.name}", col(f.name), f.dataType, f.nullable)))
-  }
-
-  private def frameEvidence(
-      df: DataFrame, leaves: Seq[Leaf], group: Option[String] = None): DataFrame = {
-    val nullLong = lit(null).cast(LongType)
-    val nullDouble = lit(null).cast(DoubleType)
-    val nullStr = lit(null).cast(StringType)
-    val aggs: Seq[Column] = count(lit(1)).as("__total") +: leaves.zipWithIndex.flatMap {
-      case (lf, i) =>
-        val e = lf.expr
-        val base = Seq(sum(when(e.isNull, 1L).otherwise(0L)).as(s"n$i"))
-        val kindAggs = lf.kind match {
-          case KInt => Seq(
-            min(e.cast(DoubleType)).as(s"mn$i"), max(e.cast(DoubleType)).as(s"mx$i"),
-            count_distinct(e).as(s"d$i"))
-          case KNum => Seq(
-            min(e.cast(DoubleType)).as(s"mn$i"), max(e.cast(DoubleType)).as(s"mx$i"),
-            count_distinct(e).as(s"d$i"),
-            bool_and(coalesce(e.cast(DoubleType) % lit(1.0d) === lit(0.0d), lit(true)))
-              .as(s"w$i"))
-          case KStr => Seq(
-            min(length(e)).cast(LongType).as(s"lmn$i"),
-            max(length(e)).cast(LongType).as(s"lmx$i"),
-            count_distinct(e).as(s"d$i"),
-            boundedEnumSet(e).as(s"ev$i"),
-            bool_and(coalesce(e.rlike(dateRx), lit(true))).as(s"fd$i"))
-          case KBool => Seq(count_distinct(e).as(s"d$i"))
-          case KArr => Seq(
-            min(size(e)).cast(LongType).as(s"lmn$i"),
-            max(size(e)).cast(LongType).as(s"lmx$i"))
-          case KDate | KTs | KObj => Nil
-        }
-        base ++ kindAggs
+    val keyed = df.select(inline(pairs(
+      df.schema.fields.toSeq.map(f => (s"/${f.name}", col(f.name), f.dataType)))))
+    val seeds = df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(all.map(l => Row(l._1, null, 0L)): _*),
+      StructType(Seq(StructField("path", StringType), StructField("key", keyType),
+        StructField("count", LongType))))
+    val key = col("key")
+    val cnt = col("count")
+    def field(name: String, dt: DataType): Column =
+      if (keyType.fieldNames.contains(name)) key.getField(name) else lit(null).cast(dt)
+    val decimals = keyType.fields.toSeq.collect {
+      case f if f.dataType.isInstanceOf[DecimalType] => key.getField(f.name)
     }
-    // NOTE deliberately NOT collapsed into one materialized aggregation:
-    // per-branch column pruning specializes each leaf's aggregate to a
-    // narrow 1-2 column scan with a single count_distinct — measured
-    // FASTER than one fused agg, whose many exact count_distincts force
-    // an Expand (input × distinct-groups row multiplication) through one
-    // shuffle (lineitem sf0.1: ~0.8 s pruned-branches vs ~4 s fused).
-    val one = group match {
-      case Some(g) => df.groupBy(col(g)).agg(aggs.head, aggs.tail: _*)
-      case None => df.agg(aggs.head, aggs.tail: _*)
-    }
-    val rows = leaves.zipWithIndex.map { case (lf, i) =>
-      val total = col("__total")
-      val nulls = col(s"n$i")
-      val nonNull = total - nulls
-      val jsonType = lf.kind match {
-        case KInt => lit("integer")
-        case KNum => when(coalesce(col(s"w$i"), lit(true)), "integer").otherwise("number")
-        case KStr | KDate | KTs => lit("string")
-        case KBool => lit("boolean")
-        case KArr => lit("array")
-        case KObj => lit("object")
-      }
-      val hasNum = lf.kind == KInt || lf.kind == KNum
-      val hasLen = lf.kind == KStr || lf.kind == KArr
-      val hasDistinct = lf.kind == KInt || lf.kind == KNum ||
-        lf.kind == KStr || lf.kind == KBool
-      val enumVals =
-        if (lf.kind == KStr)
-          when(col(s"d$i").between(1, enumMax) && nonNull > 0, col(s"ev$i"))
-            .otherwise(nullStr)
-        else nullStr
-      val fmt = lf.kind match {
-        case KDate => lit("date")
-        case KTs => lit("date-time")
-        case KStr => when(nonNull > 0 && col(s"fd$i"), "date").otherwise(nullStr)
-        case _ => nullStr
-      }
-      one.select(
-        Seq(
-          lit(lf.path).as("path"),
-          jsonType.as("json_type"),
-          (nulls === 0 && total > 0).as("required"),
-          (if (hasNum) col(s"mn$i") else nullDouble).as("min_value"),
-          (if (hasNum) col(s"mx$i") else nullDouble).as("max_value"),
-          (if (hasLen) col(s"lmn$i") else nullLong).as("min_len"),
-          (if (hasLen) col(s"lmx$i") else nullLong).as("max_len"),
-          (if (hasDistinct) col(s"d$i") else nullLong).as("distinct_count"),
-          enumVals.as("enum_vals"),
-          fmt.as("format")) ++
-        group.map(g => col(g).as("__side")).toSeq: _*)
-    }
-    rows.reduce(_.unionAll(_))
+    val num = coalesce(
+      (field("l", LongType) +: field("d", DoubleType) +: decimals).map(_.cast(DoubleType)): _*)
+    val str = field("s", StringType)
+    val len = coalesce(length(str), field("n", IntegerType))
+    val perPath = keyed.groupBy("path", "key").count().unionByName(seeds)
+      .groupBy("path").agg(
+        sum(cnt).as("total"),
+        sum(when(key.isNull, cnt).otherwise(0L)).as("nulls"),
+        count(key).as("distinct"),
+        min(num).as("mn"), max(num).as("mx"),
+        bool_and(coalesce(num % lit(1.0d) === lit(0.0d), lit(true))).as("whole"),
+        min(len).cast(LongType).as("lmn"), max(len).cast(LongType).as("lmx"),
+        // NULL past enumMax distinct values or with none: exactly the
+        // strings whose distinct count lies in [1, enumMax]
+        boundedEnumSet(str).as("ev"),
+        bool_and(coalesce(str.rlike(dateRx), lit(true))).as("fd"))
+    val kind = element_at(typedLit(all.map { case (p, dt) => p -> kindOf(dt).toString }.toMap),
+      col("path"))
+    def is(ks: Kind*): Column = kind.isin(ks.map(_.toString): _*)
+    val nonNull = col("total") - col("nulls")
+    perPath.select(
+      col("path"),
+      when(is(KInt), "integer")
+        .when(is(KNum), when(col("whole"), "integer").otherwise("number"))
+        .when(is(KStr, KDate, KTs), "string")
+        .when(is(KBool), "boolean")
+        .when(is(KArr), "array")
+        .otherwise("object").as("json_type"),
+      (col("nulls") === 0 && col("total") > 0).as("required"),
+      col("mn").as("min_value"), col("mx").as("max_value"),
+      col("lmn").as("min_len"), col("lmx").as("max_len"),
+      when(is(KInt, KNum, KStr, KBool), col("distinct")).as("distinct_count"),
+      col("ev").as("enum_vals"),
+      when(is(KDate), "date").when(is(KTs), "date-time")
+        .when(is(KStr) && nonNull > 0 && col("fd"), "date").as("format"))
+      .orderBy("path")
   }
 
   /** Structural drift between two snapshots' evidence tables (the contract
@@ -334,106 +322,14 @@ object SchemaInfer {
     // one Spark job of overhead PER ASPECT and, without an explicit
     // materialization, re-executed the corpus aggregation behind each
     // branch (measured 10.9 s vs ~0.1 s here for the sf0.1 drift query).
-    import org.apache.spark.sql.Row
-    val spark = refEv.sparkSession
-    def byPath(df: DataFrame): Map[String, Row] =
-      df.collect().map(r => r.getString(0) -> r).toMap
-    // the two evidence aggregations are independent jobs — submit them
-    // CONCURRENTLY so their per-leaf stages interleave in the scheduler.
-    // The win is modest at sf0.1 (~2.7 → ~2.4 s median; the branch
-    // count_distinct shuffles saturate the 32 local slots, so the jobs
-    // mostly serialize on compute) but grows with idle capacity on a real
-    // cluster, and it can never be slower than sequential collects.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fRm = Future(byPath(refEv))
-    val fCm = Future(byPath(curEv))
-    val rm = Await.result(fRm, Duration.Inf)
-    val cm = Await.result(fCm, Duration.Inf)
-    diffCollected(spark, rm, cm, breaksOnly)
-  }
-
-  /** Contract drift between two SAME-SCHEMA snapshots with the evidence for
-    * BOTH sides computed in ONE tagged pass: the snapshots union under a
-    * side tag and every per-leaf branch aggregate runs `groupBy(side)` —
-    * half the stages and half the generated classes of
-    * `evidenceDiff(evidence(ref), evidence(cur))`, with identical output —
-    * including for an EMPTY side: any (path, side) group with no row
-    * (empty snapshot, or an all-null/empty array column whose explode
-    * drops every row) is synthesized as the same zero-count evidence a
-    * global aggregate emits, so paired ≡ two-pass unconditionally. For
-    * micro-batch monitoring against a precomputed reference evidence
-    * frame, [[contractBreaks]] remains the right entry point. */
-  def evidenceDiffPaired(
-      ref: DataFrame, cur: DataFrame, breaksOnly: Boolean = false): DataFrame = {
-    // same column NAMES required; types are reconciled by the union's own
-    // widening rules (a when()-mutated snapshot column may flip nullability
-    // or widen a decimal without changing the contract shape — required-ness
-    // and integer-vs-number are measured from the DATA, and lossless
-    // widening preserves the data). Irreconcilable types fail in Spark's
-    // union analysis with its own error.
-    require(ref.columns.toSeq == cur.columns.toSeq,
-      "evidenceDiffPaired needs same-column snapshots; use evidenceDiff for heterogeneous frames")
-    val side = "__graft_side"
-    val cols = ref.columns.map(col).toSeq
-    // deliberately NOT cached: each per-leaf branch reads only 1-2 PRUNED
-    // columns of the union, and parquet re-scans of narrow columns beat a
-    // full-width columnar cache materialization (measured at sf0.1: caching
-    // the tagged union grew the drift query from 25 to 36 jobs and from
-    // ~25 s to ~40 s of stage task time — the cache build decodes and
-    // re-encodes every column once, which the branches never need)
-    val tagged = ref.select(lit("r").as(side) +: cols: _*)
-      .unionByName(cur.select(lit("c").as(side) +: cols: _*))
-    val framesAndLeaves = frames(tagged, carry = Some(side))
-    val ev = framesAndLeaves
-      .map { case (frame, leaves) => frameEvidence(frame, leaves, Some(side)) }
-      .reduce(_.unionAll(_))
-    val spark = ref.sparkSession
-    val rows = ev.collect() // one row per (path, side) — always tiny
-    // a side whose rows never REACH a frame (e.g. an array column that is
-    // all-empty/null on that side: explode drops every row before the
-    // grouped aggregate) has no group row for the frame's paths. The
-    // schemas are identical by construction, so a missing (path, side) can
-    // ONLY mean zero rows — synthesize exactly the zero-count evidence the
-    // two-pass evidence() produces for an empty frame (a global aggregate
-    // always emits one row), keeping paired ≡ two-pass instead of leaking
-    // phantom added/removed aspects.
-    def zeroRow(lf: Leaf): org.apache.spark.sql.Row = {
-      val jsonType = lf.kind match {
-        case KInt => "integer"
-        case KNum => "integer" // vacuous whole-ness over zero rows
-        case KStr | KDate | KTs => "string"
-        case KBool => "boolean"
-        case KArr => "array"
-        case KObj => "object"
-      }
-      val hasDistinct = lf.kind == KInt || lf.kind == KNum ||
-        lf.kind == KStr || lf.kind == KBool
-      val fmt = lf.kind match {
-        case KDate => "date"
-        case KTs => "date-time"
-        case _ => null
-      }
-      org.apache.spark.sql.Row(lf.path, jsonType, false,
-        null, null, null, null,
-        if (hasDistinct) 0L else null, null, fmt)
-    }
-    val leavesByPath = framesAndLeaves.flatMap(_._2).map(l => l.path -> l).toMap
-    def byPath(tag: String) = {
-      val present = rows.filter(_.getString(10) == tag)
-        .map(r => r.getString(0) -> r).toMap
-      leavesByPath.map { case (p, lf) => p -> present.getOrElse(p, zeroRow(lf)) }
-    }
-    diffCollected(spark, byPath("r"), byPath("c"), breaksOnly)
-  }
-
-  private def diffCollected(
-      spark: org.apache.spark.sql.SparkSession,
-      rm: Map[String, org.apache.spark.sql.Row],
-      cm: Map[String, org.apache.spark.sql.Row],
-      breaksOnly: Boolean): DataFrame = {
-    import org.apache.spark.sql.Row
+    // One collect of the side-tagged union runs both evidence aggregates
+    // in one job, their stages side by side.
+    val side = "__graft_ref"
+    val (refRows, curRows) = refEv.withColumn(side, lit(true))
+      .unionByName(curEv.withColumn(side, lit(false)))
+      .collect().partition(_.getAs[Boolean](side))
+    val rm = refRows.map(r => r.getString(0) -> r).toMap
+    val cm = curRows.map(r => r.getString(0) -> r).toMap
     def dOpt(r: Row, i: Int): Option[Double] =
       if (r.isNullAt(i)) None else Some(r.getDouble(i))
     def lOpt(r: Row, i: Int): Option[Long] =
@@ -503,7 +399,7 @@ object SchemaInfer {
       StructField("ref_str", StringType, nullable = true),
       StructField("cur_str", StringType, nullable = true)))
     val sorted = out.sortBy(r => (r.getString(0), r.getString(1)))
-    spark.createDataFrame(
+    refEv.sparkSession.createDataFrame(
       java.util.Arrays.asList(sorted.toSeq: _*), schema)
   }
 
@@ -513,23 +409,10 @@ object SchemaInfer {
   def inferSchema(df: DataFrame): String = {
     val ev = evidence(df).collect()
       .map(r => r.getString(0) -> r).toMap
-    // enum values re-collected exactly (the evidence CSV is display/oracle
-    // oriented; values containing '|' would corrupt a split)
-    val enumPaths = ev.collect {
-      case (p, r) if !r.isNullAt(8) => p
-    }.toSet
-    val enumsByPath: Map[String, Vector[String]] =
-      if (enumPaths.isEmpty) Map.empty
-      else frames(df).flatMap { case (frame, leaves) =>
-        leaves.filter(l => enumPaths.contains(l.path)).map { l =>
-          l.path -> frame.select(l.expr.as("v")).where(col("v").isNotNull)
-            .distinct().collect().map(_.getString(0)).sorted.toVector
-        }
-      }.toMap
 
     def leafNode(path: String, dt: DataType): JVal = {
       val r = ev(path)
-      val kind = scalarKind(dt)
+      val kind = kindOf(dt)
       val jsonType = r.getString(1)
       val required = r.getBoolean(2)
       val tpe: JVal =
@@ -545,9 +428,9 @@ object SchemaInfer {
         fields :+= "minLength" -> JNum(r.getLong(5))
         fields :+= "maxLength" -> JNum(r.getLong(6))
       }
-      enumsByPath.get(path).foreach { vs =>
-        fields :+= "enum" -> JArr(vs.map(JStr(_)))
-      }
+      // the evidence CSV holds the exact values, escaped and in UTF-8 order
+      if (!r.isNullAt(8))
+        fields :+= "enum" -> JArr(splitEnumValues(r.getString(8)).sorted.map(JStr(_)))
       if (!r.isNullAt(9)) fields :+= "format" -> JStr(r.getString(9))
       JObj(fields)
     }

@@ -11,9 +11,9 @@ import scala.jdk.CollectionConverters._
   * Production target is an Iceberg table (north rule); this sandbox ships no
   * Iceberg runtime, so the same semantics — immutable snapshots addressed by
   * id, bucket-partitioned layout, snapshot manifest — are emulated over
-  * partitioned Parquet behind this interface. An Iceberg-backed
-  * implementation slots in by replacing the read/write bodies with
-  * `spark.read.format("iceberg")` + `writeTo(...).createOrReplace()`.
+  * partitioned Parquet by [[ParquetSnapshotTable]]. Moving to Iceberg means
+  * replacing its read/write bodies with `spark.read.format("iceberg")` +
+  * `writeTo(...).createOrReplace()`.
   *
   * Layout: `root/snapshot=<id>/bucket=<b>/` parquet files plus
   * `root/_graft_manifest_<id>.json`. Buckets are `hash-mod` partitions of
@@ -23,14 +23,7 @@ import scala.jdk.CollectionConverters._
   */
 final case class TableSnapshot(root: String, snapshotId: String, buckets: Int)
 
-trait TableProvider {
-  def materialize(df: DataFrame, root: String, snapshotId: String,
-      bucketKey: String, buckets: Int): TableSnapshot
-  def readBucket(spark: SparkSession, snap: TableSnapshot, bucket: Int): DataFrame
-  def readAll(spark: SparkSession, snap: TableSnapshot): DataFrame
-}
-
-object ParquetSnapshotTable extends TableProvider {
+object ParquetSnapshotTable {
 
   def bucketOf(key: org.apache.spark.sql.Column, buckets: Int): org.apache.spark.sql.Column =
     pmod(hash(key), lit(buckets)).cast(IntegerType)

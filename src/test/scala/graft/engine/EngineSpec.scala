@@ -164,12 +164,12 @@ class EngineSpec extends AnyFunSuite {
     def check(kw: String, value: String, message: String, validIds: Set[String]): Unit = {
       val keyword = s"""{"$kw":"$value"}"""
       val schemaJson = s"""{"properties":{"doc_id":$keyword}}"""
-      intercept[ColumnCompiler.Unsupported](ColumnCompiler.valid(
-        SchemaDoc.schema(schemaJson), struct(col("doc_id")), StructType(frame.schema.fields.take(1))))
+      intercept[ColumnCompiler.Unsupported](ColumnCompiler.lowerings(
+        SchemaDoc.schema(schemaJson), struct(col("doc_id")), StructType(frame.schema.fields.take(1)))._1)
       intercept[ColumnCompiler.Unsupported](
-        ColumnCompiler.valid(SchemaDoc.schema(keyword), col("doc_id"), StringType))
+        ColumnCompiler.lowerings(SchemaDoc.schema(keyword), col("doc_id"), StringType)._1)
       // inert on a non-string value
-      val onLong = ColumnCompiler.valid(SchemaDoc.schema(keyword), col("doc_num"), LongType)
+      val onLong = ColumnCompiler.lowerings(SchemaDoc.schema(keyword), col("doc_num"), LongType)._1
       assert(frame.select(onLong).as[Boolean].collect().forall(identity))
       def byId(out: DataFrame) =
         out.select("doc_id", "valid").as[(String, Boolean)].collect().toMap

@@ -2,8 +2,9 @@ package graft.engine
 
 import graft.json.Json
 import graft.validate.Validator
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Constraint suggestion: evidence rules, schema assembly, and the
@@ -13,7 +14,7 @@ class SchemaInferSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val sfDir = "/root/testdata/sf0.001"
 
-  private def evidenceMap(df: org.apache.spark.sql.DataFrame): Map[String, Row] =
+  private def evidenceMap(df: DataFrame): Map[String, Row] =
     SchemaInfer.evidence(df).collect().map(r => r.getString(0) -> r).toMap
 
   test("evidence: types, required, bounds, enum, date format, integral narrowing") {
@@ -210,7 +211,7 @@ class SchemaInferSpec extends AnyFunSuite {
     assert(audit.contains(("/color", "enum")))
   }
 
-  test("evidenceDiffPaired equals the two-pass diff, including nested array frames and breaksOnly") {
+  test("evidenceDiff over nested array frames and an all-empty array side") {
     import spark.implicits._
     val ref = Seq(
       (1L, "red", 1.5d, Some("2021-01-01"), Seq("a", "bb")),
@@ -220,42 +221,168 @@ class SchemaInferSpec extends AnyFunSuite {
       (9L, "green", 2.75d, None: Option[String], Seq("dddd", "e", "f")),
       (3L, "red", 11.5d, Some("2023-01-02"), Seq[String]())
     ).toDF("id", "color", "score", "day", "tags")
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq).toSeq.sortBy(_.toString)
-    for (breaksOnly <- Seq(false, true)) {
-      val twoPass =
-        if (breaksOnly) SchemaInfer.contractBreaks(
-          SchemaInfer.evidence(ref), SchemaInfer.evidence(cur))
-        else SchemaInfer.evidenceDiff(
-          SchemaInfer.evidence(ref), SchemaInfer.evidence(cur))
-      val paired = SchemaInfer.evidenceDiffPaired(ref, cur, breaksOnly)
-      assert(canon(paired) === canon(twoPass), s"breaksOnly=$breaksOnly")
-    }
-    // the tagged union must not leak the side column as an evidence path
-    val paths = SchemaInfer.evidenceDiffPaired(ref, cur)
-      .select("path").collect().map(_.getString(0))
-    assert(!paths.exists(_.contains("__graft_side")))
-    // one side's array column all-empty: no row reaches the /tags/* frame
-    // for that side, so the grouped aggregate emits no group row — the
-    // paired diff must synthesize the zero-count evidence the two-pass
-    // produces for an empty frame, not phantom added/removed aspects
+    // one side's array column all-empty: no row reaches its /tags/* frame,
+    // which still gets the zero-count evidence of an empty frame, not
+    // phantom added/removed aspects
     val curEmptyTags = Seq(
       (9L, "red", 2.0d, Some("2023-01-02"), Seq[String]()),
       (3L, "blue", 3.0d, Some("2023-01-03"), Seq[String]())
     ).toDF("id", "color", "score", "day", "tags")
-    for (breaksOnly <- Seq(false, true)) {
-      val twoPass =
-        if (breaksOnly) SchemaInfer.contractBreaks(
-          SchemaInfer.evidence(ref), SchemaInfer.evidence(curEmptyTags))
-        else SchemaInfer.evidenceDiff(
-          SchemaInfer.evidence(ref), SchemaInfer.evidence(curEmptyTags))
-      val paired = SchemaInfer.evidenceDiffPaired(ref, curEmptyTags, breaksOnly)
-      assert(canon(paired) === canon(twoPass), s"empty-array side, breaksOnly=$breaksOnly")
-      assert(!paired.collect().exists(r =>
-        r.getString(0).startsWith("/tags/") &&
-          (r.getString(1) == "added" || r.getString(1) == "removed")),
-        "all-empty array side must not report phantom added/removed")
+    def diff(c: DataFrame, breaksOnly: Boolean): Seq[Seq[Any]] = {
+      val (r, e) = (SchemaInfer.evidence(ref), SchemaInfer.evidence(c))
+      (if (breaksOnly) SchemaInfer.contractBreaks(r, e) else SchemaInfer.evidenceDiff(r, e))
+        .collect().map(_.toSeq).toSeq
     }
+    val n = null
+    // expected rows: (path, aspect, ref_num, cur_num, ref_str, cur_str)
+    val curDrift = Seq(
+      Seq("/color", "enum", n, n, "blue|red", "green|red"),
+      Seq("/color", "max_len", 4.0, 5.0, n, n),
+      Seq("/day", "enum", n, n, "2021-01-01|2022-06-30", "2023-01-02"),
+      Seq("/day", "required", n, n, "true", "false"),
+      Seq("/id", "max_value", 2.0, 9.0, n, n),
+      Seq("/score", "max_value", 9.0, 11.5, n, n),
+      Seq("/tags", "max_len", 2.0, 3.0, n, n),
+      Seq("/tags", "min_len", 1.0, 0.0, n, n),
+      Seq("/tags/*", "enum", n, n, "a|bb|ccc", "dddd|e|f"),
+      Seq("/tags/*", "max_len", 3.0, 4.0, n, n))
+    assert(diff(cur, breaksOnly = false) === curDrift)
+    assert(diff(cur, breaksOnly = true) === curDrift)
+    assert(diff(curEmptyTags, breaksOnly = false) === Seq(
+      Seq("/day", "enum", n, n, "2021-01-01|2022-06-30", "2023-01-02|2023-01-03"),
+      Seq("/id", "max_value", 2.0, 9.0, n, n),
+      Seq("/score", "type", n, n, "number", "integer"),
+      Seq("/tags", "min_len", 1.0, 0.0, n, n),
+      Seq("/tags/*", "enum", n, n, "a|bb|ccc", n),
+      Seq("/tags/*", "required", n, n, "true", "false")))
+    assert(diff(curEmptyTags, breaksOnly = true) === Seq(
+      Seq("/day", "enum", n, n, "2021-01-01|2022-06-30", "2023-01-02|2023-01-03"),
+      Seq("/id", "max_value", 2.0, 9.0, n, n),
+      Seq("/tags", "min_len", 1.0, 0.0, n, n),
+      Seq("/tags/*", "required", n, n, "true", "false")))
+    for (breaksOnly <- Seq(false, true))
+      assert(!diff(curEmptyTags, breaksOnly).exists(r =>
+        r(0).toString.startsWith("/tags/") && (r(1) == "added" || r(1) == "removed")),
+        "all-empty array side must not report phantom added/removed")
+  }
+
+  /** One leaf's evidence the per-column way: one `agg` over the leaf's own
+    * frame, `count_distinct` and all — the columns of `evidence` after
+    * `path`, with −0.0 read as 0.0 (the two compare equal, so which one a
+    * min or max returns depends on row order) and NaN as a string. */
+  private def perColumn(frame: DataFrame, c: Column, dt: DataType): Seq[Any] = {
+    val integral = Seq(ByteType, ShortType, IntegerType, LongType).contains(dt)
+    val fractional = dt match {
+      case FloatType | DoubleType | _: DecimalType => true
+      case _ => false
+    }
+    val isStr = dt == StringType
+    val num = if (integral || fractional) c.cast(DoubleType) else lit(null).cast(DoubleType)
+    val len = dt match {
+      case StringType => length(c)
+      case _: ArrayType => size(c)
+      case _ => lit(null).cast(IntegerType)
+    }
+    val escaped = replace(replace(c, lit("\\"), lit("\\\\")), lit("|"), lit("\\|"))
+    val r = frame.agg(
+      count(lit(1)), sum(when(c.isNull, 1L).otherwise(0L)),
+      if (integral || fractional || isStr || dt == BooleanType) count_distinct(c)
+      else lit(null).cast(LongType),
+      min(num), max(num), bool_and(num % 1.0 === 0.0),
+      min(len).cast(LongType), max(len).cast(LongType),
+      if (isStr) array_join(array_sort(collect_set(escaped)), "|") else lit(null),
+      if (isStr) bool_and(c.rlike("^[0-9]{4}-[0-9]{2}-[0-9]{2}$")) else lit(null)
+    ).head()
+    val total = r.getLong(0)
+    val nulls = if (r.isNullAt(1)) 0L else r.getLong(1)
+    val jsonType = dt match {
+      case _ if integral => "integer"
+      case _ if fractional => if (r.isNullAt(5) || r.getBoolean(5)) "integer" else "number"
+      case StringType | DateType | TimestampType => "string"
+      case BooleanType => "boolean"
+      case _: ArrayType => "array"
+      case _ => "object"
+    }
+    val distinct = r.get(2)
+    val enumVals =
+      if (isStr && r.getLong(2) >= 1 && r.getLong(2) <= SchemaInfer.enumMax) r.getString(8)
+      else null
+    val format = dt match {
+      case DateType => "date"
+      case TimestampType => "date-time"
+      case StringType if total - nulls > 0 && r.getBoolean(9) => "date"
+      case _ => null
+    }
+    canon(Seq(jsonType, nulls == 0 && total > 0, r.get(3), r.get(4), r.get(6), r.get(7),
+      distinct, enumVals, format))
+  }
+
+  private def canon(xs: Seq[Any]): Seq[Any] = xs.map {
+    case d: Double if d == 0.0 => 0.0
+    case d: Double if d.isNaN => "NaN" // boxed NaNs never compare equal
+    case x => x
+  }
+
+  test("evidence differential: every leaf equals its per-column aggregate") {
+    // values where a grouped value key could part from count_distinct:
+    // −0.0/0.0 and NaN (a non-canonical NaN too), ±Inf, whole-valued
+    // doubles, decimals equal as doubles but distinct as decimals, strings
+    // with the CSV's '|' and '\' and supplementary characters (UTF-8 and
+    // UTF-16 order disagree on U+FB00 vs U+1D11E), an all-null column, an
+    // all-empty array column, NULL array elements and arrays of arrays
+    val nan2 = java.lang.Double.longBitsToDouble(0x7ff8000000000123L)
+    def dec(s: String) = if (s == null) null else new java.math.BigDecimal(s)
+    def ts(ms: Long) = new java.sql.Timestamp(ms)
+    val item = StructType(Seq(StructField("x", DoubleType), StructField("y", StringType)))
+    val schema = StructType(Seq(
+      StructField("d", DoubleType), StructField("w", DoubleType), StructField("f", FloatType),
+      StructField("dec", DecimalType(38, 20)), StructField("s", StringType),
+      StructField("day", StringType), StructField("i", IntegerType),
+      StructField("b", BooleanType), StructField("ts", TimestampType),
+      StructField("bin", BinaryType), StructField("nul", StringType),
+      StructField("tags", ArrayType(StringType)), StructField("empty", ArrayType(DoubleType)),
+      StructField("items", ArrayType(item)),
+      StructField("nested", ArrayType(ArrayType(LongType)))))
+    val rows = Seq(
+      Row(-0.0, 1.0, -0.0f, dec("0.10000000000000000001"), "a|b", "2021-01-01", 1, true,
+        ts(0), Array[Byte](1), null, Seq("x", "y"), Seq(), Seq(Row(-0.0, "p"), Row(0.0, null)),
+        Seq(Seq(1L, 2L), null, Seq())),
+      Row(0.0, -0.0, 0.0f, dec("0.10000000000000000002"), "a\\b", "2021-13-45", 2, false,
+        null, null, null, Seq(), Seq(), Seq(Row(Double.NaN, "q")), null),
+      Row(Double.NaN, 0.0, Float.NaN, dec("0.1"), "|", null, null, null,
+        ts(1000), Array[Byte](), null, null, Seq(), null, Seq()),
+      Row(nan2, 1e300, 2.0f, null, "\\", "2021-01-01", -3, true,
+        ts(0), Array[Byte](1), null, Seq(null, "x"), Seq(), Seq(), Seq(Seq(3L))),
+      Row(Double.PositiveInfinity, 2.0, null, dec("-5"), "\uD834\uDD1E", "1999-12-31", 1, true,
+        null, null, null, Seq("z"), Seq(), Seq(null), Seq(Seq(2L, 2L), Seq(-7L))),
+      Row(Double.NegativeInfinity, null, 1.5f, dec("0.10000000000000000001"), "\uFB00", null,
+        2, false, ts(5000), null, null, Seq(), Seq(), Seq(Row(nan2, "p|q")), Seq(null)),
+      Row(3.0, 1.0, 2.0f, dec("12345678901234567.5"), "a|b", "2000-02-29", Int.MaxValue, null,
+        ts(0), Array[Byte](2), null, Seq("x"), Seq(), Seq(Row(1.5, "p")), Seq(Seq())),
+      Row(null, 4.0, -0.0f, dec("0"), null, "2000-02-29", Int.MinValue, true,
+        null, null, null, null, Seq(), Seq(Row(null, null)), null))
+    val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema).repartition(3)
+    def items(arr: String) = df.select(explode(col(arr)).as("v"))
+    val leaves: Seq[(String, DataFrame, Column, DataType)] =
+      schema.fields.toSeq.map(f => (s"/${f.name}", df, col(f.name), f.dataType)) ++ Seq(
+        ("/tags/*", items("tags"), col("v"), StringType),
+        ("/empty/*", items("empty"), col("v"), DoubleType),
+        ("/items/*/x", items("items"), col("v.x"), DoubleType),
+        ("/items/*/y", items("items"), col("v.y"), StringType),
+        ("/nested/*", items("nested"), col("v"), ArrayType(LongType)),
+        ("/nested/*/*", items("nested").select(explode(col("v")).as("v")), col("v"), LongType))
+    // the table itself, and an empty frame: every path keeps its row
+    for (keep <- Seq(lit(true), lit(false))) {
+      val ev = evidenceMap(df.where(keep))
+      assert(ev.keySet === leaves.map(_._1).toSet)
+      leaves.foreach { case (path, frame, c, dt) =>
+        assert(canon(ev(path).toSeq.tail) === perColumn(frame.where(keep), c, dt),
+          s"$path (rows kept: $keep)")
+      }
+    }
+    // a table with no value-carrying leaf (an empty key struct)
+    assert(canon(evidenceMap(df.select("ts"))("/ts").toSeq.tail) ===
+      perColumn(df, col("ts"), TimestampType))
   }
 
   test("enum evidence survives cross-partition merge and caps past enumMax") {
