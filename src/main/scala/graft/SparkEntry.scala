@@ -355,7 +355,7 @@ object SparkEntry {
       val b = sh.where(col("id") < 0).select(col("id").as("id_b"), col("s").as("sh_b"))
       a.join(b, col("id_b") === -col("id_a") - 1)
         .select(col("id_a"), col("id_b"),
-          round(Dedup.jaccard(col("sh_a"), col("sh_b")), 6).as("jaccard"))
+          round(Dedup.setJaccard(col("sh_a"), col("sh_b")), 6).as("jaccard"))
         .orderBy("id_a")
     }),
 

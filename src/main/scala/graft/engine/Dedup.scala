@@ -156,48 +156,69 @@ object Dedup {
       k: Int = 3, h: Int = 16, bands: Int = 4,
       threshold: Double = 0.5, maxBucket: Int = 64): DataFrame = {
     require(h % bands == 0, "bands must divide the signature length")
-    // The signature frame is referenced by the bucket-stats subquery, both
-    // self-join sides, and the two verify joins — persist it (at warehouse
-    // scale this is the standard materialized signature table).
+    // The signature frame is referenced by the bucket stage and the two
+    // verify joins — persist it (at warehouse scale this is the standard
+    // materialized signature table).
     val base = signatureFrame(docs, idCol, textCol, k, h, bands)
       .persistTracked()
     // Shuffle discipline: the band self-join moves only (band, bucket, id) —
     // shingle arrays are re-attached AFTER candidate-pair dedup, so the wide
     // payload crosses the wire once per *surviving* candidate, not once per
     // bucket collision.
-    val exploded = base
-      .select(col("id"), posexplode(col("bands")).as(Seq("band", "bucket")))
-    // Skew guard: a degenerate bucket (boilerplate text ⇒ identical band
-    // keys) would produce O(bucket²) candidates; buckets above `maxBucket`
-    // are dropped. True near-dup pairs still meet in their other, rarer
-    // bands with high probability — this is the standard LSH skew cap.
-    // NOT silent: dropped-bucket count is observable via `skewedBuckets`.
-    val smallBuckets = exploded.groupBy("band", "bucket")
-      .agg(count(lit(1)).as("_bsize"))
-      .where(col("_bsize") <= maxBucket)
-      .select("band", "bucket")
-    // shuffle the (band, bucket, id) triples by key ONCE and persist the
-    // co-partitioned result: both self-join sides read the cache, so the
-    // join adds no second exchange and the prune-join runs once (the
-    // alias-renamed sides defeat Catalyst's ReuseExchange otherwise)
-    val pruned = exploded.join(smallBuckets, Seq("band", "bucket"))
-      .repartition(col("band"), col("bucket"))
-      .persistTracked()
-    val candidates = pruned.select(col("band"), col("bucket"), col("id").as("id_a"))
-      .join(pruned.select(col("band"), col("bucket"), col("id").as("id_b")),
-        Seq("band", "bucket"))
-      .where(col("id_a") < col("id_b"))
+    val candidates = bucketPairs(
+        base.select(col("id"), posexplode(col("bands")).as(Seq("band", "bucket"))),
+        Seq("band", "bucket"), maxBucket)
       .select("id_a", "id_b")
       .dropDuplicates("id_a", "id_b")
     candidates
       .join(base.select(col("id").as("id_a"), col("shingles").as("sh_a")), "id_a")
       .join(base.select(col("id").as("id_b"), col("shingles").as("sh_b")), "id_b")
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast(DoubleType) /
-          size(array_union(col("sh_a"), col("sh_b"))).cast(DoubleType))
+      .withColumn("jaccard", setJaccard(col("sh_a"), col("sh_b")))
       .where(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
       .orderBy("id_a", "id_b")
+  }
+
+  /** The one skew cap of every LSH family ("block purging"): keep the rows
+    * of `keyed` whose bucket — its value of the `keys` columns — holds at
+    * most `maxBucket` rows. A degenerate bucket (boilerplate text ⇒
+    * identical band keys) would otherwise produce O(bucket²) candidates;
+    * true near-dup pairs still meet in their other, rarer buckets with high
+    * probability. NOT silent: [[skewedCount]] counts the dropped buckets. */
+  private[graft] def capBuckets(
+      keyed: DataFrame, keys: Seq[String], maxBucket: Int): DataFrame = {
+    val small = keyed.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("_bsize"))
+      .where(col("_bsize") <= maxBucket)
+      .select(keys.map(col): _*)
+    keyed.join(small, keys)
+  }
+
+  /** Count of buckets above the [[capBuckets]] skew cap, over the same keys,
+    * so the metric describes the buckets actually dropped. */
+  private[graft] def skewedCount(
+      keyed: DataFrame, keys: Seq[String], maxBucket: Int): Long =
+    keyed.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("_bsize"))
+      .where(col("_bsize") > maxBucket).count()
+
+  /** The LSH bucket stage: cap `keyed` (an `id` column plus the bucket
+    * `keys`), shuffle it by the keys ONCE and persist the co-partitioned
+    * result, then self-join it per bucket into (keys, id_a, carry_a…, id_b,
+    * carry_b…) rows with id_a < id_b — each `carry` column suffixed `_a`/`_b`.
+    * Both join sides read the cache, so the join adds no second payload
+    * exchange and the prune-join runs once (the alias-renamed sides defeat
+    * Catalyst's ReuseExchange otherwise). A pair meeting in several buckets
+    * appears once per bucket. */
+  private[graft] def bucketPairs(
+      keyed: DataFrame, keys: Seq[String], maxBucket: Int,
+      carry: Seq[String] = Nil): DataFrame = {
+    val pruned = capBuckets(keyed, keys, maxBucket)
+      .repartition(keys.map(col): _*)
+      .persistTracked()
+    def side(s: String): DataFrame = pruned.select(keys.map(col) ++
+      (col("id").as(s"id_$s") +: carry.map(c => col(c).as(s"${c}_$s"))): _*)
+    side("a").join(side("b"), keys).where(col("id_a") < col("id_b"))
   }
 
   /** The materializable MinHash-LSH band-key index of a corpus snapshot:
@@ -215,11 +236,7 @@ object Dedup {
     val exploded = signatureFrame(docs, idCol, textCol, k, h, bands)
       .select(col("id"), col("shingles"),
         posexplode(col("bands")).as(Seq("band", "bucket")))
-    val small = exploded.groupBy("band", "bucket")
-      .agg(count(lit(1)).as("_bsize"))
-      .where(col("_bsize") <= maxBucket)
-      .select("band", "bucket")
-    exploded.join(small, Seq("band", "bucket"))
+    capBuckets(exploded, Seq("band", "bucket"), maxBucket)
       .select("band", "bucket", "id", "shingles")
   }
 
@@ -246,19 +263,20 @@ object Dedup {
   def skewedBuckets(
       docs: DataFrame, idCol: String, textCol: String,
       k: Int = 3, h: Int = 16, bands: Int = 4, maxBucket: Int = 64): Long =
-    signatureFrame(docs, idCol, textCol, k, h, bands)
-      .select(posexplode(col("bands")).as(Seq("band", "bucket")))
-      .groupBy("band", "bucket").agg(count(lit(1)).as("n"))
-      .where(col("n") > maxBucket).count()
+    skewedCount(signatureFrame(docs, idCol, textCol, k, h, bands)
+      .select(posexplode(col("bands")).as(Seq("band", "bucket"))),
+      Seq("band", "bucket"), maxBucket)
 
-  /** Exact n-gram Jaccard for a candidate pair frame (columns sh_a, sh_b).
-    * REQUIRES per-side-distinct arrays — every producer in this engine
-    * emits distinct shingle sets ([[shinglesOf]]/[[wordShingles]] dedup) —
-    * so |A∪B| = |A|+|B|−|A∩B| and the union's second per-row hash-set
-    * build is replaced by arithmetic over the intersect (the intersect
-    * subtree appears twice; whole-stage codegen's subexpression
-    * elimination evaluates it once). */
-  def jaccard(shA: Column, shB: Column): Column = {
+  /** Exact Jaccard of two SETS — the one Jaccard of the engine (batch and
+    * streaming verify, fuzzy decontamination, the n-gram check). Both
+    * inputs MUST be distinct-element arrays: every producer in this engine
+    * emits distinct shingle sets ([[shinglesOf]] via `LinkedHashSet`,
+    * [[wordShingles]] via `array_distinct`), so |A∪B| = |A|+|B|−|A∩B| and
+    * the union's second per-row hash-set build is replaced by arithmetic
+    * over the intersect (the intersect subtree appears twice; whole-stage
+    * codegen's subexpression elimination evaluates it once). On arrays with
+    * repeats the result is wrong, not an error. */
+  def setJaccard(shA: Column, shB: Column): Column = {
     val inter = size(array_intersect(shA, shB)).cast(DoubleType)
     inter / (size(shA).cast(DoubleType) + size(shB).cast(DoubleType) - inter)
   }
@@ -308,12 +326,6 @@ object Dedup {
     }
   }
 
-  /** SimHash near-dup pairs via pigeonhole multi-block LSH: emit one
-    * (block, block-bits) key per signature block, self-join per key, verify
-    * full hamming ≤ maxHamming. Full recall by the pigeonhole principle;
-    * `maxBucket` caps degenerate buckets (boilerplate corpora put thousands
-    * of identical signatures in one bucket → O(bucket²)) with observability
-    * via [[simhashSkewedBuckets]]. */
   /** One key per pigeonhole block — shared by the pruning join and the skew
     * metric so observability always describes the buckets actually used. */
   private def simhashBlockKeys(maxHamming: Int): Column =
@@ -325,26 +337,20 @@ object Dedup {
       else shiftrightunsigned(col("sig"), start).bitwiseAND(lit((1L << w) - 1L))
     }.toSeq: _*)
 
+  /** SimHash near-dup pairs via pigeonhole multi-block LSH: emit one
+    * (block, block-bits) key per signature block, self-join per key, verify
+    * full hamming ≤ maxHamming. Full recall by the pigeonhole principle;
+    * `maxBucket` caps degenerate buckets (boilerplate corpora put thousands
+    * of identical signatures in one bucket → O(bucket²)) with observability
+    * via [[simhashSkewedBuckets]]. */
   def simhashPairs(
       docs: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, maxBucket: Int = 100000): DataFrame = {
-    val blockKeysCol = simhashBlockKeys(maxHamming)
     val exploded = simhashFrame(docs, idCol, textCol)
-      .select(col("id"), col("sig"), posexplode(blockKeysCol).as(Seq("block", "key")))
+      .select(col("id"), col("sig"),
+        posexplode(simhashBlockKeys(maxHamming)).as(Seq("block", "key")))
       .persistTracked()
-    val smallBuckets = exploded.groupBy("block", "key")
-      .agg(count(lit(1)).as("_bsize"))
-      .where(col("_bsize") <= maxBucket)
-      .select("block", "key")
-    // same single-shuffle discipline as minhashPairs: co-partition + cache
-    // the pruned frame so the self-join adds no second payload exchange
-    val pruned = exploded.join(smallBuckets, Seq("block", "key"))
-      .repartition(col("block"), col("key"))
-      .persistTracked()
-    pruned.select(col("block"), col("key"), col("id").as("id_a"), col("sig").as("sig_a"))
-      .join(pruned.select(col("block"), col("key"), col("id").as("id_b"), col("sig").as("sig_b")),
-        Seq("block", "key"))
-      .where(col("id_a") < col("id_b"))
+    bucketPairs(exploded, Seq("block", "key"), maxBucket, Seq("sig"))
       .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
       .where(col("hamming") <= maxHamming)
       .select("id_a", "id_b", "hamming")
@@ -615,17 +621,10 @@ object Dedup {
       maxBucket: Int = 10000): DataFrame = {
     val inv = TextOps.winnowingFingerprints(docs, idCol, textCol, k, window)
       .select(col("id"), explode(col("fingerprints")).as("f"))
-    val small = inv.groupBy("f").agg(count(lit(1)).as("_n"))
-      .where(col("_n") <= maxBucket).select("f")
-    val pruned = inv.join(small, Seq("f"))
-      .repartition(col("f"))
-      .persistTracked()
     // per-doc fingerprints are distinct, so the per-pair match count IS the
     // intersection size — no post-hoc verify needed
     val w = org.apache.spark.sql.expressions.Window.partitionBy("id_a", "id_b")
-    pruned.select(col("f"), col("id").as("id_a"))
-      .join(pruned.select(col("f"), col("id").as("id_b")), Seq("f"))
-      .where(col("id_a") < col("id_b"))
+    bucketPairs(inv, Seq("f"), maxBucket)
       .select(col("id_a"), col("id_b"))
       .withColumn("shared", count(lit(1)).over(w))
       .where(col("shared") >= minShared)
@@ -815,8 +814,7 @@ object Dedup {
   def simhashSkewedBuckets(
       docs: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, maxBucket: Int = 100000): Long =
-    simhashFrame(docs, idCol, textCol)
-      .select(posexplode(simhashBlockKeys(maxHamming)).as(Seq("block", "key")))
-      .groupBy("block", "key").agg(count(lit(1)).as("n"))
-      .where(col("n") > maxBucket).count()
+    skewedCount(simhashFrame(docs, idCol, textCol)
+      .select(posexplode(simhashBlockKeys(maxHamming)).as(Seq("block", "key"))),
+      Seq("block", "key"), maxBucket)
 }

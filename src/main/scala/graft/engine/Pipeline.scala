@@ -213,7 +213,7 @@ object Pipeline {
       .select(col("id").as("doc_id"), col("shingles").as("sh_a"),
         posexplode(col("bands")).as(Seq("band", "bucket")))
     probes.join(benchSide, Seq("band", "bucket"))
-      .withColumn("jaccard", Dedup.jaccard(col("sh_a"), col("sh_b")))
+      .withColumn("jaccard", Dedup.setJaccard(col("sh_a"), col("sh_b")))
       .where(col("jaccard") >= threshold)
       .groupBy("doc_id")
       .agg(

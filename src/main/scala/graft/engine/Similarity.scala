@@ -104,9 +104,11 @@ object Similarity {
     if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  /** Score (id_a, id_b, vec_a, vec_b) pairs — (id_a, id_b, sim) with sim
-    * rounded to 6dp (HALF_UP to match SQL ROUND, both Spark's and
-    * DuckDB's). Runs as the native codegen expression
+  /** Score (…, vec_a, vec_b) pairs: every other column passes through and
+    * `sim` is appended, rounded to 6dp (HALF_UP to match SQL ROUND, both
+    * Spark's and DuckDB's) — so (id_a, id_b, vec_a, vec_b) scores to
+    * (id_a, id_b, sim), and a streaming frame keeps its watermark column.
+    * Runs as the native codegen expression
     * [[graft.engine.expressions.CosineSim6]] (bit-identical arithmetic to
     * [[cosineArrays]] + BigDecimal rounding): the earlier typed projection
     * paid an encoder round trip per candidate pair — two array copies, a
@@ -114,10 +116,11 @@ object Similarity {
     * measured ~3× the whole stage's task time on the bucketed-pair shapes. */
   private[graft] def scorePairs(pairs: DataFrame): DataFrame = {
     import org.apache.spark.sql.GraftColumnBridge.{column, expression}
-    pairs.select(col("id_a"), col("id_b"),
+    val kept = pairs.columns.filterNot(Set("vec_a", "vec_b")).map(col).toSeq
+    pairs.select(kept :+
       column(expressions.CosineSim6(
         expression(col("vec_a").cast("array<float>")),
-        expression(col("vec_b").cast("array<float>")))).as("sim"))
+        expression(col("vec_b").cast("array<float>")))).as("sim"): _*)
   }
 
   /** Deterministic ±1 hyperplane components for sign-random-projection LSH:
@@ -234,10 +237,8 @@ object Similarity {
   def embedIndex(
       corpus: DataFrame, idCol: String = "vec_id", vecCol: String = "embedding",
       bits: Int = 6, maxBucket: Int = 100000): DataFrame = {
-    val b = srpFrame(corpus, idCol, vecCol, bits)
-    val small = b.groupBy("bucket").agg(count(lit(1)).as("_bsize"))
-      .where(col("_bsize") <= maxBucket).select("bucket")
-    b.join(small, Seq("bucket")).select("bucket", "id", "vec")
+    Dedup.capBuckets(srpFrame(corpus, idCol, vecCol, bits), Seq("bucket"), maxBucket)
+      .select("bucket", "id", "vec")
   }
 
   /** Persist an [[embedIndex]] as a BUCKETED, per-bucket-sorted table — the
@@ -278,33 +279,19 @@ object Similarity {
     *
     * Skew guard: one degenerate bucket (e.g. many near-zero or boilerplate
     * embeddings landing on the same side of every hyperplane) would make the
-    * self-join O(bucket²); buckets above `maxBucket` rows are dropped, same
-    * cap discipline as [[Dedup.minhashPairs]]. Observability via
+    * self-join O(bucket²); buckets above `maxBucket` rows are dropped by
+    * the one LSH bucket stage, [[Dedup.bucketPairs]]. Observability via
     * [[srpSkewedBuckets]] — computed from the same srpFrame bucketing. */
   def cosineNearDups(
       corpus: DataFrame, threshold: Double, bits: Int = 6,
       idCol: String = "vec_id", vecCol: String = "embedding",
       maxBucket: Int = 100000): DataFrame = {
-    val withBucket = srpFrame(corpus, idCol, vecCol, bits)
-    val smallBuckets = withBucket.groupBy("bucket")
-      .agg(count(lit(1)).as("_bsize"))
-      .where(col("_bsize") <= maxBucket)
-      .select("bucket")
-    // shuffle the vector payload by bucket ONCE and persist the
-    // co-partitioned result: both self-join sides read the cache, so the
-    // join adds only sorts, no further payload exchange. (The alias-renamed
-    // sides defeat Catalyst's ReuseExchange — measured: the naive shape
-    // shuffles the full payload twice and runs the prune-agg twice at 2M
-    // rows.) The prune-agg input (withBucket) is recomputed rather than
-    // cached — it is a shuffle-free scan projection, which at corpus scale
-    // is far cheaper than caching the whole corpus.
-    val pruned = withBucket.join(smallBuckets, Seq("bucket"))
-      .repartition(col("bucket"))
-      .persistTracked()
-    val a = pruned.select(col("bucket"), col("id").as("id_a"), col("vec").as("vec_a"))
-    val b = pruned.select(col("bucket"), col("id").as("id_b"), col("vec").as("vec_b"))
-    val pairs = a.join(b, Seq("bucket"))
-      .where(col("id_a") < col("id_b"))
+    // the prune-agg input (srpFrame) is recomputed rather than cached — it
+    // is a shuffle-free scan projection, which at corpus scale is far
+    // cheaper than caching the whole corpus; the vector payload shuffles
+    // once, in Dedup.bucketPairs
+    val pairs = Dedup.bucketPairs(srpFrame(corpus, idCol, vecCol, bits),
+        Seq("bucket"), maxBucket, Seq("vec"))
       .select("id_a", "id_b", "vec_a", "vec_b")
     scorePairs(pairs)
       .where(col("sim") >= threshold)
@@ -419,9 +406,7 @@ object Similarity {
       corpus: DataFrame, bits: Int = 6,
       idCol: String = "vec_id", vecCol: String = "embedding",
       maxBucket: Int = 100000): Long =
-    srpFrame(corpus, idCol, vecCol, bits)
-      .groupBy("bucket").agg(count(lit(1)).as("n"))
-      .where(col("n") > maxBucket).count()
+    Dedup.skewedCount(srpFrame(corpus, idCol, vecCol, bits), Seq("bucket"), maxBucket)
 
   // ------------------------------------------------------------------
   // IVF (inverted-file) ANN — the alternative scale path to SRP-LSH:

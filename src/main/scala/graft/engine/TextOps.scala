@@ -21,9 +21,6 @@ object TextOps {
     * All ratios are computed over the raw character length. */
   def qualityColumns(text: Column): Seq[(String, Column)] = {
     val len = length(text).cast(DoubleType)
-    def ratio(pattern: String): Column =
-      when(len === 0, 0.0)
-        .otherwise(length(regexp_replace(text, pattern, "")).cast(DoubleType) / len)
     // regexp_replace strips NON-matching chars: ratio of kept = 1 - stripped
     def classRatio(cls: String): Column =
       when(len === 0, 0.0)
@@ -45,18 +42,14 @@ object TextOps {
       "quality_score" -> score)
   }
 
-  /** Stopword-hit language scores; returns the argmax language among the
-    * candidates plus the hit counts. Deterministic, SQL-mirrorable n-gram
-    * (word) heuristic. */
+  /** Stopword markers per candidate language, scored by hit count in
+    * [[langIdFromPadded]]. Deterministic, SQL-mirrorable n-gram (word)
+    * heuristic. */
   val langMarkers: Seq[(String, Seq[String])] = Seq(
     "en" -> Seq(" the ", " and ", " of ", " to ", " in "),
     "de" -> Seq(" der ", " und ", " die ", " das ", " nicht "),
     "fr" -> Seq(" le ", " la ", " et ", " les ", " des "),
     "es" -> Seq(" el ", " que ", " los ", " una ", " por "))
-
-  def langHits(text: Column, markers: Seq[String]): Column =
-    markers.map(m => when(lower(text).contains(m), 1).otherwise(0))
-      .reduce(_ + _)
 
   /** Language ID over an ALREADY lowercased, space-padded text column.
     * Callers that batch several text signals into one projection should

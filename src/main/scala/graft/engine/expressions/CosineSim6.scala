@@ -14,9 +14,22 @@ import org.apache.spark.sql.types._
   * Replacing the typed `scorePairs` stage with this expression removes the
   * per-pair encoder round trip (two array copies, a tuple allocation and a
   * DeserializeToObject/SerializeFromObject pair in the plan) and keeps the
-  * candidate-scoring projection inside whole-stage codegen. */
+  * candidate-scoring projection inside whole-stage codegen. A null
+  * element has no value to score, so it raises rather than being read as
+  * one — parquet arrays are always `containsNull`, so the check is per
+  * row, not in `checkInputDataTypes`. */
 object CosineSim6Bridge {
+  private def requireNoNull(v: ArrayData): Unit = {
+    var i = 0
+    while (i < v.numElements()) {
+      if (v.isNullAt(i)) throw new IllegalArgumentException(
+        s"graft_cosine_sim6: null array element at index $i")
+      i += 1
+    }
+  }
+
   def sim(a: ArrayData, b: ArrayData): Double = {
+    requireNoNull(a); requireNoNull(b)
     var dot = 0.0; var na = 0.0; var nb = 0.0
     val n = math.min(a.numElements(), b.numElements())
     var i = 0

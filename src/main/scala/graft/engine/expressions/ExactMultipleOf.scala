@@ -71,20 +71,6 @@ object GraftFunctions {
       ValidateJson(
         org.apache.spark.sql.GraftColumnBridge.expression(instanceJson),
         org.apache.spark.sql.GraftColumnBridge.expression(schemaJson)))
-
-  private val info = new ExpressionInfo(
-    classOf[ExactMultipleOf].getName, "graft_exact_multiple_of")
-
-  private val builder: Seq[Expression] => Expression = {
-    case Seq(x, m) => ExactMultipleOf(x, m)
-    case other => throw new IllegalArgumentException(
-      s"graft_exact_multiple_of expects 2 arguments, got ${other.length}")
-  }
-
-  /** Register `graft_exact_multiple_of` in an existing session (SQL-callable). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("graft_exact_multiple_of"), info, builder)
 }
 
 /** The full SQL surface of the native expressions, for both injection

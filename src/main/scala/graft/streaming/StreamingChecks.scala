@@ -149,9 +149,7 @@ object StreamingChecks {
         col("id").as("static_id"), col("shingles").as("sh_i")),
         Seq("band", "bucket"))
       .where(col("stream_id") =!= col("static_id"))
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_s"), col("sh_i"))).cast(DoubleType) /
-          size(array_union(col("sh_s"), col("sh_i"))).cast(DoubleType))
+      .withColumn("jaccard", graft.engine.Dedup.setJaccard(col("sh_s"), col("sh_i")))
       .where(col("jaccard") >= threshold)
     val out = matched.select(
       (Seq(col("stream_id"), col("static_id"),
@@ -187,33 +185,14 @@ object StreamingChecks {
       case None => graft.engine.Similarity.srpFrame(stream, idCol, vecCol, bits)
     }).select(col("id").as("id_a") +: col("vec").as("vec_a") +:
       col("bucket") +: tsCol.map(col).toSeq: _*)
-    val matched = probes
-      .join(staticIndex.select(col("bucket"), col("id").as("id_b"),
-        col("vec").as("vec_b")), Seq("bucket"))
-    // the watermark column has to ride THROUGH the typed scoring stage —
-    // Similarity.scorePairs drops extra columns and joining the ts back
-    // would be a stream-stream join, so the ts variant uses a widened
-    // scorer over the same cosineArrays kernel
-    val scored = tsCol match {
-      case None =>
-        graft.engine.Similarity.scorePairs(
-          matched.select("id_a", "id_b", "vec_a", "vec_b"))
-          .select(col("id_a").as("stream_id"), col("id_b").as("bench_id"),
-            col("sim"))
-      case Some(ts) =>
-        val spark = matched.sparkSession
-        import spark.implicits._
-        matched.select(col("id_a"), col("id_b"),
-            col("vec_a").cast("array<float>"), col("vec_b").cast("array<float>"),
-            col(ts).cast(TimestampType))
-          .as[(Long, Long, Array[Float], Array[Float], java.sql.Timestamp)]
-          .mapPartitions(_.map { case (a, b, va, vb, t) =>
-            (a, b, new java.math.BigDecimal(
-              graft.engine.Similarity.cosineArrays(va, vb))
-              .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue(), t)
-          })
-          .toDF("stream_id", "bench_id", "sim", ts)
-    }
+    // the watermark column rides through the scorer — scorePairs keeps
+    // every non-vector column, and joining the ts back afterwards would be
+    // a stream-stream join
+    val scored = graft.engine.Similarity.scorePairs(probes
+        .join(staticIndex.select(col("bucket"), col("id").as("id_b"),
+          col("vec").as("vec_b")), Seq("bucket")))
+      .select(col("id_a").as("stream_id") +: col("id_b").as("bench_id") +:
+        col("sim") +: tsCol.map(col).toSeq: _*)
     val out = scored.where(col("sim") >= threshold)
     tsCol match {
       case Some(ts) => out.withWatermark(ts, watermark)

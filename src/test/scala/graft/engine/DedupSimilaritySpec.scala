@@ -144,6 +144,60 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(!plan.contains("DeserializeToObject"), plan.take(600))
   }
 
+  test("CosineSim6 raises on a null array element instead of reading it as a value") {
+    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val vecs = StructType(Seq(
+      StructField("a", ArrayType(FloatType, containsNull = true)),
+      StructField("b", ArrayType(FloatType, containsNull = true))))
+    def f(xs: java.lang.Float*): Seq[java.lang.Float] = xs
+    val cases = Seq(
+      (f(1f, null, 2f), f(1f, 1f, 1f)),    // null on the left
+      (f(1f, 2f), f(3f, null)),            // null on the right
+      (f(1f), f(1f, 2f, null)))            // null past the shorter side
+    cases.foreach { case (a, b) =>
+      val df = spark.createDataFrame(
+        spark.sparkContext.parallelize(Seq(Row(a, b)), 1), vecs)
+      val e = intercept[Exception](df.select(column(expressions.CosineSim6(
+        expression(col("a")), expression(col("b"))))).collect())
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(t => t.isInstanceOf[IllegalArgumentException] &&
+        t.getMessage.contains("graft_cosine_sim6")), s"$a / $b: $e")
+    }
+  }
+
+  test("LSH bucket stage: both self-join sides scan one cached relation with one repartition exchange") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_COL, ShuffleExchangeExec}
+    val helper = new AdaptiveSparkPlanHelper {}
+    def scanned(p: LogicalPlan): Option[InMemoryRelation] = p match {
+      case r: InMemoryRelation => Some(r)
+      case u if u.children.size == 1 => scanned(u.children.head)
+      case _ => None
+    }
+    def check(name: String, df: DataFrame): Unit = {
+      val selfJoined = df.queryExecution.optimizedPlan.collect {
+        case j: Join => (scanned(j.left), scanned(j.right))
+      }.collect { case (Some(a), Some(b)) if a.cacheBuilder eq b.cacheBuilder => a }
+      assert(selfJoined.size === 1, s"$name: ${df.queryExecution.optimizedPlan}")
+      val cached = selfJoined.head.cacheBuilder.cachedPlan
+      val repartitions = helper.collect(cached) {
+        case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_COL => e
+      }
+      assert(repartitions.size === 1, s"$name: $cached")
+    }
+    try {
+      check("minhashPairs", Dedup.minhashPairs(corpus, "doc_id", "text"))
+      check("simhashPairs", Dedup.simhashPairs(corpus, "doc_id", "text"))
+      check("cosineNearDups", Similarity.cosineNearDups(emb, 0.99, bits = 4))
+      check("winnowPairs", Dedup.winnowPairs(corpus, "doc_id", "text"))
+    } finally Caches.releaseAll()
+  }
+
   test("cosine near-dups finds injected near-identical twins") {
     val twins = emb.where(col("vec_id") % 100 === 0)
       .withColumn("vec_id", col("vec_id") + 1000000)

@@ -1,6 +1,6 @@
 package graft.engine
 
-import graft.engine.expressions.{GraftFunctions, GraftMath}
+import graft.engine.expressions.{GraftExtensions, GraftFunctions, GraftMath}
 import graft.json.{JNum, Json}
 import graft.schema.SchemaDoc
 import graft.validate.Validator
@@ -60,7 +60,7 @@ class ExactMultipleOfSpec extends AnyFunSuite {
   }
 
   test("SQL registration works (registry + call)") {
-    GraftFunctions.register(spark)
+    GraftExtensions.register(spark)
     val r = spark.sql("SELECT graft_exact_multiple_of(CAST(0.0075 AS DOUBLE), CAST(0.0001 AS DOUBLE)) a, " +
       "graft_exact_multiple_of(CAST(0.00751 AS DOUBLE), CAST(0.0001 AS DOUBLE)) b").collect()(0)
     assert(r.getBoolean(0) === true)

@@ -297,6 +297,45 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("streamingEmbedDecontam with tsCol: watermark column survives and re-sent vectors dedup") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val rnd = new scala.util.Random(7)
+    val vecs = (0L until 400L).map(id => (id, Array.fill(32)(rnd.nextFloat() - 0.5f)))
+    val emb = vecs.toDF("vec_id", "embedding")
+    val bench = emb.where(col("vec_id") % 23 === 5)
+      .withColumn("embedding", transform(col("embedding"), x => x * lit(1.0005f)))
+    val index = graft.engine.Similarity.embedIndex(bench, bits = 4, maxBucket = 512)
+      .persist()
+    val t0 = Timestamp.valueOf("2026-01-01 00:00:00")
+    val input = MemoryStream[(Long, Array[Float], Timestamp)]
+    val matches = StreamingChecks.streamingEmbedDecontam(
+      input.toDF().toDF("vec_id", "embedding", "ts"), index, "vec_id", "embedding",
+      bits = 4, threshold = 0.99, tsCol = Some("ts"))
+    assert(matches.columns.toSeq === Seq("stream_id", "bench_id", "sim", "ts"))
+    val q = matches.writeStream.format("memory").queryName("embeddecon_ts_stream")
+      .outputMode("append").start()
+    try {
+      // every vector sent TWICE in the same micro-batch
+      input.addData(vecs.toIndexedSeq.flatMap(v => Seq((v._1, v._2, t0), (v._1, v._2, t0))))
+      q.processAllAvailable()
+      val rows = spark.sql(
+        "SELECT stream_id, bench_id, sim, ts FROM embeddecon_ts_stream").collect()
+      assert(rows.nonEmpty, "rescaled leaks must match their sources")
+      // the watermark column rides through the scorer with its value
+      assert(rows.forall(_.getTimestamp(3) == t0))
+      // watermarked dedup: one row per (stream, bench) pair despite the
+      // duplicate sends
+      val hits = rows.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      assert(hits.length === hits.map(h => (h._1, h._2)).distinct.length)
+      // and the same scored hits as the no-ts path
+      val plain = StreamingChecks.streamingEmbedDecontam(
+        emb, index, "vec_id", "embedding", bits = 4, threshold = 0.99)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      assert(hits.toSet === plain.toSet)
+    } finally { q.stop(); index.unpersist() }
+  }
+
   test("pipeline quality filter and split assignment run unchanged on a stream") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
