@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -37,14 +38,23 @@ object Dedup {
     z ^ (z >>> 31)
   }
 
-  /** First 8 bytes of the string's MD5, big-endian. `md` is reused across
-    * calls (MessageDigest.digest resets) so hot loops allocate nothing. */
-  private[engine] def md5Base(md: java.security.MessageDigest, s: String): Long = {
-    val d = md.digest(s.getBytes("UTF-8"))
+  /** One MD5 digest per thread for the whole engine — the kernel columns
+    * of this module, [[Similarity]], [[TextOps]] and [[Pipeline]], and the
+    * native `Hash64`/`SimHash64` expressions all hash through it, so hot
+    * loops allocate no digest (MessageDigest.digest resets). */
+  private val md5Tl: ThreadLocal[java.security.MessageDigest] =
+    ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("MD5"))
+
+  /** First 8 bytes of the MD5 of `bytes`, big-endian. */
+  private[engine] def md5Base(bytes: Array[Byte]): Long = {
+    val d = md5Tl.get().digest(bytes)
     ((d(0) & 0xffL) << 56) | ((d(1) & 0xffL) << 48) | ((d(2) & 0xffL) << 40) |
       ((d(3) & 0xffL) << 32) | ((d(4) & 0xffL) << 24) | ((d(5) & 0xffL) << 16) |
       ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)
   }
+
+  private[engine] def md5Base(s: String): Long =
+    md5Base(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   /** 64-bit string hash with a seed: splitmix64 finalizer over the string's
     * md5 base plus `seed · golden`. MD5 supplies the per-string entropy and
@@ -53,7 +63,20 @@ object Dedup {
     * even the LSH signature/bucketing stages are hash-match oracled — the
     * same design move as [[Similarity.srpSigns]]' SQL-literal sign matrix. */
   private[engine] def hash64(s: String, seed: Int): Long =
-    mix64(md5Base(java.security.MessageDigest.getInstance("MD5"), s) + seed * golden)
+    mix64(md5Base(s) + seed * golden)
+
+  /** A per-row Scala kernel as a column: Spark's own `udf`, named for the
+    * plan and flagged nondeterministic. The kernel IS deterministic; the
+    * flag is Catalyst's one guard against running it twice per row. A
+    * deterministic UDF is copied into every filter pushed through its
+    * Project — a null filter after an `Option` kernel, the join-key
+    * `isnotnull`, the `size(arr) > 0` that InferFiltersFromGenerate puts
+    * under every explode — and then runs in the Filter AND the Project.
+    * Flagged, it stays once in the Project that defines it: the same
+    * optimizer barrier a typed `mapPartitions` stage is, without that
+    * stage's Deserialize/Serialize pair around the kernel. */
+  private[graft] def kernel(name: String, f: UserDefinedFunction): UserDefinedFunction =
+    f.withName(name).asNondeterministic()
 
   private[engine] def shinglesOf(text: String, k: Int): Array[String] = {
     val words = text.trim.split("\\s+")
@@ -69,19 +92,17 @@ object Dedup {
     }
   }
 
-  /** Per-doc minhash core shared by the signature frames: distinct
-    * k-shingles and the banded LSH keys of their h-way minhash signature.
-    * `md` is reused across calls (hot loops allocate nothing). */
+  /** Per-doc minhash core of the signature column: distinct k-shingles and
+    * the banded LSH keys of their h-way minhash signature. */
   private[engine] def minhashOf(
-      md: java.security.MessageDigest, text: String,
-      k: Int, h: Int, bands: Int): (Array[String], Array[Long]) = {
+      text: String, k: Int, h: Int, bands: Int): (Array[String], Array[Long]) = {
     val rowsPerBand = h / bands
     val sh = shinglesOf(text, k)
     val sig = Array.fill(h)(Long.MaxValue)
     var si = 0
     while (si < sh.length) {
       // md5 once per shingle; per-seed hashes are cheap mixes on top
-      val base = md5Base(md, sh(si))
+      val base = md5Base(sh(si))
       var j = 0
       while (j < h) {
         val hv = mix64(base + j * golden)
@@ -102,49 +123,19 @@ object Dedup {
     (sh, bandKeys)
   }
 
-  /** One pass over (id, text) computing shingles + LSH band keys with plain
-    * JVM loops. Spark's higher-order functions are CodegenFallback — the
-    * interpreted per-shingle lambda costs ~100× this typed projection, which
-    * matters when the signature stage runs over 10^12 docs. */
+  /** (id, shingles, bands) over (id, text), plus the `carry` columns kept
+    * beside them (a stream's watermark column). The minhash kernel is one
+    * [[kernel]] column with plain JVM loops: Spark's higher-order functions
+    * are CodegenFallback — the interpreted per-shingle lambda costs ~100×
+    * this, which matters when the signature stage runs over 10^12 docs. */
   private[graft] def signatureFrame(
       docs: DataFrame, idCol: String, textCol: String,
-      k: Int, h: Int, bands: Int): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast(LongType).as("id"),
-        coalesce(col(textCol), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { iter =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        iter.map { case (id, text) =>
-          val (sh, bandKeys) = minhashOf(md, text, k, h, bands)
-          (id, sh.toSeq, bandKeys.toSeq)
-        }
-      }
-      .toDF("id", "shingles", "bands")
-  }
-
-  /** [[signatureFrame]] carrying an event-time column through the typed
-    * stage — the streaming probe shape, where the watermark column must
-    * survive to the output ([[graft.streaming.StreamingChecks
-    * .streamingNearDup]]). */
-  private[graft] def signatureFrameTs(
-      docs: DataFrame, idCol: String, textCol: String, tsCol: String,
-      k: Int, h: Int, bands: Int): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast(LongType).as("id"),
-        coalesce(col(textCol), lit("")).as("text"),
-        col(tsCol).cast(TimestampType).as("ts"))
-      .as[(Long, String, java.sql.Timestamp)]
-      .mapPartitions { iter =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        iter.map { case (id, text, ts) =>
-          val (sh, bandKeys) = minhashOf(md, text, k, h, bands)
-          (id, sh.toSeq, bandKeys.toSeq, ts)
-        }
-      }
-      .toDF("id", "shingles", "bands", tsCol)
+      k: Int, h: Int, bands: Int, carry: Seq[String] = Nil): DataFrame = {
+    val minhash = kernel("minhash", udf((t: String) => minhashOf(t, k, h, bands)))
+    docs.select(col(idCol).cast(LongType).as("id") +:
+        minhash(coalesce(col(textCol), lit(""))).as("mh") +: carry.map(col): _*)
+      .select(col("id") +: col("mh._1").as("shingles") +: col("mh._2").as("bands") +:
+        carry.map(col): _*)
   }
 
   /** Full MinHash-LSH near-dup pipeline.
@@ -419,11 +410,12 @@ object Dedup {
     * "Deduplicating Training Data Makes Language Models Better"): every
     * k-token window hashes into an inverted index; windows whose hash
     * occurs more than once in the corpus are duplicated runs, and each doc
-    * reports how much of it is covered by them. Stages: one narrow typed
-    * projection (id, n, pos, windowHash), a count-aggregate over the hash
-    * (partial-agg, no raw-window shuffle beyond the index itself), a join
-    * back, and a doc-local coverage union (BitSet over token positions) —
-    * positions per doc are bounded by doc length, never corpus size. Hot
+    * reports how much of it is covered by them. Stages: one narrow kernel
+    * column (n, window hashes) exploded to (id, n, pos, windowHash), a
+    * count-aggregate over the hash (partial-agg, no raw-window shuffle
+    * beyond the index itself), a join back, and a doc-local coverage union
+    * (BitSet over token positions) — positions per doc are bounded by doc
+    * length, never corpus size. Hot
     * hashes above `maxBucket` (site-wide boilerplate) are dropped, the same
     * skew discipline as [[minhashPairs]]. Output per affected doc:
     * (doc_id, n_tokens, n_dup_windows, dup_tokens, dup_frac). */
@@ -431,37 +423,41 @@ object Dedup {
       docs: DataFrame, idCol: String, textCol: String,
       k: Int = 20, maxBucket: Int = 10000): DataFrame = {
     require(k > 0)
-    val spark = docs.sparkSession
-    import spark.implicits._
+    val windows = kernel("dup_windows", udf { (t: String) =>
+      val tokens = TextOps.normTokens(t)
+      (tokens.length, windowHashes(tokens, k))
+    })
     val wins = docs.select(col(idCol).cast(LongType).as("id"),
-        coalesce(col(textCol), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { iter =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        iter.flatMap { case (id, text0) =>
-          val text = text0.toLowerCase.replaceAll("\\s+", " ").trim
-          val tokens = if (text.isEmpty) Array.empty[String] else text.split(" ")
-          val n = tokens.length
-          (0 to n - k).iterator.map { i =>
-            val gram = tokens.slice(i, i + k).mkString(" ")
-            (id, n, i, mix64(md5Base(md, gram) + 11 * golden))
-          }
-        }
-      }.toDF("id", "n_tokens", "pos", "h")
+        windows(coalesce(col(textCol), lit(""))).as("w"))
+      .select(col("id"), col("w._1").as("n_tokens"),
+        posexplode(col("w._2")).as(Seq("pos", "h")))
     val dupHashes = wins.groupBy("h").agg(count(lit(1)).as("c"))
       .where(col("c") > 1 && col("c") <= maxBucket)
       .select("h")
+    val covered = kernel("dup_coverage",
+      udf((ps: Seq[Int], n: Int) => coverage(ps, n, k).cardinality()))
     wins.join(dupHashes, Seq("h"))
       .groupBy(col("id"), col("n_tokens"))
       .agg(count(lit(1)).cast(IntegerType).as("nw"), collect_list("pos").as("ps"))
-      .as[(Long, Int, Int, Seq[Int])]
-      .map { case (id, n, nw, ps) =>
-        val covered = new java.util.BitSet(n)
-        ps.foreach(p => covered.set(p, math.min(p + k, n)))
-        val cov = covered.cardinality()
-        (id, n, nw, cov, cov.toDouble / n)
-      }
-      .toDF("doc_id", "n_tokens", "n_dup_windows", "dup_tokens", "dup_frac")
+      .select(col("id"), col("n_tokens"), col("nw"),
+        covered(col("ps"), col("n_tokens")).as("cov"))
+      .select(col("id").as("doc_id"), col("n_tokens"), col("nw").as("n_dup_windows"),
+        col("cov").as("dup_tokens"),
+        (col("cov").cast(DoubleType) / col("n_tokens")).as("dup_frac"))
+  }
+
+  /** The hash of every k-token window of `tokens`, by start position. */
+  private def windowHashes(tokens: Array[String], k: Int): Array[Long] =
+    Array.tabulate(math.max(0, tokens.length - k + 1)) { i =>
+      hash64(tokens.slice(i, i + k).mkString(" "), 11)
+    }
+
+  /** Token positions of an n-token doc covered by k-token windows starting
+    * at `ps`. */
+  private def coverage(ps: Seq[Int], n: Int, k: Int): java.util.BitSet = {
+    val covered = new java.util.BitSet(n)
+    ps.foreach(p => covered.set(p, math.min(p + k, n)))
+    covered
   }
 
   /** The REWRITE half of exact substring dedup (Lee et al.): duplicated
@@ -485,26 +481,14 @@ object Dedup {
       docs: DataFrame, idCol: String, textCol: String,
       k: Int = 20, maxBucket: Int = 10000): DataFrame = {
     require(k > 0)
-    val spark = docs.sparkSession
-    import spark.implicits._
+    val normalize = kernel("normalize", udf((t: String) => TextOps.normalize(t)))
     val norm = Caches.persistTracked(
       docs.select(col(idCol).cast(LongType).as("id"),
-          coalesce(col(textCol), lit("")).as("text"))
-        .as[(Long, String)]
-        .mapPartitions(_.map { case (id, t) =>
-          (id, t.toLowerCase.replaceAll("\\s+", " ").trim)
-        })
-        .toDF("id", "norm"))
-    val wins = norm.as[(Long, String)]
-      .mapPartitions { iter =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        iter.flatMap { case (id, text) =>
-          val tokens = if (text.isEmpty) Array.empty[String] else text.split(" ")
-          (0 to tokens.length - k).iterator.map { i =>
-            (id, i, mix64(md5Base(md, tokens.slice(i, i + k).mkString(" ")) + 11 * golden))
-          }
-        }
-      }.toDF("id", "pos", "h")
+        normalize(coalesce(col(textCol), lit(""))).as("norm")))
+    val windows = kernel("scrub_windows",
+      udf((t: String) => windowHashes(TextOps.splitNormalized(t), k)))
+    val wins = norm.select(col("id"), windows(col("norm")).as("hs"))
+      .select(col("id"), posexplode(col("hs")).as(Seq("pos", "h")))
     val dups = wins.groupBy("h")
       .agg(count(lit(1)).as("c"), min(struct(col("id"), col("pos"))).as("keep"))
       .where(col("c") > 1 && col("c") <= maxBucket)
@@ -512,18 +496,17 @@ object Dedup {
     val removed = wins.join(dups, Seq("h"))
       .where(!(col("id") === col("keep_id") && col("pos") === col("keep_pos")))
       .groupBy("id").agg(collect_list("pos").as("ps"))
+    val rebuild = kernel("scrub_rebuild", udf { (t: String, ps: Seq[Int]) =>
+      val tokens = TextOps.splitNormalized(t)
+      val n = tokens.length
+      val covered = coverage(Option(ps).getOrElse(Nil), n, k)
+      val kept = (0 until n).iterator.filterNot(covered.get).map(tokens).mkString(" ")
+      (n, covered.cardinality(), kept)
+    })
     norm.join(removed, Seq("id"), "left")
-      .select(col("id"), col("norm"), col("ps"))
-      .as[(Long, String, Option[Seq[Int]])]
-      .map { case (id, text, psOpt) =>
-        val tokens = if (text.isEmpty) Array.empty[String] else text.split(" ")
-        val n = tokens.length
-        val covered = new java.util.BitSet(n)
-        psOpt.getOrElse(Nil).foreach(p => covered.set(p, math.min(p + k, n)))
-        val kept = (0 until n).iterator.filterNot(covered.get).map(tokens).mkString(" ")
-        (id, n, covered.cardinality(), kept)
-      }
-      .toDF("doc_id", "n_tokens", "dup_tokens", "kept_text")
+      .select(col("id"), rebuild(col("norm"), col("ps")).as("r"))
+      .select(col("id").as("doc_id"), col("r._1").as("n_tokens"),
+        col("r._2").as("dup_tokens"), col("r._3").as("kept_text"))
   }
 
   /** Line-level boilerplate scrub (CCNet / RefinedWeb style): lines whose

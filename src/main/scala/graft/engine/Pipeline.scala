@@ -225,21 +225,10 @@ object Pipeline {
 
   /** (id, grams: array<long>) — distinct hashed word n-grams per doc. */
   private def gramFrame(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
+    val grams = Dedup.kernel("word_grams", udf((t: String) =>
+      Dedup.shinglesOf(TextOps.normalize(t), n).map(Dedup.hash64(_, 7))))
     docs.select(col(idCol).cast(LongType).as("id"),
-        coalesce(col(textCol), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { iter =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        iter.map { case (id, text0) =>
-          val text = text0.toLowerCase.replaceAll("\\s+", " ").trim
-          val gs = Dedup.shinglesOf(text, n)
-            .map(g => Dedup.mix64(Dedup.md5Base(md, g) + 7 * Dedup.golden))
-          (id, gs)
-        }
-      }
-      .toDF("id", "grams")
+      grams(coalesce(col(textCol), lit(""))).as("grams"))
   }
 
   /** GPT-style concat-and-chunk sequence packing: documents are laid out in
@@ -323,9 +312,9 @@ object Pipeline {
 
   /** Composite C4/Gopher-style quality filter: length bounds, character
     * ratios, language, and repetition thresholds fold into a keep/drop
-    * verdict with the list of failed rules. ONE pass: the typed projection
-    * computes the doc-local repetition signal while passing the text
-    * through, and the ratio/language rules apply as codegen Column trees on
+    * verdict with the list of failed rules. ONE pass: a kernel column
+    * computes the doc-local repetition signal beside the text, and the
+    * ratio/language rules apply as codegen Column trees on
     * top ([[TextOps.qualityColumns]]) — no self-join back on id, which
     * would shuffle the whole corpus twice at scale. `reasons` is a
     * comma-joined string (concat_ws skips the NULLs of passing rules) — no
@@ -341,27 +330,19 @@ object Pipeline {
     * would shuffle the full corpus at scale. */
   def qualityVerdictsWithText(
       docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
+    val topBigram = Dedup.kernel("top_bigram_frac", udf(TextOps.topBigramFrac _))
     val withRep = docs.select(col(idCol).cast(LongType).as("doc_id"),
         coalesce(col(textCol), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, t) => (id, t, TextOps.topBigramFrac(t)) })
-      .toDF("doc_id", "text", "top_bigram_frac")
+      .select(col("doc_id"), col("text"), topBigram(col("text")).as("top_bigram_frac"))
     // materialize every shared subexpression as its OWN projection column,
     // evaluated once: the naive formulation (each rule re-deriving
     // split/lower/length from text) leans on codegen subexpression
     // elimination, which measurably gives up on this combined projection
-    // over typed-projection input — 10× wall-clock (BASELINE.md round 4,
-    // shared-subexpression fusion).
+    // — 10× wall-clock (BASELINE.md round 4, shared-subexpression fusion).
     // Multiply-referenced non-cheap aliases also stop CollapseProject from
     // re-inlining them.
-    // re-assert non-nullability after the typed stage: the tuple encoder
-    // marks the passed-through text nullable, and nullable inputs bloat
-    // every downstream expression with null branches — measured to tip the
-    // fused whole-stage-codegen method over the JIT compile threshold
-    val text = coalesce(col("text"), lit(""))
-    val shared = withRep.select(col("doc_id"), text.as("text"), col("top_bigram_frac"),
+    val text = col("text")
+    val shared = withRep.select(col("doc_id"), text, col("top_bigram_frac"),
       length(text).cast(DoubleType).as("len"),
       TextOps.tokenCount(text).as("tokens"),
       concat(lit(" "), lower(text), lit(" ")).as("padded"))
@@ -420,7 +401,7 @@ object Pipeline {
     * down to `buckets` rows collected on the driver (bounded ≤ 2²⁰ —
     * constant-size regardless of corpus scale, the [[packChunks]] phase-1
     * move); the log-ratio table then rides back as a BROADCAST ARRAY into
-    * one doc-local typed projection that tokenizes, bucket-counts and
+    * one doc-local kernel column that tokenizes, bucket-counts and
     * folds Σ c·lr[b] per doc with ZERO shuffles — the per-doc weight never
     * needed a (id, bucket) exchange, the same "count locally, never
     * shuffle the grams" move as [[TextOps.repetitionSignals]] (measured
@@ -441,7 +422,6 @@ object Pipeline {
     require(buckets > 0 && buckets <= (1 << 20),
       "the bucket-marginal table is collected driver-side; keep it small")
     val spark = raw.sparkSession
-    import spark.implicits._
     def toks(df: DataFrame): DataFrame =
       df.select(col(idCol).cast(LongType).as("id"),
           explode(split(trim(regexp_replace(lower(coalesce(col(textCol), lit(""))),
@@ -465,34 +445,29 @@ object Pipeline {
         math.log((rCounts.getOrElse(b.toLong, 0L) + 1.0) / (rTot + buckets))
     }
     val bcLr = spark.sparkContext.broadcast(lrArr)
-    val nBuckets = buckets
-    raw.select(col(idCol).cast(LongType).as("id"),
-        coalesce(col(textCol), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { iter =>
-        val md = java.security.MessageDigest.getInstance("MD5")
+    // zero or one row per doc: the kernel yields None for a doc with no
+    // tokens, and the null filter drops it
+    val score = Dedup.kernel("dsir_score", udf { (id: Long, t: String) =>
+      val tokens = TextOps.normTokens(t)
+      if (tokens.isEmpty) None
+      else {
         val lr = bcLr.value
-        iter.flatMap { case (id, t0) =>
-          val t = t0.toLowerCase.replaceAll("\\s+", " ").trim
-          if (t.isEmpty) Iterator.empty
-          else {
-            val tokens = t.split(" ")
-            val counts = new java.util.TreeMap[Long, Long]() // ascending-bucket fold
-            tokens.foreach { tok =>
-              val b = bucketOf(Dedup.mix64(
-                Dedup.md5Base(md, "dsir:" + tok) + seed * Dedup.golden), nBuckets)
-              counts.merge(b, 1L, java.lang.Long.sum)
-            }
-            var logw = 0.0
-            counts.forEach((b, c) => logw += c * lr(b.toInt))
-            val u = bucketOf(Dedup.mix64(
-              Dedup.md5Base(md, "dsir-sel:" + id) + salt * Dedup.golden), 1000000L) / 1e6
-            Iterator.single((id, tokens.length.toLong, logw,
-              u < 1.0 / (1.0 + math.exp(-logw))))
-          }
+        val counts = new java.util.TreeMap[Long, Long]() // ascending-bucket fold
+        tokens.foreach { tok =>
+          counts.merge(bucketOf(Dedup.hash64("dsir:" + tok, seed), buckets), 1L,
+            java.lang.Long.sum)
         }
+        var logw = 0.0
+        counts.forEach((b, c) => logw += c * lr(b.toInt))
+        val u = bucketOf(Dedup.hash64("dsir-sel:" + id, salt), 1000000L) / 1e6
+        Some((tokens.length.toLong, logw, u < 1.0 / (1.0 + math.exp(-logw))))
       }
-      .toDF("doc_id", "n_toks", "logw", "selected")
+    })
+    raw.select(col(idCol).cast(LongType).as("doc_id"),
+        score(col(idCol).cast(LongType), coalesce(col(textCol), lit(""))).as("s"))
+      .where(col("s").isNotNull)
+      .select(col("doc_id"), col("s._1").as("n_toks"), col("s._2").as("logw"),
+        col("s._3").as("selected"))
   }
 
   /** CCNet-style LM-perplexity quality scoring (Wenzek et al., "CCNet:
@@ -509,7 +484,7 @@ object Pipeline {
     * reference's hashed bigram pairs (bounded ≤ buckets² ≤ 2²⁰ rows,
     * collected driver-side; context counts derive from it by summation),
     * then the ln-probability table broadcasts as a plain array into a
-    * doc-local ZERO-SHUFFLE typed scoring projection — sequential in-doc
+    * doc-local ZERO-SHUFFLE scoring kernel column — sequential in-doc
     * fold, bit-identical across runs and partitionings. Docs with < 2
     * tokens have no bigram evidence and emit no row.
     * Output: (doc_id, n_toks, ppl, keep) with keep = ppl ≤ keepBelow
@@ -520,64 +495,47 @@ object Pipeline {
     require(buckets > 0 && buckets <= 1024,
       "the bigram table is buckets^2 driver-side cells; keep it small")
     val spark = raw.sparkSession
-    import spark.implicits._
-    val nB = buckets
-    val theSeed = seed
-    // reference bigram counts: one typed flatMap to pair indices, one
-    // partial-agg count down to <= buckets^2 rows, collected driver-side
-    val c2 = reference.select(col(idCol).cast(LongType).as("id"),
-        coalesce(col(textCol), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { iter =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        iter.flatMap { case (_, t0) =>
-          val bs = lmTokens(t0).map(lmBucket(md, _, theSeed, nB))
-          (1 until bs.length).iterator.map(i => bs(i - 1).toLong * nB + bs(i))
-        }
-      }
-      .toDF("p").groupBy("p").agg(count(lit(1)).as("c"))
+    // reference bigram counts: one kernel column of pair indices, exploded,
+    // one partial-agg count down to <= buckets^2 rows, collected driver-side
+    val pairs = Dedup.kernel("lm_pairs", udf { (t: String) =>
+      val bs = lmBuckets(t, seed, buckets)
+      Array.tabulate(math.max(0, bs.length - 1))(i => bs(i).toLong * buckets + bs(i + 1))
+    })
+    val c2 = reference
+      .select(pairs(coalesce(col(textCol), lit(""))).as("ps"))
+      .select(explode(col("ps")).as("p"))
+      .groupBy("p").agg(count(lit(1)).as("c"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val c1 = Array.fill(nB)(0L) // context counts = sum of outgoing bigrams
-    c2.foreach { case (p, c) => c1((p / nB).toInt) += c }
-    val lnP = Array.tabulate(nB * nB) { p =>
-      math.log((c2.getOrElse(p.toLong, 0L) + 1.0) / (c1(p / nB) + nB))
+    val c1 = Array.fill(buckets)(0L) // context counts = sum of outgoing bigrams
+    c2.foreach { case (p, c) => c1((p / buckets).toInt) += c }
+    val lnP = Array.tabulate(buckets * buckets) { p =>
+      math.log((c2.getOrElse(p.toLong, 0L) + 1.0) / (c1(p / buckets) + buckets))
     }
     val bcLnP = spark.sparkContext.broadcast(lnP)
-    raw.select(col(idCol).cast(LongType).as("id"),
-        coalesce(col(textCol), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions { iter =>
-        val md = java.security.MessageDigest.getInstance("MD5")
+    // zero or one row per doc: None for a doc with < 2 tokens
+    val perplexity = Dedup.kernel("lm_perplexity", udf { (t: String) =>
+      val bs = lmBuckets(t, seed, buckets)
+      if (bs.length < 2) None
+      else {
         val lp = bcLnP.value
-        iter.flatMap { case (id, t0) =>
-          val bs = lmTokens(t0).map(lmBucket(md, _, theSeed, nB))
-          if (bs.length < 2) Iterator.empty
-          else {
-            var s = 0.0
-            var i = 1
-            while (i < bs.length) { s += lp(bs(i - 1) * nB + bs(i)); i += 1 }
-            val ppl = math.exp(-s / (bs.length - 1))
-            Iterator.single((id, bs.length.toLong, ppl, ppl <= keepBelow))
-          }
-        }
+        var s = 0.0
+        var i = 1
+        while (i < bs.length) { s += lp(bs(i - 1) * buckets + bs(i)); i += 1 }
+        Some((bs.length.toLong, math.exp(-s / (bs.length - 1))))
       }
-      .toDF("doc_id", "n_toks", "ppl", "keep")
+    })
+    raw.select(col(idCol).cast(LongType).as("doc_id"),
+        perplexity(coalesce(col(textCol), lit(""))).as("s"))
+      .where(col("s").isNotNull)
+      .select(col("doc_id"), col("s._1").as("n_toks"), col("s._2").as("ppl"),
+        (col("s._2") <= keepBelow).as("keep"))
   }
 
-  /** Whitespace tokens of trim/collapse/lowercase-normalized text —
-    * object-level (NOT a local def inside [[lmPerplexity]]) so executor
-    * closures call it through the module instead of capturing the
-    * enclosing method scope, which is not serializable. */
-  private def lmTokens(t0: String): Array[String] = {
-    val t = t0.toLowerCase.replaceAll("\\s+", " ").trim
-    if (t.isEmpty) Array.empty else t.split(" ")
-  }
-
-  /** [[lmPerplexity]]'s hashed token bucket: `hash64("lm:" + tok, seed)
-    * mod buckets` — identical to the HashSql mirror the oracle replays. */
-  private def lmBucket(
-      md: java.security.MessageDigest, tok: String, seed: Int, nB: Int): Int =
-    bucketOf(Dedup.mix64(Dedup.md5Base(md, "lm:" + tok) + seed * Dedup.golden), nB).toInt
+  /** [[lmPerplexity]]'s hashed token buckets of a doc: `hash64("lm:" +
+    * tok, seed) mod buckets` per normalized token — identical to the
+    * HashSql mirror the oracle replays. */
+  private def lmBuckets(t: String, seed: Int, nB: Int): Array[Int] =
+    TextOps.normTokens(t).map(tok => bucketOf(Dedup.hash64("lm:" + tok, seed), nB).toInt)
 
   /** The artifacts of one [[curate]] run, all lazy. */
   final case class Curation(

@@ -11,59 +11,49 @@ import org.apache.spark.sql.expressions.Window
   * buckets; at 10^12 rows brute force is a non-starter, buckets cut the
   * join fan-out by ~2^bits).
   *
-  * All per-element numeric work runs in typed projections (plain JVM loops):
-  * Spark's higher-order functions (`aggregate`/`zip_with`) are
-  * CodegenFallback — interpreted per element, ~100× slower — the same lesson
-  * as [[Dedup]]'s minhash signature stage.
+  * All per-element numeric work runs as plain JVM loops: the per-vector
+  * kernels (int8 quantization, SRP bucket, IVF cell, probe fan-out) are
+  * [[Dedup.kernel]] columns and the pair scorer is the native
+  * [[graft.engine.expressions.CosineSim6]]. Spark's higher-order functions
+  * (`aggregate`/`zip_with`) are CodegenFallback — interpreted per element,
+  * ~100× slower — the same lesson as [[Dedup]]'s minhash signature stage.
   */
 object Similarity {
-
-  /** Cosine similarity between two float-array columns (double accumulation,
-    * sequential fold ⇒ deterministic). Interpreted HOF — fine for small
-    * frames (e.g. per-media features); use [[bruteForceTopK]]'s typed path
-    * for bulk scoring. */
-  def cosine(a: Column, b: Column): Column = {
-    def dot(x: Column, y: Column): Column =
-      aggregate(zip_with(x, y, (p, q) => p.cast(DoubleType) * q.cast(DoubleType)),
-        lit(0.0), (acc, v) => acc + v)
-    dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
-  }
 
   /** Symmetric int8 quantization of an embedding column — the 4× storage
     * reduction step of a trillion-vector index. Per vector: `scale =
     * max(|x|)/127` (all-zero vectors → scale 0, zero codes), `code_i =
     * floor(x_i/scale + 0.5)` clamped to ±127 (explicit half-up rounding, so
     * the oracle mirrors the exact same arithmetic), plus the reconstruction
-    * RMSE. One narrow typed projection. Output:
+    * RMSE. One narrow kernel column. Output:
     * (vec_id, scale, codes: array<int>, rmse). */
   def quantizeInt8(
       embeddings: DataFrame, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    embeddings.select(col(idCol).cast(LongType).as("id"), col(vecCol).as("v"))
-      .as[(Long, Seq[Float])]
-      .mapPartitions(_.map { case (id, v) =>
-        var mx = 0.0
-        v.foreach { x => val a = math.abs(x.toDouble); if (a > mx) mx = a }
-        val scale = mx / 127.0
-        val codes = new Array[Int](v.length)
-        var se = 0.0
-        var i = 0
-        while (i < v.length) {
-          val x = v(i).toDouble
-          val q =
-            if (scale == 0.0) 0
-            else math.max(-127, math.min(127, math.floor(x / scale + 0.5).toInt))
-          codes(i) = q
-          val e = x - q * scale
-          se += e * e
-          i += 1
-        }
-        val rmse = if (v.isEmpty) 0.0 else math.sqrt(se / v.length)
-        (id, scale, codes.toSeq, rmse)
-      })
-      .toDF("vec_id", "scale", "codes", "rmse")
+    val quantize = Dedup.kernel("quantize_int8", udf { (v: Array[Float]) =>
+      var mx = 0.0
+      v.foreach { x => val a = math.abs(x.toDouble); if (a > mx) mx = a }
+      val scale = mx / 127.0
+      val codes = new Array[Int](v.length)
+      var se = 0.0
+      var i = 0
+      while (i < v.length) {
+        val x = v(i).toDouble
+        val q =
+          if (scale == 0.0) 0
+          else math.max(-127, math.min(127, math.floor(x / scale + 0.5).toInt))
+        codes(i) = q
+        val e = x - q * scale
+        se += e * e
+        i += 1
+      }
+      val rmse = if (v.isEmpty) 0.0 else math.sqrt(se / v.length)
+      (scale, codes, rmse)
+    })
+    embeddings.select(col(idCol).cast(LongType).as("vec_id"),
+        quantize(col(vecCol).cast("array<float>")).as("q"))
+      .select(col("vec_id"), col("q._1").as("scale"), col("q._2").as("codes"),
+        col("q._3").as("rmse"))
   }
 
   /** Exact top-k: for every query row, the k nearest non-query rows by
@@ -91,7 +81,8 @@ object Similarity {
       .orderBy("query_id", "rank")
   }
 
-  /** Plain-loop cosine for typed projections. */
+  /** Plain-loop cosine: the reference arithmetic of
+    * [[graft.engine.expressions.CosineSim6]]. */
   def cosineArrays(a: Array[Float], b: Array[Float]): Double = {
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
@@ -160,8 +151,8 @@ object Similarity {
     * mismatch), while ⌊x·2²⁰⌋ is exact for float inputs and an integer sum
     * is order-free on every engine. Overflow headroom: |term| ≤ 2²⁰·|x|,
     * so even 10⁶-dim vectors with |x| ≤ 10³ stay < 2⁵⁰ — unreachable for
-    * unit-scale embeddings. The caller manages the `signs` cache across a
-    * partition. */
+    * unit-scale embeddings. The caller manages the `signs` cache
+    * ([[srpSignsFor]]). */
   private[engine] def srpBucketOf(
       signs: Array[Array[Double]], vec: Array[Float], bits: Int): Long = {
     val fixed = new Array[Long](vec.length)
@@ -186,47 +177,37 @@ object Similarity {
     bucket
   }
 
-  private[graft] def srpFrame(
-      df: DataFrame, idCol: String, vecCol: String, bits: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast(LongType).as("id"),
-        col(vecCol).cast("array<float>").as("vec"))
-      .as[(Long, Array[Float])]
-      .mapPartitions { iter =>
-        var signs: Array[Array[Double]] = null
-        iter.map { case (id, vec) =>
-          if (signs == null || signs(0).length < vec.length)
-            signs = srpSigns(bits, vec.length)
-          (id, vec, srpBucketOf(signs, vec, bits))
-        }
-      }
-      .toDF("id", "vec", "bucket")
+  /** The thread's SRP sign matrix: built per `bits` and rebuilt when a
+    * longer vector arrives (a wider matrix's rows extend the narrower's —
+    * [[srpSigns]] is a pure function of (j, i)). */
+  private val signsTl = new ThreadLocal[Array[Array[Double]]]
+
+  private def srpSignsFor(bits: Int, dim: Int): Array[Array[Double]] = {
+    val cached = signsTl.get()
+    if (cached != null && cached.length == bits &&
+        (bits == 0 || cached(0).length >= dim)) cached
+    else {
+      val signs = srpSigns(bits, dim)
+      signsTl.set(signs)
+      signs
+    }
   }
 
-  /** [[srpFrame]] carrying an event-time column through the typed stage —
-    * the streaming probe shape ([[graft.streaming.StreamingChecks
-    * .streamingEmbedDecontam]]), where the watermark column must survive
-    * to the output. */
-  private[graft] def srpFrameTs(
-      df: DataFrame, idCol: String, vecCol: String, tsCol: String,
-      bits: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast(LongType).as("id"),
-        col(vecCol).cast("array<float>").as("vec"),
-        col(tsCol).cast(TimestampType).as("ts"))
-      .as[(Long, Array[Float], java.sql.Timestamp)]
-      .mapPartitions { iter =>
-        var signs: Array[Array[Double]] = null
-        iter.map { case (id, vec, ts) =>
-          if (signs == null || signs(0).length < vec.length)
-            signs = srpSigns(bits, vec.length)
-          (id, vec, srpBucketOf(signs, vec, bits), ts)
-        }
-      }
-      .toDF("id", "vec", "bucket", tsCol)
-  }
+  /** The SRP bucket of an `array<float>` column. */
+  private[graft] def srpBucket(vec: Column, bits: Int): Column =
+    Dedup.kernel("srp_bucket", udf { (v: Array[Float]) =>
+      srpBucketOf(srpSignsFor(bits, v.length), v, bits)
+    })(vec)
+
+  /** (id, vec, bucket) over (id, vec), plus the `carry` columns kept
+    * beside them (a stream's watermark column). */
+  private[graft] def srpFrame(
+      df: DataFrame, idCol: String, vecCol: String, bits: Int,
+      carry: Seq[String] = Nil): DataFrame =
+    df.select(col(idCol).cast(LongType).as("id") +:
+        col(vecCol).cast("array<float>").as("vec") +: carry.map(col): _*)
+      .select(col("id") +: col("vec") +: srpBucket(col("vec"), bits).as("bucket") +:
+        carry.map(col): _*)
 
   /** The materializable SRP index of an embedding snapshot: one
     * (bucket, id, vec) row per vector, with buckets above `maxBucket`
@@ -467,28 +448,23 @@ object Similarity {
     cents
   }
 
-  /** (id, vec, cell) assignment against broadcast centroids — typed
-    * projection, no shuffle. */
+  /** (id, vec, cell) assignment against broadcast centroids — one
+    * kernel column, no shuffle. */
   private def cellFrame(
       df: DataFrame, idCol: String, vecCol: String,
       bc: org.apache.spark.broadcast.Broadcast[Array[Array[Double]]]): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
+    val cell = Dedup.kernel("ivf_cell", udf { (v: Array[Float]) =>
+      val cents = bc.value
+      var best = 0; var bestD = Double.MaxValue
+      var j = 0
+      while (j < cents.length) {
+        val d = l2(v, cents(j)); if (d < bestD) { bestD = d; best = j }; j += 1
+      }
+      best
+    })
     df.select(col(idCol).cast(LongType).as("id"),
         col(vecCol).cast("array<float>").as("vec"))
-      .as[(Long, Array[Float])]
-      .mapPartitions { iter =>
-        val cents = bc.value
-        iter.map { case (id, vec) =>
-          var best = 0; var bestD = Double.MaxValue
-          var j = 0
-          while (j < cents.length) {
-            val d = l2(vec, cents(j)); if (d < bestD) { bestD = d; best = j }; j += 1
-          }
-          (id, vec, best)
-        }
-      }
-      .toDF("id", "vec", "cell")
+      .select(col("id"), col("vec"), cell(col("vec")).as("cell"))
   }
 
   /** IVF top-k: corpus vectors live in their nearest-centroid cell; each
@@ -597,25 +573,22 @@ object Similarity {
       cellsFrame: DataFrame, cents: Array[Array[Double]], queries: DataFrame,
       k: Int, nProbe: Int, idCol: String, vecCol: String,
       pruneCells: Boolean = false): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(cents)
+    val bc = queries.sparkSession.sparkContext.broadcast(cents)
     // an exhaustive probe (nProbe covers every cell) cannot prune anything:
     // skip the query-assignment cache + probed-cell collect + isin filter
     // outright — three jobs whose only purpose is partition pruning
     val prune = pruneCells && nProbe < cents.length
+    val nearest = Dedup.kernel("ivf_probe_cells", udf { (v: Array[Float]) =>
+      val cs = bc.value
+      cs.indices.map(j => (j, l2(v, cs(j)))).sortBy(_._2).take(nProbe).map(_._1).toArray
+    })
     val q0 = queries
       .select(col(idCol).cast(LongType).as("id_a"),
         col(vecCol).cast("array<float>").as("vec_a"))
-      .as[(Long, Array[Float])]
-      .flatMap { case (id, vec) =>
-        val cs = bc.value
-        cs.indices.map(j => (j, l2(vec, cs(j)))).sortBy(_._2)
-          .take(nProbe).map { case (cell, _) => (id, vec, cell) }
-      }
-      .toDF("id_a", "vec_a", "cell")
+      .select(col("id_a"), col("vec_a"), nearest(col("vec_a")).as("cells"))
+      .select(col("id_a"), col("vec_a"), explode(col("cells")).as("cell"))
     // under pruning the query assignment feeds TWO consumers (the probed-
-    // cell collect and the join) — cache it so the flatMap lineage runs
+    // cell collect and the join) — cache it so the fan-out kernel runs
     // once (tracked, released by the caller's Caches.releaseAll)
     val q = if (prune) q0.persistTracked() else q0
     val c =

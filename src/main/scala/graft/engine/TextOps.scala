@@ -118,24 +118,31 @@ object TextOps {
     * polynomial hash over character k-grams, keep the minimum hash of each
     * sliding window (rightmost-min tie-break). Robust to insertions — two
     * documents sharing long runs share fingerprints — the classic
-    * plagiarism/near-dup signature. Returns a typed-projection frame
-    * (id, fingerprints: array<long>); at corpus scale the fingerprints
-    * explode into an inverted index (fingerprint → ids) exactly like the
-    * minhash band join. */
+    * plagiarism/near-dup signature. Returns (id, fingerprints: array<long>)
+    * from one kernel column; at corpus scale the fingerprints explode into
+    * an inverted index (fingerprint → ids) exactly like the minhash band
+    * join. */
   def winnowingFingerprints(
       docs: DataFrame, idCol: String, textCol: String,
       k: Int = 8, window: Int = 16): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
+    val fingerprints = Dedup.kernel("winnow",
+      udf((t: String) => winnow(normalize(t), k, window)))
     docs.select(col(idCol).cast(LongType).as("id"),
-        coalesce(col(textCol), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text0) =>
-        val text = text0.toLowerCase.replaceAll("\\s+", " ").trim
-        (id, winnow(text, k, window))
-      })
-      .toDF("id", "fingerprints")
+      fingerprints(coalesce(col(textCol), lit(""))).as("fingerprints"))
   }
+
+  /** Lowercased, whitespace-collapsed, trimmed text — the one normal form
+    * of the doc-local token kernels. */
+  private[engine] def normalize(text: String): String =
+    text.toLowerCase.replaceAll("\\s+", " ").trim
+
+  /** Tokens of already [[normalize]]d text; empty text has none. */
+  private[engine] def splitNormalized(text: String): Array[String] =
+    if (text.isEmpty) Array.empty else text.split(" ")
+
+  /** Whitespace tokens of [[normalize]]d text. */
+  private[engine] def normTokens(text: String): Array[String] =
+    splitNormalized(normalize(text))
 
   private[engine] def winnow(text: String, k: Int, window: Int): Seq[Long] = {
     if (text.length < k) {
@@ -172,28 +179,22 @@ object TextOps {
   /** Gopher-style repetition signals, per doc: type-token ratio, the
     * fraction of bigram occurrences taken by the most frequent bigram, and
     * the fraction of trigram occurrences whose trigram repeats — the
-    * standard "is this doc degenerate boilerplate" filters. One narrow typed
-    * projection (per-doc local counting, no explode/shuffle — at 10^12 docs
-    * an explode-and-groupBy formulation would shuffle every n-gram
+    * standard "is this doc degenerate boilerplate" filters. One narrow
+    * kernel column (per-doc local counting, no explode/shuffle — at 10^12
+    * docs an explode-and-groupBy formulation would shuffle every n-gram
     * occurrence in the corpus). Output: (doc_id, n_tokens, distinct_ratio,
     * top_bigram_frac, dup_trigram_frac). */
   def repetitionSignals(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast(LongType).as("id"),
-        coalesce(col(textCol), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.map { case (id, text0) =>
-        val text = text0.toLowerCase.replaceAll("\\s+", " ").trim
-        val tokens = if (text.isEmpty) Array.empty[String] else text.split(" ")
-        val n = tokens.length
-        val distinctRatio =
-          if (n == 0) 0.0 else tokens.distinct.length.toDouble / n
-        val (topBi, _) = gramStats(tokens, 2)
-        val (_, dupTri) = gramStats(tokens, 3)
-        (id, n.toLong, distinctRatio, topBi, dupTri)
-      })
-      .toDF("doc_id", "n_tokens", "distinct_ratio", "top_bigram_frac", "dup_trigram_frac")
+    val signals = Dedup.kernel("repetition", udf { (t: String) =>
+      val tokens = normTokens(t)
+      val n = tokens.length
+      val distinctRatio = if (n == 0) 0.0 else tokens.distinct.length.toDouble / n
+      (n.toLong, distinctRatio, gramStats(tokens, 2)._1, gramStats(tokens, 3)._2)
+    })
+    docs.select(col(idCol).cast(LongType).as("doc_id"),
+        signals(coalesce(col(textCol), lit(""))).as("r"))
+      .select(col("doc_id"), col("r._1").as("n_tokens"), col("r._2").as("distinct_ratio"),
+        col("r._3").as("top_bigram_frac"), col("r._4").as("dup_trigram_frac"))
   }
 
   /** (top-n-gram fraction, duplicate-n-gram fraction) over a token array —
@@ -220,17 +221,16 @@ object TextOps {
   }
 
   /** Normalized-token top-bigram fraction of one document (doc-local). */
-  private[graft] def topBigramFrac(text0: String): Double = {
-    val text = text0.toLowerCase.replaceAll("\\s+", " ").trim
-    if (text.isEmpty) 0.0 else gramStats(text.split(" "), 2)._1
-  }
+  private[graft] def topBigramFrac(text: String): Double =
+    gramStats(normTokens(text), 2)._1
 
   /** Sliding-window document chunking — the training/RAG prep step that
     * splits long docs into `size`-token windows overlapping by `overlap`
     * tokens. Windows start every `size - overlap` tokens over the
     * whitespace-normalized token stream; the final window may be shorter;
-    * empty docs emit no chunks. One narrow typed flatMap — each chunk row
-    * carries its token offset so downstream spans are reconstructible.
+    * empty docs emit no chunks. One narrow kernel column exploded per chunk
+    * — each chunk row carries its token offset so downstream spans are
+    * reconstructible.
     * Output: (doc_id, chunk, start_tok, n_toks, chunk_text). */
   def chunkDocs(
       docs: DataFrame, idCol: String, textCol: String,
@@ -238,23 +238,18 @@ object TextOps {
     require(size > 0 && overlap >= 0 && overlap < size,
       "need 0 <= overlap < size")
     val step = size - overlap
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast(LongType).as("id"),
-        coalesce(col(textCol), lit("")).as("text"))
-      .as[(Long, String)]
-      .mapPartitions(_.flatMap { case (id, text0) =>
-        val text = text0.toLowerCase.replaceAll("\\s+", " ").trim
-        val tokens = if (text.isEmpty) Array.empty[String] else text.split(" ")
-        val n = tokens.length
-        if (n == 0) Iterator.empty
-        else (0 to (n - 1) / step).iterator.map { k =>
-          val start = k * step
-          val slice = tokens.slice(start, start + size)
-          (id, k, start, slice.length, slice.mkString(" "))
-        }
-      })
-      .toDF("doc_id", "chunk", "start_tok", "n_toks", "chunk_text")
+    val chunks = Dedup.kernel("chunks", udf { (t: String) =>
+      val tokens = normTokens(t)
+      (0 until (tokens.length + step - 1) / step).map { k =>
+        val slice = tokens.slice(k * step, k * step + size)
+        (k * step, slice.length, slice.mkString(" "))
+      }
+    })
+    docs.select(col(idCol).cast(LongType).as("doc_id"),
+        chunks(coalesce(col(textCol), lit(""))).as("cs"))
+      .select(col("doc_id"), posexplode(col("cs")).as(Seq("chunk", "c")))
+      .select(col("doc_id"), col("chunk"), col("c._1").as("start_tok"),
+        col("c._2").as("n_toks"), col("c._3").as("chunk_text"))
   }
 
   /** Exact near-dup corpus for tests/benches: every doc whose id hits the

@@ -9,15 +9,16 @@ import org.apache.spark.sql.types._
 /** Static, generated-code-callable 6dp-rounded cosine similarity over two
   * float arrays — the exact arithmetic of [[graft.engine.Similarity
   * .cosineArrays]] followed by the same HALF_UP BigDecimal rounding the
-  * typed scoring stage applied: a sequential double fold over min-length
-  * elements (deterministic summation order), 0.0 for a zero-norm side.
+  * typed scoring stage applied: a sequential double fold (deterministic
+  * summation order), 0.0 for a zero-norm side.
   * Replacing the typed `scorePairs` stage with this expression removes the
   * per-pair encoder round trip (two array copies, a tuple allocation and a
   * DeserializeToObject/SerializeFromObject pair in the plan) and keeps the
-  * candidate-scoring projection inside whole-stage codegen. A null
-  * element has no value to score, so it raises rather than being read as
-  * one — parquet arrays are always `containsNull`, so the check is per
-  * row, not in `checkInputDataTypes`. */
+  * candidate-scoring projection inside whole-stage codegen. Two input
+  * faults raise instead of scoring: a null element has no value to score
+  * (parquet arrays are always `containsNull`, so the check is per row, not
+  * in `checkInputDataTypes`), and two lengths that differ mean a corpus,
+  * index or query built at another dimension. */
 object CosineSim6Bridge {
   private def requireNoNull(v: ArrayData): Unit = {
     var i = 0
@@ -30,8 +31,10 @@ object CosineSim6Bridge {
 
   def sim(a: ArrayData, b: ArrayData): Double = {
     requireNoNull(a); requireNoNull(b)
+    val n = a.numElements()
+    if (b.numElements() != n) throw new IllegalArgumentException(
+      s"graft_cosine_sim6: array lengths differ ($n vs ${b.numElements()})")
     var dot = 0.0; var na = 0.0; var nb = 0.0
-    val n = math.min(a.numElements(), b.numElements())
     var i = 0
     while (i < n) {
       val x = a.getFloat(i).toDouble; val y = b.getFloat(i).toDouble

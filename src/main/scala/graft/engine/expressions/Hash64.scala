@@ -11,21 +11,13 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Static, generated-code-callable bridge to the engine's 64-bit string
   * hash ([[Dedup.hash64]]: first 8 MD5 bytes big-endian + seed·golden,
   * splitmix64 finalizer — the family every LSH/split/sample op uses and
-  * [[graft.engine.HashSql]] mirrors in DuckDB). Operates on the UTF8String's
+  * [[graft.engine.HashSql]] mirrors in DuckDB). Hashes the UTF8String's
   * bytes directly (UTF8String holds UTF-8, the same bytes
-  * `String.getBytes("UTF-8")` yields), with a thread-local MessageDigest so
-  * the codegen'd hot loop allocates nothing per row. */
+  * `String.getBytes("UTF-8")` yields) through the engine's one thread-local
+  * MessageDigest, so the codegen'd hot loop allocates no digest per row. */
 object Hash64Bridge {
-  private val mdTl: ThreadLocal[java.security.MessageDigest] =
-    ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("MD5"))
-
-  def hash(s: UTF8String, seed: Int): Long = {
-    val d = mdTl.get().digest(s.getBytes)
-    val base = ((d(0) & 0xffL) << 56) | ((d(1) & 0xffL) << 48) |
-      ((d(2) & 0xffL) << 40) | ((d(3) & 0xffL) << 32) | ((d(4) & 0xffL) << 24) |
-      ((d(5) & 0xffL) << 16) | ((d(6) & 0xffL) << 8) | (d(7) & 0xffL)
-    Dedup.mix64(base + seed * Dedup.golden)
-  }
+  def hash(s: UTF8String, seed: Int): Long =
+    Dedup.mix64(Dedup.md5Base(s.getBytes) + seed * Dedup.golden)
 
   def bucket(s: UTF8String, seed: Int, mod: Long): Long =
     java.lang.Long.remainderUnsigned(hash(s, seed), mod)
@@ -34,9 +26,13 @@ object Hash64Bridge {
 /** Native Catalyst expression for the engine's seeded 64-bit string hash.
   * `mod == 0` emits the raw signed hash; `mod > 0` emits the unsigned
   * remainder bucket (`remainderUnsigned(h, mod)`). Codegen emits a static
-  * call — no CodegenFallback, no UDF boxing, no typed projection — so the
-  * split/sample/packing pipeline stages stay inside whole-stage codegen
-  * with full column pruning. */
+  * call, so the split/sample/packing pipeline stages stay inside
+  * whole-stage codegen with full column pruning. It stays a native
+  * expression, where the per-row text kernels are `udf` columns
+  * ([[Dedup.kernel]]), because it backs the SQL function `graft_hash64`
+  * (as [[SimHash64]] and [[CosineSim6]] back theirs), and a
+  * deterministic expression keeps filter pushdown and constant folding
+  * that a kernel column gives up. */
 case class Hash64(child: Expression, seed: Int, mod: Long = 0L)
     extends UnaryExpression {
   require(mod >= 0L, "mod must be 0 (raw hash) or positive (bucket)")

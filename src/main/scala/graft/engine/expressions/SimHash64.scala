@@ -11,21 +11,18 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Static, generated-code-callable 64-bit SimHash over whitespace tokens —
   * the exact semantics of [[Dedup.simhashFrame]]'s signature loop (per-token
   * `hash64(token, 0)` = splitmix64 over the md5 base, 64 up/down bit
-  * counters, sign → bit). A single thread-local MessageDigest serves the
-  * whole hot loop, so codegen'd evaluation allocates only the token array. */
+  * counters, sign → bit). The engine's one thread-local MessageDigest
+  * ([[Dedup.md5Base]]) serves the whole hot loop, so codegen'd evaluation
+  * allocates only the token array. */
 object SimHash64Bridge {
-  private val mdTl: ThreadLocal[java.security.MessageDigest] =
-    ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("MD5"))
-
   def simhash(s: UTF8String): Long = simhashString(s.toString)
 
   def simhashString(text: String): Long = {
-    val md = mdTl.get()
     val tokens = text.trim.split("\\s+")
     val counters = new Array[Int](64)
     var ti = 0
     while (ti < tokens.length) {
-      val hv = Dedup.mix64(Dedup.md5Base(md, tokens(ti))) // hash64(token, 0)
+      val hv = Dedup.hash64(tokens(ti), 0)
       var j = 0
       while (j < 64) {
         if (((hv >>> j) & 1L) == 1L) counters(j) += 1 else counters(j) -= 1

@@ -111,8 +111,8 @@ object StreamingChecks {
   }
 
   /** Streaming NEAR-dup detection against a static corpus snapshot: each
-    * stream doc's MinHash band keys (same typed signature stage as the
-    * batch path) probe the snapshot's precomputed
+    * stream doc's MinHash band keys (the batch path's signature column)
+    * probe the snapshot's precomputed
     * [[graft.engine.Dedup.minhashIndex]] with a stream-static equi-join on
     * (band, bucket), and every candidate is verified with the exact shingle
     * Jaccard — LSH only generates candidates, identical to batch
@@ -132,18 +132,12 @@ object StreamingChecks {
       stream: DataFrame, staticIndex: DataFrame, idCol: String, textCol: String,
       k: Int = 3, h: Int = 16, bands: Int = 4, threshold: Double = 0.5,
       tsCol: Option[String] = None, watermark: String = "2 minutes"): DataFrame = {
-    val probeCols = col("id").as("stream_id") +: col("shingles").as("sh_s") +:
-      posexplode(col("bands")).as(Seq("band", "bucket")) +:
-      tsCol.map(col).toSeq
-    // the watermark column must ride THROUGH the typed signature stage —
-    // a post-hoc join back to the stream would be a stream-stream join
-    val sigs = tsCol match {
-      case Some(ts) => graft.engine.Dedup
-        .signatureFrameTs(stream, idCol, textCol, ts, k, h, bands)
-      case None => graft.engine.Dedup
-        .signatureFrame(stream, idCol, textCol, k, h, bands)
-    }
-    val probes = sigs.select(probeCols: _*)
+    // the watermark column rides beside the signature column — a post-hoc
+    // join back to the stream would be a stream-stream join
+    val probes = graft.engine.Dedup
+      .signatureFrame(withTs(stream, tsCol), idCol, textCol, k, h, bands, tsCol.toSeq)
+      .select(col("id").as("stream_id") +: col("shingles").as("sh_s") +:
+        posexplode(col("bands")).as(Seq("band", "bucket")) +: tsCol.map(col).toSeq: _*)
     val matched = probes
       .join(staticIndex.select(col("band"), col("bucket"),
         col("id").as("static_id"), col("shingles").as("sh_i")),
@@ -162,7 +156,7 @@ object StreamingChecks {
   }
 
   /** Continuous-ingestion EMBEDDING decontamination: each stream vector's
-    * SRP bucket (same typed bucketing stage as the batch path) probes a
+    * SRP bucket (the batch path's bucket column) probes a
     * static [[graft.engine.Similarity.embedIndex]] of the benchmark with a
     * stream-static equi-join, and every candidate is verified with the
     * exact cosine — identical semantics to batch
@@ -179,12 +173,10 @@ object StreamingChecks {
       stream: DataFrame, staticIndex: DataFrame, idCol: String, vecCol: String,
       bits: Int = 6, threshold: Double = 0.99,
       tsCol: Option[String] = None, watermark: String = "2 minutes"): DataFrame = {
-    val probes = (tsCol match {
-      case Some(ts) => graft.engine.Similarity
-        .srpFrameTs(stream, idCol, vecCol, ts, bits)
-      case None => graft.engine.Similarity.srpFrame(stream, idCol, vecCol, bits)
-    }).select(col("id").as("id_a") +: col("vec").as("vec_a") +:
-      col("bucket") +: tsCol.map(col).toSeq: _*)
+    val probes = graft.engine.Similarity
+      .srpFrame(withTs(stream, tsCol), idCol, vecCol, bits, tsCol.toSeq)
+      .select(col("id").as("id_a") +: col("vec").as("vec_a") +:
+        col("bucket") +: tsCol.map(col).toSeq: _*)
     // the watermark column rides through the scorer — scorePairs keeps
     // every non-vector column, and joining the ts back afterwards would be
     // a stream-stream join
@@ -200,6 +192,10 @@ object StreamingChecks {
       case None => out
     }
   }
+
+  /** The stream with its event-time column, if any, cast to a timestamp. */
+  private def withTs(stream: DataFrame, tsCol: Option[String]): DataFrame =
+    tsCol.fold(stream)(ts => stream.withColumn(ts, col(ts).cast(TimestampType)))
 
   final case class PartitionCounts(partition: Int, passCount: Long, failCount: Long)
 

@@ -123,14 +123,24 @@ class DedupSimilaritySpec extends AnyFunSuite {
           case _ => (vec(64), vec(64))
         }
       }
+    // a length mismatch (the empty-side and mismatched cases) is an input
+    // fault: it raises rather than scoring over the shorter prefix
+    val (mismatched, scored) = cases.zipWithIndex.partition { case ((a, b), _) =>
+      a.length != b.length }
+    assert(mismatched.nonEmpty)
+    mismatched.foreach { case ((a, b), i) =>
+      intercept[IllegalArgumentException](expressions.CosineSim6Bridge.sim(
+        org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(a),
+        org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(b)))
+    }
     val df = spark.createDataFrame(
-      cases.zipWithIndex.map { case ((a, b), i) => (i.toLong, a.toSeq, b.toSeq) })
+      scored.map { case ((a, b), i) => (i.toLong, a.toSeq, b.toSeq) })
       .toDF("i", "a", "b")
     val got = df.select(col("i"), column(expressions.CosineSim6(
         expression(col("a").cast("array<float>")),
         expression(col("b").cast("array<float>")))).as("sim"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    cases.zipWithIndex.foreach { case ((a, b), i) =>
+    scored.foreach { case ((a, b), i) =>
       val want = new java.math.BigDecimal(Similarity.cosineArrays(a, b))
         .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
       assert(got(i.toLong) === want, s"case $i")
@@ -164,6 +174,19 @@ class DedupSimilaritySpec extends AnyFunSuite {
       val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
       assert(chain.exists(t => t.isInstanceOf[IllegalArgumentException] &&
         t.getMessage.contains("graft_cosine_sim6")), s"$a / $b: $e")
+    }
+  }
+
+  test("CosineSim6 raises on arrays of different lengths, naming both lengths") {
+    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+    import spark.implicits._
+    Seq((Seq(1f, 2f, 3f), Seq(1f, 2f)), (Seq.empty[Float], Seq(1f))).foreach { case (a, b) =>
+      val df = Seq((a, b)).toDF("a", "b")
+      val e = intercept[Exception](df.select(column(expressions.CosineSim6(
+        expression(col("a")), expression(col("b"))))).collect())
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(t => t.isInstanceOf[IllegalArgumentException] &&
+        t.getMessage.contains(s"(${a.length} vs ${b.length})")), s"$a / $b: $e")
     }
   }
 

@@ -99,7 +99,7 @@ class PipelineSpec extends AnyFunSuite {
     assert(byId(100L)._3 < byId(200L)._3,
       s"in-vocab ${byId(100L)._3} must beat alien ${byId(200L)._3}")
     rows.foreach(r => assert(r._4 === (r._3 <= 50.0))) // keep is the threshold verdict
-    // scoring is one doc-local typed projection — no shuffle in the plan
+    // scoring is one doc-local kernel column — no shuffle in the plan
     val plan = out.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan.take(800))
     // bit-exact under repartitioning (sequential in-doc fold)

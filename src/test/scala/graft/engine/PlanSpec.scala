@@ -116,6 +116,49 @@ class PlanSpec extends AnyFunSuite {
     assert(physical(verdicts).contains("graft_violations("))
   }
 
+  test("per-row text and vector kernels are udf columns, each once in the operator that defines it") {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, DeserializeToObject, LogicalPlan, Project}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    // every operator of a plan, the plans of its cached relations included
+    def operators(p: LogicalPlan): Seq[LogicalPlan] = p +: (p match {
+      case r: InMemoryRelation => operators(r.cacheBuilder.logicalPlan)
+      case _ => p.children.flatMap(operators)
+    })
+    def check(name: String, df: org.apache.spark.sql.DataFrame, kernels: String*): Unit = {
+      val ops = operators(df.queryExecution.optimizedPlan)
+      assert(!ops.exists(_.isInstanceOf[DeserializeToObject]),
+        s"$name: typed object stage in\n${df.queryExecution.optimizedPlan}")
+      val sites = ops.map(op => op -> op.expressions.flatMap(_.collect {
+        case u: ScalaUDF => u.udfName.getOrElse("")
+      })).filter(_._2.nonEmpty)
+      kernels.foreach(k => assert(sites.exists(_._2.contains(k)), s"$name: no $k kernel"))
+      // a kernel over an aggregate's output (dupSpans' coverage) collapses
+      // into the Aggregate's result list, still once per row
+      sites.foreach { case (op, names) =>
+        assert(op.isInstanceOf[Project] || op.isInstanceOf[Aggregate],
+          s"$name: kernel outside a Project: $op")
+        assert(names.distinct.size === names.size, s"$name: kernel evaluated twice in $op")
+      }
+    }
+    try {
+      check("minhashPairs", Dedup.minhashPairs(docs, "doc_id", "text"), "minhash")
+      check("winnowPairs", Dedup.winnowPairs(docs, "doc_id", "text"), "winnow")
+      check("dupSpans", Dedup.dupSpans(docs, "doc_id", "text"),
+        "dup_windows", "dup_coverage")
+      check("scrubDupSpans", Dedup.scrubDupSpans(docs, "doc_id", "text"),
+        "normalize", "scrub_windows", "scrub_rebuild")
+      check("chunkDocs", TextOps.chunkDocs(docs, "doc_id", "text"), "chunks")
+      check("embedIndex", Similarity.embedIndex(emb), "srp_bucket")
+      check("ivfTopK", Similarity.ivfTopK(emb, emb.where(col("vec_id") < 5), 3),
+        "ivf_cell", "ivf_probe_cells")
+      check("lmPerplexity", Pipeline.lmPerplexity(docs, docs, "doc_id", "text"),
+        "lm_perplexity")
+    } finally Caches.releaseAll()
+  }
+
   test("salted dedup pre-aggregates before the final shuffle (two-phase)") {
     val dups = Checks.duplicateKeys(DocTable.docs(spark, sfDir), "doc_id")
     val plan = physical(dups)

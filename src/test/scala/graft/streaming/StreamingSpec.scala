@@ -223,9 +223,9 @@ class StreamingSpec extends AnyFunSuite {
     assert(twins.nonEmpty)
     val t0 = Timestamp.valueOf("2026-01-01 00:00:00")
     val input = MemoryStream[(Long, String, Timestamp)]
-    // the tsCol path must carry the event-time column THROUGH the typed
-    // signature stage (it used to be dropped there, which made any
-    // tsCol=Some(...) call fail analysis) and bound re-sent duplicates
+    // the tsCol path must keep the event-time column beside the signature
+    // column (a dropped ts makes any tsCol=Some(...) call fail analysis)
+    // and bound re-sent duplicates
     val matches = StreamingChecks.streamingNearDup(
       input.toDF().toDF("doc_id", "text", "ts"), index, "doc_id", "text",
       threshold = 0.5, tsCol = Some("ts"))
@@ -339,7 +339,7 @@ class StreamingSpec extends AnyFunSuite {
   test("pipeline quality filter and split assignment run unchanged on a stream") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    // both ops are stateless per-row (typed projection + codegen columns),
+    // both ops are stateless per-row (kernel column + codegen columns),
     // so the SAME batch operators must work under incremental execution —
     // this is the ingestion-time filtering path of a training-data pipeline
     val input = MemoryStream[(Long, String)]
