@@ -1,5 +1,6 @@
 package graft.engine
 
+import graft.engine.expressions.GraftFunctions.everyElement
 import graft.json._
 import graft.schema._
 import org.apache.spark.sql.Column
@@ -21,16 +22,31 @@ import org.apache.spark.sql.types._
   * `validate.cljc:824-832`; the engine's exploded violation rows are the
   * flattened leaves — same validity semantics: valid ⟺ zero leaves).
   *
-  * Everything is built from `org.apache.spark.sql.functions` (no UDFs), and
-  * validation is a narrow map over the scan, no shuffle. The boolean
-  * lowering stays inside whole-stage codegen wherever it needs no lambda:
-  * object `items` over struct elements (nullable ones too, when the
-  * element's own `type` rejects null) use the field-array form. `forall`,
-  * `exists` and `transform` are CodegenFallback and take a projection that
-  * holds them out of codegen, so every bulk caller (`ValidationJob.compiled`)
+  * Everything is built from `org.apache.spark.sql.functions` and the native
+  * expressions of `graft.engine.expressions` (no UDFs), and validation is a
+  * narrow map over the scan, no shuffle. The boolean lowering stays inside
+  * whole-stage codegen wherever it needs no lambda: object `items` over
+  * struct elements (nullable ones too, when the element's own `type`
+  * rejects null) use the field-array form. `forall`, `exists` and
+  * `transform` are CodegenFallback and take a projection that holds them
+  * out of codegen, so every bulk caller (`ValidationJob.compiled`)
   * evaluates the error lowering, which needs them for paths and messages,
   * interpreted inside the native [[graft.engine.expressions.ViolationsOf]],
   * for failing rows only.
+  *
+  * The boolean lowering references only the leaves it checks, so Parquet
+  * nested-schema pruning drops the rest of a struct array from the scan
+  * (for the doc schema, `spans.text` and `spans.media_ref`). Field arrays
+  * (`spans.kind`) and `spans IS NULL` prune; anything over the whole array
+  * (`size(spans)`, `transform`, `forall`, a null-element test) reads every
+  * field. So `minItems`/`maxItems` take the size of one field array, and
+  * the element-null guard of object `items` is left out when a `required`
+  * twin, which scans its field array for nulls, already fails a null
+  * element. The guard, `required`'s twin and the `enum`/`const` twin run
+  * as one allocation-free loop, [[graft.engine.expressions.EveryElement]],
+  * not as `array_intersect`/`array_except`, which build a set and an array
+  * per row. The error lowering still reads the whole payload: its paths
+  * need each element's nullness.
   *
   * Mapping decisions for columnar data (documented divergence from the
   * dynamic-JSON world): a NULL struct field means *absent* (Parquet cannot
@@ -121,10 +137,13 @@ object ColumnCompiler {
     * field-array twins: the checks' `overArray` forms, conjoined in plan
     * order; None when a check has none. Only subjects present in every
     * element or gated on their own null get a twin, so every gate here is
-    * such a gate and drops out. */
-  private def arrayValidOf(p: Plan): Option[Column] = {
-    def conjuncts(p: Plan): Option[Seq[Column]] = p match {
-      case Check(_, _, _, _, over) => over.map(Seq(_))
+    * such a gate and drops out. The flag is whether a `required` twin is
+    * among the conjuncts: it fails on a null in its field array, and a
+    * null element is a null in every field array, so it fails a null
+    * element too. */
+  private def arrayValidOf(p: Plan): Option[(Column, Boolean)] = {
+    def conjuncts(p: Plan): Option[Seq[Check]] = p match {
+      case c: Check => c.overArray.map(_ => Seq(c))
       case All(parts) =>
         val cs = parts.map(conjuncts)
         Option.when(cs.forall(_.isDefined))(cs.flatten.flatten)
@@ -132,7 +151,8 @@ object ColumnCompiler {
       case Cond(_, t, f) => Option.when(t == pass && f == pass)(Nil)
       case _: Each => None // nested items
     }
-    conjuncts(p).map(_.reduceOption(_ && _).getOrElse(lit(true)))
+    conjuncts(p).map(cs => (cs.flatMap(_.overArray).reduceOption(_ && _).getOrElse(lit(true)),
+      cs.exists(_.keyword == "required")))
   }
 
   // ---------------------------------------------------------------------------
@@ -315,11 +335,12 @@ object ColumnCompiler {
       onlyIf(numeric)(Check(col.isNull || holds(col, bound), path, kw, s"Failed $kw check",
         twin.map(a => coalesce(holds(extreme(a), bound), lit(true)))))
     }
-    // every twin value is one of `values` or null (absent); array_except
-    // keeps whole-stage codegen, unlike array_compact or filter
+    // every twin value is one of `values` or null (absent), in one
+    // allocation-free loop; the literal array, typed by the analyzer, sets
+    // the type both sides compare in, as it would for array_except
     def inValues(values: Vector[JVal]): Option[Column] = twin.filter(_ => scalar).map { a =>
       val allowed = values.filter(x => x != JNull && literalComparable(x, jsonType)).map(literal)
-      size(array_except(a, array(allowed :+ lit(null).cast(dt): _*))) === 0
+      everyElement(a, Some(array(allowed :+ lit(null).cast(dt): _*)))
     }
 
     // object keywords: applied to non-null struct / string-keyed map values
@@ -419,14 +440,19 @@ object ColumnCompiler {
             // keyword. When the element's own `type` rejects null, "no null
             // element and the field-array form" is exact: without one the
             // data is the non-null case, with one both sides are false.
-            // Otherwise the element plan keeps no twin, so an admitted
-            // `type` does not fold to pass for a null element.
+            // A `required` twin already fails a null element, so the
+            // element-null guard, which reads every field of the element,
+            // joins the form only without one. Otherwise the element plan
+            // keeps no twin, so an admitted `type` does not fold to pass
+            // for a null element.
             val rejectsNull =
               !s.has("$ref") && s.get("type").exists(t => !typeList(t).contains("null"))
             val (twin, fast) = elem match {
-              case _: StructType if !containsNull => (Some(col), overFields)
-              case _: StructType if rejectsNull => (None, overFields.map(
-                size(array_intersect(col, array(lit(null).cast(elem)))) === 0 && _))
+              case _: StructType if !containsNull => (Some(col), overFields.map(_._1))
+              case _: StructType if rejectsNull => (None, overFields.map {
+                case (form, nullElementFails) =>
+                  if (nullElementFails) form else everyElement(col, None) && form
+              })
               case _ => (None, None)
             }
             gate(col.isNull, Each(col, body(twin), fast))
@@ -448,9 +474,20 @@ object ColumnCompiler {
 
       case "maxItems" | "minItems" =>
         val n = count(kw, v)
+        // over struct elements, the length of one field array, so nested-
+        // schema pruning can keep the scan to the fields the plan reads
+        // (`size` of the whole array reads all of them): a field a sibling
+        // `items` requires, which its twin reads, else the first field
+        val sized = dt match {
+          case ArrayType(st: StructType, _) if st.nonEmpty =>
+            val required = schema.get("items").collect { case o: JObj => o.get("required") }.flatten
+              .collect { case JArr(ks) => ks.collect { case JStr(k) => k } }.getOrElse(Vector.empty)
+            col.getField(required.find(st.fieldNames.contains).getOrElse(st.fieldNames.head))
+          case _ => col
+        }
         onlyIf(jsonType == "array")(
-          if (kw == "maxItems") Check(col.isNull || size(col) <= n, path, kw, "maxItems exceeded")
-          else Check(col.isNull || size(col) >= n, path, kw, "minItems not reached"))
+          if (kw == "maxItems") Check(col.isNull || size(sized) <= n, path, kw, "maxItems exceeded")
+          else Check(col.isNull || size(sized) >= n, path, kw, "minItems not reached"))
 
       case "uniqueItems" =>
         val unique = v match { case JBool(b) => b; case _ => bad }
@@ -480,11 +517,11 @@ object ColumnCompiler {
               case _ => false
             }
           val present = member(k).map { case (c, _) => col.isNull || c.isNotNull }
-          // a twin reaches a struct only as a non-null element
+          // no null in the field array, whatever the field's nullability:
+          // a null element is a null there too (see `items`)
           val everywhere = (dt, twin) match {
-            case (st: StructType, Some(a)) => Some(st.fields.find(_.name == k).fold(size(a) === 0)(f =>
-              if (!f.nullable) lit(true)
-              else size(array_intersect(a.getField(k), array(lit(null).cast(f.dataType)))) === 0))
+            case (st: StructType, Some(a)) => Some(
+              if (st.fieldNames.contains(k)) everyElement(a.getField(k), None) else size(a) === 0)
             case _ => None
           }
           if (recoverable && readAfter) throw Unsupported(s"later keywords read the default of $k")

@@ -127,8 +127,18 @@ object TextOps {
       k: Int = 8, window: Int = 16): DataFrame = {
     val fingerprints = Dedup.kernel("winnow",
       udf((t: String) => winnow(normalize(t), k, window)))
-    docs.select(col(idCol).cast(LongType).as("id"),
+    // a null id raises, and the id stays non-nullable, so the candidate
+    // self-join downstream carries no `isnotnull` filters on it
+    docs.select(nonNull(col(idCol).cast(LongType), s"- winnowing id $idCol").as("id"),
       fingerprints(coalesce(col(textCol), lit(""))).as("fingerprints"))
+  }
+
+  /** `c`, non-nullable: a null raises (NOT_NULL_ASSERT_VIOLATION naming
+    * `what`), as a typed stage's primitive field does. */
+  private def nonNull(c: Column, what: String): Column = {
+    import org.apache.spark.sql.GraftColumnBridge
+    GraftColumnBridge.column(org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull(
+      GraftColumnBridge.expression(c), Seq(what)))
   }
 
   /** Lowercased, whitespace-collapsed, trimmed text — the one normal form

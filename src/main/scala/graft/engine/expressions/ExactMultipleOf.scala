@@ -62,6 +62,13 @@ object GraftFunctions {
         org.apache.spark.sql.GraftColumnBridge.expression(x.cast(DoubleType)),
         org.apache.spark.sql.GraftColumnBridge.expression(m.cast(DoubleType))))
 
+  /** Column-level [[EveryElement]]: every element of `array` is non-null
+    * (`allowed` None), or is null or one of `allowed`'s literal values. */
+  def everyElement(array: Column, allowed: Option[Column]): Column =
+    org.apache.spark.sql.GraftColumnBridge.column(EveryElement(
+      org.apache.spark.sql.GraftColumnBridge.expression(array),
+      allowed.map(org.apache.spark.sql.GraftColumnBridge.expression)))
+
   /** Column-level `graft_validate` (usable without any registration):
     * struct(valid, violations) of a JSON instance column against a JSON
     * schema column (typically `lit(schemaJson)`; a non-literal schema

@@ -24,6 +24,12 @@ case class ViolationsOf(payload: Expression, lowering: Expression) extends Unary
   override def dataType: DataType = lowering.dataType
   override def nullable: Boolean = payload.nullable || lowering.nullable
   override def prettyName: String = "graft_violations"
+  // Marked nondeterministic so no filter is pushed below the projection
+  // that defines it: `size(errors) > 0`, and the `isnotnull(errors)` that
+  // InferFiltersFromGenerate adds under an explode, would otherwise inline
+  // this expression (and the verdict it is gated on) into a Filter and
+  // evaluate both again for every row.
+  override lazy val deterministic: Boolean = false
   // the plan string shows the payload only, not the lowering's lambdas
   override protected def stringArgs: Iterator[Any] = Iterator(payload)
 

@@ -284,6 +284,17 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(overlap3 < 0.2, s"distinct text should share few fingerprints, got $overlap3")
   }
 
+  test("winnowing fingerprints raise on a null id, like the typed stage they replace") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+        Row(1L, "some text long enough to fingerprint"), Row(null, "another text")), 1),
+      StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))))
+    val e = intercept[Exception](TextOps.winnowingFingerprints(df, "doc_id", "text").collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage.contains("NOT_NULL_ASSERT_VIOLATION")), e.toString)
+  }
+
   test("text quality scores stay in [0,1] and language id hits the label often") {
     val q = docs.select(TextOps.qualityColumns(coalesce(col("text"), lit("")))
       .map { case (n, c) => c.as(n) }: _*).collect()

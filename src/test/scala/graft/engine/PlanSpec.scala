@@ -69,7 +69,7 @@ class PlanSpec extends AnyFunSuite {
       s"valid projection must be codegen'd: ${validLine.take(300)}")
     assert(!validLine.contains("forall("),
       s"span items must compile to vectorized array ops, not forall: ${validLine.take(300)}")
-    assert(validLine.contains("array_except") || validLine.contains("array_min"),
+    assert(validLine.contains("graft_every_element") && validLine.contains("array_min"),
       s"expected vectorized item conditions: ${validLine.take(300)}")
   }
 
@@ -114,6 +114,43 @@ class PlanSpec extends AnyFunSuite {
     val verdicts = SchemaRegistry.validateWith(spark, docs, registry, "schema_name")
     projections(verdicts, "valid", "errors")
     assert(physical(verdicts).contains("graft_violations("))
+  }
+
+  test("the parquet-read verdict reads only the leaves it checks, with no set operations") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val docs = fileBacked(DocTable.docs(spark, sfDir))
+    val verdicts = ValidationJob.withVerdictsOnly(spark, docs, DocTable.docSchemaJson)
+      .select("doc_num", "valid")
+    val plan = verdicts.queryExecution.executedPlan
+    val read = plan.collect { case s: FileSourceScanExec => s.requiredSchema }
+    assert(read.size === 1, plan.toString)
+    // the doc schema never checks `text`, and `media_ref` only through a
+    // type its nullable field always passes
+    val spans = read.head("spans").dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType]
+      .elementType.asInstanceOf[org.apache.spark.sql.types.StructType]
+    assert(spans.fieldNames.toSeq === Seq("kind", "offset"), read.head.simpleString)
+    projections(verdicts, "valid")
+    assert(!plan.toString.contains("array_intersect") && !plan.toString.contains("array_except"),
+      plan.toString)
+  }
+
+  test("violation rows evaluate the verdict and the violation array once per row") {
+    // without an observe between them, `size(errors) > 0` and the
+    // `isnotnull(errors)` inferred under explode must stay above the
+    // projection that defines `errors`, not be inlined into a Filter
+    val docs = fileBacked(DocTable.docs(spark, sfDir))
+    val rows = ValidationJob.violations(
+      ValidationJob.withVerdicts(spark, docs, DocTable.docSchemaJson))
+    val plan = physical(rows)
+    assert("graft_violations\\(".r.findAllIn(plan).size === 1, plan)
+    assert("RLIKE".r.findAllIn(plan).size === 1, plan)
+  }
+
+  test("winnowing ids are non-nullable, so the candidate join infers no null filters") {
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
+    assert(!TextOps.winnowingFingerprints(docs, "doc_id", "text").schema("id").nullable)
+    val plan = Dedup.winnowPairs(docs, "doc_id", "text").queryExecution.optimizedPlan.toString
+    try assert(!plan.contains("isnotnull(id"), plan) finally Caches.releaseAll()
   }
 
   test("per-row text and vector kernels are udf columns, each once in the operator that defines it") {

@@ -329,7 +329,8 @@ class RandomSchemaSpec extends AnyFunSuite {
       Row("doc-2", Seq(null, Row("imag", "t", null, -1))),    // beside a bad sibling
       Row("doc-3", Seq(Row(null, "t", null, 0))),             // a missing kind
       Row("doc-4", Seq(Row("media", null, null, 1))),         // media with no ref
-      Row("doc-5", Seq(Row("text", "t", null, 0), Row("media", null, "m-1", 2))))
+      Row("doc-5", Seq(Row("text", "t", null, 0), Row("media", null, "m-1", 2))),
+      Row("doc-6", Seq(null, Row(null, "t", null, 0))))       // beside a missing kind
     val df = spark.createDataFrame(spark.sparkContext.parallelize(docs, 2),
       dfSchemaWith(containsNull = true)).withColumn("doc_num", monotonically_increasing_id())
     val mediaHasRef = JObj.of(
@@ -345,37 +346,71 @@ class RandomSchemaSpec extends AnyFunSuite {
             "offset" -> JObj.of("type" -> jstr("integer"), "minimum" -> jnum(0))),
           "allOf" -> JArr(
             Option.when(typeInAllOf)(JObj.of("type" -> jstr("object"))).toVector :+ mediaHasRef)))
+    // a required `kind` that its valid default recovers: no `required`
+    // twin, so the element-null guard must stay
+    val recoveredKind = JObj.of("type" -> jstr("object"), "required" -> arr("kind"),
+      "properties" -> JObj.of(
+        "kind" -> JObj.of("enum" -> arr("text", "media"), "default" -> jstr("text")),
+        "offset" -> JObj.of("type" -> jstr("integer"), "minimum" -> jnum(0))))
     val nullFails = Map("doc-1" -> false, "doc-2" -> false, "doc-3" -> false, "doc-4" -> true,
-      "doc-5" -> true)
+      "doc-5" -> true, "doc-6" -> false)
     val nullPasses = nullFails + ("doc-1" -> true)
-    // (items schema, expected verdicts, whether `valid` keeps forall)
+    // (items schema, expected verdicts, the form of `valid`: "forall", the
+    // field-array form with the element-null guard, or without it)
     val cases = Seq(
-      (element(Some(jstr("object")), typeInAllOf = false), nullFails, false),
+      (element(Some(jstr("object")), typeInAllOf = false), nullFails, "twin"),
       (element(Some(jstr("object")), typeInAllOf = false, required = false),
-        nullFails + ("doc-3" -> true), false),
-      (element(Some(arr("object", "null")), typeInAllOf = false), nullPasses, true),
-      (element(None, typeInAllOf = false), nullPasses, true),
-      (element(None, typeInAllOf = true), nullFails, true))
-    cases.foreach { case (items, expected, keepsForall) =>
-      val schemaJson = Json.render(JObj.of("properties" -> JObj.of("spans" -> JObj.of("items" -> items))))
-      def byDoc(out: org.apache.spark.sql.DataFrame) =
-        out.select("doc_id", "valid").collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
-      def leaves(out: org.apache.spark.sql.DataFrame) =
-        out.select(col("doc_id"), explode(col("errors")).as("v"))
-          .select("doc_id", "v.path", "v.keyword").collect()
-          .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-      val only = ValidationJob.withVerdictsOnly(spark, df, schemaJson)
-      assert(only.queryExecution.optimizedPlan.toString.contains("forall(") === keepsForall, schemaJson)
-      val full = ValidationJob.withVerdicts(spark, df, schemaJson)
-      val rowCore = RowValidator.validateRows(spark, df, schemaJson, Some(Seq("doc_id", "spans")))
-      assert(byDoc(only) === expected, schemaJson)
-      assert(byDoc(full) === expected, schemaJson)
-      assert(byDoc(rowCore) === expected, schemaJson)
-      val rows = leaves(full)
-      assert(rows === leaves(rowCore), schemaJson)
-      // valid ⟺ no violation rows
-      assert(expected.filter(!_._2).keySet === rows.map(_._1), schemaJson)
-      if (!expected("doc-1")) assert(rows.contains(("doc-1", "/spans/1", "type")))
-    }
+        nullFails + ("doc-3" -> true), "guard"),
+      (element(Some(arr("object", "null")), typeInAllOf = false), nullPasses, "forall"),
+      (element(None, typeInAllOf = false), nullPasses, "forall"),
+      (element(None, typeInAllOf = true), nullFails, "forall"),
+      (recoveredKind, nullFails + ("doc-3" -> true), "guard"))
+    cases.foreach { case (items, expected, form) => nullElementsAgree(df, items, expected, form) }
+
+    // a non-nullable field in a containsNull = true array: its field array
+    // still holds a null for a null element, so its `required` twin must
+    // scan it (the guard is dropped)
+    val offsetRequired = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+        Row("doc-1", Seq(Row("text", "t", null, 0), null)),
+        Row("doc-2", Seq(Row("text", "t", null, 0))),
+        Row("doc-3", Seq(null)),
+        Row("doc-4", Seq(Row("text", "t", null, -1)))), 2),
+      StructType(Seq(StructField("doc_id", StringType), StructField("spans", ArrayType(
+        StructType(DocTable.spanType.fields.map(f => f.copy(nullable = f.name != "offset"))),
+        containsNull = true)))))
+      .withColumn("doc_num", monotonically_increasing_id())
+    nullElementsAgree(offsetRequired,
+      JObj.of("type" -> jstr("object"), "required" -> arr("offset"),
+        "properties" -> JObj.of("offset" -> JObj.of("minimum" -> jnum(0)))),
+      Map("doc-1" -> false, "doc-2" -> true, "doc-3" -> false, "doc-4" -> false), "twin")
+  }
+
+  /** `items` over the spans of `df`: the verdict-only, full and row-core
+    * paths give `expected`, and the full path's violation rows equal the
+    * row core's. */
+  private def nullElementsAgree(df: org.apache.spark.sql.DataFrame, items: JVal,
+      expected: Map[String, Boolean], form: String): Unit = {
+    val schemaJson = Json.render(JObj.of("properties" -> JObj.of("spans" -> JObj.of("items" -> items))))
+    def byDoc(out: org.apache.spark.sql.DataFrame) =
+      out.select("doc_id", "valid").collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
+    def leaves(out: org.apache.spark.sql.DataFrame) =
+      out.select(col("doc_id"), explode(col("errors")).as("v"))
+        .select("doc_id", "v.path", "v.keyword").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+    val only = ValidationJob.withVerdictsOnly(spark, df, schemaJson)
+    val plan = only.queryExecution.optimizedPlan.toString
+    val guard = "graft_every_element\\(spans#\\d+, None\\)".r.findFirstIn(plan).isDefined
+    assert((plan.contains("forall("), guard) === (form == "forall", form == "guard"),
+      s"$form: $schemaJson")
+    val full = ValidationJob.withVerdicts(spark, df, schemaJson)
+    val rowCore = RowValidator.validateRows(spark, df, schemaJson, Some(Seq("doc_id", "spans")))
+    assert(byDoc(only) === expected, schemaJson)
+    assert(byDoc(full) === expected, schemaJson)
+    assert(byDoc(rowCore) === expected, schemaJson)
+    val rows = leaves(full)
+    assert(rows === leaves(rowCore), schemaJson)
+    // valid ⟺ no violation rows
+    assert(expected.filter(!_._2).keySet === rows.map(_._1), schemaJson)
+    if (!expected("doc-1")) assert(rows.contains(("doc-1", "/spans/1", "type")), schemaJson)
   }
 }
