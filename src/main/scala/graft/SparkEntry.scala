@@ -119,9 +119,8 @@ object SparkEntry {
     // parsed line with the full dynamic row core — same oracle as the
     // compiled path, so the parse→validate pipeline is DuckDB-gated too
     "q_jsonl_verdicts" -> ((s, dir) => {
-      import s.implicits._
       val lines = docs(s, dir).select(col("doc_num"),
-        to_json(struct(col("doc_id"), col("spans")))).as[(Long, String)]
+        to_json(struct(col("doc_id"), col("spans"))))
       JsonLines.validateStrings(s, lines, DocTable.docSchemaJson)
         .select(col("doc_num"), col("valid"), size(col("errors")).as("n_violations"))
         .orderBy("doc_num")
@@ -182,11 +181,11 @@ object SparkEntry {
           |  "l_returnflag":{"pattern":"^[ARN]$"},
           |  "l_linestatus":{"enum":["O","F"]}}}""".stripMargin
       val fields = li.schema.fields
-      val (valid, violations) = ValidationJob.compiled(s, graft.schema.SchemaDoc.schema(schemaJson),
+      val verdict = ValidationJob.verdict(s, schemaJson,
         struct(fields.map(f => col(f.name)).toSeq: _*), StructType(fields), "q_lineitem_validate")
-        .getOrElse(sys.error("the lineitem schema must compile to Columns"))
-      li.where(!valid)
-        .select(col("l_orderkey"), col("l_linenumber"), size(violations()).as("n_errors"))
+      if (verdict.rowCore.isDefined) sys.error("the lineitem schema must compile to Columns")
+      li.where(!verdict.valid)
+        .select(col("l_orderkey"), col("l_linenumber"), size(verdict.violations()).as("n_errors"))
         .orderBy("l_orderkey", "l_linenumber")
     }),
 
@@ -507,7 +506,7 @@ object SparkEntry {
         .orderBy("vec_id")
     }),
 
-    // mixed-kind corpus validated via the broadcast schema registry
+    // mixed-kind corpus validated via the schema registry
     // (per-row schema dispatch, column-compiled when expressible)
     "q_registry_verdicts" -> ((s, dir) => {
       val registry = SchemaRegistry.compile(Map(

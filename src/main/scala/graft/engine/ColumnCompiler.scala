@@ -29,7 +29,7 @@ import org.apache.spark.sql.types._
   * struct elements (nullable ones too, when the element's own `type`
   * rejects null) use the field-array form. `forall`, `exists` and
   * `transform` are CodegenFallback and take a projection that holds them
-  * out of codegen, so every bulk caller (`ValidationJob.compiled`)
+  * out of codegen, so every bulk caller (`ValidationJob.verdict`)
   * evaluates the error lowering, which needs them for paths and messages,
   * interpreted inside the native [[graft.engine.expressions.ViolationsOf]],
   * for failing rows only.
@@ -56,7 +56,10 @@ import org.apache.spark.sql.types._
   * Schemas using keywords that cannot be expressed as a finite Column tree
   * (recursive or external $ref, Spark types with no JSON mapping, malformed
   * keyword values …) throw [[ColumnCompiler.Unsupported]]; callers fall back
-  * to the row-level core (`ValidationJob.compiled` returns None).
+  * to the row-level core (`ValidationJob.verdict` returns the
+  * `graft_validate` verdict over the same payload, whose violation array
+  * has the type [[errorType]] too). A payload type with no JSON mapping
+  * then fails analysis there, naming the field.
   */
 object ColumnCompiler {
 

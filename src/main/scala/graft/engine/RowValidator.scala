@@ -3,14 +3,16 @@ package graft.engine
 import graft.json._
 import graft.schema.SchemaDoc
 import graft.validate.{Validator, Options, Violation}
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, struct}
 import org.apache.spark.sql.types._
 
-/** Fallback bulk path: the row-level validator core applied per row with the
-  * compiled schema registry **broadcast** to executors (north rule). Used for
-  * schemas the Column compiler cannot express (recursive `$ref`, dynamic
-  * objects, content decoding); still a narrow map — no shuffle.
+/** The row-level validator core as Spark sees it: the JSON mapping of Spark
+  * values ([[toJVal]]) and the per-instance verdict that the native
+  * `graft_validate` expression ([[graft.engine.expressions.ValidateJson]])
+  * runs for schemas the Column compiler cannot express (recursive `$ref`,
+  * dynamic objects, content decoding). That expression is the only way the
+  * row core enters a plan: a narrow projection, no shuffle.
   */
 object RowValidator {
 
@@ -55,58 +57,41 @@ object RowValidator {
         throw new IllegalArgumentException(s"cannot map $other of Spark type $t to JSON")
     }
 
-  /** Validate each row of `df`. The instance is the object formed from
-    * `payloadCols` (all columns when None) — pass the same field set the
-    * Column path validates, or the two declared-equivalent paths diverge on
-    * object-shape keywords (additionalProperties, maxProperties, …).
-    * Returns `df` columns + `valid:boolean` +
-    * `errors:array<struct<path,keyword,message>>`. */
-  def validateRows(spark: SparkSession, df: DataFrame, schemaJson: String,
-      payloadCols: Option[Seq[String]] = None): DataFrame = {
-    val bcSchema: Broadcast[SchemaDoc] =
-      spark.sparkContext.broadcast(SchemaDoc.schema(schemaJson))
-    val schema = df.schema
-    val payloadIdx = payloadCols.map(_.map(schema.fieldIndex).toArray)
-    withRowVerdicts(df, bcSchema) { (compiled, row) =>
-      val inst = payloadIdx match {
-        case None => toJVal(row, schema)
-        case Some(idxs) =>
-          // same columnar mapping as toJVal on a Row: null field = absent
-          JObj(idxs.toVector.collect {
-            case i if !row.isNullAt(i) =>
-              schema.fields(i).name -> toJVal(row.get(i), schema.fields(i).dataType)
-          })
-      }
-      (compiled, inst)
+  /** The first field of `st` (a dotted path) whose Spark type [[toJVal]]
+    * has no JSON mapping for, with that type; None when every field maps. */
+  def unmappableField(st: StructType): Option[(String, DataType)] = {
+    def first(dt: DataType, path: String): Option[(String, DataType)] = dt match {
+      case _: StringType | BooleanType | ByteType | ShortType | IntegerType | LongType |
+          FloatType | DoubleType | _: DecimalType | NullType => None
+      case s: StructType =>
+        s.fields.iterator.flatMap(f => first(f.dataType, s"$path.${f.name}")).nextOption()
+      case ArrayType(elem, _) => first(elem, path)
+      case MapType(_, value, _) => first(value, path)
+      case other => Some(path -> other)
     }
+    st.fields.iterator.flatMap(f => first(f.dataType, f.name)).nextOption()
   }
 
-  /** `df` columns + `valid` + `errors`: each row is validated by the row
-    * core against the (schema, instance) pair `instance` builds from the
-    * broadcast value and the row, on the executor. */
-  private[engine] def withRowVerdicts[B](df: DataFrame, bc: Broadcast[B])(
-      instance: (B, Row) => (SchemaDoc, JVal)): DataFrame = {
-    val outSchema = df.schema
-      .add(StructField("valid", BooleanType, nullable = false))
-      .add(StructField("errors", ColumnCompiler.errorType, nullable = false))
-    df.mapPartitions { rows =>
-      val shipped = bc.value
-      rows.map { row =>
-        val (schema, inst) = instance(shipped, row)
-        val (valid, errRows) = verdict(schema, inst)(Row(_, _, _))
-        Row.fromSeq(row.toSeq :+ valid :+ errRows)
-      }
-    }(Encoders.row(outSchema))
+  /** `df` + `valid:boolean` + `errors:array<struct<path,keyword,message>>`:
+    * the row core applied to each row, the reference the specs hold the
+    * compiled path to. The instance is the object formed from `payloadCols`
+    * (all columns when None) — pass the same field set the Column path
+    * validates, or the two paths diverge on object-shape keywords
+    * (additionalProperties, maxProperties, …). */
+  def validateRows(spark: SparkSession, df: DataFrame, schemaJson: String,
+      payloadCols: Option[Seq[String]] = None): DataFrame = {
+    val payload = struct(payloadCols.getOrElse(df.columns.toSeq).map(col): _*)
+    ValidationJob.rowCoreVerdict(payload, schemaJson).addTo(df)
   }
 
   private val RowCoreOptions = Options()
 
   /** The row core's verdict on one instance: `valid` plus one
     * `mk(path, keyword, message)` per [[leafErrors]] violation. Every
-    * row-core entry point (validateRows, the schema registry's row-core
-    * dispatch, JSONL sources, SQL `graft_validate`) goes through here, so
-    * all of them emit the same violation rows. */
-  private def verdict[R](schema: SchemaDoc, inst: JVal)(
+    * row-core entry point goes through here, by way of `graft_validate`
+    * ([[graft.engine.expressions.ValidateJson]]), so all of them emit the
+    * same violation rows. */
+  private[graft] def verdict[R](schema: SchemaDoc, inst: JVal)(
       mk: (String, String, String) => R): (Boolean, Vector[R]) = {
     val res = Validator.validate(schema, inst, RowCoreOptions)
     (res.valid, leafErrors(res.errors).map(v => mk(v.path, v.keyword, v.message)))
@@ -116,7 +101,7 @@ object RowValidator {
     * `("", "parse", "Malformed JSON: …")` violation, not an exception — at
     * 10^12 lines some WILL be malformed, and one bad line must not kill
     * the job. */
-  private[engine] def verdictOfLine[R](schema: SchemaDoc, line: String)(
+  private[graft] def verdictOfLine[R](schema: SchemaDoc, line: String)(
       mk: (String, String, String) => R): (Boolean, Vector[R]) = {
     val parsed: Either[String, JVal] =
       try Right(Json.parse(line))

@@ -1,6 +1,6 @@
 package graft.engine
 
-import graft.engine.expressions.ViolationsOf
+import graft.engine.expressions.{GraftFunctions, ViolationsOf}
 import graft.schema.SchemaDoc
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -12,13 +12,17 @@ import org.apache.spark.sql.types._
   * The schema is compiled ONCE on the driver into Catalyst expressions
   * ([[ColumnCompiler]]); the validation stage is a narrow projection over the
   * scan — zero shuffle, whole-stage codegen, so at 10^12 docs it scales
-  * linearly with input splits. Falls back to the broadcast row-level core
-  * ([[RowValidator]]) only when the schema is not column-expressible.
+  * linearly with input splits. A schema that is not column-expressible is
+  * validated by the row core inside the same projection shape, as one
+  * native `graft_validate` expression
+  * ([[graft.engine.expressions.ValidateJson]]). A plan names the path its
+  * schema took: `graft_violations` beside the compiled verdict, or
+  * `graft_validate` for the row core.
   */
 object ValidationJob {
 
   /** `docs` must carry the interleaved shape (doc_id, spans) — extra columns
-    * pass through. Adds `valid` + `errors`.
+    * pass through. Adds `valid` + `errors`, the last two columns.
     *
     * Two-projection shape: `valid` comes from the boolean lowering
     * (whole-stage codegen'd unless it needs a lambda — any CodegenFallback
@@ -31,63 +35,82 @@ object ValidationJob {
     * keeps the `errors` projection in generated code and is evaluated for
     * failing rows only. Both columns are lowerings of one compiled plan, so valid ⟺ errors is
     * empty holds by construction; EngineSpec, MapTypeSpec and
-    * RandomSchemaSpec still check it row by row. */
-  def withVerdicts(spark: SparkSession, docs: DataFrame, schemaJson: String): DataFrame =
-    compiledOrRowCore(spark, docs, schemaJson, keepErrors = true) { (valid, violations) =>
-      val passthrough = docs.columns.filterNot(c => c == "errors" || c == "valid")
-      // (passthrough…, valid, errors) — same column ORDER as the RowValidator
-      // fallback, so positional consumers (and parquet written from a mix of
-      // both paths) see one schema regardless of column-expressibility
-      docs.withColumn("valid", valid)
-        .withColumn("errors", when(col("valid"), ColumnCompiler.noErrors).otherwise(violations()))
-        .select((passthrough.map(col).toSeq :+ col("valid") :+ col("errors")): _*)
-    }
+    * RandomSchemaSpec still check it row by row. A row-core schema reads
+    * both columns from one `graft_validate` struct. */
+  def withVerdicts(spark: SparkSession, docs: DataFrame, schemaJson: String): DataFrame = {
+    val passthrough = docs.columns.filterNot(c => c == "errors" || c == "valid")
+    payloadVerdict(spark, docs, schemaJson).addTo(docs)
+      .select((passthrough.map(col).toSeq :+ col("valid") :+ col("errors")): _*)
+  }
 
   /** Verdict-only fast mode: adds just `valid` via the allocation-free
     * boolean plan (no error construction at all), for monitoring-style runs
     * that only need pass/fail rates. */
-  def withVerdictsOnly(spark: SparkSession, docs: DataFrame, schemaJson: String): DataFrame =
-    compiledOrRowCore(spark, docs, schemaJson, keepErrors = false) { (valid, _) =>
-      docs.withColumn("valid", valid)
+  def withVerdictsOnly(spark: SparkSession, docs: DataFrame, schemaJson: String): DataFrame = {
+    val verdict = payloadVerdict(spark, docs, schemaJson)
+    verdict.over(docs)(_.withColumn("valid", verdict.valid))
+  }
+
+  /** Column that holds the row core's verdict struct between the
+    * projection that evaluates it and the one that reads `valid` and
+    * `errors` from it. */
+  private val RowCoreCol = "graft_row_core"
+
+  /** A schema's verdict over a payload: `valid`, and a builder of the
+    * violation array meant for failing rows only. For a row-core schema
+    * both read [[RowCoreCol]], which `rowCore` (the `graft_validate`
+    * struct) fills in a projection of its own. */
+  private[graft] final case class Verdict(
+      valid: Column, violations: () => Column, rowCore: Option[Column]) {
+
+    /** `add` over `frame`, with the row-core struct projected before it
+      * and dropped after. */
+    def over(frame: DataFrame)(add: DataFrame => DataFrame): DataFrame = rowCore match {
+      case None => add(frame)
+      case Some(v) => add(frame.withColumn(RowCoreCol, v)).drop(RowCoreCol)
     }
 
-  /** `doc` compiled over `payload`, a struct of the fields of `payloadType`:
-    * the boolean verdict, and a builder (driver-side analysis on each call,
-    * so verdict-only callers skip it) of the violation array inside
-    * [[ViolationsOf]], meant for failing rows only. None, with a WARN line
-    * naming the schema (`name`) and the reason, when the compiler cannot
-    * express the schema: the caller validates on the row core. */
-  private[graft] def compiled(spark: SparkSession, doc: SchemaDoc, payload: Column,
-      payloadType: StructType, name: String): Option[(Column, () => Column)] =
+    /** `frame` + `valid` + `errors`, `errors` gated on the projected
+      * `valid`. */
+    def addTo(frame: DataFrame): DataFrame = over(frame)(_.withColumn("valid", valid)
+      .withColumn("errors", when(col("valid"), ColumnCompiler.noErrors).otherwise(violations())))
+  }
+
+  /** The row core's verdict on `instance`: a struct of payload columns, or
+    * JSON text. The schema is compiled here too, so a malformed one fails
+    * when the frame is built, not in every task. */
+  private[engine] def rowCoreVerdict(instance: Column, schemaJson: String): Verdict = {
+    SchemaDoc.schema(schemaJson)
+    val verdictStruct = col(RowCoreCol)
+    Verdict(verdictStruct.getField("valid"), () => verdictStruct.getField("violations"),
+      Some(GraftFunctions.validateJson(instance, lit(schemaJson))))
+  }
+
+  /** `schemaJson` over `payload`, a struct of the fields of `payloadType`:
+    * compiled, with the violation array built (driver-side analysis on
+    * each call, so verdict-only callers skip it) inside [[ViolationsOf]];
+    * or, with a WARN line naming the schema (`name`) and the reason, the
+    * row core's when the compiler cannot express the schema. */
+  private[graft] def verdict(spark: SparkSession, schemaJson: String, payload: Column,
+      payloadType: StructType, name: String): Verdict =
     try {
-      val (valid, errors) = ColumnCompiler.lowerings(doc, payload, payloadType)
-      Some((valid, () => ViolationsOf.over(spark, payload, payloadType, errors())))
+      val (valid, errors) = ColumnCompiler.lowerings(SchemaDoc.schema(schemaJson), payload, payloadType)
+      Verdict(valid, () => ViolationsOf.over(spark, payload, payloadType, errors()), None)
     } catch {
       case u: ColumnCompiler.Unsupported =>
         log.warn(s"$name falls back to the row core: ${u.reason}")
-        None
+        rowCoreVerdict(payload, schemaJson)
     }
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Runs `columnar` on the schema compiled over the (doc_id, spans)
-    * payload. A schema the Column compiler cannot express falls back to the
-    * row core over the same payload fields — NOT the whole row — so the two
-    * paths agree on object-shape keywords; `keepErrors = false` drops its
-    * `errors` column. */
-  private def compiledOrRowCore(
-      spark: SparkSession, docs: DataFrame, schemaJson: String, keepErrors: Boolean)(
-      columnar: (Column, () => Column) => DataFrame): DataFrame = {
+  /** The verdict over the (doc_id, spans) payload of `docs` — NOT the whole
+    * row, so the compiled and row-core paths agree on object-shape
+    * keywords. */
+  private def payloadVerdict(spark: SparkSession, docs: DataFrame, schemaJson: String): Verdict = {
     val payloadFields = docs.schema.fields.filter(f => f.name == "doc_id" || f.name == "spans")
-    val payloadType = StructType(payloadFields)
-    val payload = struct(payloadFields.map(f => col(f.name)).toSeq: _*)
-    compiled(spark, SchemaDoc.schema(schemaJson), payload, payloadType, "schema") match {
-      case Some((valid, violations)) => columnar(valid, violations)
-      case None =>
-        val rows = RowValidator.validateRows(spark, docs, schemaJson,
-          Some(payloadFields.map(_.name).toSeq))
-        if (keepErrors) rows else rows.drop("errors")
-    }
+    verdict(spark, schemaJson, struct(payloadFields.map(f => col(f.name)).toSeq: _*),
+      StructType(payloadFields), "schema")
   }
 
   /** One row per violation: (doc_num, doc_id, path, keyword, message). */

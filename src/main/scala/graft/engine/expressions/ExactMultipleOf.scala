@@ -70,13 +70,14 @@ object GraftFunctions {
       allowed.map(org.apache.spark.sql.GraftColumnBridge.expression)))
 
   /** Column-level `graft_validate` (usable without any registration):
-    * struct(valid, violations) of a JSON instance column against a JSON
-    * schema column (typically `lit(schemaJson)`; a non-literal schema
-    * column gives per-row schema dispatch, memoized per distinct schema). */
-  def validateJson(instanceJson: Column, schemaJson: Column): Column =
+    * struct(valid, violations) of an instance column — JSON text, or a
+    * struct of payload columns — against a JSON schema column (typically
+    * `lit(schemaJson)`, compiled once; a non-literal schema column gives
+    * per-row schema dispatch, memoized per distinct schema). */
+  def validateJson(instance: Column, schemaJson: Column): Column =
     org.apache.spark.sql.GraftColumnBridge.column(
       ValidateJson(
-        org.apache.spark.sql.GraftColumnBridge.expression(instanceJson),
+        org.apache.spark.sql.GraftColumnBridge.expression(instance),
         org.apache.spark.sql.GraftColumnBridge.expression(schemaJson)))
 }
 
@@ -151,7 +152,7 @@ object GraftExtensions {
         case other => throw new IllegalArgumentException(
           s"graft_format_check expects 2 arguments, got ${other.length}")
       }),
-    // graft_validate(instance_json, schema_json) — the reference's validate
+    // graft_validate(instance, schema_json) — the reference's validate
     // call: struct(valid, violations array<struct<path, keyword, message>>)
     (FunctionIdentifier("graft_validate"),
       new ExpressionInfo(classOf[ValidateJson].getName, "graft_validate"),

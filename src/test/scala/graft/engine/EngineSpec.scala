@@ -187,4 +187,28 @@ class EngineSpec extends AnyFunSuite {
       Set("""{"a":1}"""))
     check("contentEncoding", "base64", "Not base64", Set("aGk="))
   }
+
+  test("a payload field with no JSON mapping is rejected when the frame is built, by name") {
+    // recursive $ref: every entry below takes the row core
+    val meta = """{"$ref":"http://json-schema.org/draft-07/schema#"}"""
+    val frame = spark.range(2).select(col("id"), timestamp_seconds(col("id")).as("ts"))
+    def rejected(build: => DataFrame, field: String): Unit = {
+      val e = intercept[org.apache.spark.sql.AnalysisException](build)
+      assert(e.getMessage.contains(s"payload field `$field` of type timestamp"), e.getMessage)
+    }
+    rejected(RowValidator.validateRows(spark, frame, meta), "ts")
+    rejected(SchemaRegistry.validateWith(spark, frame.withColumn("schema_name", lit("meta")),
+      SchemaRegistry.compile(Map("meta" -> meta)), "schema_name"), "ts")
+    rejected(ValidationJob.withVerdicts(spark, frame.select(col("id").cast("string").as("doc_id"),
+      array(struct(col("ts").as("at"))).as("spans")), meta), "spans.at")
+  }
+
+  test("a malformed schema fails when a row-core frame is built, not in its tasks") {
+    import spark.implicits._
+    val malformed = """{"type": 12}"""
+    intercept[graft.schema.SchemaConformance.SchemaException](
+      RowValidator.validateRows(spark, spark.range(2).toDF("id"), malformed))
+    intercept[graft.schema.SchemaConformance.SchemaException](
+      JsonLines.validateStrings(spark, Seq((0L, "{}")).toDS(), malformed))
+  }
 }

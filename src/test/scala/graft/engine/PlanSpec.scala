@@ -19,7 +19,7 @@ class PlanSpec extends AnyFunSuite {
     val verdicts = ValidationJob.withVerdicts(spark, docs, DocTable.docSchemaJson)
     val plan = physical(verdicts)
     assert(!plan.contains("Exchange"), s"validation must not shuffle:\n${plan.take(600)}")
-    assert(!plan.contains("DeserializeToObject"),
+    assert(plan.contains("graft_violations(") && !plan.contains("graft_validate("),
       "doc schema must compile to Columns, not fall back to the row core")
   }
 
@@ -144,6 +144,46 @@ class PlanSpec extends AnyFunSuite {
     val plan = physical(rows)
     assert("graft_violations\\(".r.findAllIn(plan).size === 1, plan)
     assert("RLIKE".r.findAllIn(plan).size === 1, plan)
+  }
+
+  /** A recursive `$ref` over the doc shape: not column-expressible. */
+  private val recursiveDocSchema =
+    """{"type":"object","required":["doc_id","spans"],
+      |"properties":{"doc_id":{"pattern":"^doc-"},
+      |  "spans":{"type":"array","minItems":1,"items":{"$ref":"#/definitions/span"}}},
+      |"definitions":{"span":{"type":"object","required":["kind"],
+      |  "properties":{"kind":{"enum":["text","media"]}},
+      |  "additionalProperties":{"anyOf":[{"type":["string","integer","null"]},
+      |    {"$ref":"#/definitions/span"}]}}}}""".stripMargin
+
+  test("a row-core schema's violation rows evaluate the row core once per row") {
+    // graft_validate is nondeterministic: `size(errors) > 0` and the
+    // inferred `isnotnull(errors)` stay above the projection that defines
+    // it, and `valid` and `errors` read one struct
+    val docs = fileBacked(DocTable.docs(spark, sfDir))
+    val verdicts = ValidationJob.withVerdicts(spark, docs, recursiveDocSchema)
+    val plan = physical(ValidationJob.violations(verdicts))
+    assert("graft_validate\\(".r.findAllIn(plan).size === 1, plan)
+    assert(!plan.contains("graft_violations("), plan)
+    projections(verdicts, "valid", "errors")
+    assert(ValidationJob.violations(verdicts).count() > 0)
+  }
+
+  test("a hybrid registry runs the row core once per row, and only on its own schema's rows") {
+    val docs = fileBacked(DocTable.docs(spark, sfDir).withColumn("schema_name",
+      when(col("doc_num") % 2 === 0, lit("doc")).otherwise(lit("recursive"))))
+    val registry = SchemaRegistry.compile(Map(
+      "doc" -> DocTable.docSchemaJson, "recursive" -> recursiveDocSchema))
+    val verdicts = SchemaRegistry.validateWith(spark, docs, registry, "schema_name")
+    val plan = physical(ValidationJob.violations(verdicts))
+    assert("graft_validate\\(".r.findAllIn(plan).size === 1, plan)
+    // its one call sits in the arm of a CASE on the schema name, so a row
+    // naming the compiled schema never evaluates it
+    val rowCore = plan.linesIterator.find(_.contains("graft_validate(")).get
+    assert(rowCore.matches(".*CASE WHEN \\(schema_name#\\d+ = recursive\\) THEN graft_validate\\(.*"),
+      rowCore)
+    assert("graft_violations\\(".r.findAllIn(plan).size === 1, plan)
+    projections(verdicts, "valid", "errors")
   }
 
   test("winnowing ids are non-nullable, so the candidate join infers no null filters") {

@@ -1,11 +1,13 @@
 package graft.engine
 
+import graft.schema.SchemaDoc
+import graft.validate.Validator
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Broadcast schema registry: per-row schema dispatch over a mixed corpus. */
+/** Schema registry: per-row schema dispatch over a mixed corpus. */
 class SchemaRegistrySpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
@@ -43,6 +45,11 @@ class SchemaRegistrySpec extends AnyFunSuite {
     assert(mentions(e))
   }
 
+  test("an empty registry is rejected when it is compiled") {
+    val e = intercept[IllegalArgumentException](SchemaRegistry.compile(Map.empty))
+    assert(e.getMessage.contains("at least one schema"), e.getMessage)
+  }
+
   /** Per-row `(id, valid)`, and the sorted `(id, path, keyword, message)`
     * violation rows. */
   private def outcome(verdicts: DataFrame) = {
@@ -53,17 +60,31 @@ class SchemaRegistrySpec extends AnyFunSuite {
         .sorted.toSeq)
   }
 
+  /** [[outcome]] of the row core applied on the driver to the collected
+    * rows: each row's payload (every column but `schema_name`) against the
+    * source its `schema_name` names. */
+  private def driverRowCore(df: DataFrame, reg: SchemaRegistry) = {
+    val payloadType = StructType(df.schema.fields.filter(_.name != "schema_name"))
+    val verdicts = df.collect().toSeq.map { r =>
+      val payload = Row.fromSeq(payloadType.fieldNames.toSeq.map(r.getAs[Any]))
+      val res = Validator.validate(SchemaDoc.schema(reg.sources(r.getAs[String]("schema_name"))),
+        RowValidator.toJVal(payload, payloadType))
+      (r.getAs[Long]("id"), res.valid, RowValidator.leafErrors(res.errors))
+    }
+    (verdicts.map(v => (v._1, v._2)).sortBy(_._1),
+      verdicts.flatMap(v => v._3.map(e => (v._1, e.path, e.keyword, e.message))).sorted)
+  }
+
   test("compiled CASE dispatch agrees with the broadcast row core (differential)") {
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
     val compiled = outcome(SchemaRegistry.validateWith(spark, df, registry, "schema_name"))
-    val rowCore = outcome(SchemaRegistry.rowCoreValidateWith(spark, df, registry, "schema_name"))
-    assert(compiled === rowCore)
+    assert(compiled === driverRowCore(df, registry))
     assert(compiled._2.map(_._1).distinct === Seq(1L, 3L, 4L))
     // and the compiled path really is the one validateWith picked: its plan
-    // must contain no mapPartitions (DeserializeToObject) node
+    // must hold no row-core call
     val plan = SchemaRegistry.validateWith(spark, df, registry, "schema_name")
       .queryExecution.optimizedPlan.toString
-    assert(!plan.contains("DeserializeToObject"), s"expected compiled dispatch, got:\n$plan")
+    assert(!plan.contains("graft_validate"), s"expected compiled dispatch, got:\n$plan")
   }
 
   test("registry with a column-inexpressible schema still validates every row") {
@@ -91,29 +112,31 @@ class SchemaRegistrySpec extends AnyFunSuite {
     val out = SchemaRegistry.validateWith(spark, df, reg, "schema_name")
     // differential: hybrid ≡ all-rows row core
     val got = outcome(out)
-    assert(got === outcome(SchemaRegistry.rowCoreValidateWith(spark, df, reg, "schema_name")))
+    assert(got === driverRowCore(df, reg))
     assert(got._1.map(_._1) === (0L to 5L))
-    // plan: a union of exactly ONE row-core branch (DeserializeToObject) and
-    // a columnar branch whose CASE dispatch stays compiled — the
-    // inexpressible schema must not drag the whole registry off the
-    // compiled path
+    // plan: one projection chain, no Union. The compiled schemas stay
+    // compiled arms of the CASE chain (graft_violations); the inexpressible
+    // schema is ONE row-core arm, graft_validate behind its name's guard,
+    // whose struct the chain's `meta` arm reads
     val plan = out.queryExecution.optimizedPlan.toString
-    assert(plan.contains("Union"), plan)
-    assert("DeserializeToObject".r.findAllIn(plan).length === 1, plan)
-    assert(plan.toLowerCase.contains("case when"), plan)
+    assert(!plan.contains("Union"), plan)
+    assert("graft_validate\\(".r.findAllIn(plan).length === 1, plan)
+    assert(plan.contains("CASE WHEN (schema_name#") && plan.contains(") THEN graft_validate("), plan)
+    val validLine = plan.linesIterator.find(_.contains(" AS valid#")).get
+    assert(validLine.contains("CASE WHEN") && validLine.contains("graft_row_core#"), validLine)
+    assert("graft_violations\\(".r.findAllIn(plan).length === 2, plan)
   }
 
   test("hybrid dispatch: NULL schema name fails loudly instead of silently dropping the row") {
-    // `isin` evaluates to NULL for a NULL schema name, so both branch
-    // filters would discard the row without the coalesce routing — the row
-    // must instead reach the row core and raise its lookup error
+    // a NULL name matches no arm of the CASE chain, so it must reach the
+    // chain's raising otherwise-branch, not pass as a NULL verdict
     val nullableSchema = StructType(schema.fields.map(f =>
       if (f.name == "schema_name") f.copy(nullable = true) else f))
     val hybrid = SchemaRegistry.compile(Map(
       "short-text" -> """{"properties":{"payload":{"type":"string","maxLength":5}},"required":["payload"]}""",
       "meta" -> """{"$ref":"http://json-schema.org/draft-07/schema#"}"""))
-    // with every schema compiled the CASE chain raises instead; `concat`
-    // with a NULL name is NULL, so the message must coalesce the name
+    // with or without a row-core arm; `concat` with a NULL name is NULL,
+    // so the message must coalesce the name
     Seq(hybrid -> Seq(Row(0L, "short-text", "hi"), Row(1L, null, "x"), Row(2L, "meta", "x")),
       registry -> Seq(Row(0L, "short-text", "hi"), Row(1L, null, "x"))).foreach { case (reg, input) =>
       val df = spark.createDataFrame(spark.sparkContext.parallelize(input, 1), nullableSchema)
