@@ -164,8 +164,8 @@ object SparkEntry {
 
     // the compiled draft-7 validation plan over a classic relational table:
     // numeric bounds / pattern / enum constraints on lineitem compile to
-    // a codegen'd filter; emits the violating rows with their leaf error
-    // counts (+ an injected row failing every rule)
+    // a codegen'd filter; emits the violating rows with the row core's leaf
+    // error counts (+ an injected row failing every rule)
     "q_lineitem_validate" -> ((s, dir) => {
       import s.implicits._
       val li = s.read.parquet(s"$dir/lineitem.parquet")
@@ -181,11 +181,11 @@ object SparkEntry {
           |  "l_returnflag":{"pattern":"^[ARN]$"},
           |  "l_linestatus":{"enum":["O","F"]}}}""".stripMargin
       val fields = li.schema.fields
-      val verdict = ValidationJob.verdict(s, schemaJson,
+      val verdict = ValidationJob.verdict(schemaJson,
         struct(fields.map(f => col(f.name)).toSeq: _*), StructType(fields), "q_lineitem_validate")
-      if (verdict.rowCore.isDefined) sys.error("the lineitem schema must compile to Columns")
-      li.where(!verdict.valid)
-        .select(col("l_orderkey"), col("l_linenumber"), size(verdict.violations()).as("n_errors"))
+      if (verdict.compiled.isEmpty) sys.error("the lineitem schema must compile to Columns")
+      verdict.addTo(li).where(!col("valid"))
+        .select(col("l_orderkey"), col("l_linenumber"), size(col("errors")).as("n_errors"))
         .orderBy("l_orderkey", "l_linenumber")
     }),
 

@@ -7,34 +7,26 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Compiles a draft-7 schema into Catalyst `Column` expressions over a
-  * statically-typed Dataset — the engine's bulk validation path.
+/** Compiles a draft-7 schema into a Catalyst boolean `Column` over a
+  * statically-typed Dataset — the engine's bulk validation verdict.
   *
   * Each keyword is compiled once, into a small plan tree ([[Plan]]), and
-  * the tree is lowered three ways: to the allocation-free boolean verdict
-  * (the first of [[lowerings]]), to the violation array (the second), and,
-  * for the element plan of object `items`, to one boolean over whole field
-  * arrays (`arrayValidOf`). So valid ⟺ no violations holds by construction,
-  * like the reference's `:valid?` (no errors, `validate.cljc:99-116`).
-  *
-  * The violation array is `array<struct<path,keyword,message>>` holding the
-  * *leaf* violations (the reference nests causes under applicator errors,
-  * `validate.cljc:824-832`; the engine's exploded violation rows are the
-  * flattened leaves — same validity semantics: valid ⟺ zero leaves).
+  * the tree is lowered two ways: to the allocation-free boolean verdict
+  * ([[validity]]) and, for the element plan of object `items`, to one
+  * boolean over whole field arrays (`arrayValidOf`). Violation rows are not
+  * built here: the row core alone builds them (`ValidationJob.verdict`
+  * runs it on the rows this verdict fails), so a schema's violation rows
+  * are the reference's whichever path its verdict takes.
   *
   * Everything is built from `org.apache.spark.sql.functions` and the native
   * expressions of `graft.engine.expressions` (no UDFs), and validation is a
-  * narrow map over the scan, no shuffle. The boolean lowering stays inside
+  * narrow map over the scan, no shuffle. The verdict stays inside
   * whole-stage codegen wherever it needs no lambda: object `items` over
   * struct elements (nullable ones too, when the element's own `type`
-  * rejects null) use the field-array form. `forall`, `exists` and
-  * `transform` are CodegenFallback and take a projection that holds them
-  * out of codegen, so every bulk caller (`ValidationJob.verdict`)
-  * evaluates the error lowering, which needs them for paths and messages,
-  * interpreted inside the native [[graft.engine.expressions.ViolationsOf]],
-  * for failing rows only.
+  * rejects null) use the field-array form. `forall` and `transform` are
+  * CodegenFallback and take a projection that holds them out of codegen.
   *
-  * The boolean lowering references only the leaves it checks, so Parquet
+  * The verdict references only the leaves it checks, so Parquet
   * nested-schema pruning drops the rest of a struct array from the scan
   * (for the doc schema, `spans.text` and `spans.media_ref`). Field arrays
   * (`spans.kind`) and `spans IS NULL` prune; anything over the whole array
@@ -45,8 +37,7 @@ import org.apache.spark.sql.types._
   * element. The guard, `required`'s twin and the `enum`/`const` twin run
   * as one allocation-free loop, [[graft.engine.expressions.EveryElement]],
   * not as `array_intersect`/`array_except`, which build a set and an array
-  * per row. The error lowering still reads the whole payload: its paths
-  * need each element's nullness.
+  * per row.
   *
   * Mapping decisions for columnar data (documented divergence from the
   * dynamic-JSON world): a NULL struct field means *absent* (Parquet cannot
@@ -56,84 +47,50 @@ import org.apache.spark.sql.types._
   * Schemas using keywords that cannot be expressed as a finite Column tree
   * (recursive or external $ref, Spark types with no JSON mapping, malformed
   * keyword values …) throw [[ColumnCompiler.Unsupported]]; callers fall back
-  * to the row-level core (`ValidationJob.verdict` returns the
-  * `graft_validate` verdict over the same payload, whose violation array
-  * has the type [[errorType]] too). A payload type with no JSON mapping
-  * then fails analysis there, naming the field.
+  * to the row-level core (`ValidationJob.verdict` then runs
+  * `graft_validate` over the same payload on every row, not only on the
+  * rows a verdict fails).
   */
 object ColumnCompiler {
 
   final case class Unsupported(reason: String) extends RuntimeException(reason)
 
-  val errorType: DataType = ArrayType(StructType(Seq(
-    // path is nullable: dynamic paths concat map keys, which Spark types as
-    // nullable strings
-    StructField("path", StringType, nullable = true),
-    StructField("keyword", StringType, nullable = false),
-    StructField("message", StringType, nullable = false))), containsNull = false)
-  private[engine] val noErrors: Column = array().cast(errorType)
-
   /** The allocation-free boolean validity of `doc` over input column `col`
-    * of Spark type `dt`, and the violation array: two lowerings of one
-    * compiled plan. The error lowering is built only when called, so a
-    * caller that needs the verdict alone never pays for it. */
-  private[engine] def lowerings(doc: SchemaDoc, col: Column, dt: DataType): (Column, () => Column) = {
-    val p = plan(doc, col, dt)
-    (validOf(p), () => errorsOf(p))
-  }
+    * of Spark type `dt`. */
+  private[engine] def validity(doc: SchemaDoc, col: Column, dt: DataType): Column =
+    validOf(compile(doc.root, col, dt, doc, Set.empty, None, readLater = false))
 
-  private def plan(doc: SchemaDoc, col: Column, dt: DataType): Plan =
-    compile(doc.root, col, dt, lit(""), doc, Set.empty, None, readLater = false)
-
-  // --- the plan tree and its three lowerings --------------------------------
+  // --- the plan tree and its two lowerings ----------------------------------
 
   private sealed trait Plan
-  /** A leaf: one violation at `path` unless `ok` holds (null fails);
-    * `overArray` is its all-elements form over the subject's twin. */
-  private final case class Check(ok: Column, path: Column, keyword: String, message: String,
-      overArray: Option[Column] = None) extends Plan
+  /** A leaf that holds unless `ok` fails (null fails); `overArray` is its
+    * all-elements form over the subject's twin, and `rejectsNullElement`
+    * says that form fails a null element (`required`'s twin). */
+  private final case class Check(ok: Column, overArray: Option[Column] = None,
+      rejectsNullElement: Boolean = false) extends Plan
   private final case class All(parts: Seq[Plan]) extends Plan
   /** `inner` applies unless `absent` holds (null = absent gating). */
   private final case class Gate(absent: Column, inner: Plan) extends Plan
-  /** `body(element, index)` holds for every element of `arr`; `fast` is a
-    * boolean-only form of the whole node: the element plan's `arrayValidOf`
-    * for object `items`, a positional `forall` for tuple `items`. */
-  private final case class Each(arr: Column, body: (Column, Column) => Plan,
-      fast: Option[Column] = None) extends Plan
   /** if/then/else: `whenTrue` applies when `test` holds, else `whenFalse`. */
   private final case class Cond(test: Column, whenTrue: Plan, whenFalse: Plan) extends Plan
+  /** A check over a whole array, already lowered to its boolean. */
+  private final case class Lowered(valid: Column) extends Plan
 
   private val pass: Plan = All(Nil)
   private def all(parts: Seq[Plan]): Plan = All(parts.filter(_ != pass))
   private def gate(absent: Column, inner: Plan): Plan =
     if (inner == pass) pass else Gate(absent, inner)
+  /** `body` holds for every element of `arr`. */
+  private def each(arr: Column)(body: Column => Plan): Plan = Lowered(forall(arr, x => validOf(body(x))))
 
   private def ok(cond: Column): Column = coalesce(cond, lit(false))
 
   private def validOf(p: Plan): Column = p match {
-    case Check(c, _, _, _, _) => ok(c)
+    case Check(c, _, _)    => ok(c)
     case All(parts)        => parts.map(validOf).reduceOption(_ && _).getOrElse(lit(true))
     case Gate(absent, in)  => ok(absent || validOf(in))
-    // without `fast` the index feeds only violation paths, which this
-    // lowering drops (tuple `items`, which branch on it, bring `fast`)
-    case Each(arr, body, fast) => fast.getOrElse(forall(arr, x => validOf(body(x, lit(null)))))
     case Cond(test, t, f)  => ok(when(test, validOf(t)).otherwise(validOf(f)))
-  }
-
-
-  private def whenOr(cond: Column, ifTrue: Column, ifFalse: Column): Column =
-    when(coalesce(cond, lit(false)), ifTrue).otherwise(ifFalse)
-
-  private def errorsOf(p: Plan): Column = p match {
-    case Check(c, path, kw, msg, _) =>
-      whenOr(c, noErrors, array(struct(
-        path.as("path"), lit(kw).as("keyword"), lit(msg).as("message"))).cast(errorType))
-    case All(parts) =>
-      if (parts.isEmpty) noErrors else parts.map(errorsOf).reduce(concat(_, _))
-    case Gate(absent, in) => whenOr(absent, noErrors, errorsOf(in))
-    case Each(arr, body, _) =>
-      flatten(transform(arr, (x, i) => errorsOf(body(x, i)))).cast(errorType)
-    case Cond(test, t, f) => whenOr(test, errorsOf(t), errorsOf(f))
+    case Lowered(valid)    => valid
   }
 
   /** The element plan of object `items` lowered to one boolean over
@@ -152,10 +109,10 @@ object ColumnCompiler {
         Option.when(cs.forall(_.isDefined))(cs.flatten.flatten)
       case Gate(_, in) => conjuncts(in)
       case Cond(_, t, f) => Option.when(t == pass && f == pass)(Nil)
-      case _: Each => None // nested items
+      case _: Lowered => None // nested items
     }
     conjuncts(p).map(cs => (cs.flatMap(_.overArray).reduceOption(_ && _).getOrElse(lit(true)),
-      cs.exists(_.keyword == "required")))
+      cs.exists(_.rejectsNullElement)))
   }
 
   // ---------------------------------------------------------------------------
@@ -237,10 +194,10 @@ object ColumnCompiler {
     * `readLater`: a keyword evaluated after this subschema may read the
     * subject as the row core left it (see `required`). */
   private def compile(
-      schema: JVal, col: Column, dt: DataType, path: Column, doc: SchemaDoc,
+      schema: JVal, col: Column, dt: DataType, doc: SchemaDoc,
       seen: Set[String], twin: Option[Column], readLater: Boolean): Plan = schema match {
     case JBool(true) | JNull => pass
-    case JBool(false)        => Check(lit(false), path, "false", "Schema is false")
+    case JBool(false)        => Check(lit(false))
     case o: JObj if o.has("$ref") =>
       // Static $ref inlining at compile time (driver side). The broadcast
       // registry exists for the row-level fallback; here the plan itself is
@@ -251,9 +208,9 @@ object ColumnCompiler {
       }
       if (seen.contains(refStr))
         throw Unsupported(s"recursive $$ref $refStr cannot compile to a finite Column tree")
-      compile(resolveStatic(o, doc), col, dt, path, doc, seen + refStr, twin, readLater)
+      compile(resolveStatic(o, doc), col, dt, doc, seen + refStr, twin, readLater)
     case o: JObj =>
-      all(o.fields.map { case (kw, v) => keyword(kw, v, o, col, dt, path, doc, seen, twin, readLater) })
+      all(o.fields.map { case (kw, v) => keyword(kw, v, o, col, dt, doc, seen, twin, readLater) })
     case other => throw Unsupported(s"invalid schema of type ${other.typeName}")
   }
 
@@ -307,17 +264,15 @@ object ColumnCompiler {
     * do not apply to the column's JSON type, and unknown keywords (like the
     * reference, `validate.cljc:118-124`), pass. */
   private def keyword(
-      kw: String, v: JVal, schema: JObj, col: Column, dt: DataType, path: Column,
-      doc: SchemaDoc, seen: Set[String], twin: Option[Column], readLater: Boolean): Plan = {
+      kw: String, v: JVal, schema: JObj, col: Column, dt: DataType, doc: SchemaDoc,
+      seen: Set[String], twin: Option[Column], readLater: Boolean): Plan = {
 
     val order = SchemaDoc.KeywordOrder
     val readAfter = readLater ||
       schema.keys.exists(k => laterReaders(k) && order.indexOf(k) > order.indexOf(kw))
-    def sub(s: JVal, c: Column, d: DataType, p: Column, tw: Option[Column] = None): Plan =
-      compile(s, c, d, p, doc, seen, tw, readAfter)
-    def subValid(s: JVal, c: Column, d: DataType): Column = validOf(sub(s, c, d, path))
-    def at(k: String): Column = concat(path, lit(s"/$k"))
-    def atKey(k: Column): Column = concat(path, lit("/"), k)
+    def sub(s: JVal, c: Column, d: DataType, tw: Option[Column] = None): Plan =
+      compile(s, c, d, doc, seen, tw, readAfter)
+    def subValid(s: JVal, c: Column, d: DataType): Column = validOf(sub(s, c, d))
     def bad: Nothing = throw Unsupported(s"malformed $kw")
     def subschemas: Vector[JVal] = v match {
       case JArr(xs) if xs.nonEmpty => xs
@@ -335,7 +290,7 @@ object ColumnCompiler {
     // the twin's extreme (nulls skipped) against the bound
     def bounded(extreme: Column => Column, holds: (Column, Column) => Column): Plan = {
       val bound = v match { case n: JNum => literal(n); case _ => bad }
-      onlyIf(numeric)(Check(col.isNull || holds(col, bound), path, kw, s"Failed $kw check",
+      onlyIf(numeric)(Check(col.isNull || holds(col, bound),
         twin.map(a => coalesce(holds(extreme(a), bound), lit(true)))))
     }
     // every twin value is one of `values` or null (absent), in one
@@ -360,7 +315,7 @@ object ColumnCompiler {
     }
     // per-entry plans over a map's (key, value) entries
     def eachEntry(body: (Column, Column) => Plan): Plan = Gate(col.isNull,
-      Each(map_entries(col), (e, _) => body(e.getField("key"), e.getField("value"))))
+      each(map_entries(col))(e => body(e.getField("key"), e.getField("value"))))
 
     kw match {
       case "type" =>
@@ -373,8 +328,7 @@ object ColumnCompiler {
         }
         // a subject with a twin is never null where it is checked
         if (twin.isDefined && typeAdmits(allowed, jsonType)) pass
-        else Check(when(col.isNull, lit(allowed.contains("null"))).otherwise(nonNullOk),
-          path, "type", s"Instance is not of type ${allowed.mkString(" or ")}")
+        else Check(when(col.isNull, lit(allowed.contains("null"))).otherwise(nonNullOk))
 
       case "enum" =>
         val values = v match { case JArr(xs) => xs; case _ => bad }
@@ -385,7 +339,7 @@ object ColumnCompiler {
           .otherwise(values.filter(_ != JNull).map(s =>
               if (literalComparable(s, jsonType)) col === literal(s) else lit(false))
             .reduceOption(_ || _).getOrElse(lit(false)))
-        Check(cond, path, "enum", "Value must be in enum", inValues(values))
+        Check(cond, inValues(values))
 
       case "const" =>
         val cond = v match {
@@ -393,14 +347,13 @@ object ColumnCompiler {
           case s if !literalComparable(s, jsonType) => lit(false) // see enum
           case s => col === literal(s)
         }
-        Check(cond, path, "const", "Value must be equal to const", inValues(Vector(v)))
+        Check(cond, inValues(Vector(v)))
 
       case "multipleOf" =>
         // Exact-decimal remainder like the reference's BigDecimal path;
         // decimal(38,12) covers the engine's numeric columns.
         val m = v match { case n: JNum if n.v > 0 => n; case _ => bad }
-        onlyIf(numeric)(Check(col.isNull || multipleOfCond(col, dt, m), path,
-          "multipleOf", "Failed multipleOf check"))
+        onlyIf(numeric)(Check(col.isNull || multipleOfCond(col, dt, m)))
 
       case "maximum"          => bounded(array_max, _ <= _)
       case "minimum"          => bounded(array_min, _ >= _)
@@ -412,23 +365,19 @@ object ColumnCompiler {
         // UTF8String), matching the reference's codePointCount.
         val n = count(kw, v)
         onlyIf(jsonType == "string")(
-          if (kw == "maxLength") Check(col.isNull || length(col) <= n, path, kw, "String is too long")
-          else Check(col.isNull || length(col) >= n, path, kw, "String is too short"))
+          Check(col.isNull || (if (kw == "maxLength") length(col) <= n else length(col) >= n)))
 
       case "pattern" =>
         // RLIKE = Java-regex find(), same unanchored semantics as the
         // reference's re-seq (validate.cljc:280-283).
         val p = v match { case JStr(s) => s; case _ => bad }
-        onlyIf(jsonType == "string")(Check(col.isNull || col.rlike(p), path, "pattern",
-          s"String does not match pattern $p"))
+        onlyIf(jsonType == "string")(Check(col.isNull || col.rlike(p)))
 
       case "format" =>
         val fmt = v match { case JStr(s) => s; case _ => bad }
-        onlyIf(jsonType == "string")(Check(col.isNull || FormatColumns.condition(fmt, col),
-          path, "format", s"Doesn't match $fmt format"))
+        onlyIf(jsonType == "string")(Check(col.isNull || FormatColumns.condition(fmt, col)))
 
       case "items" =>
-        def atIndex(i: Column) = concat(path, lit("/"), i.cast(StringType))
         (v, dt) match {
           case (s: JObj, ArrayType(elem, containsNull)) =>
             // Struct elements have the array as their twin, so
@@ -436,9 +385,7 @@ object ColumnCompiler {
             // every element outside whole-stage codegen) by field-array
             // ops that stay inside it. That form ignores the element, so
             // nulls stand in for it.
-            def body(twin: Option[Column]) =
-              (x: Column, i: Column) => sub(s, x, elem, atIndex(i), twin)
-            def overFields = arrayValidOf(body(Some(col))(lit(null), lit(null)))
+            def overFields = arrayValidOf(sub(s, lit(null), elem, Some(col)))
             // A null element fails `type: object` and passes every object
             // keyword. When the element's own `type` rejects null, "no null
             // element and the field-array form" is exact: without one the
@@ -458,19 +405,17 @@ object ColumnCompiler {
               })
               case _ => (None, None)
             }
-            gate(col.isNull, Each(col, body(twin), fast))
+            gate(col.isNull, fast.fold(each(col)(sub(s, _, elem, twin)))(Lowered))
           case (JBool(b), _: ArrayType) =>
-            onlyIf(!b)(Check(col.isNull || size(col) === 0, path, "items",
-              "Items must be empty to satisfy a false schema"))
+            onlyIf(!b)(Check(col.isNull || size(col) === 0))
           case (JArr(tuple), ArrayType(elem, _)) =>
             val pad = schema.get("additionalItems").getOrElse(JBool(true))
             val body = (x: Column, i: Column) =>
-              tuple.zipWithIndex.foldRight(sub(pad, x, elem, atIndex(i))) {
-                case ((s, ti), rest) => Cond(i === ti, sub(s, x, elem, atIndex(i)), rest)
+              tuple.zipWithIndex.foldRight(sub(pad, x, elem)) {
+                case ((s, ti), rest) => Cond(i === ti, sub(s, x, elem), rest)
               }
             // positional branches need the index, which `forall` lacks
-            Gate(col.isNull, Each(col, body,
-              Some(forall(transform(col, (x, i) => validOf(body(x, i))), b => b))))
+            Gate(col.isNull, Lowered(forall(transform(col, (x, i) => validOf(body(x, i))), b => b)))
           case (_: JObj | _: JBool | _: JArr, _) => pass // items ignores non-arrays
           case _ => bad
         }
@@ -489,20 +434,17 @@ object ColumnCompiler {
           case _ => col
         }
         onlyIf(jsonType == "array")(
-          if (kw == "maxItems") Check(col.isNull || size(sized) <= n, path, kw, "maxItems exceeded")
-          else Check(col.isNull || size(sized) >= n, path, kw, "minItems not reached"))
+          Check(col.isNull || (if (kw == "maxItems") size(sized) <= n else size(sized) >= n)))
 
       case "uniqueItems" =>
         val unique = v match { case JBool(b) => b; case _ => bad }
         onlyIf(unique && jsonType == "array")(Check(
-          col.isNull || size(array_distinct(col)) === size(col),
-          path, "uniqueItems", "Instance elements are not all unique"))
+          col.isNull || size(array_distinct(col)) === size(col)))
 
       case "contains" =>
         dt match {
           case ArrayType(elem, _) =>
-            Check(col.isNull || exists(col, x => subValid(v, x, elem)), path, "contains",
-              "Instance is not valid against schema")
+            Check(col.isNull || exists(col, x => subValid(v, x, elem)))
           case _ => pass
         }
 
@@ -529,8 +471,7 @@ object ColumnCompiler {
           }
           if (recoverable && readAfter) throw Unsupported(s"later keywords read the default of $k")
           else if (recoverable) pass
-          else Check(present.getOrElse(lit(false)), at(k), "required",
-            "Required property not in object", everywhere)
+          else Check(present.getOrElse(lit(false)), everywhere, rejectsNullElement = true)
         }))
 
       case "properties" =>
@@ -545,7 +486,7 @@ object ColumnCompiler {
                 case _: StructType | _: ArrayType | _: MapType => None
                 case _ => twin.map(_.getField(k))
               }
-              gate(c.isNull, sub(s, c, t, at(k), fieldTwin))
+              gate(c.isNull, sub(s, c, t, fieldTwin))
           }
         }))
 
@@ -557,12 +498,12 @@ object ColumnCompiler {
             Gate(col.isNull, All(st.fields.toSeq.flatMap { f =>
               val c = col.getField(f.name)
               pats.fields.collect { case (p, s) if matches(p, f.name) =>
-                Gate(c.isNull, sub(s, c, f.dataType, at(f.name)))
+                Gate(c.isNull, sub(s, c, f.dataType))
               }
             }))
           case MapType(StringType, vt, _) =>
             eachEntry((k, value) => All(pats.fields.map { case (p, s) =>
-              Gate(!k.rlike(p) || value.isNull, sub(s, value, vt, atKey(k)))
+              Gate(!k.rlike(p) || value.isNull, sub(s, value, vt))
             }))
           case _ => pass
         }
@@ -581,15 +522,14 @@ object ColumnCompiler {
             Gate(col.isNull, All(extra.map { f =>
               val c = col.getField(f.name)
               v match {
-                case JBool(false) => Check(col.isNull || c.isNull, at(f.name),
-                  "additionalProperties", "An additional property failed the schema check")
-                case s => Gate(c.isNull, sub(s, c, f.dataType, at(f.name)))
+                case JBool(false) => Check(col.isNull || c.isNull)
+                case s => Gate(c.isNull, sub(s, c, f.dataType))
               }
             }))
           case MapType(StringType, vt, _) =>
             eachEntry { (k, value) =>
               val hits = named.toSeq.map(n => k === lit(n)) ++ pats.map(p => k.rlike(p))
-              Gate(hits.foldLeft(value.isNull)(_ || _), sub(v, value, vt, atKey(k)))
+              Gate(hits.foldLeft(value.isNull)(_ || _), sub(v, value, vt))
             }
           case _ => pass
         }
@@ -601,10 +541,9 @@ object ColumnCompiler {
             case None => pass
             case Some((c, _)) => Gate(c.isNull, dv match {
               case JArr(_) => All(strings(kw, dv).map { n =>
-                Check(member(n).map(_._1.isNotNull).getOrElse(lit(false)), at(n),
-                  "dependencies", "Not every dependency in instance")
+                Check(member(n).map(_._1.isNotNull).getOrElse(lit(false)))
               })
-              case s => sub(s, col, dt, path)
+              case s => sub(s, col, dt)
             })
           }
         }))
@@ -614,11 +553,9 @@ object ColumnCompiler {
           case st: StructType =>
             // Static field names: a bad name is a violation when present.
             val badNames = st.fieldNames.toSeq.filterNot(name => rowCoreValid(v, JStr(name)))
-            Gate(col.isNull, All(badNames.map(k =>
-              Check(col.isNull || col.getField(k).isNull, at(k), "propertyNames", "propertyNames"))))
+            Gate(col.isNull, All(badNames.map(k => Check(col.isNull || col.getField(k).isNull))))
           case MapType(StringType, _, _) =>
-            Gate(col.isNull, Each(map_keys(col), (k, _) =>
-              Check(subValid(v, k, StringType), atKey(k), "propertyNames", "propertyNames")))
+            Gate(col.isNull, each(map_keys(col))(k => Check(subValid(v, k, StringType))))
           case _ => pass
         }
 
@@ -631,26 +568,24 @@ object ColumnCompiler {
           case _ => None
         }
         propertyCount.fold(pass) { cnt =>
-          if (kw == "maxProperties") Check(col.isNull || cnt <= n, path, kw, "Max properties exceeded")
-          else Check(col.isNull || cnt >= n, path, kw, "Min properties not reached")
+          Check(col.isNull || (if (kw == "maxProperties") cnt <= n else cnt >= n))
         }
 
       // Applicators test their subschemas with the boolean lowering.
-      case "allOf" => all(subschemas.map(sub(_, col, dt, path, twin)))
+      case "allOf" => all(subschemas.map(sub(_, col, dt, twin)))
 
       case "anyOf" =>
-        Check(subschemas.map(subValid(_, col, dt)).reduce(_ || _),
-          path, "anyOf", "No schema validates for anyOf validation")
+        Check(subschemas.map(subValid(_, col, dt)).reduce(_ || _))
 
       case "oneOf" =>
         val validCount = subschemas.map(s => when(subValid(s, col, dt), 1).otherwise(0)).reduce(_ + _)
-        Check(validCount === 1, path, "oneOf", "oneOf validation failed")
+        Check(validCount === 1)
 
-      case "not" => Check(!ok(subValid(v, col, dt)), path, "not", "Schema should not be valid")
+      case "not" => Check(!ok(subValid(v, col, dt)))
 
       case "if" =>
         // the branches get the twin only so an admitted `type` folds to pass
-        def branch(k: String) = schema.get(k).map(sub(_, col, dt, path, twin)).getOrElse(pass)
+        def branch(k: String) = schema.get(k).map(sub(_, col, dt, twin)).getOrElse(pass)
         Cond(ok(subValid(v, col, dt)), branch("then"), branch("else"))
 
       case k if contentKeywords(k) =>

@@ -117,19 +117,25 @@ object RowValidator {
     "patternProperties", "additionalProperties", "then", "else", "$ref")
 
   /** The engine's exploded violation rows are the flattened leaves: drop
-    * applicator-level parent entries that only summarize child causes. */
-  def leafErrors(errors: Vector[Violation]): Vector[Violation] =
+    * applicator-level parent entries that only summarize child causes, and
+    * a keyword's summary at an ancestor of a path where the same keyword
+    * fails again (e.g. `required`'s object-level row above its per-key
+    * rows). Built over sets of the paths' segment prefixes, so it is linear
+    * in the violations times the path depth. */
+  def leafErrors(errors: Vector[Violation]): Vector[Violation] = {
+    // the proper segment prefixes of `path`: p with `path.startsWith(p + "/")`
+    def prefixes(path: String): Iterator[String] =
+      Iterator.range(0, path.length).filter(path.charAt(_) == '/').map(path.substring(0, _))
+    val ancestors = errors.iterator.flatMap(v => prefixes(v.path)).toSet
+    val leafPaths = errors.iterator.filterNot(v => parents(v.keyword)).map(_.path).toSet
+    val keywordAncestors = errors.iterator.flatMap(v => prefixes(v.path).map(v.keyword -> _)).toSet
     errors.filterNot { v =>
       // applicator summary rows, when any deeper/leaf cause exists
-      (parents.contains(v.keyword) &&
-        errors.exists(o => o != v && (o.path.startsWith(v.path + "/") ||
-          (o.path == v.path && !parents.contains(o.keyword))))) ||
-      // same-keyword summary at an ancestor path (e.g. `required`'s
-      // object-level row above its per-key rows)
-      errors.exists(o => o.keyword == v.keyword && o.path != v.path &&
-        o.path.startsWith(v.path + "/"))
+      (parents(v.keyword) && (ancestors(v.path) || leafPaths(v.path))) ||
+      keywordAncestors((v.keyword, v.path))
     } match {
       case Vector() if errors.nonEmpty => errors.take(1) // keep at least one row
       case leaves => leaves
     }
+  }
 }

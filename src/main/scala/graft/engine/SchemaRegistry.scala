@@ -27,15 +27,14 @@ object SchemaRegistry {
   /** Validate each row against the schema its `schemaCol` names. Adds
     * `valid` + `errors` like [[ValidationJob.withVerdicts]], from the same
     * per-schema step (`ValidationJob.verdict`) and the same projection
-    * shape: one `CASE schema_name` chain picks a row's boolean verdict and
-    * a second, for failing rows only, its violation array, both inside
-    * whole-stage codegen. A schema the compiler can NOT express (recursive
-    * $ref, dynamic objects, content decoding) is an arm of the same chains
-    * that reads the row core's verdict struct, which a third `CASE` fills
-    * with `graft_validate` for that schema's rows only, once per row. So
-    * one inexpressible schema does not drag the whole registry off the
-    * compiled path, and compiled rows never run the row core. An unknown
-    * or NULL name raises. */
+    * chain: one `CASE schema_name` picks a row's compiled verdict (`false`
+    * for a schema the compiler can NOT express: recursive $ref, dynamic
+    * objects, content decoding), and for the rows it fails a second `CASE`
+    * runs that schema's row core, `graft_validate`, once per row. Both
+    * `valid` and `errors` read that one struct. So one inexpressible schema
+    * does not drag the whole registry off the compiled path, and compiled
+    * rows run the row core only when their verdict fails. An unknown or
+    * NULL name raises. */
   def validateWith(
       spark: SparkSession, df: DataFrame,
       registry: SchemaRegistry, schemaCol: String): DataFrame = {
@@ -44,20 +43,17 @@ object SchemaRegistry {
     val payload = struct(payloadFields.map(f => col(f.name)).toSeq: _*)
     val arms = registry.sources.toSeq.sortBy(_._1).map { case (n, source) =>
       (col(schemaCol) === n) -> ValidationJob.verdict(
-        spark, source, payload, payloadType, s"registry schema '$n'")
+        source, payload, payloadType, s"registry schema '$n'")
     }
-    def dispatch(branches: Seq[(Column, Column)]): Column =
-      branches.tail.foldLeft(when(branches.head._1, branches.head._2)) {
-        case (c, (t, b)) => c.when(t, b)
+    def dispatch(branch: ValidationJob.Verdict => Column): Column =
+      arms.tail.foldLeft(when(arms.head._1, branch(arms.head._2))) {
+        case (c, (guard, v)) => c.when(guard, branch(v))
       }
-    val rowCore = arms.flatMap { case (guard, v) => v.rowCore.map(guard -> _) }
     // an unknown or NULL name raises; `concat` with a NULL name is NULL,
     // so the message coalesces it
-    val valid = dispatch(arms.map { case (guard, v) => guard -> v.valid }).otherwise(raise_error(
+    val pass = dispatch(_.pass).otherwise(raise_error(
       concat(lit("no schema '"), coalesce(col(schemaCol), lit("null")),
         lit(s"' in registry (${registry.names.toSeq.sorted.mkString(", ")})"))))
-    ValidationJob.Verdict(valid,
-      () => dispatch(arms.map { case (guard, v) => guard -> v.violations() }),
-      if (rowCore.isEmpty) None else Some(dispatch(rowCore))).addTo(df)
+    ValidationJob.settled(df, pass, dispatch(_.rowCore), valid => dispatch(_.settle(valid)))
   }
 }

@@ -2,7 +2,7 @@ package graft.engine.expressions
 
 import java.util.concurrent.ConcurrentHashMap
 
-import graft.engine.{ColumnCompiler, RowValidator}
+import graft.engine.RowValidator
 import graft.schema.SchemaDoc
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -16,8 +16,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * `validate` entry (`jinx.api/validate`, reference `api.cljc`) as a native
   * Catalyst expression, and the one way the row core (recursive `$ref`,
   * patternProperties, content keywords, …) enters a plan:
-  * struct(valid boolean, violations [[ColumnCompiler.errorType]]), the
-  * violation rows of [[RowValidator.leafErrors]].
+  * struct(valid boolean, violations [[ValidateJson.errorType]]), the
+  * violation rows of [[RowValidator.leafErrors]]. It builds every
+  * violation row the engine emits: a compiled schema's too, for the rows
+  * its boolean verdict fails.
   *
   * The instance is either JSON text, parsed per row (a malformed line is
   * one `parse` violation, not an error — at 10^12 lines some WILL be
@@ -31,7 +33,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * The work is one call on this expression, so the surrounding projection
   * stays in whole-stage codegen. For column-expressible schemas over typed
-  * tables the compiled plan ([[ColumnCompiler]]) is the fast lane. */
+  * tables the compiled verdict ([[graft.engine.ColumnCompiler]]) is the fast lane, and
+  * this expression runs only where it fails. */
 case class ValidateJson(left: Expression, right: Expression) extends BinaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
@@ -48,8 +51,8 @@ case class ValidateJson(left: Expression, right: Expression) extends BinaryExpre
 
   override def dataType: DataType = ValidateJson.resultType
   override def prettyName: String = "graft_validate"
-  // Marked nondeterministic, like ViolationsOf, so Catalyst neither copies
-  // it into a pushed-down filter (`size(errors) > 0`, the `isnotnull` that
+  // Marked nondeterministic so Catalyst neither copies it into a
+  // pushed-down filter (`size(errors) > 0`, the `isnotnull` that
   // InferFiltersFromGenerate adds under an explode) nor collapses the
   // projection that defines it into one reading `valid` and `violations`
   // apart: the row core runs once per row.
@@ -90,9 +93,15 @@ case class ValidateJson(left: Expression, right: Expression) extends BinaryExpre
 }
 
 object ValidateJson {
+  /** One (path, keyword, message) struct per violation row. */
+  val errorType: ArrayType = ArrayType(StructType(Seq(
+    StructField("path", StringType, nullable = true),
+    StructField("keyword", StringType, nullable = false),
+    StructField("message", StringType, nullable = false))), containsNull = false)
+
   val resultType: StructType = StructType(Seq(
     StructField("valid", BooleanType, nullable = false),
-    StructField("violations", ColumnCompiler.errorType, nullable = false)))
+    StructField("violations", errorType, nullable = false)))
 
   private def row(path: String, keyword: String, message: String): InternalRow =
     new GenericInternalRow(Array[Any](UTF8String.fromString(path),

@@ -28,16 +28,6 @@ class EngineSpec extends AnyFunSuite {
     assert(invalid > 0, "fixture must contain injected violations")
   }
 
-  test("boolean fast path agrees with error-array emptiness on every doc") {
-    val doc = graft.schema.SchemaDoc.schema(DocTable.docSchemaJson)
-    val payloadFields = docs.schema.fields.filter(f => f.name == "doc_id" || f.name == "spans")
-    val payload = struct(payloadFields.map(f => col(f.name)).toSeq: _*)
-    val dt = org.apache.spark.sql.types.StructType(payloadFields)
-    val (fast, errs) = ColumnCompiler.lowerings(doc, payload, dt)
-    val both = docs.select(fast.as("fast"), (size(errs()) === 0).as("viaErrors"))
-    assert(both.where(col("fast") =!= col("viaErrors")).count() === 0)
-  }
-
   test("verdict-only fast mode matches the full path verdicts") {
     val full = ValidationJob.withVerdicts(spark, docs, DocTable.docSchemaJson)
       .select("doc_num", "valid")
@@ -57,6 +47,60 @@ class EngineSpec extends AnyFunSuite {
       .select(col("doc_num"), col("v.path"), col("v.keyword"))
       .collect().map(_.toSeq).toSet
     assert(colViols === rowViols)
+  }
+
+  /** (doc_id, path, keyword, message) of every violation row, as a multiset. */
+  private def violationRows(verdicts: DataFrame): Seq[String] =
+    verdicts.where(size(col("errors")) > 0)
+      .select(col("doc_id").cast("string"), explode(col("errors")).as("v"))
+      .select(concat_ws("|", coalesce(col("doc_id"), lit("null")), col("v.path"),
+        col("v.keyword"), col("v.message")))
+      .collect().map(_.getString(0)).toSeq.sorted
+
+  test("a compiled schema's violation rows are the row core's, applicators and messages too") {
+    val s = spark
+    import s.implicits._
+    // a flat payload: doc_id a number, spans a struct of two fields
+    val frame = Seq[(java.lang.Long, String, java.lang.Long)](
+      (2L, "1", 7L), (5L, "text", null), (12L, null, 4L), (25L, "kind", 2L),
+      (null, "x", null), (0L, null, null), (15L, "2", 15L))
+      .toDF("doc_id", "kind", "n").withColumn("doc_num", monotonically_increasing_id())
+      .select(col("doc_num"), col("doc_id"),
+        when(col("kind").isNull && col("n").isNull, lit(null))
+          .otherwise(struct(col("kind"), col("n"))).as("spans"))
+    val schemaJson =
+      """{"properties": {
+        |  "doc_id": {"anyOf": [{"maximum": 3}, {"minimum": 10, "maximum": 20}],
+        |             "oneOf": [{"minimum": 5}, {"multipleOf": 5}]},
+        |  "spans": {"properties": {"kind": {"type": ["integer", "null"]}},
+        |            "dependencies": {"kind": ["n"]},
+        |            "propertyNames": {"maxLength": 1}}}}""".stripMargin
+    val payloadType = StructType(frame.schema.fields.filter(_.name != "doc_num"))
+    ColumnCompiler.validity(SchemaDoc.schema(schemaJson), struct(col("doc_id"), col("spans")),
+      payloadType) // compiles: no Unsupported
+    val compiled = violationRows(ValidationJob.withVerdicts(spark, frame, schemaJson))
+    val rowCore = violationRows(
+      RowValidator.validateRows(spark, frame, schemaJson, Some(Seq("doc_id", "spans"))))
+    assert(compiled === rowCore)
+    // anyOf reports its failing branches' keywords, oneOf its causes, and
+    // the row core's type message
+    assert(compiled.contains("5|/doc_id|maximum|Failed maximum check"), compiled)
+    assert(compiled.contains("5|/doc_id|minimum|Failed minimum check"), compiled)
+    assert(compiled.exists(_.startsWith("15|/doc_id|oneOf|")), compiled)
+    assert(compiled.exists(r => r.startsWith("5|/spans/kind|type|Value must be of type")), compiled)
+    assert(compiled.exists(_.contains("|dependencies|")) &&
+      compiled.exists(_.contains("|propertyNames|")), compiled)
+  }
+
+  test("a row the compiled verdict fails and the row core passes raises, naming the schema") {
+    val frame = spark.range(3).toDF("doc_num").withColumn("doc_id", col("doc_num").cast("string"))
+    val verdict = ValidationJob.Verdict(Some(lit(false)),
+      expressions.GraftFunctions.validateJson(struct(col("doc_id")), lit("{}")), "probe schema")
+    val e = intercept[Throwable](verdict.addTo(frame).collect())
+    def mentions(t: Throwable): Boolean = t != null &&
+      (Option(t.getMessage).exists(_.contains("probe schema: the compiled verdict fails")) ||
+        mentions(t.getCause))
+    assert(mentions(e), e.toString)
   }
 
   test("a minItems bound past Int range marks every document invalid") {
@@ -164,12 +208,12 @@ class EngineSpec extends AnyFunSuite {
     def check(kw: String, value: String, message: String, validIds: Set[String]): Unit = {
       val keyword = s"""{"$kw":"$value"}"""
       val schemaJson = s"""{"properties":{"doc_id":$keyword}}"""
-      intercept[ColumnCompiler.Unsupported](ColumnCompiler.lowerings(
-        SchemaDoc.schema(schemaJson), struct(col("doc_id")), StructType(frame.schema.fields.take(1)))._1)
+      intercept[ColumnCompiler.Unsupported](ColumnCompiler.validity(
+        SchemaDoc.schema(schemaJson), struct(col("doc_id")), StructType(frame.schema.fields.take(1))))
       intercept[ColumnCompiler.Unsupported](
-        ColumnCompiler.lowerings(SchemaDoc.schema(keyword), col("doc_id"), StringType)._1)
+        ColumnCompiler.validity(SchemaDoc.schema(keyword), col("doc_id"), StringType))
       // inert on a non-string value
-      val onLong = ColumnCompiler.lowerings(SchemaDoc.schema(keyword), col("doc_num"), LongType)._1
+      val onLong = ColumnCompiler.validity(SchemaDoc.schema(keyword), col("doc_num"), LongType)
       assert(frame.select(onLong).as[Boolean].collect().forall(identity))
       def byId(out: DataFrame) =
         out.select("doc_id", "valid").as[(String, Boolean)].collect().toMap

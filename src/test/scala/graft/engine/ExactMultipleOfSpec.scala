@@ -53,7 +53,7 @@ class ExactMultipleOfSpec extends AnyFunSuite {
     val doc = SchemaDoc.schema("""{"properties":{"v":{"multipleOf":0.0001}}}""")
     val payloadType = StructType(Seq(StructField("v", DoubleType)))
     val verdicts = df.select(col("v"),
-      ColumnCompiler.lowerings(doc, struct(col("v")), payloadType)._1.as("ok")).collect()
+      ColumnCompiler.validity(doc, struct(col("v")), payloadType).as("ok")).collect()
       .map(r => r.getDouble(0) -> r.getBoolean(1)).toMap
     assert(verdicts(0.0075) === true)
     assert(verdicts(0.00751) === false)

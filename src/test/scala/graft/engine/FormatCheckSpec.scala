@@ -45,10 +45,10 @@ class FormatCheckSpec extends AnyFunSuite {
       """{"properties":{"ts":{"format":"date-time"},"host":{"format":"idn-hostname"}}}""")
     val ptype = org.apache.spark.sql.types.StructType(df.schema.fields)
     // compiles — no Unsupported — and the plan has no row-core call
-    val out = df.withColumn("errors",
-      ColumnCompiler.lowerings(schema, struct(col("ts"), col("host")), ptype)._2())
+    val out = df.withColumn("valid",
+      ColumnCompiler.validity(schema, struct(col("ts"), col("host")), ptype))
     assert(!out.queryExecution.optimizedPlan.toString.contains("graft_validate"))
-    val verdicts = out.select(size(col("errors")) === 0).collect().map(_.getBoolean(0))
+    val verdicts = out.select(col("valid")).collect().map(_.getBoolean(0))
     assert(verdicts.toSeq === Seq(true, false))
   }
 }

@@ -57,14 +57,13 @@ class MapTypeSpec extends AnyFunSuite {
     val payloadType = StructType(dfSchema.fields.filter(_.name == "props"))
     val payload = struct(col("props"))
     val doc = SchemaDoc.schema(schemaJson)
-    val (fast, errs) = ColumnCompiler.lowerings(doc, payload, payloadType)
-    val colPath = df.select(col("doc_num"), fast.as("fast"), (size(errs()) === 0).as("viaErrors"))
+    val colPath = df.select(col("doc_num"),
+      ColumnCompiler.validity(doc, payload, payloadType).as("fast"))
     val rowPath = RowValidator.validateRows(spark, df, schemaJson)
       .select(col("doc_num"), col("valid").as("rowValid"))
     val joined = colPath.join(rowPath, "doc_num").orderBy("doc_num").collect()
     joined.foreach { r =>
-      assert(r.getBoolean(1) === r.getBoolean(2), s"fast vs errors at doc ${r.getLong(0)}")
-      assert(r.getBoolean(1) === r.getBoolean(3), s"column vs row core at doc ${r.getLong(0)}")
+      assert(r.getBoolean(1) === r.getBoolean(2), s"column vs row core at doc ${r.getLong(0)}")
     }
     val verdicts = joined.map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     assert(verdicts === Map(0L -> true, 1L -> false, 2L -> false, 3L -> false,
@@ -73,13 +72,14 @@ class MapTypeSpec extends AnyFunSuite {
   }
 
   test("violation rows carry dynamic map keys in paths") {
+    // withVerdicts validates the (doc_id, spans) payload: the map as `spans`
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), dfSchema)
-    val payloadType = StructType(dfSchema.fields.filter(_.name == "props"))
-    val doc = SchemaDoc.schema(schemaJson)
-    val viols = df.where(col("doc_num") === 3)
-      .select(explode(ColumnCompiler.lowerings(doc, struct(col("props")), payloadType)._2()).as("v"))
-      .select("v.path", "v.keyword").collect()
-    assert(viols.exists(r => r.getString(0) == "/props/num_a" && r.getString(1) == "pattern"),
+      .withColumnRenamed("props", "spans")
+    val viols = ValidationJob.violations(ValidationJob.withVerdicts(spark,
+        df.where(col("doc_num") === 3).withColumn("doc_id", lit("doc-3")),
+        schemaJson.replace("props", "spans")))
+      .select("path", "keyword").collect()
+    assert(viols.exists(r => r.getString(0) == "/spans/num_a" && r.getString(1) == "pattern"),
       viols.mkString(","))
   }
 }

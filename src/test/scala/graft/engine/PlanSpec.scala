@@ -14,13 +14,22 @@ class PlanSpec extends AnyFunSuite {
   private def physical(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** The calls of the row core, `graft_validate`, in a plan. */
+  private def rowCoreCalls(plan: String): Int = "graft_validate\\(".r.findAllIn(plan).size
+
+  /** Whether `plan` runs the row core in the non-`valid` branch of a CASE
+    * on the projected compiled verdict, so only failing rows run it.
+    * `arms` is what comes between (a registry's CASE on the schema name). */
+  private def gatedOnVerdict(plan: String, arms: String = ""): Boolean =
+    plan.matches(s"(?s).*CASE WHEN valid#\\d+ THEN null ELSE ${arms}graft_validate\\(.*")
+
   test("compiled validation is a shuffle-free narrow projection over the scan") {
     val docs = DocTable.docs(spark, sfDir)
     val verdicts = ValidationJob.withVerdicts(spark, docs, DocTable.docSchemaJson)
     val plan = physical(verdicts)
     assert(!plan.contains("Exchange"), s"validation must not shuffle:\n${plan.take(600)}")
-    assert(plan.contains("graft_violations(") && !plan.contains("graft_validate("),
-      "doc schema must compile to Columns, not fall back to the row core")
+    // the doc schema compiles to Columns: the row core runs behind its verdict
+    assert(rowCoreCalls(plan) === 1 && gatedOnVerdict(plan), plan)
   }
 
   test("referential check broadcasts the catalog side") {
@@ -71,6 +80,7 @@ class PlanSpec extends AnyFunSuite {
       s"span items must compile to vectorized array ops, not forall: ${validLine.take(300)}")
     assert(validLine.contains("graft_every_element") && validLine.contains("array_min"),
       s"expected vectorized item conditions: ${validLine.take(300)}")
+    assert(!plan.contains("graft_validate("), plan)
   }
 
   /** `df` written to parquet and read back: a file-read array is
@@ -84,8 +94,8 @@ class PlanSpec extends AnyFunSuite {
     back
   }
 
-  /** The named projections of `df` run in whole-stage codegen. Lambdas may
-    * appear only inside graft_violations, which prints its payload alone. */
+  /** The named projections of `df` run in whole-stage codegen, with no
+    * lambdas. */
   private def projections(df: org.apache.spark.sql.DataFrame, names: String*): Unit = {
     val lines = physical(df).linesIterator.toSeq
     names.foreach { name =>
@@ -102,7 +112,7 @@ class PlanSpec extends AnyFunSuite {
     projections(ValidationJob.withVerdictsOnly(spark, docs, DocTable.docSchemaJson), "valid")
     val full = ValidationJob.withVerdicts(spark, docs, DocTable.docSchemaJson)
     projections(full, "valid", "errors")
-    assert(physical(full).contains("graft_violations("))
+    assert(rowCoreCalls(physical(full)) === 1)
   }
 
   test("whole-stage codegen covers the schema registry's projections over a parquet-read table") {
@@ -113,7 +123,7 @@ class PlanSpec extends AnyFunSuite {
       "id-only" -> """{"required":["doc_id"],"properties":{"doc_id":{"pattern":"^doc-"}}}"""))
     val verdicts = SchemaRegistry.validateWith(spark, docs, registry, "schema_name")
     projections(verdicts, "valid", "errors")
-    assert(physical(verdicts).contains("graft_violations("))
+    assert(rowCoreCalls(physical(verdicts)) === 2)
   }
 
   test("the parquet-read verdict reads only the leaves it checks, with no set operations") {
@@ -134,15 +144,16 @@ class PlanSpec extends AnyFunSuite {
       plan.toString)
   }
 
-  test("violation rows evaluate the verdict and the violation array once per row") {
+  test("violation rows evaluate the verdict and the row core once per row") {
     // without an observe between them, `size(errors) > 0` and the
     // `isnotnull(errors)` inferred under explode must stay above the
-    // projection that defines `errors`, not be inlined into a Filter
+    // projection that defines `errors`, not be inlined into a Filter; the
+    // row core runs for the rows the verdict fails only
     val docs = fileBacked(DocTable.docs(spark, sfDir))
     val rows = ValidationJob.violations(
       ValidationJob.withVerdicts(spark, docs, DocTable.docSchemaJson))
     val plan = physical(rows)
-    assert("graft_violations\\(".r.findAllIn(plan).size === 1, plan)
+    assert(rowCoreCalls(plan) === 1 && gatedOnVerdict(plan), plan)
     assert("RLIKE".r.findAllIn(plan).size === 1, plan)
   }
 
@@ -163,26 +174,25 @@ class PlanSpec extends AnyFunSuite {
     val docs = fileBacked(DocTable.docs(spark, sfDir))
     val verdicts = ValidationJob.withVerdicts(spark, docs, recursiveDocSchema)
     val plan = physical(ValidationJob.violations(verdicts))
-    assert("graft_validate\\(".r.findAllIn(plan).size === 1, plan)
-    assert(!plan.contains("graft_violations("), plan)
+    assert(rowCoreCalls(plan) === 1 && !plan.contains(" THEN null ELSE graft_validate("), plan)
     projections(verdicts, "valid", "errors")
     assert(ValidationJob.violations(verdicts).count() > 0)
   }
 
-  test("a hybrid registry runs the row core once per row, and only on its own schema's rows") {
+  test("a hybrid registry runs each row's row core once, behind the verdict") {
     val docs = fileBacked(DocTable.docs(spark, sfDir).withColumn("schema_name",
       when(col("doc_num") % 2 === 0, lit("doc")).otherwise(lit("recursive"))))
     val registry = SchemaRegistry.compile(Map(
       "doc" -> DocTable.docSchemaJson, "recursive" -> recursiveDocSchema))
     val verdicts = SchemaRegistry.validateWith(spark, docs, registry, "schema_name")
     val plan = physical(ValidationJob.violations(verdicts))
-    assert("graft_validate\\(".r.findAllIn(plan).size === 1, plan)
-    // its one call sits in the arm of a CASE on the schema name, so a row
-    // naming the compiled schema never evaluates it
-    val rowCore = plan.linesIterator.find(_.contains("graft_validate(")).get
-    assert(rowCore.matches(".*CASE WHEN \\(schema_name#\\d+ = recursive\\) THEN graft_validate\\(.*"),
-      rowCore)
-    assert("graft_violations\\(".r.findAllIn(plan).size === 1, plan)
+    // one call per schema, each in the arm of a CASE on the schema name,
+    // behind the verdict, which is `false` for the recursive schema, so
+    // its rows always reach the row core
+    assert(rowCoreCalls(plan) === 2, plan)
+    assert(gatedOnVerdict(plan, "CASE WHEN \\(schema_name#\\d+ = doc\\) THEN ") &&
+      plan.matches("(?s).*WHEN \\(schema_name#\\d+ = recursive\\) THEN graft_validate\\(.*"), plan)
+    assert(plan.contains("= recursive) THEN false"), plan)
     projections(verdicts, "valid", "errors")
   }
 

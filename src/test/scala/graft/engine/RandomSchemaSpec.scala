@@ -232,25 +232,29 @@ class RandomSchemaSpec extends AnyFunSuite {
       val df = spark.createDataFrame(spark.sparkContext.parallelize(docs, 2), dfType)
         .withColumn("doc_num", monotonically_increasing_id())
 
-      val colPath =
+      val compiled =
         try {
-          val payloadType = StructType(dfType.fields)
-          val payload = struct(col("doc_id"), col("spans"))
-          val doc = graft.schema.SchemaDoc.schema(schemaJson)
-          val (fast, errs) = ColumnCompiler.lowerings(doc, payload, payloadType)
-          Some(df.select(col("doc_num"), fast.as("fast"), (size(errs()) === 0).as("viaErrors")))
-        } catch { case _: ColumnCompiler.Unsupported => fellBack += 1; None }
+          ColumnCompiler.validity(graft.schema.SchemaDoc.schema(schemaJson),
+            struct(col("doc_id"), col("spans")), StructType(dfType.fields))
+          true
+        } catch { case _: ColumnCompiler.Unsupported => fellBack += 1; false }
 
-      colPath.foreach { cp =>
+      if (compiled) {
         // the instance is (doc_id, spans), the same fields the column path sees
-        val rp = RowValidator.validateRows(spark, df, schemaJson, Some(Seq("doc_id", "spans")))
-          .select(col("doc_num"), col("valid").as("rowValid"))
-        val joined = cp.join(rp, "doc_num").collect()
-        joined.foreach { r =>
-          assert(r.getBoolean(1) === r.getBoolean(2),
-            s"fast≠errors schema#$i (containsNull=$containsNull): $schemaJson doc_num=${r.getLong(0)}")
-          assert(r.getBoolean(1) === r.getBoolean(3),
-            s"col≠row schema#$i (containsNull=$containsNull): $schemaJson doc_num=${r.getLong(0)}")
+        def verdicts(out: org.apache.spark.sql.DataFrame) =
+          out.select("doc_num", "valid", "errors").collect().map { r =>
+            r.getLong(0) -> (r.getBoolean(1), r.getSeq[Row](2)
+              .map(v => (v.getString(0), v.getString(1), v.getString(2))).sorted)
+          }.toMap
+        val cp = verdicts(ValidationJob.withVerdicts(spark, df, schemaJson))
+        val rp = verdicts(RowValidator.validateRows(spark, df, schemaJson, Some(Seq("doc_id", "spans"))))
+        assert(cp.keySet === rp.keySet)
+        cp.foreach { case (n, (valid, errors)) =>
+          val (rowValid, rowErrors) = rp(n)
+          assert(valid === rowValid,
+            s"col≠row schema#$i (containsNull=$containsNull): $schemaJson doc_num=$n")
+          assert(errors === rowErrors,
+            s"violation rows col≠row schema#$i (containsNull=$containsNull): $schemaJson doc_num=$n")
         }
       }
     }

@@ -81,10 +81,12 @@ class SchemaRegistrySpec extends AnyFunSuite {
     assert(compiled === driverRowCore(df, registry))
     assert(compiled._2.map(_._1).distinct === Seq(1L, 3L, 4L))
     // and the compiled path really is the one validateWith picked: its plan
-    // must hold no row-core call
+    // runs each schema's row core only behind the compiled verdict
     val plan = SchemaRegistry.validateWith(spark, df, registry, "schema_name")
       .queryExecution.optimizedPlan.toString
-    assert(!plan.contains("graft_validate"), s"expected compiled dispatch, got:\n$plan")
+    val rowCore = plan.linesIterator.filter(_.contains("graft_validate(")).toSeq
+    assert(rowCore.size === 1 && "graft_validate\\(".r.findAllIn(plan).size === registry.names.size &&
+      rowCore.head.matches(".*CASE WHEN valid#\\d+ THEN null ELSE .*"), s"expected compiled dispatch, got:\n$plan")
   }
 
   test("registry with a column-inexpressible schema still validates every row") {
@@ -115,16 +117,17 @@ class SchemaRegistrySpec extends AnyFunSuite {
     assert(got === driverRowCore(df, reg))
     assert(got._1.map(_._1) === (0L to 5L))
     // plan: one projection chain, no Union. The compiled schemas stay
-    // compiled arms of the CASE chain (graft_violations); the inexpressible
-    // schema is ONE row-core arm, graft_validate behind its name's guard,
-    // whose struct the chain's `meta` arm reads
+    // compiled arms of the verdict's CASE chain; the inexpressible schema's
+    // arm there is `false`. One projection behind that verdict runs each
+    // schema's graft_validate behind its name's guard, and `valid` reads
+    // its struct
     val plan = out.queryExecution.optimizedPlan.toString
     assert(!plan.contains("Union"), plan)
-    assert("graft_validate\\(".r.findAllIn(plan).length === 1, plan)
+    assert("graft_validate\\(".r.findAllIn(plan).length === 3, plan)
     assert(plan.contains("CASE WHEN (schema_name#") && plan.contains(") THEN graft_validate("), plan)
+    assert(plan.contains("= meta) THEN false"), plan)
     val validLine = plan.linesIterator.find(_.contains(" AS valid#")).get
     assert(validLine.contains("CASE WHEN") && validLine.contains("graft_row_core#"), validLine)
-    assert("graft_violations\\(".r.findAllIn(plan).length === 2, plan)
   }
 
   test("hybrid dispatch: NULL schema name fails loudly instead of silently dropping the row") {
