@@ -518,7 +518,7 @@ object SparkEntry {
         when(col("doc_id") % 2 === 0,
           col("text").substr(lit(1), (col("doc_id") % 30 + 10).cast("int")))
           .otherwise(col("doc_id").cast("string")).as("payload"))
-      SchemaRegistry.validateWith(s, corpus, registry, "schema_name")
+      SchemaRegistry.validateWith(corpus, registry, "schema_name")
         .select(col("doc_id"), col("schema_name"), col("valid"))
         .orderBy("doc_id")
     }),

@@ -160,32 +160,63 @@ object ColumnCompiler {
   /** multipleOf with the reference's exact-decimal semantics: floating
     * columns go through the native [[graft.engine.expressions.ExactMultipleOf]]
     * expression (BigDecimal remainder, codegen'd); integral/decimal columns
-    * use exact decimal pmod. */
+    * use exact decimal pmod. A divisor that a double, or decimal(38,12),
+    * does not hold exactly is left to the row core. */
   private def multipleOfCond(col: Column, dt: DataType, m: JNum): Column = dt match {
     case FloatType | DoubleType =>
+      if (!holdsExactly(m.v, DoubleType)) throw Unsupported(s"multipleOf ${m.v} is no double")
       graft.engine.expressions.GraftFunctions.exactMultipleOf(col, lit(m.v.toDouble))
     case _ =>
+      val d = m.v.underlying.stripTrailingZeros
+      val scale = dt match { case t: DecimalType => t.scale; case _ => 0 }
+      if (d.scale > 12 || d.precision - d.scale > 26 || scale > 12)
+        throw Unsupported(s"multipleOf ${m.v} is no decimal(38,12)")
       pmod(col.try_cast(DecimalType(38, 12)),
         lit(m.v.underlying).cast(DecimalType(38, 12))) === lit(0)
   }
 
+  /** Whether a subject of numeric type `dt` can hold `n`: a long, or on a
+    * floating subject a double whose shortest decimal, the row core's
+    * reading of it, is `n`. A decimal subject holds any. */
+  private def holdsExactly(n: BigDecimal, dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType => n.isValidLong
+    case FloatType | DoubleType =>
+      val d = n.toDouble
+      !d.isInfinite && BigDecimal(d).compare(n) == 0
+    case _ => true
+  }
+
+  /** `n` as a bound on an integral subject `x`: the integer `x` crosses it
+    * at (x ≤ n ⟺ x ≤ floor(n), x < n ⟺ x < ceil(n), `up` picks ceil), a
+    * long, or past the long range, a decimal that every long is on the
+    * same side of. */
+  private def integralBound(n: BigDecimal, up: Boolean): Column = {
+    val i = n.setScale(0, if (up) BigDecimal.RoundingMode.CEILING else BigDecimal.RoundingMode.FLOOR)
+    if (i.isValidLong) lit(i.toLong)
+    else lit((if (i > 0) BigDecimal(Long.MaxValue) + 1 else BigDecimal(Long.MinValue) - 1).underlying)
+  }
+
   private def literal(v: JVal): Column = v match {
     case JStr(s)  => lit(s)
-    case JNum(n)  => if (n.isWhole && n.abs < BigDecimal(Long.MaxValue)) lit(n.toLong) else lit(n.toDouble)
+    case JNum(n)  => if (n.isValidLong) lit(n.toLong) else lit(n.toDouble)
     case JBool(b) => lit(b)
     case JNull    => lit(null)
     case other    => throw Unsupported(s"non-scalar literal ${other.typeName} in column path")
   }
 
-  /** Whether `col === literal(v)` is well-typed for a column of the given
-    * JSON type. Mixed numeric widths coerce fine; string-vs-number or
+  /** Whether `col === literal(v)` is well-typed for a column of type `dt`
+    * and can hold. Mixed numeric widths coerce fine; string-vs-number or
     * boolean-vs-number would throw under ANSI mode, and per JSON semantics
-    * cross-type values are simply unequal. Non-scalars fall through to
+    * cross-type values are simply unequal, as is a number the column
+    * cannot hold (an integral column and 0.5). Non-scalars fall through to
     * [[literal]]'s Unsupported (row-core fallback). */
-  private def literalComparable(v: JVal, jsonType: String): Boolean = v match {
-    case _: JStr  => jsonType == "string"
-    case _: JNum  => jsonType == "integer" || jsonType == "number"
-    case _: JBool => jsonType == "boolean"
+  private def literalComparable(v: JVal, dt: DataType): Boolean = v match {
+    case _: JStr  => dt == StringType
+    case JNum(n)  => jsonTypeOf(dt) match {
+      case "integer" | "number" => holdsExactly(n, dt)
+      case _ => false
+    }
+    case _: JBool => dt == BooleanType
     case _        => true
   }
 
@@ -255,6 +286,10 @@ object ColumnCompiler {
     case _ => false
   }
 
+  /** Keywords that compare a number with a numeric subject. */
+  private val numericKeywords = Set("type", "enum", "const", "multipleOf",
+    "maximum", "minimum", "exclusiveMaximum", "exclusiveMinimum")
+
   /** Keywords that read an object or array after a keyword before them in
     * the row core's order (`SchemaDoc.KeywordOrder`) changed it. */
   private val laterReaders = Set("uniqueItems", "contains", "patternProperties",
@@ -287,18 +322,35 @@ object ColumnCompiler {
     val numeric = jsonType == "number" || jsonType == "integer"
     val scalar = numeric || jsonType == "string" || jsonType == "boolean"
     def onlyIf(applies: Boolean)(p: => Plan): Plan = if (applies) p else pass
-    // the twin's extreme (nulls skipped) against the bound
-    def bounded(extreme: Column => Column, holds: (Column, Column) => Column): Plan = {
-      val bound = v match { case n: JNum => literal(n); case _ => bad }
-      onlyIf(numeric)(Check(col.isNull || holds(col, bound),
-        twin.map(a => coalesce(holds(extreme(a), bound), lit(true)))))
+    // A decimal of more than 15 digits compares with a number in doubles,
+    // which cannot tell all of its values apart.
+    dt match {
+      case d: DecimalType if d.precision > 15 && numericKeywords(kw) =>
+        throw Unsupported(s"$kw over $d")
+      case _ =>
     }
+    // the twin's extreme (nulls skipped) against the bound; `up`: an
+    // integral subject meets it at its ceiling, not its floor
+    def bounded(extreme: Column => Column, holds: (Column, Column) => Column, up: Boolean): Plan =
+      onlyIf(numeric) {
+        val n = v match { case JNum(n) => n; case _ => bad }
+        val bound = if (jsonType == "integer") integralBound(n, up) else literal(JNum(n))
+        Check(col.isNull || holds(col, bound),
+          twin.map(a => coalesce(holds(extreme(a), bound), lit(true))))
+      }
     // every twin value is one of `values` or null (absent), in one
     // allocation-free loop; the literal array, typed by the analyzer, sets
-    // the type both sides compare in, as it would for array_except
+    // the type both sides compare in, as it would for array_except. That
+    // loop tells -0.0 from 0.0 by their bits; `===` and the row core do
+    // not, so a zero among the values admits -0.0 too.
     def inValues(values: Vector[JVal]): Option[Column] = twin.filter(_ => scalar).map { a =>
-      val allowed = values.filter(x => x != JNull && literalComparable(x, jsonType)).map(literal)
-      everyElement(a, Some(array(allowed :+ lit(null).cast(dt): _*)))
+      val comparable = values.filter(x => x != JNull && literalComparable(x, dt))
+      val negativeZero = dt match {
+        case FloatType | DoubleType if comparable.exists { case JNum(n) => n == 0; case _ => false } =>
+          Seq(lit(-0.0))
+        case _ => Nil
+      }
+      everyElement(a, Some(array((comparable.map(literal) ++ negativeZero) :+ lit(null).cast(dt): _*)))
     }
 
     // object keywords: applied to non-null struct / string-keyed map values
@@ -337,14 +389,14 @@ object ColumnCompiler {
         // string column would raise an ANSI cast error at runtime.
         val cond = when(col.isNull, lit(values.contains(JNull)))
           .otherwise(values.filter(_ != JNull).map(s =>
-              if (literalComparable(s, jsonType)) col === literal(s) else lit(false))
+              if (literalComparable(s, dt)) col === literal(s) else lit(false))
             .reduceOption(_ || _).getOrElse(lit(false)))
         Check(cond, inValues(values))
 
       case "const" =>
         val cond = v match {
           case JNull => col.isNull
-          case s if !literalComparable(s, jsonType) => lit(false) // see enum
+          case s if !literalComparable(s, dt) => lit(false) // see enum
           case s => col === literal(s)
         }
         Check(cond, inValues(Vector(v)))
@@ -355,10 +407,10 @@ object ColumnCompiler {
         val m = v match { case n: JNum if n.v > 0 => n; case _ => bad }
         onlyIf(numeric)(Check(col.isNull || multipleOfCond(col, dt, m)))
 
-      case "maximum"          => bounded(array_max, _ <= _)
-      case "minimum"          => bounded(array_min, _ >= _)
-      case "exclusiveMaximum" => bounded(array_max, _ < _)
-      case "exclusiveMinimum" => bounded(array_min, _ > _)
+      case "maximum"          => bounded(array_max, _ <= _, up = false)
+      case "minimum"          => bounded(array_min, _ >= _, up = true)
+      case "exclusiveMaximum" => bounded(array_max, _ < _, up = true)
+      case "exclusiveMinimum" => bounded(array_min, _ > _, up = false)
 
       case "maxLength" | "minLength" =>
         // Spark `length` on strings counts characters (code points for
@@ -438,8 +490,14 @@ object ColumnCompiler {
 
       case "uniqueItems" =>
         val unique = v match { case JBool(b) => b; case _ => bad }
+        // -0.0 and 0.0 are one JSON number, the row core's 0, but two
+        // values to array_distinct
+        val values = dt match {
+          case ArrayType(FloatType | DoubleType, _) => transform(col, x => x + 0.0)
+          case _ => col
+        }
         onlyIf(unique && jsonType == "array")(Check(
-          col.isNull || size(array_distinct(col)) === size(col)))
+          col.isNull || size(array_distinct(values)) === size(col)))
 
       case "contains" =>
         dt match {
@@ -605,7 +663,9 @@ object ColumnCompiler {
   * format ever forces a whole-schema row-core fallback. */
 object FormatColumns {
   import graft.validate.Formats
-  private def anchor(p: String): String = s"^(?:$p)$$"
+  // `\z`, not `$`, which also matches before a final line terminator:
+  // the row core's `matches()` takes the whole string
+  private def anchor(p: String): String = s"^(?:$p)\\z"
   private val regexFormats: Map[String, String] = Map(
     "email" -> Formats.emailPattern,
     "ipv4" -> Formats.ipv4Pattern,

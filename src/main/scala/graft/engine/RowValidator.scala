@@ -16,7 +16,24 @@ import org.apache.spark.sql.types._
   */
 object RowValidator {
 
-  /** Convert a Spark value (from `Row#get`) + its DataType to the JSON AST. */
+  // BigDecimal cannot represent NaN/Infinity; they map to DISTINCT
+  // out-of-range decimals, so comparisons and equality behave like Spark's
+  // double semantics instead of crashing: NaN sorts above +Inf and
+  // everything else, NaN = NaN and Inf = Inf hold (Spark treats NaN as
+  // equal to itself), and NaN ≠ ±Inf. A 1e-1000 tail keeps them off the
+  // integers and off the multiples of every number a double holds, as the
+  // compiled `type: integer` and `multipleOf` (`GraftMath.isMultipleOf`)
+  // have it. Built in java.math: scala BigDecimal arithmetic rounds to 34
+  // digits.
+  private def beyondDoubles(magnitude: String, tail: String): JNum =
+    JNum(BigDecimal(new java.math.BigDecimal(magnitude).add(new java.math.BigDecimal(tail))))
+  private val NaNValue = beyondDoubles("1e1000", "1e-1000")
+  private val PosInfValue = beyondDoubles("1e999", "1e-1000")
+  private val NegInfValue = beyondDoubles("-1e999", "-1e-1000")
+
+  /** Convert a Spark value (from `Row#get`) + its DataType to the JSON AST.
+    * Dates and timestamps map to ISO-8601 strings (a timestamp as its UTC
+    * instant), binary to base64, as JSON carries them. */
   def toJVal(v: Any, dt: DataType): JVal =
     if (v == null) JNull
     else (v, dt) match {
@@ -28,16 +45,16 @@ object RowValidator {
       case (b: Byte, _)                   => JNum(BigDecimal(b.toInt))
       case (f: Float, _)                  => toJVal(f.toDouble, DoubleType)
       case (d: Double, _) =>
-        // BigDecimal cannot represent NaN/Infinity; approximate with
-        // DISTINCT out-of-range decimals so comparisons and equality behave
-        // like Spark's double semantics instead of crashing: NaN sorts above
-        // +Inf and everything else, NaN = NaN and Inf = Inf hold (Spark
-        // treats NaN as equal to itself), and NaN ≠ ±Inf.
-        if (d.isNaN) JNum(BigDecimal("1e1000"))
-        else if (d == Double.PositiveInfinity) JNum(BigDecimal("1e999"))
-        else if (d == Double.NegativeInfinity) JNum(BigDecimal("-1e999"))
+        if (d.isNaN) NaNValue
+        else if (d == Double.PositiveInfinity) PosInfValue
+        else if (d == Double.NegativeInfinity) NegInfValue
         else JNum(BigDecimal(d))
       case (d: java.math.BigDecimal, _)   => JNum(BigDecimal(d))
+      case (d: java.sql.Date, _)          => JStr(d.toLocalDate.toString)
+      case (d: java.time.LocalDate, _)    => JStr(d.toString)
+      case (t: java.sql.Timestamp, _)     => JStr(t.toInstant.toString)
+      case (t: java.time.Instant, _)      => JStr(t.toString)
+      case (b: Array[Byte], _)            => JStr(java.util.Base64.getEncoder.encodeToString(b))
       case (r: Row, st: StructType) =>
         // Columnar mapping: a NULL struct field means the property is ABSENT
         // (Parquet cannot represent present-null) — must match the Column
@@ -62,7 +79,8 @@ object RowValidator {
   def unmappableField(st: StructType): Option[(String, DataType)] = {
     def first(dt: DataType, path: String): Option[(String, DataType)] = dt match {
       case _: StringType | BooleanType | ByteType | ShortType | IntegerType | LongType |
-          FloatType | DoubleType | _: DecimalType | NullType => None
+          FloatType | DoubleType | _: DecimalType | NullType | DateType | TimestampType |
+          BinaryType => None
       case s: StructType =>
         s.fields.iterator.flatMap(f => first(f.dataType, s"$path.${f.name}")).nextOption()
       case ArrayType(elem, _) => first(elem, path)

@@ -1,7 +1,7 @@
 package graft.engine
 
 import graft.schema.SchemaDoc
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -35,9 +35,7 @@ object SchemaRegistry {
     * does not drag the whole registry off the compiled path, and compiled
     * rows run the row core only when their verdict fails. An unknown or
     * NULL name raises. */
-  def validateWith(
-      spark: SparkSession, df: DataFrame,
-      registry: SchemaRegistry, schemaCol: String): DataFrame = {
+  def validateWith(df: DataFrame, registry: SchemaRegistry, schemaCol: String): DataFrame = {
     val payloadFields = df.schema.fields.filter(_.name != schemaCol)
     val payloadType = StructType(payloadFields)
     val payload = struct(payloadFields.map(f => col(f.name)).toSeq: _*)

@@ -33,10 +33,10 @@ object ValidationJob {
     * reference's violation rows whichever path the verdict takes; a row the
     * compiled verdict fails and the row core passes raises. A row-core
     * schema reads both columns from one `graft_validate` struct. The row
-    * core maps the whole payload to JSON, so a payload field with no JSON
-    * mapping (date, timestamp, binary) fails analysis, naming the field;
-    * `withVerdictsOnly` of a compiled schema needs only the fields its
-    * verdict checks to map. */
+    * core maps the whole payload to JSON (dates and timestamps as ISO-8601
+    * strings, binary as base64), so a payload field with no JSON mapping
+    * (an interval) fails analysis, naming the field; `withVerdictsOnly` of
+    * a compiled schema needs only the fields its verdict checks to map. */
   def withVerdicts(spark: SparkSession, docs: DataFrame, schemaJson: String): DataFrame = {
     val passthrough = docs.columns.filterNot(c => c == "errors" || c == "valid")
     payloadVerdict(docs, schemaJson).addTo(docs)
@@ -69,7 +69,11 @@ object ValidationJob {
     /** A row's `valid` where `pass` fails it, from the row core's `valid`.
       * The row core must fail a row the compiled verdict fails: where it
       * passes one, the row raises, naming the schema, rather than leave
-      * `valid = false` with no violation. */
+      * `valid = false` with no violation. The compiler leaves to the row
+      * core what it cannot compare as the row core does (numbers a column
+      * type does not hold, decimals wider than a double tells apart), and
+      * the row core reads NaN and ±Infinity as huge non-integers, which no
+      * `multipleOf` divides; EngineSpec holds the cases found. */
     def settle(rowCoreValid: Column): Column =
       if (compiled.isEmpty) rowCoreValid
       else when(rowCoreValid, raise_error(lit(

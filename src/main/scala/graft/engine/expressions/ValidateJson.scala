@@ -25,7 +25,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * one `parse` violation, not an error — at 10^12 lines some WILL be
   * malformed), or a struct of payload columns, converted to a `Row` by
   * Catalyst's converter and mapped to JSON by [[RowValidator.toJVal]]. A
-  * struct field with no JSON mapping (date, timestamp, binary, …) fails
+  * date or timestamp maps to its ISO-8601 string, binary to base64; a
+  * struct field with no JSON mapping (an interval, …) fails
   * analysis, naming the field. A literal schema compiles once per
   * expression instance; a schema column goes through a bounded memo per
   * distinct schema text. A malformed schema throws: that is a caller bug,

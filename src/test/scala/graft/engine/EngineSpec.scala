@@ -3,7 +3,7 @@ package graft.engine
 import graft.schema.SchemaDoc
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructType}
+import org.apache.spark.sql.types.{DecimalType, LongType, StringType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Engine checks against independently-computed expectations, plus the
@@ -101,6 +101,115 @@ class EngineSpec extends AnyFunSuite {
       (Option(t.getMessage).exists(_.contains("probe schema: the compiled verdict fails")) ||
         mentions(t.getCause))
     assert(mentions(e), e.toString)
+  }
+
+  /** (doc_num, valid, errors as JSON) of every row, sorted. */
+  private def verdictRows(verdicts: DataFrame): Seq[String] =
+    verdicts.select(col("doc_num"), col("valid"), to_json(col("errors"))).collect()
+      .map(r => s"${r.get(0)}|${r.get(1)}|${r.get(2)}").toSeq.sorted
+
+  /** A frame of `doc_num`, `doc_id` holding `values` and a null `spans`. */
+  private def flat(values: DataFrame): DataFrame =
+    values.select(monotonically_increasing_id().as("doc_num"), col("doc_id"),
+      lit(null).cast(StringType).as("spans"))
+
+  test("NaN and ±Infinity fail multipleOf and an integer type, with one violation row each") {
+    val s = spark
+    import s.implicits._
+    val frame = flat(Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, 4.0)
+      .toDF("doc_id"))
+    Seq("multipleOf" -> """{"multipleOf": 2}""", "type" -> """{"type": "integer"}""")
+      .foreach { case (kw, check) =>
+        val out = ValidationJob.withVerdicts(spark, frame, s"""{"properties":{"doc_id":$check}}""")
+          .select(col("doc_id"), col("valid"), col("errors.keyword"))
+          .collect().map(r => (r.getDouble(0), (r.getBoolean(1), r.getSeq[String](2)))).toMap
+        assert(out(4.0) === (true, Nil))
+        Seq(Double.PositiveInfinity, Double.NegativeInfinity).foreach(d =>
+          assert(out(d) === (false, Seq(kw)), s"$kw on $d"))
+        assert(out.collectFirst { case (d, v) if d.isNaN => v } === Some((false, Seq(kw))), kw)
+      }
+  }
+
+  test("no verdict the compiled path and the row core disagreed on reaches the raise") {
+    val s = spark
+    import s.implicits._
+    val doubles = flat(Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
+      -0.0, 0.0, 4.0).toDF("doc_id"))
+    val longs = flat(Seq(Long.MaxValue, Long.MinValue, 5L, 0L).toDF("doc_id"))
+    val decimals = flat(Seq("0.1", "0.099999999999999999999", "1.000000000000000000001",
+      "12345678901234567.5").toDF("s")
+      .select(col("s").cast(DecimalType(38, 21)).as("doc_id")))
+    val strings = flat(Seq("a@b.com\n", "a@b.com", "1.2.3.4\n").toDF("doc_id"))
+    val offsets = Seq((0L, Seq(-0.0, 1.0)), (1L, Seq(0.0)), (2L, Seq(Double.NaN))).toDF("doc_num", "x")
+      .select(col("doc_num"), lit("d").as("doc_id"), transform(col("x"), v => struct(v.as("off"))).as("spans"))
+    val unique = Seq((0L, Seq(-0.0, 0.0)), (1L, Seq(Double.NaN, Double.NaN)), (2L, Seq(1.0, -1.0)))
+      .toDF("doc_num", "spans").withColumn("doc_id", lit("d"))
+    def onId(kw: String) = s"""{"properties":{"doc_id":$kw}}"""
+    def onOff(kw: String) =
+      s"""{"properties":{"spans":{"items":{"type":"object","properties":{"off":$kw}}}}}"""
+    // (frame, schema, whether the compiler expresses it); one it cannot
+    // express takes the row core, and no verdict of its own
+    val cases = Seq(
+      // the row core reads a non-finite double as a huge non-integer
+      (doubles, onId("""{"multipleOf": 2}"""), true),
+      (doubles, onId("""{"type": "integer"}"""), true),
+      // a divisor no double holds
+      (doubles, onId("""{"multipleOf": 1e-400}"""), false),
+      // bounds and values past the long range, or between two longs
+      (longs, onId("""{"exclusiveMaximum": 9223372036854775808}"""), true),
+      (longs, onId("""{"exclusiveMaximum": 9223372036854775807.5}"""), true),
+      (longs, onId("""{"exclusiveMinimum": -9223372036854775808.5, "maximum": 2.5}"""), true),
+      (longs, onId("""{"enum": [9223372036854775808, 0.5, 5]}"""), true),
+      // divisors decimal(38,12) does not hold
+      (longs, onId("""{"multipleOf": 2.5e-12}"""), false),
+      (longs, onId("""{"multipleOf": 1e30}"""), false),
+      // decimals of more digits than a double tells apart
+      (decimals, onId("""{"exclusiveMaximum": 0.1}"""), false),
+      (decimals, onId("""{"type": "integer", "multipleOf": 0.5}"""), false),
+      // -0.0 is the JSON number 0
+      (offsets, onOff("""{"enum": [0, 1]}"""), true),
+      (offsets, onOff("""{"const": 0}"""), true),
+      (unique, """{"properties":{"spans":{"uniqueItems":true}}}""", true),
+      // a format takes the whole string, a trailing newline too
+      (strings, onId("""{"format": "email"}"""), true),
+      (strings, onId("""{"format": "ipv4"}"""), true))
+    cases.foreach { case (frame, schemaJson, compiles) =>
+      val payload = frame.schema.fields.filter(f => f.name == "doc_id" || f.name == "spans")
+      val verdict = ValidationJob.verdict(schemaJson,
+        struct(payload.map(f => col(f.name)).toSeq: _*), StructType(payload), "case")
+      assert(verdict.compiled.isDefined === compiles, schemaJson)
+      assert(verdictRows(ValidationJob.withVerdicts(spark, frame, schemaJson)) ===
+        verdictRows(RowValidator.validateRows(spark, frame, schemaJson, Some(Seq("doc_id", "spans")))),
+        schemaJson)
+    }
+  }
+
+  test("a compiled schema validates frames whose unread fields are dates, timestamps or binary") {
+    val s = spark
+    import s.implicits._
+    val frame = Seq(("a", "2020-01-01 00:00:00"), ("bb", "2021-06-30 12:30:00")).toDF("doc_id", "t")
+      .select(monotonically_increasing_id().as("doc_num"), col("doc_id"),
+        array(struct(col("t").cast("timestamp").as("at"), col("t").cast("date").as("day"),
+          col("doc_id").cast("binary").as("raw"))).as("spans"),
+        col("t").cast("timestamp").as("ingested_at"))
+    val schemaJson = """{"properties":{"doc_id":{"maxLength":1}}}"""
+    val out = ValidationJob.withVerdicts(spark, frame, schemaJson)
+    assert(out.select("doc_id", "valid").as[(String, Boolean)].collect().toMap ===
+      Map("a" -> true, "bb" -> false))
+    assert(verdictRows(out) === verdictRows(
+      RowValidator.validateRows(spark, frame, schemaJson, Some(Seq("doc_id", "spans")))))
+    val registry = SchemaRegistry.compile(Map("short" -> schemaJson))
+    val viaRegistry = SchemaRegistry.validateWith(frame.withColumn("schema_name", lit("short")),
+      registry, "schema_name")
+    assert(viaRegistry.select("doc_id", "valid").as[(String, Boolean)].collect().toMap ===
+      Map("a" -> true, "bb" -> false))
+    // a schema that reads them takes the row core, over ISO-8601 and base64 strings
+    val reads = """{"properties":{"spans":{"items":{"properties":{
+      |  "at": {"format": "date-time", "pattern": "Z$"}, "day": {"format": "date"},
+      |  "raw": {"contentEncoding": "base64", "pattern": "^YQ"}}}}}}""".stripMargin
+    assert(ValidationJob.withVerdicts(spark, frame, reads)
+      .select(col("doc_id"), col("errors.path")).as[(String, Seq[String])].collect().toMap ===
+      Map("a" -> Nil, "bb" -> Seq("/spans/0/raw")))
   }
 
   test("a minItems bound past Int range marks every document invalid") {
@@ -235,13 +344,14 @@ class EngineSpec extends AnyFunSuite {
   test("a payload field with no JSON mapping is rejected when the frame is built, by name") {
     // recursive $ref: every entry below takes the row core
     val meta = """{"$ref":"http://json-schema.org/draft-07/schema#"}"""
-    val frame = spark.range(2).select(col("id"), timestamp_seconds(col("id")).as("ts"))
+    val frame = spark.range(2).select(col("id"), expr("make_dt_interval(id)").as("ts"))
     def rejected(build: => DataFrame, field: String): Unit = {
       val e = intercept[org.apache.spark.sql.AnalysisException](build)
-      assert(e.getMessage.contains(s"payload field `$field` of type timestamp"), e.getMessage)
+      assert(e.getMessage.contains(s"payload field `$field` of type interval day to second"),
+        e.getMessage)
     }
     rejected(RowValidator.validateRows(spark, frame, meta), "ts")
-    rejected(SchemaRegistry.validateWith(spark, frame.withColumn("schema_name", lit("meta")),
+    rejected(SchemaRegistry.validateWith(frame.withColumn("schema_name", lit("meta")),
       SchemaRegistry.compile(Map("meta" -> meta)), "schema_name"), "ts")
     rejected(ValidationJob.withVerdicts(spark, frame.select(col("id").cast("string").as("doc_id"),
       array(struct(col("ts").as("at"))).as("spans")), meta), "spans.at")

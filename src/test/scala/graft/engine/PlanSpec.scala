@@ -121,7 +121,7 @@ class PlanSpec extends AnyFunSuite {
     val registry = SchemaRegistry.compile(Map(
       "doc" -> DocTable.docSchemaJson,
       "id-only" -> """{"required":["doc_id"],"properties":{"doc_id":{"pattern":"^doc-"}}}"""))
-    val verdicts = SchemaRegistry.validateWith(spark, docs, registry, "schema_name")
+    val verdicts = SchemaRegistry.validateWith(docs, registry, "schema_name")
     projections(verdicts, "valid", "errors")
     assert(rowCoreCalls(physical(verdicts)) === 2)
   }
@@ -184,7 +184,7 @@ class PlanSpec extends AnyFunSuite {
       when(col("doc_num") % 2 === 0, lit("doc")).otherwise(lit("recursive"))))
     val registry = SchemaRegistry.compile(Map(
       "doc" -> DocTable.docSchemaJson, "recursive" -> recursiveDocSchema))
-    val verdicts = SchemaRegistry.validateWith(spark, docs, registry, "schema_name")
+    val verdicts = SchemaRegistry.validateWith(docs, registry, "schema_name")
     val plan = physical(ValidationJob.violations(verdicts))
     // one call per schema, each in the arm of a CASE on the schema name,
     // behind the verdict, which is `false` for the recursive schema, so

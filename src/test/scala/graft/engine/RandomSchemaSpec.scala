@@ -305,7 +305,7 @@ class RandomSchemaSpec extends AnyFunSuite {
       val v = byDoc(full)
       assert(byDoc(ValidationJob.withVerdictsOnly(spark, df, schemaJson)) === v)
       val registry = SchemaRegistry.compile(Map("s" -> schemaJson))
-      assert(byDoc(SchemaRegistry.validateWith(spark,
+      assert(byDoc(SchemaRegistry.validateWith(
         df.select(col("doc_id"), col("spans"), lit("s").as("schema_name")),
         registry, "schema_name")) === v)
       assert(byDoc(RowValidator.validateRows(spark, df, schemaJson,

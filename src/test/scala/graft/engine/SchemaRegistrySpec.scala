@@ -29,7 +29,7 @@ class SchemaRegistrySpec extends AnyFunSuite {
 
   test("rows dispatch to their named schema via the broadcast registry") {
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
-    val out = SchemaRegistry.validateWith(spark, df, registry, "schema_name")
+    val out = SchemaRegistry.validateWith(df, registry, "schema_name")
       .select("id", "valid").collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     assert(out === Map(0L -> true, 1L -> false, 2L -> true, 3L -> false, 4L -> false))
   }
@@ -38,7 +38,7 @@ class SchemaRegistrySpec extends AnyFunSuite {
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(Row(9L, "nope", "x")), 1), schema)
     val e = intercept[Throwable] {
-      SchemaRegistry.validateWith(spark, df, registry, "schema_name").collect()
+      SchemaRegistry.validateWith(df, registry, "schema_name").collect()
     }
     def mentions(t: Throwable): Boolean = t != null &&
       (Option(t.getMessage).exists(_.contains("no schema 'nope'")) || mentions(t.getCause))
@@ -77,12 +77,12 @@ class SchemaRegistrySpec extends AnyFunSuite {
 
   test("compiled CASE dispatch agrees with the broadcast row core (differential)") {
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
-    val compiled = outcome(SchemaRegistry.validateWith(spark, df, registry, "schema_name"))
+    val compiled = outcome(SchemaRegistry.validateWith(df, registry, "schema_name"))
     assert(compiled === driverRowCore(df, registry))
     assert(compiled._2.map(_._1).distinct === Seq(1L, 3L, 4L))
     // and the compiled path really is the one validateWith picked: its plan
     // runs each schema's row core only behind the compiled verdict
-    val plan = SchemaRegistry.validateWith(spark, df, registry, "schema_name")
+    val plan = SchemaRegistry.validateWith(df, registry, "schema_name")
       .queryExecution.optimizedPlan.toString
     val rowCore = plan.linesIterator.filter(_.contains("graft_validate(")).toSeq
     assert(rowCore.size === 1 && "graft_validate\\(".r.findAllIn(plan).size === registry.names.size &&
@@ -96,7 +96,7 @@ class SchemaRegistrySpec extends AnyFunSuite {
       "meta" -> """{"$ref":"http://json-schema.org/draft-07/schema#"}"""))
     val df = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
       Row(0L, "short-text", "hi"), Row(1L, "meta", "x")), 1), schema)
-    val out = SchemaRegistry.validateWith(spark, df, reg, "schema_name")
+    val out = SchemaRegistry.validateWith(df, reg, "schema_name")
       .select("id", "valid").collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     assert(out(0L))
   }
@@ -111,7 +111,7 @@ class SchemaRegistrySpec extends AnyFunSuite {
       Row(0L, "short-text", "hi"), Row(1L, "short-text", "toolongx"),
       Row(2L, "number", "12345678"), Row(3L, "number", "12a"),
       Row(4L, "short-text", null), Row(5L, "meta", "x")), 2), schema)
-    val out = SchemaRegistry.validateWith(spark, df, reg, "schema_name")
+    val out = SchemaRegistry.validateWith(df, reg, "schema_name")
     // differential: hybrid ≡ all-rows row core
     val got = outcome(out)
     assert(got === driverRowCore(df, reg))
@@ -144,7 +144,7 @@ class SchemaRegistrySpec extends AnyFunSuite {
       registry -> Seq(Row(0L, "short-text", "hi"), Row(1L, null, "x"))).foreach { case (reg, input) =>
       val df = spark.createDataFrame(spark.sparkContext.parallelize(input, 1), nullableSchema)
       val e = intercept[Throwable] {
-        SchemaRegistry.validateWith(spark, df, reg, "schema_name").collect()
+        SchemaRegistry.validateWith(df, reg, "schema_name").collect()
       }
       def mentions(t: Throwable): Boolean = t != null &&
         (Option(t.getMessage).exists(_.contains("no schema 'null'")) || mentions(t.getCause))
